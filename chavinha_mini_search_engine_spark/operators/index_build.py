@@ -327,6 +327,8 @@ def _postings_part_metrics(path: str) -> list:
     import pyarrow.dataset as pads
 
     ds = pads.dataset(path, format="parquet", partitioning="hive")
+    if not ds.files:  # a shard-group that holds no shard writes no file
+        return []
     tbl = ds.to_table(columns=["shard", "n", "doc_bytes", "tf_bytes"])
     blen = pc.add(
         pc.binary_length(tbl.column("doc_bytes")),

@@ -247,24 +247,45 @@ def state_view(st: ShardState, start: int, stop: int) -> ShardState:
     return v
 
 
-def post_groups(post_pdf: pd.DataFrame) -> list:
+def post_groups(post_pdf: pd.DataFrame,
+                shard_offsets: Optional[Dict[int, int]] = None) -> list:
     """pandas posting blocks -> [(field, term, firsts, lasts, maxs, ns,
-    doc_bytes, tf_bytes)], each group's blocks sorted by first_local so the
-    ranges are disjoint ascending intervals (base blocks are consecutive id
-    chunks; delta-segment ids are shifted past every earlier segment)."""
-    out = []
-    for (field, term), g in post_pdf.groupby(["field", "term"], sort=False):
-        if not g["first_local"].is_monotonic_increasing:
-            g = g.sort_values("first_local")
-        out.append((
-            field, term,
-            g["first_local"].values.astype(np.int64),
-            g["last_local"].values.astype(np.int64),
-            g["max_score"].values.astype(np.float64),
-            g["n"].values.astype(np.int64),
-            g["doc_bytes"].values, g["tf_bytes"].values,
-        ))
-    return out
+    doc_bytes, tf_bytes)], one per (field, term), blocks sorted by
+    first_local so the ranges are disjoint ascending intervals (base blocks
+    are consecutive id chunks; delta-segment ids are shifted past every
+    earlier segment).  One lexsort, split at the (field, term) boundaries:
+    group arrays are slice views of the sorted columns.  ``shard_offsets``
+    ({shard: offset}, see fused_state) keeps only those shards, globalizes
+    block ranges by their shard's offset and adds a 9th array, the
+    per-block base offset of the decode (score_shard ``boffs``)."""
+    if not len(post_pdf) or shard_offsets == {}:
+        return []
+    cols = [post_pdf[c].to_numpy(dt) for c, dt in (
+        ("first_local", np.int64), ("last_local", np.int64),
+        ("max_score", np.float64), ("n", np.int64),
+        ("doc_bytes", None), ("tf_bytes", None))]
+    fcode, fvals = pd.factorize(post_pdf["field"].to_numpy(), sort=True)
+    tcode, tvals = pd.factorize(post_pdf["term"].to_numpy(), sort=True)
+    key = fcode * len(tvals) + tcode  # (field, term) order
+    if shard_offsets is not None:
+        keys = np.array(sorted(shard_offsets), dtype=np.int64)
+        shard = post_pdf["shard"].to_numpy(np.int64)
+        pos = np.minimum(np.searchsorted(keys, shard), len(keys) - 1)
+        local = np.flatnonzero(keys[pos] == shard)
+        boff = np.array([shard_offsets[s] for s in keys.tolist()])[pos[local]]
+        cols = [c[local] for c in cols] + [boff]
+        cols[0] += boff
+        cols[1] += boff
+        key = key[local]
+    order = np.lexsort((cols[0], key))
+    cols, key = [c[order] for c in cols], key[order]
+    starts = np.flatnonzero(np.diff(key, prepend=-1))
+    ends = np.append(starts[1:], len(key))
+    return [
+        (fvals[g // len(tvals)], tvals[g % len(tvals)])
+        + tuple(c[a:b] for c in cols)
+        for g, a, b in zip(key[starts].tolist(), starts.tolist(), ends.tolist())
+    ]
 
 
 class PostingsCache:
@@ -572,7 +593,7 @@ def _bm25_shard_kernel(
         if len(attr_pdf) == 0:
             return empty
         state = shard_state(attr_pdf)
-        groups = post_groups(post_pdf) if len(post_pdf) else []
+        groups = post_groups(post_pdf)
         cand, scores = score_shard(
             state, groups, term_payload, avgdl, k1, b, k, mode, q64, full_only,
         )

@@ -20,8 +20,10 @@ Rank/score parity with SearchEngine is asserted in tests/test_serve.py:
 both paths share the numpy scoring core (operators/search.py score_shard /
 topk_dedup -- the Spark path wraps it in the applyInPandas kernel), so
 scoring, pruning, dedup and enrichment semantics are identical by
-construction.  Here the pandas->numpy conversion (shard_state/post_groups)
-runs ONCE at load; warm queries touch no pandas at all.
+construction.  Here the pandas->numpy conversion runs ONCE at load: one
+fused attribute state (fused_state) and one sorted columnar postings
+layout whose (field, term) lists are slice views (post_groups); warm
+queries touch no pandas at all.
 """
 
 from __future__ import annotations
@@ -83,9 +85,13 @@ def _read_parts_arrow(
     frames = []
     for p in parts:
         ds = pads.dataset(p, format="parquet", partitioning="hive")
+        if not ds.files:  # an empty part (e.g. a shard-group with no shard)
+            continue
         cols = [c for c in columns if c in ds.schema.names]
         f = filter if filter is None or "shard" in ds.schema.names else None
         frames.append(ds.to_table(columns=cols, filter=f).to_pandas())
+    if not frames:
+        return pd.DataFrame(columns=columns)
     return pd.concat(frames, ignore_index=True)
 
 
@@ -266,13 +272,14 @@ class ResidentSearcher:
 
         # corpus stats + term dictionary -> plain dicts
         stats = _read_parts_arrow(store.path("corpus_stats"), ["field", "n_docs", "avgdl"])
-        self.stats = {
-            r.field: (int(r.n_docs), float(r.avgdl)) for r in stats.itertuples()
-        }
+        self.stats = dict(zip(stats["field"].tolist(), zip(
+            stats["n_docs"].astype(np.int64).tolist(),
+            stats["avgdl"].astype(np.float64).tolist())))
         td = _read_parts_arrow(store.path("term_dict"), ["field", "term", "df", "idf"])
-        self.term_dict: Dict[Tuple[str, str], Tuple[float, int]] = {
-            (r.field, r.term): (float(r.idf), int(r.df)) for r in td.itertuples()
-        }
+        self.term_dict: Dict[Tuple[str, str], Tuple[float, int]] = dict(zip(
+            zip(td["field"].tolist(), td["term"].tolist()),
+            zip(td["idf"].astype(np.float64).tolist(),
+                td["df"].astype(np.int64).tolist())))
 
         # attributes -> ONE fused numpy state covering every local shard
         # (per-shard dense local-id spaces laid out back-to-back, ascending
@@ -321,45 +328,16 @@ class ResidentSearcher:
             self.fused, self.shard_offsets = None, {}
             self.state_by_shard = {}
 
-        # postings -> dict[(field, term, shard)] -> block array group
-        # (field, term, firsts, lasts, maxs, ns, doc_bytes, tf_bytes)
+        # postings -> one (field, term, first)-sorted columnar layout over
+        # every local shard; each entry is slice views (see post_groups)
         post = _read_parts_arrow(
             store.path("postings"), POST_COLS,
             part_names=store.committed_parts("postings"),
             filter=shard_filter,
         )
-        self.post_by_key: Dict[Tuple[str, str, int], tuple] = {}
-        for s, g in post.groupby("shard", sort=False):
-            for grp in post_groups(g):
-                self.post_by_key[(grp[0], grp[1], int(s))] = grp
-
-        # fused posting groups: block ranges globalized with the shard
-        # offsets + per-block base offsets for the decode (search.
-        # score_shard `boffs`), so one score_shard call covers all local
-        # shards.  Payload byte objects are shared with post_by_key.
-        by_ft: Dict[Tuple[str, str], list] = {}
-        for (f, t, s), grp in self.post_by_key.items():
-            if s in self.shard_offsets:
-                by_ft.setdefault((f, t), []).append((s, grp))
-        self.post_fused: Dict[Tuple[str, str], tuple] = {}
-        for (f, t), lst in by_ft.items():
-            lst.sort(key=lambda e: e[0])
-            firsts, lasts, maxs, ns, docb, tfb, boffs = [], [], [], [], [], [], []
-            for s, grp in lst:
-                off = self.shard_offsets[s]
-                firsts.append(grp[2] + off)
-                lasts.append(grp[3] + off)
-                maxs.append(grp[4])
-                ns.append(grp[5])
-                docb.append(grp[6])
-                tfb.append(grp[7])
-                boffs.append(np.full(len(grp[2]), off, dtype=np.int64))
-            self.post_fused[(f, t)] = (
-                f, t, np.concatenate(firsts), np.concatenate(lasts),
-                np.concatenate(maxs), np.concatenate(ns),
-                np.concatenate(docb), np.concatenate(tfb),
-                np.concatenate(boffs),
-            )
+        self.post_fused: Dict[Tuple[str, str], tuple] = {
+            (g[0], g[1]): g for g in post_groups(post, self.shard_offsets)
+        }
 
         # doc store for enrichment: kept LAZY -- content is the widest
         # column in the system, and a resident dict of every content string

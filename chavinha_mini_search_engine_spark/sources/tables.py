@@ -55,6 +55,10 @@ DOC_STORE_WRITE_OPTS = {
 }
 
 
+def _has_parquet(path: str) -> bool:
+    return any(f.endswith(".parquet") for _r, _d, fs in os.walk(path) for f in fs)
+
+
 class IndexStore:
     def __init__(self, root: str, build_id: Optional[str] = None):
         self.root = root
@@ -251,8 +255,12 @@ class IndexStore:
             )
         # parts may use different key names (grp=, delta=), so read each
         # separately (inner partition dirs like tbucket= stay consistent)
-        # and union -- the Lucene-segment view of base + delta segments
-        dfs = [spark.read.parquet(p) for p in parts]
+        # and union -- the Lucene-segment view of base + delta segments.
+        # A part with no file (a shard-group that holds no shard) has no
+        # schema to infer and no rows: skip it
+        dfs = [spark.read.parquet(p) for p in parts if _has_parquet(p)]
+        if not dfs:
+            raise FileNotFoundError(f"table {table!r} has no rows: {parts}")
         out = dfs[0]
         for d in dfs[1:]:
             out = out.unionByName(d)

@@ -2,9 +2,12 @@
 Spark SearchEngine, since both share _bm25_shard_kernel -- plus the latency
 property the module exists for (no Spark jobs per query)."""
 
+import os
 import time
 
 import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as hst
 
 from chavinha_mini_search_engine_spark.fixtures.queries import PERF_QUERIES
 from chavinha_mini_search_engine_spark.operators.search import SearchEngine
@@ -213,3 +216,207 @@ def test_postings_cache_eviction_bound():
     # newest entries survive, oldest evicted
     assert c.get(("s", "f", "t19")) is not None
     assert c.get(("s", "f", "t0")) is None
+
+
+# --- resident postings layout (ResidentSearcher.post_fused) ---
+
+
+def _reference_post_fused(store, rs, shards=None):
+    """The per-group layout written out the slow way: a pandas groupby per
+    (field, term, shard), each group sorted by first_local, shards of one
+    (field, term) concatenated in ascending shard order with block ranges
+    globalized by the searcher's shard offsets."""
+    import numpy as np
+    import pyarrow.compute as pc
+
+    from chavinha_mini_search_engine_spark.operators.serve import (
+        POST_COLS,
+        _read_parts_arrow,
+    )
+
+    post = _read_parts_arrow(
+        store.path("postings"), POST_COLS,
+        part_names=store.committed_parts("postings"),
+        filter=None if shards is None else pc.field("shard").isin(shards),
+    )
+    by_ft = {}
+    for (f, t, s), g in post.groupby(["field", "term", "shard"]):
+        if int(s) in rs.shard_offsets:
+            by_ft.setdefault((f, t), []).append(
+                (int(s), g.sort_values("first_local")))
+    out = {}
+    for (f, t), lst in by_ft.items():
+        lst.sort(key=lambda e: e[0])
+
+        def cat(c, dt=None):
+            return np.concatenate([g[c].to_numpy(dt) for _, g in lst])
+
+        boffs = np.concatenate(
+            [np.full(len(g), rs.shard_offsets[s], dtype=np.int64)
+             for s, g in lst])
+        out[(f, t)] = (
+            f, t, cat("first_local", np.int64) + boffs,
+            cat("last_local", np.int64) + boffs, cat("max_score", np.float64),
+            cat("n", np.int64), cat("doc_bytes"), cat("tf_bytes"), boffs,
+        )
+    return out
+
+
+def _assert_layout_equal(got, exp):
+    import numpy as np
+
+    assert got.keys() == exp.keys()
+    for key, e in exp.items():
+        g = got[key]
+        assert len(g) == len(e) == 9, key
+        assert g[:2] == e[:2] == key
+        for ga, ea in zip(g[2:], e[2:]):
+            assert ga.dtype == ea.dtype, key
+            if ea.dtype == object:
+                assert ga.tolist() == ea.tolist(), key
+            else:
+                assert np.array_equal(ga, ea), key
+
+
+def test_post_fused_matches_per_group_reference(built, resident):
+    assert resident.post_fused
+    _assert_layout_equal(resident.post_fused,
+                         _reference_post_fused(built, resident))
+
+
+def test_post_fused_shard_subset_matches_reference(built):
+    shards = [1, 2, 5]
+    rs = ResidentSearcher(built, CFG, shards=shards)
+    assert set(rs.shard_offsets) == set(shards)
+    _assert_layout_equal(rs.post_fused,
+                         _reference_post_fused(built, rs, shards))
+
+
+@pytest.fixture(scope="module")
+def delta_store(spark, tmp_path_factory):
+    """Base build + two streamed delta segments, in the streaming tests'
+    shape, except that the default shard_groups=8 over 4 shards leaves
+    four postings shard-groups empty (committed parts with no file)."""
+    from chavinha_mini_search_engine_spark.fixtures.pages import generate_pages
+    from chavinha_mini_search_engine_spark.operators.index_build import (
+        IndexConfig,
+        build_index,
+    )
+    from chavinha_mini_search_engine_spark.sources.tables import IndexStore
+    from chavinha_mini_search_engine_spark.streaming import incremental
+
+    cfg = IndexConfig(num_doc_shards=4, heavy_term_df=1000, num_salts=2,
+                      term_buckets=8)
+    rows = generate_pages(40, include_edges=False)
+    schema = "url string, warc_ts timestamp, html binary, text string, lang string"
+    base_dir = str(tmp_path_factory.mktemp("lay") / "pages")
+    spark.createDataFrame(rows[:30], schema).write.parquet(base_dir)
+    store = IndexStore(str(tmp_path_factory.mktemp("lay") / "i"),
+                       build_id="layout")
+    build_index(spark, spark.read.parquet(base_dir), store, cfg,
+                with_embeddings=True, verify_text_invariant=False)
+    delta_dir = str(tmp_path_factory.mktemp("lay") / "delta")
+    # 8 files, maxFilesPerTrigger=4 -> 2 micro-batches
+    spark.createDataFrame(rows[30:], schema).repartition(8).write.parquet(delta_dir)
+    incremental.stream_index_deltas(
+        spark, delta_dir, store, cfg,
+        checkpoint_dir=str(tmp_path_factory.mktemp("lay") / "ckpt"),
+    ).awaitTermination(600)
+    return store, cfg
+
+
+def test_post_fused_base_plus_deltas_matches_reference(spark, delta_store):
+    store, cfg = delta_store
+    parts = store.committed_parts("postings")
+    assert sum(p.startswith("delta=") for p in parts) >= 2, parts
+    assert any(
+        not any(f.endswith(".parquet")
+                for _r, _d, fs in os.walk(store.path("postings", p))
+                for f in fs)
+        for p in parts
+    ), "fixture must commit an empty shard-group part"
+    rs = ResidentSearcher(store, cfg)
+    _assert_layout_equal(rs.post_fused, _reference_post_fused(store, rs))
+    # the Spark path serves the same store, empty parts included
+    got = norm(rs.search("python", "bm25", 5))
+    exp = norm(r.asDict() for r in
+               SearchEngine(spark, store, cfg).search("python", "bm25", 5).collect())
+    assert got and [g[0] for g in got] == [e[0] for e in exp]
+    for (_, gs), (_, es) in zip(got, exp):
+        assert abs(gs - es) < 1e-8
+
+
+def test_postings_part_metrics_empty_part(tmp_path):
+    """A shard-group that holds no shard commits a part with no parquet
+    file; its metrics are no shard rows, not an ArrowInvalid."""
+    from chavinha_mini_search_engine_spark.operators.index_build import (
+        _postings_part_metrics,
+    )
+
+    (tmp_path / "_SUCCESS").write_bytes(b"")
+    assert _postings_part_metrics(str(tmp_path)) == []
+
+
+def test_load_store_without_postings_rows(built, tmp_path):
+    """Every committed postings part empty: the searcher loads with an
+    empty layout, bm25 finds nothing and semantic still serves."""
+    import shutil
+
+    from chavinha_mini_search_engine_spark.sources.tables import IndexStore
+
+    root = str(tmp_path / "idx")
+    shutil.copytree(built.root, root)
+    store = IndexStore(root)
+    for part in store.committed_parts("postings"):
+        shutil.rmtree(store.path("postings", part))
+        os.makedirs(store.path("postings", part))
+        open(os.path.join(store.path("postings", part), "_SUCCESS"), "w").close()
+    rs = ResidentSearcher(store, CFG)
+    assert rs.post_fused == {}
+    assert rs.search("python async programming", "bm25", 5) == []
+    assert rs.search("python async programming", "semantic", 5)
+
+
+_blocks = hst.lists(
+    hst.tuples(hst.sampled_from(["title", "content"]),
+              hst.sampled_from(["a", "b", "c", "d"]),
+              hst.integers(0, 3), hst.integers(1, 4)),
+    min_size=1, max_size=40,
+)
+
+
+@settings(max_examples=60, deadline=None)
+@given(_blocks, hst.randoms(use_true_random=False))
+def test_post_groups_shuffled_frame(blocks, rnd):
+    """post_groups on rows in any order: one group per (field, term),
+    holding exactly that key's blocks, sorted by first_local."""
+    import collections
+
+    import numpy as np
+    import pandas as pd
+
+    from chavinha_mini_search_engine_spark.operators.search import post_groups
+
+    # each (field, term) gets disjoint ascending block ranges
+    nxt = collections.Counter()
+    rows = []
+    for f, t, s, width in blocks:
+        first = nxt[(f, t)]
+        nxt[(f, t)] += width
+        rows.append({
+            "field": f, "term": t, "shard": s, "first_local": first,
+            "last_local": first + width - 1, "n": width,
+            "max_score": float(width), "doc_bytes": f"d{first}".encode(),
+            "tf_bytes": f"t{first}".encode(),
+        })
+    members = collections.defaultdict(set)
+    for r in rows:
+        members[(r["field"], r["term"])].add(r["first_local"])
+    rnd.shuffle(rows)
+    groups = post_groups(pd.DataFrame(rows))
+    assert [g[:2] for g in groups] == sorted(members)
+    for f, t, firsts, lasts, maxs, ns, docb, tfb in groups:
+        assert np.all(np.diff(firsts) > 0)
+        assert set(firsts.tolist()) == members[(f, t)]
+        assert np.array_equal(lasts - firsts + 1, ns)
+        assert docb.tolist() == [f"d{x}".encode() for x in firsts.tolist()]
