@@ -46,7 +46,6 @@ def profile_build(sf_dir: str, cpus: int, reps: int = 1) -> None:
         try:
             pages = pages_from_documents(docs)
             cfg = IndexConfig(num_doc_shards=cpus, shard_groups=4,
-                              heavy_term_df=max(n_docs // 10, 100), num_salts=8,
                               term_buckets=64)
             store = IndexStore(os.path.join(idx_dir, "idx"), build_id="bx")
             t = time.time()
@@ -161,7 +160,6 @@ def profile_resident(sf_dir: str, cpus: int) -> None:
     try:
         pages = pages_from_documents(docs)
         cfg = IndexConfig(num_doc_shards=cpus, shard_groups=4,
-                          heavy_term_df=max(n_docs // 10, 100), num_salts=8,
                           term_buckets=64)
         store = IndexStore(os.path.join(idx_dir, "idx"), build_id="bxr")
         build_index(spark, pages, store, cfg, with_embeddings=True,

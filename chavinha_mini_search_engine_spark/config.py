@@ -66,21 +66,23 @@ class IndexConfig:
     """Physical layout knobs for the index build.
 
     Defaults are sized for local[32] testing; on a real cluster raise
-    ``num_doc_shards`` to ~2-4x total cores and ``heavy_term_df`` stays
-    relative (it bounds the rows a single encode task sees).
+    ``num_doc_shards`` to ~2-4x total cores.  Head-term skew needs no
+    knob: the postings encode emits chunk-bounded partial runs and the
+    merge accepts any number of runs per term (index_build module
+    docstring).
     """
 
     num_doc_shards: int = 32          # doc-partitioned serve shards
     block_size: int = 128             # postings per compressed block
-    # a (field, term, shard) group whose within-shard df exceeds this is
-    # salted into `num_salts` sub-runs encoded independently then merged
-    # (SURVEY.md T6/T7). Bounds single-task memory for head terms.
+    # ignored (the build salts nothing); kept so existing callers
+    # (bench.py) and saved manifests, which compact() reads back into an
+    # IndexConfig, still construct
     heavy_term_df: int = 100_000
     num_salts: int = 8
     term_buckets: int = 64            # parquet partition dirs for pruning
     encode_buckets: int = 8           # term-hash buckets per shard for the
-                                      # encode/merge kernels (tasks per
-                                      # shard = encode_buckets [x salts])
+                                      # merge kernel (merge tasks per
+                                      # shard = encode_buckets)
     shard_groups: int = 8             # checkpoint granularity for postings
     k1: float = BM25_K1
     b: float = BM25_B

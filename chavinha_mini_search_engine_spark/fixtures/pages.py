@@ -8,8 +8,9 @@ byte-identical invariant target.
 
 Token frequencies are Zipf-ish (s~1.1) over a vocabulary built from the
 reference query terms plus filler, so head terms ("python", "the", ...)
-appear in >30% of docs and exercise the salted skew-split path.  The tiny
-scale embeds one page per extraction branch (FIXTURES.md §1.1).
+appear in >30% of docs and exercise multi-run merges of long posting
+lists.  The tiny scale embeds one page per extraction branch (FIXTURES.md
+§1.1).
 """
 
 from __future__ import annotations

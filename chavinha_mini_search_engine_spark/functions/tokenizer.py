@@ -19,26 +19,17 @@ oracle that shares this tokenizer, per SURVEY.md §2.4).
 
 from __future__ import annotations
 
-import os
 import re
 from typing import List
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-# one token class, reused verbatim everywhere (both spellings of the
-# same definition: runs of the class, or splitting on its complement)
+# one token class, reused verbatim everywhere: python finds runs of the
+# class; Spark and DuckDB split on its complement (same tokens)
 TOKEN_FINDALL_RE = "[a-z0-9]+"
 TOKEN_SPLIT_RE = "[^a-z0-9]+"
 _PY_TOKEN_RE = re.compile(TOKEN_FINDALL_RE)
-
-
-def _spark_tokenizer_mode() -> str:
-    """'split' (default, audited) or 'extract' -- the A/B toggle for the
-    two equivalent JVM spellings (tokens_col docstring).  Read per call so
-    tests can monkeypatch the env; kept next to the regexes so an
-    index/query tokenizer-consistency audit sees the toggle immediately."""
-    return os.environ.get("SPARK_GRAFT_TOKENIZER", "split")
 
 
 def tokenize_py(text: str) -> List[str]:
@@ -55,22 +46,14 @@ def tokens_col(col: Column | str) -> Column:
     with a separator; ``filter`` drops them (matches ``re.findall``).
 
     A ``regexp_extract_all(lower(s), '[a-z0-9]+')`` spelling (identical
-    semantics: corpus-wide md5 over the token arrays, 120k docs, 0
-    mismatches; selectable via SPARK_GRAFT_TOKENIZER=extract) measured
-    25-35% faster in ISOLATION (tokenize+explode+count, warm interleaved
-    runs) because the higher-order filter lambda is not codegen'd -- but
-    an interleaved full-build A/B at 480k pages (2 reps, local[4]) showed
-    NO stats-stage win (tf_write 69.3/59.4 s split vs 70.0/63.7 s
-    extract): the regex slice is small inside the memory-bound
-    agg+sort+write pass, and the stage's run-to-run variance on this
-    multi-tenant host dominates.  The audited split form stays the
-    default; the toggle keeps the experiment reproducible.
+    tokens) measured 25-35% faster in ISOLATION, but an interleaved
+    full-build A/B at 480k pages (2 reps, local[4]) showed NO stats-stage
+    win (tf_write 69.3/59.4 s split vs 70.0/63.7 s extract): the regex
+    slice is small inside the memory-bound agg+sort+write pass.  The
+    split form stays the one spelling; it is also the form the DuckDB
+    twin (duckdb_tokens_sql) uses.
     """
     c = F.col(col) if isinstance(col, str) else col
-    if _spark_tokenizer_mode() == "extract":
-        return F.regexp_extract_all(
-            F.lower(c), F.lit(TOKEN_FINDALL_RE), F.lit(0)
-        )
     return F.filter(
         F.split(F.lower(c), TOKEN_SPLIT_RE),
         lambda x: x != F.lit(""),

@@ -15,7 +15,6 @@ chars (indexer.py:218, :121); chunk embed text = chunk_content (indexer.py:
 
 from __future__ import annotations
 
-import os
 from typing import Iterator
 
 import numpy as np
@@ -31,15 +30,15 @@ from ..oracle.embedder import EMBED_TRUNCATE, embed_text
 def _load_model():
     """One-time per-python-worker init point (indexer.py:58 analog).
 
-    ``SPARK_GRAFT_EMBED_MODEL`` selects the encoder: ``pseudo`` (default)
-    is the deterministic hermetic hash embedder -- the driver's oracle
-    gates and the recall tests PIN its outputs, so a real model must stay
-    opt-in; any other value attempts sentence-transformers (``auto`` =
-    all-MiniLM-L6-v2, the reference's model, indexer.py:58 -- dim 384
-    matches config.EMBEDDING_DIM) and falls back to pseudo with a warning
-    when the wheel is absent.  Round-5 probe of this sandbox:
-    sentence_transformers / onnxruntime / torch / transformers all
-    ImportError, so the fallback is what runs here.
+    Returns the deterministic hermetic hash embedder -- the same
+    ``embed_text`` every query path uses (serve.py and search.py call it
+    directly, as does ``query_embedding``), so document and query
+    vectors share one space, and the driver's oracle gates and the
+    recall tests pin its outputs.  A real model (the reference's
+    all-MiniLM-L6-v2, indexer.py:58 -- dim 384 matches
+    config.EMBEDDING_DIM) plugs in HERE and must replace the query-side
+    ``embed_text`` calls in the same change; swapping only this side
+    would silently compare vectors from two different spaces.
 
     Measured negative result (round 3) on the pseudo path: a fully
     batched variant (factorize tokens -> gather token-vector matrix ->
@@ -48,26 +47,6 @@ def _load_model():
     doubles memory traffic, and the stage is bandwidth-bound.  A real
     model replaces this seam on GPU, where batching IS the win.
     """
-    name = os.environ.get("SPARK_GRAFT_EMBED_MODEL", "pseudo")
-    if name != "pseudo":
-        try:
-            from sentence_transformers import SentenceTransformer
-
-            m = SentenceTransformer(
-                "sentence-transformers/all-MiniLM-L6-v2" if name == "auto"
-                else name
-            )
-            return lambda texts: list(
-                m.encode(list(texts), normalize_embeddings=True)
-            )
-        except ImportError:
-            import warnings
-
-            warnings.warn(
-                f"SPARK_GRAFT_EMBED_MODEL={name!r} requested but "
-                "sentence-transformers is not installed; using the "
-                "deterministic pseudo-embedder"
-            )
     return lambda texts: [embed_text(t) for t in texts]
 
 

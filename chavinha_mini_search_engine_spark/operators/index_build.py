@@ -1,7 +1,7 @@
 """Inverted-index build pipeline (SURVEY.md T1-T7, §3.2).
 
 pages -> docs -> chunks -> unified corpus -> tf/df/length stats ->
-salted posting encode -> multi-way merge -> postings + term_dict +
+map-side partial-run encode -> multi-way merge -> postings + term_dict +
 corpus_stats + attributes, all checkpointed per stage (and per shard-group
 for the postings stage) through the IndexStore manifest.
 
@@ -13,20 +13,23 @@ Scale design (the part that must survive 10^12 docs):
   (field, term, shard).  A head term's global posting list is therefore
   *structurally* split across shards -- no single task ever holds a full
   web-scale stopword list.
-- **Explicit skew handling inside a shard** (north_rule): within one shard
-  a term whose df exceeds ``cfg.heavy_term_df`` is salted into
-  ``cfg.num_salts`` sub-runs encoded independently (T6), then multi-way
-  merged into final blocks by a second ``applyInPandas`` pass (T7).  AQE
-  cannot split a single hot groupBy key; this can.
+- **Explicit skew handling inside a shard** (north_rule): the encode is a
+  narrow map over the tf scan that emits one compressed partial run per
+  (shard, term) per input chunk (T6), so every run is bounded by the
+  chunk size however large the term's df; the k-way merge (T7) accepts
+  any number of runs per term.  AQE cannot split a single hot groupBy
+  key; here no posting-grain groupBy key exists.
 - **All relational steps are DataFrame ops**: tokenize = split/filter
   (whole-stage codegen), tf = hash aggregate with map-side partial
   aggregation, df/idf = second hash aggregate, stats = tiny agg.  Python
   touches only the two kernels (encode, merge) via Arrow.
 - **Shuffles**: (1) unified repartition by shard for local_id assignment,
-  (2) tf groupBy (doc-keyed -- skew-free), (3) df groupBy(term),
-  (4) encode groupBy(field,term,shard,salt) -- skew-bounded by
-  heavy_term_df, (5) merge groupBy(field,term,shard) -- input is already
-  run-compressed, tiny.  Nothing shuffles raw HTML.
+  (2) one doc-grain repartition by shard before tokenize (the tf agg and
+  the tf write reuse its distribution), (3) the df groupBy(fidx, term)
+  and the doclens pivot, both collapsed map-side, (4) merge
+  groupBy(shard, mkey) -- input is already run-compressed, a few bytes
+  per posting, (5) block rows by tbucket before the write.  Nothing
+  shuffles raw HTML.
 - **Postings layout**: flat block rows partitioned by tbucket =
   hash(term) % term_buckets -> query-time partition pruning reads only the
   buckets of the query's terms.
@@ -44,7 +47,6 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..config import IndexConfig
-from ..functions.codec import delta_encode, varbyte_encode
 from ..functions.tokenizer import tokens_col
 from ..sources.tables import DOC_STORE_WRITE_OPTS, IndexStore
 from .chunk import chunk_docs
@@ -56,18 +58,8 @@ UNIFIED_COLS = [
     "description", "chunk_content", "parent_doc_type",
 ]
 
-RUN_SCHEMA = (
-    "field string, term string, shard int, n long, "
-    "doc_bytes binary, tf_bytes binary, score_bytes binary"
-)
-
-RUN_SCHEMA_TID = (
-    "tid long, shard int, n long, "
-    "doc_bytes binary, tf_bytes binary, score_bytes binary"
-)
-
-# mapside partial runs: per-posting payload is (gap, tf, dl) -- all
-# varbyte, ~3-4 B/posting -- instead of (gap, tf, f64 score) ~10-11 B.
+# partial runs: per-posting payload is (gap, tf, dl) -- all varbyte,
+# ~3-4 B/posting; no f64 score crosses the merge exchange.
 # fidx indexes cfg.fields (tid = xxhash64(field, term) pins one field per
 # tid, so fidx is constant per segment); the merge kernel recomputes the
 # idf-free tf-norm from (tf, dl) and idf re-attaches at block grain.
@@ -81,34 +73,14 @@ POSTINGS_SCHEMA_TFNORM = (
     "last_local long, n int, max_tfnorm double, doc_bytes binary, tf_bytes binary"
 )
 
-POSTINGS_SCHEMA_TID = (
-    "tid long, shard int, block_idx int, first_local long, "
-    "last_local long, n int, max_score double, doc_bytes binary, tf_bytes binary"
-)
-
-POSTINGS_SCHEMA = (
-    "field string, term string, shard int, block_idx int, first_local long, "
-    "last_local long, n int, max_score double, doc_bytes binary, tf_bytes binary"
-)
-
 
 def tbucket_col(term_col, n_buckets: int):
     return F.pmod(F.xxhash64(term_col), F.lit(n_buckets)).cast("int")
 
 
-def fidx_col(cfg: "IndexConfig"):
-    """Dense tinyint field index (position in cfg.fields) from the string
-    ``field`` column -- the int stand-in the posting-grain paths carry so
-    parquet scans can prune the string columns entirely."""
-    return F.coalesce(*[
-        F.when(F.col("field") == f, F.lit(i))
-        for i, f in enumerate(cfg.fields)
-    ]).cast("tinyint")
-
-
 def field_col(cfg: "IndexConfig"):
-    """Inverse of fidx_col: re-materialize the field STRING from the dense
-    ``fidx`` tinyint.  Used only where the string is semantically required
+    """Re-materialize the field STRING (position in cfg.fields) from the
+    dense ``fidx`` tinyint.  Used only where the string is semantically required
     (the term-id hash, the vocab-grain dictionary) -- the posting-grain
     tables themselves never store it (tokenize_tf docstring)."""
     return F.element_at(
@@ -118,74 +90,6 @@ def field_col(cfg: "IndexConfig"):
 
 
 # ---------- kernels ----------
-#
-# Both kernels process MANY (field, term) segments per invocation: tasks are
-# keyed by (shard, ekey/mkey) hash buckets, not by term, so Python/pandas
-# per-group overhead is amortized over hundreds of terms while memory per
-# task stays bounded (non-heavy rows are 1/E of a shard; heavy-term rows are
-# additionally split across `num_salts` tasks by the salt column).
-
-
-def _encode_runs_many(pdf: pd.DataFrame) -> pd.DataFrame:
-    """One (shard, ekey, salt) bucket -> one compressed sorted run per
-    (field, term) segment found in it."""
-    shard = int(pdf["shard"].iloc[0])
-    f = pdf["field"].values.astype(object)
-    t = pdf["term"].values.astype(object)
-    lid = pdf["local_id"].values.astype(np.int64)
-    tf = pdf["tf"].values.astype(np.int64)
-    sc = pdf["score"].values.astype(np.float64)
-    # sort by (field, term, local_id): factorize strings -> lexsort ints
-    fcodes, _ = pd.factorize(f, sort=True)
-    tcodes, _ = pd.factorize(t, sort=True)
-    order = np.lexsort((lid, tcodes, fcodes))
-    f, t, lid, tf, sc = f[order], t[order], lid[order], tf[order], sc[order]
-    fc, tc = fcodes[order], tcodes[order]
-    seg = np.flatnonzero(np.diff(fc) | np.diff(tc))
-    starts = np.concatenate(([0], seg + 1))
-    ends = np.concatenate((seg + 1, [len(f)]))
-    rows = {k: [] for k in (
-        "field", "term", "shard", "n", "doc_bytes", "tf_bytes", "score_bytes",
-    )}
-    for s, e in zip(starts, ends):
-        rows["field"].append(f[s])
-        rows["term"].append(t[s])
-        rows["shard"].append(shard)
-        rows["n"].append(int(e - s))
-        rows["doc_bytes"].append(delta_encode(lid[s:e].astype(np.uint64)))
-        rows["tf_bytes"].append(varbyte_encode(tf[s:e].astype(np.uint64)))
-        rows["score_bytes"].append(sc[s:e].tobytes())
-    return pd.DataFrame(rows)
-
-
-def _encode_runs_many_tid(pdf: pd.DataFrame) -> pd.DataFrame:
-    """Integer-keyed twin of _encode_runs_many: one (shard, ekey, salt)
-    bucket -> one compressed sorted run per ``tid`` segment.  The shuffle
-    rows carry an 8-byte term id instead of the (field, term) strings --
-    at web-scale vocab that is the dominant share of encode-shuffle bytes
-    (strings re-attach at block granularity after the merge, ~1/block_size
-    the rows)."""
-    shard = int(pdf["shard"].iloc[0])
-    tid = pdf["tid"].values.astype(np.int64)
-    lid = pdf["local_id"].values.astype(np.int64)
-    tf = pdf["tf"].values.astype(np.int64)
-    sc = pdf["score"].values.astype(np.float64)
-    order = np.lexsort((lid, tid))
-    tid, lid, tf, sc = tid[order], lid[order], tf[order], sc[order]
-    seg = np.flatnonzero(np.diff(tid))
-    starts = np.concatenate(([0], seg + 1))
-    ends = np.concatenate((seg + 1, [len(tid)]))
-    rows = {k: [] for k in (
-        "tid", "shard", "n", "doc_bytes", "tf_bytes", "score_bytes",
-    )}
-    for s, e in zip(starts, ends):
-        rows["tid"].append(int(tid[s]))
-        rows["shard"].append(shard)
-        rows["n"].append(int(e - s))
-        rows["doc_bytes"].append(delta_encode(lid[s:e].astype(np.uint64)))
-        rows["tf_bytes"].append(varbyte_encode(tf[s:e].astype(np.uint64)))
-        rows["score_bytes"].append(sc[s:e].tobytes())
-    return pd.DataFrame(rows)
 
 
 def _encode_partial_runs(batches):
@@ -193,21 +97,19 @@ def _encode_partial_runs(batches):
 
     Accumulates input batches to ~1.5M-row chunks, then emits one
     compressed sorted run per (shard, tid) segment found in the chunk.
-    Unlike the salted encode path there is NO posting-grain exchange at
-    all: the only shuffle in the postings stage becomes the merge
-    stage's run-grain exchange, whose rows are delta+varbyte-compressed.
-    A term seen by many chunks yields many partial runs; the k-way merge
-    kernel already handles arbitrary run counts per term (it was built
-    for salted runs), so head-term skew needs no explicit salting here --
-    any single run is bounded by the chunk size.
+    There is NO posting-grain exchange at all: the only shuffle in the
+    postings stage is the merge stage's run-grain exchange, whose rows
+    are delta+varbyte-compressed.  A term seen by many chunks yields many
+    partial runs and the k-way merge kernel accepts any run count per
+    term, so head-term skew needs no salting -- any single run is
+    bounded by the chunk size.
 
     The per-posting payload is (doc gap, tf, dl) -- all varbyte, ~3-4 B
-    -- NOT the f64 BM25 contribution the salted paths ship (8 B/posting
-    uncompressed, the dominant run payload): the merge kernel recomputes
-    the idf-free tf-norm from (tf, dl), and idf multiplies in at BLOCK
-    grain after the dictionary join.  That also removes the scored-tf
-    dictionary join from posting grain entirely -- at web-scale vocab
-    that join is a second full-corpus shuffle on this path's input.
+    -- not an f64 BM25 contribution (8 B/posting uncompressed): the
+    merge kernel recomputes the idf-free tf-norm from (tf, dl), and idf
+    multiplies in at BLOCK grain after the dictionary join, so no
+    posting-grain row joins the dictionary (at web-scale vocab that join
+    would be a second full-corpus shuffle).
 
     Segment counts per chunk approach the per-chunk vocabulary, so the
     encode is vectorized across segments (one lexsort, one gap pass, one
@@ -530,92 +432,6 @@ def _make_merge_runs_tfnorm(block_size: int, k1: float, b: float,
     return _merge_many
 
 
-def _make_merge_runs_tid(block_size: int):
-    from ..functions.codec import delta_decode, varbyte_decode
-
-    def _merge_many(pdf: pd.DataFrame) -> pd.DataFrame:
-        """Integer-keyed twin of the merge kernel: one (shard, mkey)
-        bucket -> final block rows per ``tid`` segment."""
-        shard = int(pdf["shard"].iloc[0])
-        rows = {k: [] for k in (
-            "tid", "shard", "block_idx", "first_local", "last_local",
-            "n", "max_score", "doc_bytes", "tf_bytes",
-        )}
-        for tid, g in pdf.groupby("tid", sort=False):
-            ids_parts, tf_parts, sc_parts = [], [], []
-            for db, tb, sb, n in zip(g["doc_bytes"], g["tf_bytes"],
-                                     g["score_bytes"], g["n"]):
-                ids_parts.append(delta_decode(db, int(n)))
-                tf_parts.append(varbyte_decode(tb, int(n)))
-                sc_parts.append(np.frombuffer(sb, dtype=np.float64))
-            if len(ids_parts) == 1:
-                ids, tfs, scs = ids_parts[0], tf_parts[0], sc_parts[0]
-            else:
-                ids = np.concatenate(ids_parts)
-                tfs = np.concatenate(tf_parts)
-                scs = np.concatenate(sc_parts)
-                order = np.argsort(ids, kind="mergesort")
-                ids, tfs, scs = ids[order], tfs[order], scs[order]
-            for bi, s in enumerate(range(0, len(ids), block_size)):
-                e = min(s + block_size, len(ids))
-                rows["tid"].append(int(tid))
-                rows["shard"].append(shard)
-                rows["block_idx"].append(bi)
-                rows["first_local"].append(int(ids[s]))
-                rows["last_local"].append(int(ids[e - 1]))
-                rows["n"].append(int(e - s))
-                rows["max_score"].append(float(scs[s:e].max()))
-                rows["doc_bytes"].append(delta_encode(ids[s:e]))
-                rows["tf_bytes"].append(varbyte_encode(tfs[s:e]))
-        return pd.DataFrame(rows)
-
-    return _merge_many
-
-
-def _make_merge_runs(block_size: int):
-    from ..functions.codec import delta_decode, varbyte_decode
-
-    def _merge_many(pdf: pd.DataFrame) -> pd.DataFrame:
-        """One (shard, mkey) bucket -> final block rows for every
-        (field, term) segment: multi-way merge of that term's sorted runs
-        (runs hold disjoint local_id sets, so concat + mergesort)."""
-        shard = int(pdf["shard"].iloc[0])
-        rows = {k: [] for k in (
-            "field", "term", "shard", "block_idx", "first_local", "last_local",
-            "n", "max_score", "doc_bytes", "tf_bytes",
-        )}
-        for (field, term), g in pdf.groupby(["field", "term"], sort=False):
-            ids_parts, tf_parts, sc_parts = [], [], []
-            for db, tb, sb, n in zip(g["doc_bytes"], g["tf_bytes"],
-                                     g["score_bytes"], g["n"]):
-                ids_parts.append(delta_decode(db, int(n)))
-                tf_parts.append(varbyte_decode(tb, int(n)))
-                sc_parts.append(np.frombuffer(sb, dtype=np.float64))
-            if len(ids_parts) == 1:
-                ids, tfs, scs = ids_parts[0], tf_parts[0], sc_parts[0]
-            else:
-                ids = np.concatenate(ids_parts)
-                tfs = np.concatenate(tf_parts)
-                scs = np.concatenate(sc_parts)
-                order = np.argsort(ids, kind="mergesort")
-                ids, tfs, scs = ids[order], tfs[order], scs[order]
-            for bi, s in enumerate(range(0, len(ids), block_size)):
-                e = min(s + block_size, len(ids))
-                rows["field"].append(field)
-                rows["term"].append(term)
-                rows["shard"].append(shard)
-                rows["block_idx"].append(bi)
-                rows["first_local"].append(int(ids[s]))
-                rows["last_local"].append(int(ids[e - 1]))
-                rows["n"].append(int(e - s))
-                rows["max_score"].append(float(scs[s:e].max()))
-                rows["doc_bytes"].append(delta_encode(ids[s:e]))
-                rows["tf_bytes"].append(varbyte_encode(tfs[s:e]))
-        return pd.DataFrame(rows)
-
-    return _merge_many
-
-
 # ---------- build stages ----------
 
 def assign_layout(u: DataFrame, cfg: IndexConfig) -> DataFrame:
@@ -699,52 +515,18 @@ def doclens(tf: DataFrame, cfg: IndexConfig) -> DataFrame:
     the worst 4N scaler (2.52x) largely from those two extra tf passes.
     tf is shard-colocated on disk, so the pivot's map-side partial agg
     collapses the per-term rows to one row per doc before the exchange
-    (dl repeats on every (doc, field) row; F.first is exact).  When tf
-    carries the materialized ``fidx`` int column the pivot keys on it
-    instead of the ``field`` string (same values by construction), so
-    this posting-grain scan too reads only int columns."""
-    if "fidx" in tf.columns:
-        n = len(cfg.fields)
-        piv = (
-            tf.groupBy("shard", "local_id")
-            .pivot("fidx", list(range(n)))
-            .agg(F.first("dl"))
-        )
-        return piv.select(
-            "shard", "local_id",
-            *[F.col(str(i)).alias(f) for i, f in enumerate(cfg.fields)],
-        )
-    return (
+    (dl repeats on every (doc, field) row; F.first is exact).  The pivot
+    keys on the int ``fidx``, so this posting-grain scan reads only int
+    columns."""
+    n = len(cfg.fields)
+    piv = (
         tf.groupBy("shard", "local_id")
-        .pivot("field", list(cfg.fields))
+        .pivot("fidx", list(range(n)))
         .agg(F.first("dl"))
     )
-
-
-def corpus_stats(tf: DataFrame, lens: Optional[DataFrame] = None,
-                 cfg: Optional[IndexConfig] = None) -> DataFrame:
-    """Per-field (n_docs, avgdl) over field-present docs.  Pass ``lens``
-    (the materialized doclens table) to aggregate the narrow per-doc
-    table instead of a full-tf distinct.  avgdl is identical either way:
-    dl is integral, so Spark's avg accumulates an exact long sum before
-    the one division."""
-    if lens is not None:
-        n = len(cfg.fields)
-        stacked = lens.select(F.expr(
-            "stack({}, {}) as (field, dl)".format(
-                n, ", ".join(f"'{f}', {f}" for f in cfg.fields)
-            )
-        )).filter(F.col("dl").isNotNull())
-        per_doc = stacked
-    elif "field" in tf.columns:
-        per_doc = tf.select("field", "shard", "local_id", "dl").distinct()
-    else:
-        per_doc = (
-            tf.select("fidx", "shard", "local_id", "dl").distinct()
-            .select(field_col(cfg).alias("field"), "dl")
-        )
-    return per_doc.groupBy("field").agg(
-        F.count(F.lit(1)).alias("n_docs"), F.avg("dl").alias("avgdl")
+    return piv.select(
+        "shard", "local_id",
+        *[F.col(str(i)).alias(f) for i, f in enumerate(cfg.fields)],
     )
 
 
@@ -798,25 +580,21 @@ def write_corpus_stats_local(doclens_dir: str, out_dir: str,
 def term_dict(tf: DataFrame, stats: DataFrame, cfg: IndexConfig) -> DataFrame:
     """(field, term, df, idf, tbucket).  idf = ln(1 + (N-n+0.5)/(n+0.5)).
 
-    When tf carries only the int ``fidx`` (new layout), the df agg keys
-    on it and the field string materializes AFTER the agg, at vocab
-    grain -- the term strings themselves still stream through this one
-    agg (the single posting-grain string decode left in the build)."""
-    if "field" in tf.columns:
-        df_tbl = tf.groupBy("field", "term").agg(F.count(F.lit(1)).alias("df"))
-    else:
-        df_tbl = (
-            tf.groupBy("fidx", "term").agg(F.count(F.lit(1)).alias("df"))
-            .withColumn("field", field_col(cfg)).drop("fidx")
-        )
+    The df agg keys on the int ``fidx`` and the field string materializes
+    AFTER the agg, at vocab grain -- the term strings themselves still
+    stream through this one agg (the single posting-grain string decode
+    left in the build)."""
+    df_tbl = (
+        tf.groupBy("fidx", "term").agg(F.count(F.lit(1)).alias("df"))
+        .withColumn("field", field_col(cfg)).drop("fidx")
+    )
     return term_dict_from_df(df_tbl, stats, cfg)
 
 
 def term_dict_from_df(df_tbl: DataFrame, stats: DataFrame,
                       cfg: IndexConfig) -> DataFrame:
     """Attach idf + tbucket to a vocab-grain (field, term, df) table --
-    the shared tail of term_dict, also fed directly by the stats stage's
-    pre-write vocab pass when the tf parquet drops the term string."""
+    the shared tail of term_dict and of compact_tiered's merged df."""
     j = df_tbl.join(F.broadcast(stats.select("field", "n_docs")), "field")
     return j.select(
         "field", "term", "df",
@@ -828,262 +606,102 @@ def term_dict_from_df(df_tbl: DataFrame, stats: DataFrame,
     )
 
 
-def scored_tf(tf: DataFrame, tdict: DataFrame, stats: DataFrame, cfg: IndexConfig) -> DataFrame:
-    """Attach the per-posting BM25 contribution (idf * tf_norm), float64.
-
-    This is what per-block max_score upper-bounds.  The idf join is
-    broadcast when the dictionary is small; at web scale it is a shuffled
-    hash join on (field, term) that AQE plans -- both sides are already
-    columnar and pruned to 3 columns.
-    """
-    if "term" not in tf.columns:
-        # narrow materialized tf (term string dropped at write,
-        # SPARK_GRAFT_TF_TERM=drop): re-attach (field, term, idf) in one
-        # posting-grain join keyed by the int tid instead of the string pair
-        names = tdict.select(
-            F.xxhash64("field", "term").alias("tid"), "field", "term", "idf"
-        )
-        j = tf.join(names, "tid")
-    else:
-        if "field" not in tf.columns:
-            tf = tf.withColumn("field", field_col(cfg))
-        j = tf.join(tdict.select("field", "term", "idf"), ["field", "term"])
-    avg_map = {r["field"]: r["avgdl"] for r in stats.collect()}
-    avgdl = F.coalesce(
-        *[
-            F.when(F.col("field") == f, F.lit(float(v)))
-            for f, v in avg_map.items()
-        ],
-        F.lit(1.0),
-    ) if avg_map else F.lit(1.0)
-    denom = F.col("tf") + cfg.k1 * (1.0 - cfg.b + cfg.b * F.col("dl") / avgdl)
-    return j.withColumn("score", F.col("idf") * F.col("tf") / denom)
-
-
-def _use_tid_keys() -> bool:
-    import os
-
-    return os.environ.get("SPARK_GRAFT_TERM_KEYS", "tid") != "str"
-
-
-def _use_mapside_encode() -> bool:
-    import os
-
-    return os.environ.get("SPARK_GRAFT_POSTINGS", "mapside") != "salted"
-
-
-def _use_pyarrow_scan() -> bool:
-    import os
-
-    return os.environ.get("SPARK_GRAFT_POSTINGS_SCAN", "pyarrow") != "jvm"
-
-
-def _drop_tf_term() -> bool:
-    """``SPARK_GRAFT_TF_TERM=drop`` materializes tf WITHOUT the
-    posting-grain term string; a vocab-grain (field, term, df) pass runs
-    BEFORE the write instead, so posting grain stores no string anywhere.
-
-    Default stays ``keep``: the same-night A/B at 480k pages / local[16]
-    (BENCH_SCALING.md round 5) showed the vocab pass re-pays the full
-    tokenize cost (~31 s, comparable to the entire keep-mode tf_write of
-    23.6 s) while dropping the string saves nothing measurable -- on the
-    sorted (shard, tid, local_id) layout the term column dictionary-
-    encodes to near-zero write cost.  Kept as a measured negative-A/B
-    lever, like SPARK_GRAFT_POSTINGS=salted."""
-    import os
-
-    return os.environ.get("SPARK_GRAFT_TF_TERM", "keep") != "keep"
-
-
 def build_postings_for(
     tf: DataFrame, tdict: DataFrame, stats: DataFrame, cfg: IndexConfig,
     scan_units: Optional[list] = None,
 ) -> DataFrame:
-    """tf -> block rows (T5+T6+T7); three strategies, one output schema.
+    """tf -> block rows (T5+T6+T7): map-side partial-run encode, then the
+    tf-norm merge.
 
-    Default ("mapside"): partial-run encoding as a NARROW map over the
-    tf scan -- each ~1.5M-row input chunk emits one compressed sorted
-    run per (shard, tid) it contains, so the ONLY shuffle in the stage
-    is the merge exchange moving delta+varbyte-compressed runs (a few
-    bytes per posting: doc gap + tf + dl, no f64 score) instead of raw
-    ~36-B posting rows.  The dictionary join happens ONLY at block
-    grain (idf * max_tfnorm after the merge) -- posting-grain rows
-    never join anything.  Skew needs no explicit handling: any one run
-    is chunk-bounded, and the k-way merge accepts arbitrary run counts
-    per term.  The stored max_score gets a 1e-12 relative bump: the
-    serve kernel computes fl(fl(idf*tf)/denom) while this path stores
-    fl(idf * fl(max tf/denom)), which can differ by ~2 ulp (~4e-16
-    relative) either way; the bump keeps the block bound a sound upper
-    bound (pruning stays lossless -- a slightly larger bound can only
-    skip fewer blocks) at a cost of ~1e-12 looser pruning.
+    The encode is a NARROW map over the tf scan: each ~1.5M-row input
+    chunk emits one compressed sorted run per (shard, tid) it contains,
+    so the ONLY shuffle in the stage is the merge exchange moving
+    delta+varbyte-compressed runs (a few bytes per posting: doc gap + tf
+    + dl, no f64 score) instead of raw ~36-B posting rows.  Skew needs
+    no salting: any one run is chunk-bounded, and the k-way merge
+    accepts any number of runs per term.
 
-    ``SPARK_GRAFT_POSTINGS=salted`` keeps the round-3 path (kept for
-    A/B): scored-tf dictionary join, posting-grain shuffle to (shard,
-    hash-bucket[, salt]) groups, head terms (df > heavy_term_df) salted
-    by local_id into ``num_salts`` independent runs, per-posting f64
-    scores shipped through both exchanges.
+    Two scans feed the encode, chosen by the input: ``scan_units``
+    (file, row-group) pairs of a materialized tf table select the
+    direct-pyarrow row-group scan; without them (streaming micro-batches,
+    compaction deltas, a shard-group with no tf file) the DataFrame
+    itself is scanned through the JVM.
 
-    All paths key the merge on ``tid = xxhash64(field, term)`` -- the
-    (field, term) strings re-attach AFTER the merge at block granularity
-    (~1/block_size the rows) via a dictionary join, so the on-disk
-    postings schema is unchanged.  ``verify_tid_unique`` (run once per
-    build in the stats stage) guards the astronomically-unlikely 64-bit
-    collision, which would otherwise silently merge two terms' lists.
-    ``SPARK_GRAFT_TERM_KEYS=str`` selects the legacy string-keyed
-    salted path.  All three produce identical merged blocks (doc/tf
-    bytes byte-identical, max_score within 1e-9 relative; asserted in
-    tests/test_codec.py::test_postings_paths_identical).
+    The merge keys on ``tid = xxhash64(field, term)``; the dictionary
+    join happens ONLY at block grain, where it re-attaches (field, term)
+    and idf (max_score = idf * max_tfnorm), so the on-disk postings
+    schema carries the strings and posting-grain rows never join
+    anything.  ``verify_tid_unique`` (a task of every build's postings
+    stage) guards the astronomically-unlikely 64-bit collision, which
+    would otherwise silently merge two terms' lists.  The stored
+    max_score gets a 1e-12 relative bump: the serve kernel computes
+    fl(fl(idf*tf)/denom) while this path stores fl(idf * fl(max
+    tf/denom)), which can differ by ~2 ulp (~4e-16 relative) either way;
+    the bump keeps the block bound a sound upper bound (pruning stays
+    lossless -- a slightly larger bound can only skip fewer blocks) at a
+    cost of ~1e-12 looser pruning.  tests/test_codec.py::
+    test_postings_match_reference checks both scans against a pure-Python
+    encode.
     """
-    if not _use_tid_keys():
-        stf = scored_tf(tf, tdict, stats, cfg)
-        heavy = tdict.filter(F.col("df") > cfg.heavy_term_df).select(
-            "field", "term", F.lit(True).alias("_heavy")
+    if scan_units:
+        # direct-pyarrow encode scan: the driver enumerated (file,
+        # row-group) units; each task reads its row groups columnar in
+        # the python worker, pruned to the 6 fixed-width ENCODE_COLS.
+        # The JVM->python Arrow boundary then carries only these path
+        # rows in and compressed runs out -- O(runs), not O(postings).
+        # boundary_probe.py: the per-row Arrow serialization it removes
+        # cost ~1.8 us/row of JVM CPU and was the dominant NON-SCALING
+        # term in the build (inflates ~3.2x from local[4] to local[16]).
+        spark = tf.sparkSession
+        paths = spark.createDataFrame(
+            [(p, r) for p, r in scan_units], "path string, rg int"
+        ).repartition(len(scan_units))
+        runs = paths.mapInPandas(
+            _encode_partial_runs_files, schema=RUN_SCHEMA_DL
         )
-        stf = stf.join(F.broadcast(heavy), ["field", "term"], "left")
-        stf = stf.withColumn(
-            "salt",
-            F.when(
-                F.col("_heavy").isNotNull(),
-                F.pmod(F.col("local_id"), F.lit(cfg.num_salts)).cast("int"),
-            ).otherwise(F.lit(0)),
-        ).drop("_heavy")
-        stf = stf.withColumn(
-            "ekey", F.pmod(F.xxhash64("field", "term"), F.lit(cfg.encode_buckets)).cast("int")
-        )
-        runs = stf.groupBy("shard", "ekey", "salt").applyInPandas(
-            _encode_runs_many, schema=RUN_SCHEMA
-        )
-        runs = runs.withColumn(
-            "mkey", F.pmod(F.xxhash64("field", "term"), F.lit(cfg.encode_buckets)).cast("int")
-        )
-        blocks = runs.groupBy("shard", "mkey").applyInPandas(
-            _make_merge_runs(cfg.block_size), schema=POSTINGS_SCHEMA
-        )
-        blocks = blocks.withColumn(
-            "tbucket", tbucket_col(F.col("term"), cfg.term_buckets)
-        )
-        return blocks.repartition(cfg.term_buckets, "tbucket")
-
-    if _use_mapside_encode():
-        # map-side partial runs (default): encode is a NARROW stage over
-        # the raw tf scan -- no posting-grain exchange OR join exists at
-        # all.  Each input chunk yields one compressed run per (shard,
-        # tid) it contains; the merge exchange below moves only those
-        # compressed runs.  Head-term skew is bounded by the chunk size,
-        # so the heavy-term broadcast + salt machinery is unnecessary
-        # here (cfg.heavy_term_df/num_salts only affect "salted").
-        if scan_units and _use_pyarrow_scan():
-            # direct-pyarrow encode scan (default when the tf table is
-            # materialized): the driver enumerated (file, row-group)
-            # units; each task reads its row groups columnar in the
-            # python worker, pruned to the 6 fixed-width ENCODE_COLS.
-            # The JVM->python Arrow boundary then carries only these
-            # path rows in and compressed runs out -- O(runs), not
-            # O(postings).  boundary_probe.py: the per-row Arrow
-            # serialization it removes cost ~1.8 us/row of JVM CPU and
-            # was the dominant NON-SCALING term in the build (inflates
-            # ~3.2x from local[4] to local[16]).
-            spark = tf.sparkSession
-            paths = spark.createDataFrame(
-                [(p, r) for p, r in scan_units], "path string, rg int"
-            ).repartition(len(scan_units))
-            runs = paths.mapInPandas(
-                _encode_partial_runs_files, schema=RUN_SCHEMA_DL
-            )
+    else:
+        if "tid" in tf.columns:
+            # materialized tf carries (tid, fidx) ints (stats stage
+            # wrote them in the same codegen pass as the tf write): this
+            # scan reads ONLY fixed-width int columns -- parquet never
+            # decodes the posting-grain term string pages, and no
+            # per-posting hash runs here
+            src = tf.select("tid", "shard", "fidx", "local_id", "tf", "dl")
         else:
-            if "tid" in tf.columns and "fidx" in tf.columns:
-                # materialized tf carries (tid, fidx) ints (stats stage
-                # wrote them in the same codegen pass as the tf write):
-                # this scan reads ONLY fixed-width int columns -- parquet
-                # never decodes the posting-grain term string pages, and
-                # no per-posting hash runs here
-                src = tf.select("tid", "shard", "fidx", "local_id", "tf", "dl")
-            elif "fidx" in tf.columns:
-                # fresh tokenize output (streaming micro-batches): fidx
-                # is native; the field string exists only inside the tid
-                # hash expression (field_col is codegen element_at)
-                src = tf.select(
-                    F.xxhash64(field_col(cfg), F.col("term")).alias("tid"),
-                    "shard", "fidx", "local_id", "tf", "dl",
-                )
-            else:
-                src = tf.select(
-                    F.xxhash64("field", "term").alias("tid"),
-                    "shard", fidx_col(cfg).alias("fidx"), "local_id", "tf", "dl",
-                )
-            runs = src.mapInPandas(_encode_partial_runs, schema=RUN_SCHEMA_DL)
-        runs = runs.withColumn(
-            "mkey", F.pmod(F.col("tid"), F.lit(cfg.encode_buckets)).cast("int")
-        )
-        avg_map = {r["field"]: float(r["avgdl"]) for r in stats.collect()}
-        avgdl_by_fidx = [avg_map.get(f, 1.0) for f in cfg.fields]
-        blocks = runs.groupBy("shard", "mkey").applyInPandas(
-            _make_merge_runs_tfnorm(cfg.block_size, cfg.k1, cfg.b,
-                                    avgdl_by_fidx),
-            schema=POSTINGS_SCHEMA_TFNORM,
-        )
-        # block-grain dictionary join attaches (field, term) AND idf;
-        # max_score = idf * max_tfnorm (+1e-12 bump, see docstring)
-        names = tdict.select(
-            F.xxhash64("field", "term").alias("tid"), "field", "term", "idf"
-        )
-        blocks = blocks.join(names, "tid").drop("tid")
-        blocks = blocks.select(
-            "field", "term", "shard", "block_idx", "first_local",
-            "last_local", "n",
-            (F.col("idf") * F.col("max_tfnorm") * F.lit(1.0 + 1e-12))
-            .alias("max_score"),
-            "doc_bytes", "tf_bytes",
-            tbucket_col(F.col("term"), cfg.term_buckets).alias("tbucket"),
-        )
-        # co-locate each tbucket in one task before the dynamic-partition
-        # write: otherwise every task writes a file into every tbucket dir
-        # (tasks x buckets small files; each local-FS commit forks chmod)
-        return blocks.repartition(cfg.term_buckets, "tbucket")
-
-    stf = scored_tf(tf, tdict, stats, cfg)
-    stf = stf.withColumn("tid", F.xxhash64("field", "term"))
-    heavy = tdict.filter(F.col("df") > cfg.heavy_term_df).select(
-        F.xxhash64("field", "term").alias("tid"), F.lit(True).alias("_heavy")
-    )
-    stf = stf.join(F.broadcast(heavy), "tid", "left")
-    stf = stf.withColumn(
-        "salt",
-        F.when(
-            F.col("_heavy").isNotNull(),
-            F.pmod(F.col("local_id"), F.lit(cfg.num_salts)).cast("int"),
-        ).otherwise(F.lit(0)),
-    )
-    # drop the strings BEFORE the encode exchange: this select is what
-    # turns the shuffle rows into (tid, shard, local_id, tf, score, salt)
-    stf = stf.select(
-        "tid", "shard", "local_id", "tf", "score", "salt",
-        F.pmod(F.col("tid"), F.lit(cfg.encode_buckets)).cast("int").alias("ekey"),
-    )
-    runs = stf.groupBy("shard", "ekey", "salt").applyInPandas(
-        _encode_runs_many_tid, schema=RUN_SCHEMA_TID
-    )
+            # fresh tokenize output (streaming micro-batches, compaction
+            # deltas): the field string exists only inside the tid hash
+            # expression (field_col is codegen element_at)
+            src = tf.select(
+                F.xxhash64(field_col(cfg), F.col("term")).alias("tid"),
+                "shard", "fidx", "local_id", "tf", "dl",
+            )
+        runs = src.mapInPandas(_encode_partial_runs, schema=RUN_SCHEMA_DL)
     runs = runs.withColumn(
         "mkey", F.pmod(F.col("tid"), F.lit(cfg.encode_buckets)).cast("int")
     )
+    avg_map = {r["field"]: float(r["avgdl"]) for r in stats.collect()}
+    avgdl_by_fidx = [avg_map.get(f, 1.0) for f in cfg.fields]
     blocks = runs.groupBy("shard", "mkey").applyInPandas(
-        _make_merge_runs_tid(cfg.block_size), schema=POSTINGS_SCHEMA_TID
+        _make_merge_runs_tfnorm(cfg.block_size, cfg.k1, cfg.b, avgdl_by_fidx),
+        schema=POSTINGS_SCHEMA_TFNORM,
     )
-    # re-attach (field, term) at block granularity; Catalyst/AQE picks
-    # broadcast for a small dictionary, a block-grain shuffle join at
-    # web-scale vocab (both fine -- blocks are ~1/block_size of postings)
+    # block-grain dictionary join attaches (field, term) AND idf;
+    # max_score = idf * max_tfnorm (+1e-12 bump, see docstring)
     names = tdict.select(
-        F.xxhash64("field", "term").alias("tid"), "field", "term"
+        F.xxhash64("field", "term").alias("tid"), "field", "term", "idf"
     )
     blocks = blocks.join(names, "tid").drop("tid")
     blocks = blocks.select(
-        "field", "term", "shard", "block_idx", "first_local", "last_local",
-        "n", "max_score", "doc_bytes", "tf_bytes",
+        "field", "term", "shard", "block_idx", "first_local",
+        "last_local", "n",
+        (F.col("idf") * F.col("max_tfnorm") * F.lit(1.0 + 1e-12))
+        .alias("max_score"),
+        "doc_bytes", "tf_bytes",
         tbucket_col(F.col("term"), cfg.term_buckets).alias("tbucket"),
     )
-    # co-locate each tbucket in one task before the dynamic-partition write:
-    # otherwise every task writes a file into every tbucket dir (tasks x
-    # buckets small files; each local-FS file commit fork+execs chmod)
+    # co-locate each tbucket in one task before the dynamic-partition
+    # write: otherwise every task writes a file into every tbucket dir
+    # (tasks x buckets small files; each local-FS commit forks chmod)
     return blocks.repartition(cfg.term_buckets, "tbucket")
 
 
@@ -1098,7 +716,7 @@ def verify_tid_unique(tdict: DataFrame) -> None:
     if ncol:
         raise RuntimeError(
             f"{ncol} xxhash64(field, term) collisions in term_dict; "
-            "set SPARK_GRAFT_TERM_KEYS=str or change the term-id seed"
+            "change the term-id seed"
         )
 
 
@@ -1109,8 +727,7 @@ ATTR_SCHEMA_COLS = [
 ]
 
 
-def attributes(unified: DataFrame, cfg: IndexConfig,
-               tf: Optional[DataFrame] = None,
+def attributes(unified: DataFrame, cfg: IndexConfig, tf: DataFrame,
                lens: Optional[DataFrame] = None) -> DataFrame:
     """Per-doc serve-side attributes: lengths per field + embedding +
     precomputed semantic-LSH bucket.
@@ -1124,37 +741,30 @@ def attributes(unified: DataFrame, cfg: IndexConfig,
     such docs are only reachable via exact semantic mode or after
     compaction re-embeds them.
 
-    Pass ``lens`` (the materialized pivoted doclens table, one row per
-    doc) -- or, failing that, ``tf`` (the tokenize_tf output, which
-    already carries per-field dl) -- to derive len_* without
-    RE-TOKENIZING the whole corpus a second time -- at 100 TB
-    tokenization is a full-corpus pass worth doing exactly once.  With
-    ``lens`` this stage touches no posting-grain data at all; with only
-    ``tf`` it must first collapse the full posting-grain table.  Fields
-    a doc lacks
-    get len 0, which is what F.size(tokens) returned (and the scorer only
+    len_* come from ``lens`` (the materialized pivoted doclens table, one
+    row per doc) or, when it is absent, from ``tf`` (the tokenize_tf
+    output, which already carries per-field dl), never from a second
+    tokenization -- at 100 TB tokenization is a full-corpus pass worth
+    doing exactly once.  With ``lens`` this stage touches no posting-grain
+    data at all; with only ``tf`` it must first collapse the full
+    posting-grain table.  Fields a doc lacks get len 0 (the scorer only
     dereferences lengths for docs a posting reaches, i.e. dl > 0 fields).
     """
     from .similarity import _hyperplanes
 
-    u = unified
-    if lens is not None or tf is not None:
-        if lens is None:
-            lens = doclens(tf, cfg)
-        lens = lens.select(
-            "shard", "local_id",
-            *[F.coalesce(F.col(f), F.lit(0)).alias(f"len_{f}") for f in cfg.fields],
-        )
-        # shuffle-hash, not sort-merge: the hash table is built from the
-        # NARROW lens side, so the wide unified rows (text + embedding)
-        # stream through without being sorted (an SMJ here re-sorts the
-        # whole corpus and spills at high task concurrency)
-        u = u.join(lens.hint("shuffle_hash"), ["shard", "local_id"], "left")
-        for f in cfg.fields:
-            u = u.withColumn(f"len_{f}", F.coalesce(F.col(f"len_{f}"), F.lit(0)))
-    else:
-        for f in cfg.fields:
-            u = u.withColumn(f"len_{f}", F.size(tokens_col(f)))
+    if lens is None:
+        lens = doclens(tf, cfg)
+    lens = lens.select(
+        "shard", "local_id",
+        *[F.coalesce(F.col(f), F.lit(0)).alias(f"len_{f}") for f in cfg.fields],
+    )
+    # shuffle-hash, not sort-merge: the hash table is built from the
+    # NARROW lens side, so the wide unified rows (text + embedding)
+    # stream through without being sorted (an SMJ here re-sorts the
+    # whole corpus and spills at high task concurrency)
+    u = unified.join(lens.hint("shuffle_hash"), ["shard", "local_id"], "left")
+    for f in cfg.fields:
+        u = u.withColumn(f"len_{f}", F.coalesce(F.col(f"len_{f}"), F.lit(0)))
     # Arrow-batched numpy matmul, NOT the catalyst aggregate/zip_with fold:
     # higher-order-function lambdas are interpreted per element (no
     # whole-stage codegen), which made this stage the build bottleneck;
@@ -1197,9 +807,9 @@ def attributes(unified: DataFrame, cfg: IndexConfig,
 
 def _tag_jobs(spark: SparkSession, stage: str) -> None:
     """Label subsequent Spark jobs with the build stage.  Shows up in the
-    UI/event logs and lets scripts/shuffle_probe.py attribute shuffle
-    bytes to build stages deterministically (wall-clock attribution on a
-    noisy multi-tenant host is unreliable)."""
+    UI/event logs, so shuffle bytes attribute to build stages
+    deterministically (wall-clock attribution on a noisy multi-tenant host
+    is unreliable)."""
     spark.sparkContext.setJobGroup(f"build:{stage}", f"index build stage {stage}")
 
 
@@ -1435,8 +1045,8 @@ def _index_stages_from_unified(
         # (grp = pmod(shard) is a function of shard, so shard-hashed
         # partitions are already (grp, shard)-colocated).  The bytes
         # moved drop from ~2x posting-grain rows (tf agg exchange +
-        # layout repartition; shuffle_probe measured the stats stage at
-        # 1376.8 MB @480k pages) to one pass over the doc-grain text
+        # layout repartition; 1376.8 MB @480k pages, BENCH_SCALING.md
+        # round 4, "one doc-grain exchange") to one pass over the doc-grain text
         # (~300 MB @480k) -- and on the one-box protocol, shuffle bytes
         # through a shared memory system are exactly the non-scaling
         # resource (BENCH_SCALING.md round 4).  Plan shape (1 exchange
@@ -1466,7 +1076,7 @@ def _index_stages_from_unified(
         # tf stays co-located by shard on disk -- this is a LAYOUT
         # INVESTMENT, not just small-file control: every downstream
         # consumer aggregates on (shard, local_id)-prefixed keys
-        # (corpus_stats distinct, attributes' lens pivot), and shard-
+        # (the doclens pivot), and shard-
         # colocated input lets their map-side partial aggs collapse rows
         # before shuffling.  A/B at 3.84M pages (BENCH_SCALING.md round 3):
         # dropping shard colocation saved ~117 s in `stats` at local[4]
@@ -1487,41 +1097,12 @@ def _index_stages_from_unified(
         # (shard, local_id) clustering also feeds the doclens/stats
         # partial aggs the layout comment above describes.
         sub = {}
-        drop_term = _drop_tf_term()
-        if drop_term:
-            # vocab-grain dictionary pass BEFORE the write (verdict r4
-            # task 3): the posting-grain tf parquet then stores NO string
-            # anywhere -- the term column otherwise rides the Tungsten
-            # radix sort as row payload and pays a per-row dictionary
-            # encode in the parquet writer solely so term_dict can
-            # aggregate it later.  This pass re-runs tokenize+tf-agg
-            # (the doc-grain exchange itself is stage-skipped -- same
-            # shuffle lineage), but its df agg collapses to vocab grain
-            # map-side, so nothing posting-grain moves or lands.
-            # MEASURED NET LOSS at 480k/local[16] (BENCH_SCALING.md
-            # round 5): the re-tokenize costs ~the whole keep-mode
-            # tf_write; default stays keep (_drop_tf_term docstring).
-            t2 = time.time()
-            term_df = (
-                tf.groupBy("fidx", "term")
-                .agg(F.count(F.lit(1)).alias("df"))
-                .select(
-                    field_col(cfg).alias("field"), "term", "df",
-                )
-            )
-            store.write(term_df, "term_df")
-            sub["term_df_sec"] = round(time.time() - t2, 1)
-            tf_w = tf.select(
-                "grp", "tid", "shard", "fidx", "local_id", "dl", "tf"
-            )
-        else:
-            tf_w = tf
         store.write(
             # grp leads the sort so the dynamic-partition writer's
             # required ordering (partition cols first) is satisfied by
             # prefix -- otherwise FileFormatWriter inserts its own
             # non-stable sort by grp and destroys the inner order
-            tf_w.sortWithinPartitions("grp", "shard", "tid", "local_id"),
+            tf.sortWithinPartitions("grp", "shard", "tid", "local_id"),
             "tf", partition_by=["grp"],
         )
         sub["tf_write_sec"] = round(time.time() - t, 1)
@@ -1540,15 +1121,7 @@ def _index_stages_from_unified(
         )
         sub["corpus_stats_sec"] = round(time.time() - t2, 1)
         t2 = time.time()
-        if drop_term:
-            # idf attaches to the pre-computed vocab-grain df table; no
-            # posting-grain scan happens here at all
-            td = term_dict_from_df(
-                store.read(spark, "term_df"),
-                store.read(spark, "corpus_stats"), cfg,
-            )
-        else:
-            td = term_dict(tf, store.read(spark, "corpus_stats"), cfg)
+        td = term_dict(tf, store.read(spark, "corpus_stats"), cfg)
         store.write(td.repartition(cfg.term_buckets, "tbucket"),
                     "term_dict", partition_by=["tbucket"])
         sub["term_dict_sec"] = round(time.time() - t2, 1)
@@ -1644,19 +1217,18 @@ def _index_stages_from_unified(
     tasks = [(lambda g=g: _one_group(g)) for g in pending]
     if not store.stage_done("attributes"):
         tasks.append(_attributes_task)
-    if _use_tid_keys():
-        # 64-bit tid collision guard (verify_tid_unique docstring): a
-        # vocab-sized job that used to sit serially at the end of the
-        # stats stage; as a pool task it hides under the postings groups.
-        # Unconditional (even on a no-op resume) so that "this invocation
-        # returned" always implies "the served dictionary was verified" --
-        # a raise here propagates before finish_stage("postings").
-        def _verify_task():
-            _tag_jobs(spark, "postings")
-            spark.sparkContext.setJobDescription("verify tid uniqueness")
-            verify_tid_unique(td)
+    # 64-bit tid collision guard (verify_tid_unique docstring): a
+    # vocab-sized job that used to sit serially at the end of the stats
+    # stage; as a pool task it hides under the postings groups.
+    # Unconditional (even on a no-op resume) so that "this invocation
+    # returned" always implies "the served dictionary was verified" -- a
+    # raise here propagates before finish_stage("postings").
+    def _verify_task():
+        _tag_jobs(spark, "postings")
+        spark.sparkContext.setJobDescription("verify tid uniqueness")
+        verify_tid_unique(td)
 
-        tasks.append(_verify_task)
+    tasks.append(_verify_task)
     if len(tasks) > 1 and n_jobs > 1:
         from concurrent.futures import ThreadPoolExecutor
 

@@ -2,8 +2,8 @@
 
 Scale notes (100 TB / 1000 executors):
 - AQE on: post-shuffle coalescing + skew-join splitting as a safety net
-  (explicit salting in the index build is still required -- AQE cannot
-  split a single hot groupBy key).
+  (AQE cannot split a single hot groupBy key, so the index build has none
+  at posting grain: its encode emits chunk-bounded partial runs).
 - Arrow on: every per-row kernel is an Arrow-batched pandas UDF.
 - shuffle.partitions defaults to cores locally; on a cluster set it to
   2-3x total cores (or rely on AQE coalescing from a high initial value).

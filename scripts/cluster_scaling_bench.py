@@ -195,8 +195,8 @@ def child(master_url: str, cores_total: int, replicate: int,
     pages = pages_from_documents(big, html_repeat=HTML_REPEAT)
     n_pages = n_docs * replicate
     idx = tempfile.mkdtemp(prefix=f"cscale_{cores_total}_")
-    cfg = IndexConfig(num_doc_shards=256, shard_groups=1, heavy_term_df=20000,
-                      num_salts=8, term_buckets=64, encode_buckets=8)
+    cfg = IndexConfig(num_doc_shards=256, shard_groups=1, term_buckets=64,
+                      encode_buckets=8)
     t = time.time()
     store = IndexStore(os.path.join(idx, "i"), build_id="s")
     build_index(spark, pages, store, cfg, with_embeddings=EMBED,

@@ -64,8 +64,7 @@ def main() -> None:
     rec: dict = {"n_base_pages": n_pages, "cpus": cpus}
     try:
         cfg = IndexConfig(num_doc_shards=64, shard_groups=1,
-                          heavy_term_df=20000, term_buckets=64,
-                          encode_buckets=8)
+                          term_buckets=64, encode_buckets=8)
         store = IndexStore(os.path.join(work, "base"), build_id="cb")
         t = time.time()
         build_index(spark, pages, store, cfg, with_embeddings=False,

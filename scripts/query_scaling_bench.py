@@ -73,8 +73,7 @@ def build(idx_dir: str, queries_json: str) -> None:
     )
     pages = pages_from_documents(big, html_repeat=HTML_REPEAT)
     cfg = IndexConfig(num_doc_shards=NUM_SHARDS, shard_groups=1,
-                      heavy_term_df=20000, num_salts=8, term_buckets=64,
-                      encode_buckets=8)
+                      term_buckets=64, encode_buckets=8)
     t = time.time()
     store = IndexStore(idx_dir, build_id="q")
     build_index(spark, pages, store, cfg, with_embeddings=EMBED,

@@ -86,8 +86,8 @@ def child(cpus: int, replicate: int, sf_dir: str, out_path: str) -> None:
     # num_doc_shards=256 = 4x the max core count tested (the config
     # docstring's cluster sizing rule): per-task sort/cogroup units stay
     # small enough to never spill at either parallelism level.
-    cfg = IndexConfig(num_doc_shards=256, shard_groups=1, heavy_term_df=20000,
-                      num_salts=8, term_buckets=64, encode_buckets=8)
+    cfg = IndexConfig(num_doc_shards=256, shard_groups=1, term_buckets=64,
+                      encode_buckets=8)
     t = time.time()
     store = IndexStore(os.path.join(idx, "i"), build_id="s")
     build_index(spark, pages, store, cfg, with_embeddings=EMBED,

@@ -86,8 +86,8 @@ def child(cpus: int, replicate: int, out_path: str) -> None:
     pages = pages_from_documents(big, html_repeat=8)
     idx = tempfile.mkdtemp(prefix=f"stage_{cpus}_")
     ebuckets = int(os.environ.get("SPARK_GRAFT_PROBE_EBUCKETS", "8"))
-    cfg = IndexConfig(num_doc_shards=256, shard_groups=1, heavy_term_df=20000,
-                      num_salts=8, term_buckets=64, encode_buckets=ebuckets)
+    cfg = IndexConfig(num_doc_shards=256, shard_groups=1, term_buckets=64,
+                      encode_buckets=ebuckets)
     t = time.time()
     c0 = cpu_stat()
     store = IndexStore(os.path.join(idx, "i"), build_id="s")

@@ -27,8 +27,6 @@ def main():
     p.add_argument("--build-id", default=None)
     p.add_argument("--shards", type=int, default=32)
     p.add_argument("--shard-groups", type=int, default=8)
-    p.add_argument("--heavy-term-df", type=int, default=100_000)
-    p.add_argument("--num-salts", type=int, default=8)
     p.add_argument("--term-buckets", type=int, default=64)
     p.add_argument("--no-embeddings", action="store_true")
     p.add_argument("--no-verify", action="store_true",
@@ -46,7 +44,6 @@ def main():
     spark = SparkSession.builder.appName("chavinha-index-build").getOrCreate()
     cfg = IndexConfig(
         num_doc_shards=args.shards, shard_groups=args.shard_groups,
-        heavy_term_df=args.heavy_term_df, num_salts=args.num_salts,
         term_buckets=args.term_buckets,
     )
     store = IndexStore(args.index, build_id=args.build_id)

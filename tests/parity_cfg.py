@@ -3,6 +3,5 @@
 from chavinha_mini_search_engine_spark.operators.index_build import IndexConfig
 
 CFG = IndexConfig(
-    num_doc_shards=8, shard_groups=4, heavy_term_df=40, num_salts=4,
-    term_buckets=16,
+    num_doc_shards=8, shard_groups=4, term_buckets=16,
 )

@@ -71,53 +71,122 @@ def test_varbyte_encode_segmented_matches_per_segment(values, data):
     assert offs[-1] == len(raw)
 
 
+def _reference_blocks(tf, tdict, stats, cfg):
+    """Pure-Python postings encode: per (field, term, shard) the sorted
+    local_ids tiled into block_size blocks, each with first/last/n, the
+    delta-encoded ids, the varbyte tfs and max_score = max over the
+    block of idf*tf/(tf + k1*(1 - b + b*dl/avgdl))."""
+    idf = dict(zip(zip(tdict["field"], tdict["term"]), tdict["idf"]))
+    avgdl = dict(zip(stats["field"], stats["avgdl"]))
+    tf = tf.assign(field=[cfg.fields[i] for i in tf["fidx"]])
+    out = {}
+    for (field, term, shard), g in tf.groupby(["field", "term", "shard"]):
+        g = g.sort_values("local_id")
+        ids = g["local_id"].to_numpy(np.uint64)
+        tfs = g["tf"].to_numpy(np.uint64)
+        t = tfs.astype(np.float64)
+        dl = g["dl"].to_numpy(np.float64)
+        denom = t + cfg.k1 * (1.0 - cfg.b + cfg.b * dl / avgdl[field])
+        score = idf[(field, term)] * t / denom
+        for bi, s in enumerate(range(0, len(ids), cfg.block_size)):
+            e = min(s + cfg.block_size, len(ids))
+            out[(field, term, int(shard), bi)] = (
+                int(ids[s]), int(ids[e - 1]), e - s, float(score[s:e].max()),
+                delta_encode(ids[s:e]), varbyte_encode(tfs[s:e]),
+            )
+    return out
+
+
+def _assert_blocks_equal(got, ref):
+    """Block metadata and payload bytes exact; the stored bound is
+    idf * max_tfnorm * (1+1e-12) -- within 1e-9 relative of the
+    reference's max(fl(idf*tf/denom)) and never BELOW it by more than
+    float ulps, or pruning soundness is broken."""
+    assert set(got) == set(ref)
+    for key, r in ref.items():
+        g = got[key]
+        assert g[:3] == r[:3], key
+        assert g[4:] == r[4:], key
+        assert abs(g[3] - r[3]) <= 1e-9 * max(abs(r[3]), 1e-30), key
+        assert g[3] >= r[3] * (1.0 - 1e-13), key
+
+
+def _block_map(rows):
+    return {
+        (r["field"], r["term"], r["shard"], r["block_idx"]):
+        (r["first_local"], r["last_local"], r["n"],
+         r["max_score"], bytes(r["doc_bytes"]), bytes(r["tf_bytes"]))
+        for r in rows
+    }
+
+
 def test_postings_paths_identical(spark, built, monkeypatch):
-    """mapside (default), salted-tid, and salted-str postings strategies
-    must produce identical merged block tables: doc/tf payload bytes
-    byte-identical; max_score equal within 1e-9 relative (the mapside
-    path stores idf * max_tfnorm * (1+1e-12) -- a documented
-    association-order epsilon vs the salted paths' per-posting
-    max(fl(idf*tf/denom)) -- and the bound must never be BELOW the
-    salted value by more than float ulps, or pruning soundness is
-    broken)."""
-    from chavinha_mini_search_engine_spark.operators.index_build import (
-        build_postings_for,
-    )
+    """Both scans of build_postings_for -- the pyarrow row-group scan
+    (scan_units) and the JVM DataFrame scan, over the materialized tf
+    and over a tid-less tokenize-shaped tf -- produce exactly the blocks
+    of a pure-Python reference encode, and so does the stored postings
+    table.  A small block size and a 700-row encode chunk make head-term
+    lists span several blocks AND several partial runs, so the k-way
+    merge and the block tiling are both exercised."""
+    import dataclasses
+
+    import pandas as pd
+    import pyarrow.dataset as pads
+
+    from chavinha_mini_search_engine_spark.operators import index_build as ib
     from tests.parity_cfg import CFG
+
+    def table(name):
+        return pads.dataset(
+            built.path(name), format="parquet", partitioning="hive"
+        ).to_table().to_pandas()
+
+    tf_pd, td_pd, st_pd = table("tf"), table("term_dict"), table("corpus_stats")
+    stored = _block_map(table("postings").to_dict("records"))
+    _assert_blocks_equal(stored, _reference_blocks(tf_pd, td_pd, st_pd, CFG))
+
+    cfg = dataclasses.replace(CFG, block_size=16)
+    ref = _reference_blocks(tf_pd, td_pd, st_pd, cfg)
+    # the Python workers take their environment from the SparkContext,
+    # not from the driver's os.environ
+    monkeypatch.setenv("SPARK_GRAFT_ENCODE_CHUNK", "700")
+    monkeypatch.setitem(spark.sparkContext.environment,
+                        "SPARK_GRAFT_ENCODE_CHUNK", "700")
+    units = [
+        u for g in range(cfg.shard_groups)
+        for u in ib.tf_scan_units(built.path("tf", f"grp={g}"))
+    ]
+
+    # the fixture's zipf heads: some (field, term, shard) list spans more
+    # than one block and more than one encode chunk (partial run)
+    runs = pd.concat(ib._encode_partial_runs_files(
+        iter([pd.DataFrame(units, columns=["path", "rg"])])
+    ))
+    multi_run = set(
+        map(tuple, runs.loc[runs.duplicated(["shard", "tid"], keep=False),
+                            ["shard", "tid"]].to_numpy())
+    )
+    tid = dict(zip(zip(tf_pd["fidx"], tf_pd["term"]), tf_pd["tid"]))
+    fidx = {f: i for i, f in enumerate(cfg.fields)}
+    assert any(
+        bi > 0 and (shard, tid[(fidx[field], term)]) in multi_run
+        for field, term, shard, bi in ref
+    ), "fixture must produce head-term lists spanning blocks and runs"
 
     tf = built.read(spark, "tf")
     td = built.read(spark, "term_dict")
     stats = built.read(spark, "corpus_stats")
-
-    def blocks_under(env):
-        for k, v in env.items():
-            monkeypatch.setenv(k, v)
-        try:
-            rows = build_postings_for(tf, td, stats, CFG).collect()
-        finally:
-            for k in env:
-                monkeypatch.delenv(k, raising=False)
-        return {
-            (r["field"], r["term"], r["shard"], r["block_idx"]):
-            (r["first_local"], r["last_local"], r["n"],
-             r["max_score"], bytes(r["doc_bytes"]), bytes(r["tf_bytes"]))
-            for r in rows
-        }
-
-    # force a small chunk size so the mapside path exercises multi-chunk
-    # partial runs (multiple runs per term k-way merged) even at fixture scale
-    monkeypatch.setenv("SPARK_GRAFT_ENCODE_CHUNK", "700")
-    mapside = blocks_under({"SPARK_GRAFT_POSTINGS": "mapside"})
-    salted = blocks_under({"SPARK_GRAFT_POSTINGS": "salted"})
-    legacy = blocks_under({"SPARK_GRAFT_POSTINGS": "salted",
-                           "SPARK_GRAFT_TERM_KEYS": "str"})
-    assert salted == legacy
-    assert set(mapside) == set(salted)
-    for key, m in mapside.items():
-        s = salted[key]
-        assert m[:3] == s[:3], key
-        assert m[4:] == s[4:], key
-        # bound parity: within 1e-9 relative AND never below the salted
-        # per-posting max (minus float-op ulps) -- soundness direction
-        assert abs(m[3] - s[3]) <= 1e-9 * max(abs(s[3]), 1e-30), key
-        assert m[3] >= s[3] * (1.0 - 1e-13), key
+    # small Arrow batches so the JVM scan's chunks hold several batches
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "200")
+    try:
+        for src, scan_units in ((tf, units), (tf, None),
+                                (tf.drop("tid", "grp"), None)):
+            got = _block_map(
+                ib.build_postings_for(src, td, stats, cfg,
+                                      scan_units=scan_units).collect()
+            )
+            _assert_blocks_equal(got, ref)
+    finally:
+        spark.conf.set(key, prev)

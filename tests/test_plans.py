@@ -112,8 +112,7 @@ def test_postings_scan_prunes_by_tbucket(spark, tiny_pages, tmp_path_factory):
     )
     from chavinha_mini_search_engine_spark.sources.tables import IndexStore
 
-    cfg = IndexConfig(num_doc_shards=4, shard_groups=2, heavy_term_df=1000,
-                      num_salts=2, term_buckets=8)
+    cfg = IndexConfig(num_doc_shards=4, shard_groups=2, term_buckets=8)
     store = IndexStore(str(tmp_path_factory.mktemp("pl") / "i"), build_id="plans")
     build_index(spark, spark.read.parquet(tiny_pages), store, cfg,
                 with_embeddings=False, verify_text_invariant=False)

@@ -14,8 +14,7 @@ from chavinha_mini_search_engine_spark.operators.index_build import (
 from chavinha_mini_search_engine_spark.sources.tables import IndexStore
 
 CFG = IndexConfig(
-    num_doc_shards=8, shard_groups=4, heavy_term_df=40, num_salts=4,
-    term_buckets=16,
+    num_doc_shards=8, shard_groups=4, term_buckets=16,
 )
 
 

@@ -160,15 +160,6 @@ def test_chunk_parity_via_spark(spark, built):
     assert got == sorted(exp)
 
 
-def test_salting_exercised(spark, built):
-    """head terms must actually take the salted multi-run path."""
-    from pyspark.sql import functions as F
-
-    td = built.read(spark, "term_dict")
-    heavy = td.filter(F.col("df") > CFG.heavy_term_df)
-    assert heavy.count() > 0, "fixture must produce heavy terms (zipf heads)"
-
-
 def test_postings_blocks_wellformed(spark, built):
     from pyspark.sql import functions as F
 

@@ -109,8 +109,7 @@ def test_hybrid_two_phase_degenerate_parity(spark, tmp_path_factory):
     from chavinha_mini_search_engine_spark.oracle.scorer import OracleIndex
     from chavinha_mini_search_engine_spark.sources.tables import IndexStore
 
-    cfg = IndexConfig(num_doc_shards=1, shard_groups=1, heavy_term_df=100,
-                      num_salts=2, term_buckets=8)
+    cfg = IndexConfig(num_doc_shards=1, shard_groups=1, term_buckets=8)
     rows = generate_pages(400, include_edges=False)
     schema = "url string, warc_ts timestamp, html binary, text string, lang string"
     pages_dir = str(tmp_path_factory.mktemp("tp") / "pages")
@@ -305,8 +304,7 @@ def delta_store(spark, tmp_path_factory):
     from chavinha_mini_search_engine_spark.sources.tables import IndexStore
     from chavinha_mini_search_engine_spark.streaming import incremental
 
-    cfg = IndexConfig(num_doc_shards=4, heavy_term_df=1000, num_salts=2,
-                      term_buckets=8)
+    cfg = IndexConfig(num_doc_shards=4, term_buckets=8)
     rows = generate_pages(40, include_edges=False)
     schema = "url string, warc_ts timestamp, html binary, text string, lang string"
     base_dir = str(tmp_path_factory.mktemp("lay") / "pages")

@@ -105,8 +105,7 @@ def test_index_deltas_searchable(spark, tmp_path_factory):
     from chavinha_mini_search_engine_spark.operators.search import SearchEngine
     from chavinha_mini_search_engine_spark.sources.tables import IndexStore
 
-    cfg = IndexConfig(num_doc_shards=4, shard_groups=2, heavy_term_df=1000,
-                      num_salts=2, term_buckets=8)
+    cfg = IndexConfig(num_doc_shards=4, shard_groups=2, term_buckets=8)
     base_dir = str(tmp_path_factory.mktemp("base") / "pages")
     rows = generate_pages(40, include_edges=False)
     schema = "url string, warc_ts timestamp, html binary, text string, lang string"
@@ -280,8 +279,7 @@ def crash_fixture(spark, tmp_path_factory):
     )
     from chavinha_mini_search_engine_spark.sources.tables import IndexStore
 
-    cfg = IndexConfig(num_doc_shards=4, shard_groups=2, heavy_term_df=1000,
-                      num_salts=2, term_buckets=8)
+    cfg = IndexConfig(num_doc_shards=4, shard_groups=2, term_buckets=8)
     rows = generate_pages(40, include_edges=False)
     schema = "url string, warc_ts timestamp, html binary, text string, lang string"
     base_dir = str(tmp_path_factory.mktemp("cr") / "pages")
@@ -472,8 +470,7 @@ def test_tiered_compaction_matches_full_rebuild(spark, tmp_path_factory):
     from chavinha_mini_search_engine_spark.operators.serve import ResidentSearcher
     from chavinha_mini_search_engine_spark.sources.tables import IndexStore
 
-    cfg = IndexConfig(num_doc_shards=4, shard_groups=2, heavy_term_df=1000,
-                      num_salts=2, term_buckets=8)
+    cfg = IndexConfig(num_doc_shards=4, shard_groups=2, term_buckets=8)
     schema = "url string, warc_ts timestamp, html binary, text string, lang string"
     rows = generate_pages(50, include_edges=False)
     base_dir = str(tmp_path_factory.mktemp("tc_base") / "pages")

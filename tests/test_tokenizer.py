@@ -35,12 +35,10 @@ def test_py_vs_duckdb(s):
     assert list(got or []) == tokenize_py(s)
 
 
-@pytest.mark.parametrize("mode", ["split", "extract"])
-def test_py_vs_spark(spark, mode, monkeypatch):
-    # both JVM spellings (SPARK_GRAFT_TOKENIZER) must stay bit-identical
-    # to the python twin -- the A/B toggle in tokens_col is only safe
-    # while this holds
-    monkeypatch.setenv("SPARK_GRAFT_TOKENIZER", mode)
+@pytest.mark.parametrize("mode", ["split"])
+def test_py_vs_spark(spark, mode):
+    # the JVM spelling (split on the complement class) must stay
+    # bit-identical to the python twin
     df = spark.createDataFrame([(s,) for s in SAMPLES], "s string")
     got = [r[0] for r in df.select(tokens_col("s")).collect()]
     assert got == [tokenize_py(s) for s in SAMPLES]
@@ -49,10 +47,11 @@ def test_py_vs_spark(spark, mode, monkeypatch):
 @given(st.text(max_size=120))
 @settings(max_examples=60, deadline=None)
 def test_spark_spellings_agree_fuzz(s):
-    """The two JVM spellings are pure regex transforms; their EQUIVALENCE
-    is a python-checkable property: findall(token) == non-empty pieces of
-    split(complement).  (Spark-side bit-equality of each spelling vs
-    python is pinned by test_py_vs_spark above.)"""
+    """The python twin finds runs of the token class; Spark and DuckDB
+    split on its complement.  Their EQUIVALENCE is a python-checkable
+    property: findall(token) == non-empty pieces of split(complement).
+    (Spark-side bit-equality vs python is pinned by test_py_vs_spark
+    above.)"""
     import re
 
     from chavinha_mini_search_engine_spark.functions.tokenizer import (
