@@ -54,8 +54,7 @@ def profile_build(sf_dir: str, cpus: int, reps: int = 1) -> None:
             wall = time.time() - t
             out = {"rep": rep, "total": round(wall, 2), "stages": {}}
             # timeline: stage begin/finish timestamps expose the work that
-            # happens BETWEEN stage timers (collect_metrics jobs, store
-            # reads, manifest writes)
+            # happens BETWEEN stage timers (store reads, manifest writes)
             tl = []
             for st, info in store.manifest["stages"].items():
                 tl.append((st, info.get("started_ts"), info.get("finished_ts")))

@@ -63,7 +63,15 @@ EMBEDDING_DIM = 384
 
 @dataclass
 class IndexConfig:
-    """Physical layout knobs for the index build.
+    """Physical layout and BM25 constants of one index store.
+
+    The build records it in the store's manifest
+    (``IndexStore.save_config``), and every later reader takes it from
+    there (``IndexStore.saved_config``): ``SearchEngine``,
+    ``ResidentSearcher`` and the compactions when no ``cfg`` is passed,
+    and ``stream_index_deltas`` always -- a delta stream raises on a
+    ``cfg`` that differs from the saved one, since its segments must
+    share the base's shard/bucket geometry and block bounds.
 
     Defaults are sized for local[32] testing; on a real cluster raise
     ``num_doc_shards`` to ~2-4x total cores.  Head-term skew needs no

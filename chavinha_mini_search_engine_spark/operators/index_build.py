@@ -205,8 +205,8 @@ def _encode_partial_runs_files(batches):
 def parquet_num_rows(path: str) -> int:
     """Exact row count of a parquet table from file footers -- the same
     value as ``spark.read.parquet(path).count()`` without scheduling a
-    Spark job (guide §1.2: the collect_metrics actions were pure serial
-    per-action latency on the build's critical path)."""
+    Spark job (guide §1.2: count() actions are pure serial per-action
+    latency on the build's critical path)."""
     import pyarrow.parquet as pq
 
     total = 0
@@ -223,38 +223,30 @@ def _postings_part_metrics(path: str) -> list:
     read-back Spark job per shard-group (schema inference + groupBy
     exchange + collect) whose scheduling overhead dominated the build at
     small scale; the values are identical (count, sum(n),
-    sum(length(doc_bytes)+length(tf_bytes)) grouped by shard)."""
-    import pyarrow as pa
+    sum(length(doc_bytes)+length(tf_bytes)) grouped by shard).  The scan
+    folds one record batch at a time, so driver memory is O(batch), not
+    O(part); integral sums are exact in any order."""
     import pyarrow.compute as pc
     import pyarrow.dataset as pads
 
     ds = pads.dataset(path, format="parquet", partitioning="hive")
     if not ds.files:  # a shard-group that holds no shard writes no file
         return []
-    tbl = ds.to_table(columns=["shard", "n", "doc_bytes", "tf_bytes"])
-    blen = pc.add(
-        pc.binary_length(tbl.column("doc_bytes")),
-        pc.binary_length(tbl.column("tf_bytes")),
-    )
-    t2 = pa.table({
-        "shard": tbl.column("shard"),
-        "n": tbl.column("n"),
-        "bytes": pc.cast(blen, pa.int64()),
-    })
-    agg = t2.group_by("shard").aggregate(
-        [("n", "sum"), ("bytes", "sum"), ("shard", "count")]
-    )
+    acc: dict = {}  # shard -> [blocks, postings, bytes]
+    for rb in ds.to_batches(columns=["shard", "n", "doc_bytes", "tf_bytes"]):
+        shard = rb.column("shard").to_numpy()
+        n = rb.column("n").to_numpy()
+        blen = (pc.binary_length(rb.column("doc_bytes")).to_numpy()
+                + pc.binary_length(rb.column("tf_bytes")).to_numpy())
+        for s in np.unique(shard):
+            sel = shard == s
+            a = acc.setdefault(int(s), [0, 0, 0])
+            a[0] += int(sel.sum())
+            a[1] += int(n[sel].sum())
+            a[2] += int(blen[sel].sum())
     return [
-        {
-            "shard": int(s), "postings": int(n or 0),
-            "bytes": int(by or 0), "blocks": int(c),
-        }
-        for s, n, by, c in zip(
-            agg.column("shard").to_pylist(),
-            agg.column("n_sum").to_pylist(),
-            agg.column("bytes_sum").to_pylist(),
-            agg.column("shard_count").to_pylist(),
-        )
+        {"shard": s, "blocks": c, "postings": p, "bytes": by}
+        for s, (c, p, by) in sorted(acc.items())
     ]
 
 
@@ -345,13 +337,14 @@ def _make_merge_runs_tfnorm(block_size: int, k1: float, b: float,
         web-scale vocab the zipf tail makes most terms a handful of
         postings, so a per-tid python loop pays ~10s of us of
         interpreter/pandas overhead per TERM and dominates the stage
-        (stage_scaling_probe measured the loop form at 400-690 s of
-        task time for a 480k-page build whose actual codec work is
-        ~30 s).  Shape mirrors _encode_partial_runs: every run payload
-        in the bucket decodes in ONE varbyte pass over the concatenated
-        bytes (runs are self-delimiting; per-run cumsum re-basing
-        recovers absolute ids -- same single-pass decode as the serve
-        kernel, search.py:294-305), one lexsort orders postings by
+        (a per-Spark-stage event-log probe measured the loop form at
+        400-690 s of task time for a 480k-page build whose actual codec
+        work is ~30 s; BENCH_SCALING.md).  Shape mirrors
+        _encode_partial_runs: every run payload in the bucket decodes in
+        ONE varbyte pass over the concatenated bytes (runs are
+        self-delimiting; per-run cumsum re-basing recovers absolute ids
+        -- same single-pass decode as the serve kernel,
+        search.py:294-305), one lexsort orders postings by
         (tid, id), block boundaries tile each tid segment, and the two
         output columns encode via varbyte_encode_segmented at block
         grain.  Per-block python work is only the final buffer slicing.
@@ -548,17 +541,20 @@ def write_corpus_stats_local(doclens_dir: str, out_dir: str,
     import pyarrow.parquet as pq
 
     ds = pads.dataset(doclens_dir, format="parquet")
-    tbl = ds.to_table(columns=list(cfg.fields))
+    # fold one record batch at a time: O(batch) driver memory
+    count = dict.fromkeys(cfg.fields, 0)
+    total = dict.fromkeys(cfg.fields, 0)
+    for rb in ds.to_batches(columns=list(cfg.fields)):
+        for f in cfg.fields:
+            col = rb.column(f)
+            count[f] += len(col) - col.null_count
+            total[f] += pc.sum(col).as_py() or 0
     fields, n_docs, avgdl = [], [], []
     for f in cfg.fields:
-        col = tbl.column(f)
-        n = len(col) - col.null_count
-        if n == 0:
-            continue
-        s = pc.sum(col).as_py()
-        fields.append(f)
-        n_docs.append(n)
-        avgdl.append(float(s) / n)
+        if count[f]:
+            fields.append(f)
+            n_docs.append(count[f])
+            avgdl.append(float(total[f]) / count[f])
     out = pa.table(
         {"field": fields, "n_docs": n_docs, "avgdl": avgdl},
         schema=pa.schema([
@@ -820,26 +816,17 @@ def build_index(
     cfg: Optional[IndexConfig] = None,
     with_embeddings: bool = True,
     verify_text_invariant: bool = True,
-    collect_metrics: bool = True,
 ) -> IndexStore:
-    """Full checkpoint-resumable build.  Re-running after an interruption
-    skips stages (and postings shard-groups) marked done in the manifest.
+    """Full checkpoint-resumable build from crawled pages.  Re-running after
+    an interruption skips stages (and postings shard-groups) marked done in
+    the manifest.
 
-    ``collect_metrics=False`` drops the row-count / per-shard lineage jobs
-    (2-3 extra Spark actions per stage) -- for throughput benchmarks where
-    the serial per-action latency would dominate small inputs.
+    This entry owns only the docs stage: extract (and embed) the pages,
+    store them, and check the byte-identical extraction invariant
+    (``verify_text_invariant``).  Every later stage is
+    :func:`build_index_from_docs` over the stored docs table, whose own
+    docs stage is then already done.
     """
-    cfg = cfg or IndexConfig()
-    # persist the physical layout in the manifest: the serve side MUST use
-    # the same shard/bucket geometry (SearchEngine reads it back)
-    from dataclasses import asdict
-    cfg_dict = asdict(cfg)
-    cfg_dict["fields"] = list(cfg_dict["fields"])
-    store.manifest["index_config"] = cfg_dict
-    store._write_manifest()
-    t_all = time.time()
-
-    # stage: docs
     if not store.stage_done("docs"):
         store.begin_stage("docs")
         _tag_jobs(spark, "docs")
@@ -863,41 +850,20 @@ def build_index(
             from .extract import verify_extraction_parity
             bad = verify_extraction_parity(pages, store.read(spark, "docs"))
             assert bad == 0, f"{bad} rows violate byte-identical extraction"
-        m = {"wall_sec": time.time() - t}
-        if collect_metrics:
-            n = parquet_num_rows(store.path("docs"))
-            m.update(rows=n, docs_per_sec=n / max(m["wall_sec"], 1e-9))
-        store.finish_stage("docs", m)
+        _finish_docs_stage(store, t)
 
-    docs = store.read(spark, "docs")
-
-    # stage: chunks
-    if not store.stage_done("chunks"):
-        store.begin_stage("chunks")
-        _tag_jobs(spark, "chunks")
-        t = time.time()
-        ch = chunk_docs(docs)
-        if with_embeddings:
-            ch = embed_chunks(ch)
-        else:
-            ch = ch.withColumn("chunk_embedding", F.lit(None).cast("array<float>"))
-        store.write(ch, "chunks")
-        m = {"wall_sec": time.time() - t}
-        if collect_metrics:
-            m["rows"] = parquet_num_rows(store.path("chunks"))
-        store.finish_stage("chunks", m)
-
-    chunks = store.read(spark, "chunks")
-
-    _index_stages_from_unified(
-        spark, store, cfg,
-        make_unified=lambda: unified_corpus(docs, chunks, cfg),
-        collect_metrics=collect_metrics,
+    return build_index_from_docs(
+        spark, store.read(spark, "docs"), store, cfg,
+        with_embeddings=with_embeddings,
     )
 
-    store.manifest["total_wall_sec"] = time.time() - t_all
-    store._write_manifest()
-    return store
+
+def _finish_docs_stage(store: IndexStore, t: float) -> None:
+    wall = time.time() - t
+    n = parquet_num_rows(store.path("docs"))
+    store.finish_stage("docs", {
+        "wall_sec": wall, "rows": n, "docs_per_sec": n / max(wall, 1e-9),
+    })
 
 
 def build_index_from_docs(
@@ -906,15 +872,13 @@ def build_index_from_docs(
     store: IndexStore,
     cfg: Optional[IndexConfig] = None,
     *,
-    with_chunks: bool = True,
     with_embeddings: bool = False,
-    collect_metrics: bool = False,
 ) -> IndexStore:
-    """Index an ALREADY-EXTRACTED docs table (skips the pages->html->docs
-    extraction stage of :func:`build_index`; every downstream stage --
-    chunks, unified, stats, postings, attributes -- is the same code path,
-    so the resulting store serves through SearchEngine/ResidentSearcher
-    unchanged).
+    """Index an ALREADY-EXTRACTED docs table: docs -> chunks -> unified ->
+    stats -> postings -> attributes (-> graph), checkpointed per stage.
+    :func:`build_index` runs its extraction stage and then this, so the
+    resulting store serves through SearchEngine/ResidentSearcher the same
+    way whichever entry built it.
 
     ``docs`` needs ``id`` (string, unique) and ``content``; the remaining
     projection columns (url/domain/title/description/keywords/
@@ -925,13 +889,15 @@ def build_index_from_docs(
     for a training-data pipeline, and the driver's bm25_topk_indexed gate
     builds through here to check the postings/WAND engine against the
     DuckDB oracle on the plain-text documents table).
+
+    ``cfg`` is recorded in the manifest (``IndexStore.save_config``) for
+    every later reader.  Every build records its lineage: docs/chunks row
+    counts and per-shard-group postings metrics in the manifest, and
+    per-shard ``build_metrics`` rows.  All of them are parquet footer
+    reads and pyarrow writes; none starts a Spark job.
     """
     cfg = cfg or IndexConfig()
-    from dataclasses import asdict
-    cfg_dict = asdict(cfg)
-    cfg_dict["fields"] = list(cfg_dict["fields"])
-    store.manifest["index_config"] = cfg_dict
-    store._write_manifest()
+    store.save_config(cfg)
     t_all = time.time()
 
     defaults = {
@@ -952,19 +918,14 @@ def build_index_from_docs(
         store.begin_stage("docs")
         _tag_jobs(spark, "docs")
         t = time.time()
-        d = docs
         if with_embeddings:
-            d = embed_docs(d)
-        elif "content_embedding" not in d.columns:
-            d = d.withColumn(
+            docs = embed_docs(docs)
+        elif "content_embedding" not in docs.columns:
+            docs = docs.withColumn(
                 "content_embedding", F.lit(None).cast("array<float>")
             )
-        store.write(d, "docs")
-        m = {"wall_sec": time.time() - t}
-        if collect_metrics:
-            n = parquet_num_rows(store.path("docs"))
-            m.update(rows=n, docs_per_sec=n / max(m["wall_sec"], 1e-9))
-        store.finish_stage("docs", m)
+        store.write(docs, "docs")
+        _finish_docs_stage(store, t)
 
     docs = store.read(spark, "docs")
 
@@ -972,31 +933,22 @@ def build_index_from_docs(
         store.begin_stage("chunks")
         _tag_jobs(spark, "chunks")
         t = time.time()
-        if with_chunks:
-            ch = chunk_docs(docs)
-            if with_embeddings:
-                ch = embed_chunks(ch)
-            else:
-                ch = ch.withColumn(
-                    "chunk_embedding", F.lit(None).cast("array<float>")
-                )
+        ch = chunk_docs(docs)
+        if with_embeddings:
+            ch = embed_chunks(ch)
         else:
-            from .chunk import CHUNKS_SCHEMA
-            ch = spark.createDataFrame(
-                [], CHUNKS_SCHEMA + ", chunk_embedding array<float>"
-            )
+            ch = ch.withColumn("chunk_embedding", F.lit(None).cast("array<float>"))
         store.write(ch, "chunks")
-        m = {"wall_sec": time.time() - t}
-        if collect_metrics:
-            m["rows"] = parquet_num_rows(store.path("chunks"))
-        store.finish_stage("chunks", m)
+        store.finish_stage("chunks", {
+            "wall_sec": time.time() - t,
+            "rows": parquet_num_rows(store.path("chunks")),
+        })
 
     chunks = store.read(spark, "chunks")
 
     _index_stages_from_unified(
         spark, store, cfg,
         make_unified=lambda: unified_corpus(docs, chunks, cfg),
-        collect_metrics=collect_metrics,
     )
 
     store.manifest["total_wall_sec"] = time.time() - t_all
@@ -1009,7 +961,6 @@ def _index_stages_from_unified(
     store: IndexStore,
     cfg: IndexConfig,
     make_unified,
-    collect_metrics: bool = True,
 ) -> None:
     """unified -> stats -> postings -> attributes (shared by the full build
     and by delta compaction)."""
@@ -1142,10 +1093,10 @@ def _index_stages_from_unified(
     # the postings stage ships narrow rows (6 int columns into the encode
     # kernel, ~150-B compressed runs into the merge), where 4096-row
     # batches make JVM-side per-batch overhead the dominant scan cost
-    # (stage_scaling_probe: 1.6-7 us/row of executor CPU on a 6-int scan)
-    arrow_batch = os.environ.get("SPARK_GRAFT_POSTINGS_ARROW_BATCH", "32768")
+    # (1.6-7 us/row of executor CPU on a 6-int scan, measured by the
+    # per-Spark-stage event-log probe of BENCH_SCALING.md)
     prev_batch = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
-    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", arrow_batch)
+    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "32768")
 
     def _one_group(g: int) -> None:
         part = f"grp={g}"
@@ -1161,27 +1112,24 @@ def _index_stages_from_unified(
         blocks = build_postings_for(tf_g, td, stats, cfg, scan_units=units)
         store.write(blocks, "postings", part=part, partition_by=["tbucket"])
         wall = time.time() - t
-        if collect_metrics:
-            # driver-side pyarrow aggregation -- same values as the former
-            # read-back Spark job (groupBy shard: count, sum n, sum payload
-            # lengths), no job scheduling on the critical path
-            shard_rows = _postings_part_metrics(store.path("postings", part))
-            tot_post = sum(r["postings"] for r in shard_rows)
-            store.finish_part("postings", part, {
-                "blocks": sum(r["blocks"] for r in shard_rows),
-                "postings": tot_post,
-                "bytes_compressed": sum(r["bytes"] for r in shard_rows),
-                "postings_per_sec": tot_post / max(wall, 1e-9),
-                "wall_sec": wall,
-            })
-            store.append_metrics(spark, [
-                (store.build_id, "postings", r["shard"], r["postings"],
-                 0.0, float(r["postings"]) / max(wall, 1e-9),
-                 0, r["bytes"], wall)
-                for r in shard_rows
-            ])
-        else:
-            store.finish_part("postings", part, {"wall_sec": wall})
+        # driver-side pyarrow aggregation: same values as a read-back
+        # Spark job (groupBy shard: count, sum n, sum payload lengths),
+        # no job scheduling on the critical path
+        shard_rows = _postings_part_metrics(store.path("postings", part))
+        tot_post = sum(r["postings"] for r in shard_rows)
+        store.finish_part("postings", part, {
+            "blocks": sum(r["blocks"] for r in shard_rows),
+            "postings": tot_post,
+            "bytes_compressed": sum(r["bytes"] for r in shard_rows),
+            "postings_per_sec": tot_post / max(wall, 1e-9),
+            "wall_sec": wall,
+        })
+        store.append_metrics([
+            (store.build_id, "postings", r["shard"], r["postings"],
+             0.0, float(r["postings"]) / max(wall, 1e-9),
+             0, r["bytes"], wall)
+            for r in shard_rows
+        ])
 
     def _attributes_task() -> None:
         # stage: attributes (consumes the materialized doclens table -- no
@@ -1262,7 +1210,6 @@ def compact(
     base: IndexStore,
     out: IndexStore,
     cfg: Optional[IndexConfig] = None,
-    collect_metrics: bool = True,
 ) -> IndexStore:
     """Merge the base segment with all streamed delta segments into a fresh
     consolidated index (the Lucene force-merge analog).
@@ -1272,22 +1219,12 @@ def compact(
     compacted index scores exactly like a from-scratch build over the same
     corpus (tested in tests/test_streaming.py).  ``out`` is stage-
     checkpointed like a normal build.  The document store tables
-    (docs/chunks) stay in the base store.
+    (docs/chunks) stay in the base store.  ``cfg`` defaults to the base's
+    saved config.
     """
-    if cfg is None:
-        saved = base.manifest.get("index_config")
-        if saved:
-            saved = dict(saved)
-            saved["fields"] = tuple(saved.get("fields", ()))
-            cfg = IndexConfig(**saved)
-        else:
-            cfg = IndexConfig()
-    from dataclasses import asdict
-    cfg_dict = asdict(cfg)
-    cfg_dict["fields"] = list(cfg_dict["fields"])
-    out.manifest["index_config"] = cfg_dict
+    cfg = cfg or base.saved_config()
     out.manifest["compacted_from"] = base.build_id
-    out._write_manifest()
+    out.save_config(cfg)
 
     def make_unified():
         u = base.read(spark, "unified")
@@ -1295,7 +1232,7 @@ def compact(
             u = u.unionByName(base.read_parts(spark, "unified_delta"))
         return assign_layout(u.drop("shard", "local_id"), cfg)
 
-    _index_stages_from_unified(spark, out, cfg, make_unified, collect_metrics)
+    _index_stages_from_unified(spark, out, cfg, make_unified)
     return out
 
 
@@ -1335,23 +1272,13 @@ def compact_tiered(
     kernels); only the internal (shard, local_id) layout differs (a full
     rebuild re-interleaves ids).  Rank/score parity vs ``compact`` is
     asserted in tests/test_streaming.py.  Document-store tables
-    (docs/chunks) stay in ``base``, as with ``compact``.
+    (docs/chunks) stay in ``base``, as with ``compact``.  ``cfg`` defaults
+    to the base's saved config.
     """
-    if cfg is None:
-        saved = base.manifest.get("index_config")
-        if saved:
-            saved = dict(saved)
-            saved["fields"] = tuple(saved.get("fields", ()))
-            cfg = IndexConfig(**saved)
-        else:
-            cfg = IndexConfig()
-    from dataclasses import asdict
-    cfg_dict = asdict(cfg)
-    cfg_dict["fields"] = list(cfg_dict["fields"])
-    out.manifest["index_config"] = cfg_dict
+    cfg = cfg or base.saved_config()
     out.manifest["compacted_from"] = base.build_id
     out.manifest["compaction"] = "tiered"
-    out._write_manifest()
+    out.save_config(cfg)
     t_all = time.time()
 
     # unified: segment concat, ids kept (dense + disjoint by construction)

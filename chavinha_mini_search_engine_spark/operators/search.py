@@ -620,13 +620,7 @@ class SearchEngine:
                  cfg: Optional[IndexConfig] = None, cache: bool = True):
         self.spark = spark
         self.store = store
-        if cfg is None:
-            saved = store.manifest.get("index_config")
-            if saved:
-                saved = dict(saved)
-                saved["fields"] = tuple(saved.get("fields", ()))
-                cfg = IndexConfig(**saved)
-        self.cfg = cfg or IndexConfig()
+        self.cfg = cfg or store.saved_config()
         self.stats = {
             r["field"]: (int(r["n_docs"]), float(r["avgdl"]))
             for r in store.read(spark, "corpus_stats").collect()

@@ -115,7 +115,7 @@ class _DocFetcher:
     # documents skip the ~0.4 ms/row-group parquet decode entirely.
     # Bounded LRU; ~1 MB decoded per entry at the doc-store row-group
     # size, so the default caps resident cache memory at ~64 MB.
-    CACHE_ROW_GROUPS = int(os.environ.get("SPARK_GRAFT_SUMMARY_CACHE_RGS", "64"))
+    CACHE_ROW_GROUPS = 64
 
     def __init__(self, root: Optional[str] = None):
         from collections import OrderedDict
@@ -262,13 +262,7 @@ class ResidentSearcher:
     def __init__(self, store: IndexStore, cfg: Optional[IndexConfig] = None,
                  shards: Optional[List[int]] = None):
         self.shards = None if shards is None else {int(s) for s in shards}
-        if cfg is None:
-            saved = store.manifest.get("index_config")
-            if saved:
-                saved = dict(saved)
-                saved["fields"] = tuple(saved.get("fields", ()))
-                cfg = IndexConfig(**saved)
-        self.cfg = cfg or IndexConfig()
+        self.cfg = cfg or store.saved_config()
 
         # corpus stats + term dictionary -> plain dicts
         stats = _read_parts_arrow(store.path("corpus_stats"), ["field", "n_docs", "avgdl"])

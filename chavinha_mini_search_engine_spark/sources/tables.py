@@ -28,9 +28,12 @@ import shutil
 import threading
 import time
 import uuid
+from dataclasses import asdict
 from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession
+
+from ..config import IndexConfig
 
 
 # Writer options for the doc-store tables (unified / unified_delta), the
@@ -103,6 +106,25 @@ class IndexStore:
         with open(tmp, "w") as f:
             json.dump(self.manifest, f, indent=2, sort_keys=True)
         os.replace(tmp, self.manifest_path)  # atomic on POSIX
+
+    def save_config(self, cfg: IndexConfig) -> None:
+        """Record the build's IndexConfig in the manifest.  The physical
+        layout (shards, term buckets, block size) and the BM25 constants
+        baked into the stored block bounds belong to the store, so every
+        later reader -- serve, stream, compaction -- takes them from here."""
+        saved = asdict(cfg)
+        saved["fields"] = list(saved["fields"])
+        with self._manifest_lock:
+            self.manifest["index_config"] = saved
+            self._write_manifest()
+
+    def saved_config(self) -> IndexConfig:
+        """The IndexConfig recorded by ``save_config``, or the default one
+        for a store whose manifest holds none."""
+        saved = self.manifest.get("index_config")
+        if not saved:
+            return IndexConfig()
+        return IndexConfig(**{**saved, "fields": tuple(saved["fields"])})
 
     def stage_done(self, stage: str, part: Optional[str] = None) -> bool:
         st = self.manifest["stages"].get(stage)
@@ -279,15 +301,14 @@ class IndexStore:
         ("bytes_compressed", "int64"), ("wall_sec", "float64"),
     )
 
-    def append_metrics(self, spark: SparkSession, rows: list) -> None:
+    def append_metrics(self, rows: list) -> None:
         """Per-partition lineage/metrics rows (FIXTURES.md build_metrics).
 
         Written driver-side with pyarrow: the rows are per-shard scalars
         (KBs), so a Spark `createDataFrame + coalesce(1).write` job here
         was pure scheduling overhead -- one of 4+ such actions that made
         the postings stage spend 3x its actual compute wall in metrics
-        bookkeeping (OPTIMIZATION_r06.md).  Schema and file layout are
-        unchanged; `spark` stays in the signature for call-site compat."""
+        bookkeeping (OPTIMIZATION_r06.md)."""
         if not rows:
             return
         import pyarrow as pa

@@ -78,8 +78,19 @@ def stream_index_deltas(
     Requires a completed base build in ``store`` (corpus stats + dictionary
     are reused for delta scoring).  Each batch appends
     postings/delta=<epoch>_<bid> and attributes/delta=... parts.
+
+    The deltas take the store's saved config: their docs must hash into
+    the base's shards, their postings into its term buckets, and their
+    block bounds must use its k1/b.  A ``cfg`` that differs from the saved
+    one raises ``ValueError`` before any Spark work.
     """
-    cfg = cfg or IndexConfig()
+    saved = store.saved_config()
+    if cfg is not None and cfg != saved:
+        raise ValueError(
+            f"cfg differs from the store's saved index config: {cfg} != "
+            f"{saved}; stream without cfg to use the saved one"
+        )
+    cfg = saved
     from ..operators.chunk import chunk_docs
     from ..operators.extract import extract_docs
     from ..operators.index_build import (

@@ -1,9 +1,9 @@
 """Isolate WHERE per-byte cost inflates when local[N] -> local[4N].
 
-stage_scaling_probe measured the postings encode scan's summed task time
-inflating ~3.4x from local[4] to local[16] on identical input (93 ->
-316 s at 480k pages) while pure numpy kernels in 4 vs 16 processes scale
-linearly (bandwidth_probe).  This probe separates the two halves of that
+A per-Spark-stage event-log probe (BENCH_SCALING.md) measured the
+postings encode scan's summed task time inflating ~3.4x from local[4]
+to local[16] on identical input (93 -> 316 s at 480k pages) while pure
+numpy kernels in 4 vs 16 processes scale linearly (bandwidth_probe).  This probe separates the two halves of that
 stage on a synthetic tf-shaped table (6 int64 columns):
 
   jvm_agg     parquet scan + whole-stage-codegen hash agg, NO python --

@@ -151,7 +151,7 @@ def child(master_url: str, cores_total: int, replicate: int,
           sf_dir: str, out_path: str) -> None:
     """One measured driver run against an already-running cluster.
     Workload identical to scripts/scaling_bench.py child (same input,
-    same IndexConfig, collect_metrics off) -- only the execution topology
+    same IndexConfig) -- only the execution topology
     differs."""
     import shutil
     import tempfile
@@ -200,7 +200,7 @@ def child(master_url: str, cores_total: int, replicate: int,
     t = time.time()
     store = IndexStore(os.path.join(idx, "i"), build_id="s")
     build_index(spark, pages, store, cfg, with_embeddings=EMBED,
-                verify_text_invariant=False, collect_metrics=False)
+                verify_text_invariant=False)
     wall = time.time() - t
     stage_walls = {}
     for st, v in store.manifest["stages"].items():

@@ -68,7 +68,7 @@ def main() -> None:
         store = IndexStore(os.path.join(work, "base"), build_id="cb")
         t = time.time()
         build_index(spark, pages, store, cfg, with_embeddings=False,
-                    verify_text_invariant=False, collect_metrics=False)
+                    verify_text_invariant=False)
         rec["base_build_sec"] = round(time.time() - t, 1)
 
         # one streamed delta batch: ~1% of the base
@@ -109,8 +109,7 @@ def main() -> None:
         t = time.time()
         full = compact(
             spark, store, IndexStore(os.path.join(work, "full"), build_id="cf"),
-            cfg, collect_metrics=False,
-        )
+            cfg)
         rec["full_sec"] = round(time.time() - t, 1)
         rec["full_stages"] = stage_walls(full)
         rec["speedup"] = round(rec["full_sec"] / max(rec["tiered_sec"], 1e-9), 2)

@@ -77,7 +77,7 @@ def build(idx_dir: str, queries_json: str) -> None:
     t = time.time()
     store = IndexStore(idx_dir, build_id="q")
     build_index(spark, pages, store, cfg, with_embeddings=EMBED,
-                verify_text_invariant=False, collect_metrics=False)
+                verify_text_invariant=False)
     wall = time.time() - t
     classes = _per_class_queries(spark, store)
     with open(queries_json, "w") as f:

@@ -91,7 +91,7 @@ def child(cpus: int, replicate: int, sf_dir: str, out_path: str) -> None:
     t = time.time()
     store = IndexStore(os.path.join(idx, "i"), build_id="s")
     build_index(spark, pages, store, cfg, with_embeddings=EMBED,
-                verify_text_invariant=False, collect_metrics=False)
+                verify_text_invariant=False)
     wall = time.time() - t
     stage_walls = {}
     stage_metrics = {}

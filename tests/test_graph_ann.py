@@ -162,8 +162,7 @@ class TestSparkGraph:
         write_pages_parquet(spark, ppath, n=80, include_edges=False)
         pages = spark.read.parquet(ppath)
         store = IndexStore(str(tmp_path / "idx"), build_id="g1")
-        build_index(spark, pages, store, cfg, collect_metrics=False,
-                    verify_text_invariant=False)
+        build_index(spark, pages, store, cfg, verify_text_invariant=False)
         assert store.stage_done("graph")
         assert store.exists("graph")
 
@@ -200,6 +199,5 @@ class TestSparkGraph:
         import os
 
         mtime = os.path.getmtime(store.path("graph"))
-        build_index(spark, pages, store, cfg, collect_metrics=False,
-                    verify_text_invariant=False)
+        build_index(spark, pages, store, cfg, verify_text_invariant=False)
         assert os.path.getmtime(store.path("graph")) == mtime

@@ -11,12 +11,9 @@ import re
 import chavinha_mini_search_engine_spark as pkg
 
 ALLOWED = {
-    # postings stage: encode chunk rows, Arrow batch rows, pool width
+    # postings stage: encode chunk rows, pool width
     "SPARK_GRAFT_ENCODE_CHUNK",
-    "SPARK_GRAFT_POSTINGS_ARROW_BATCH",
     "SPARK_GRAFT_POSTINGS_JOBS",
-    # resident serve: summary row-group cache size
-    "SPARK_GRAFT_SUMMARY_CACHE_RGS",
     # deployment settings (session.py)
     "SPARK_GRAFT_MASTER",
     "SPARK_GRAFT_CPUS",

@@ -86,3 +86,55 @@ def test_resume_identical(spark, tiny_pages, tmp_path_factory, monkeypatch):
         ("doclens", False), ("postings", True), ("attributes", False),
     ]:
         assert _collect(a, spark, table, parts) == _collect(b2, spark, table, parts), table
+
+
+def _check_build_metrics(store, spark):
+    """build_metrics rows (one per shard) sum to the manifest's
+    postings-part metrics and to sum(n) of the stored postings."""
+    import pyarrow.dataset as pads
+    from pyspark.sql import functions as F
+
+    rows = pads.dataset(store.path("build_metrics"), format="parquet",
+                        partitioning="hive").to_table().to_pylist()
+    assert rows and all(r["stage"] == "postings" for r in rows)
+    assert all(r["build_id"] == store.build_id for r in rows)
+    by_shard = {r["shard"]: r["rows"] for r in rows}
+    assert len(by_shard) == len(rows)  # one row per shard
+    assert by_shard == {
+        r["shard"]: r["n"] for r in store.read_parts(spark, "postings")
+        .groupBy("shard").agg(F.sum("n").alias("n")).collect()
+    }
+    parts = [p["metrics"] for p in
+             store.manifest["stages"]["postings"]["parts"].values()]
+    assert sum(p["postings"] for p in parts) == sum(by_shard.values())
+    assert sum(p["bytes_compressed"] for p in parts) == sum(
+        r["bytes_compressed"] for r in rows)
+
+
+def test_build_from_docs_matches_build_index(spark, tiny_pages,
+                                              tmp_path_factory):
+    """build_index is its docs stage plus build_index_from_docs: indexing
+    the stored docs table of a page build through build_index_from_docs
+    gives the same tables, and both record build_metrics."""
+    from chavinha_mini_search_engine_spark.operators.index_build import (
+        build_index_from_docs,
+    )
+
+    a = IndexStore(str(tmp_path_factory.mktemp("fa") / "idx"), build_id="fa")
+    build_index(spark, spark.read.parquet(tiny_pages), a, CFG,
+                with_embeddings=False)
+    b = IndexStore(str(tmp_path_factory.mktemp("fb") / "idx"), build_id="fb")
+    build_index_from_docs(spark, a.read(spark, "docs"), b, CFG)
+
+    assert a.saved_config() == b.saved_config() == CFG
+    for stage in ("docs", "chunks"):
+        assert (a.manifest["stages"][stage]["metrics"]["rows"]
+                == b.manifest["stages"][stage]["metrics"]["rows"] > 0)
+    for table, parts in [
+        ("unified", False), ("tf", False), ("term_dict", False),
+        ("corpus_stats", False), ("doclens", False), ("postings", True),
+        ("attributes", False),
+    ]:
+        assert _collect(a, spark, table, parts) == _collect(b, spark, table, parts), table
+    _check_build_metrics(a, spark)
+    _check_build_metrics(b, spark)

@@ -316,11 +316,50 @@ def delta_store(spark, tmp_path_factory):
     delta_dir = str(tmp_path_factory.mktemp("lay") / "delta")
     # 8 files, maxFilesPerTrigger=4 -> 2 micro-batches
     spark.createDataFrame(rows[30:], schema).repartition(8).write.parquet(delta_dir)
+    # no cfg: the stream must take the store's saved layout
     incremental.stream_index_deltas(
-        spark, delta_dir, store, cfg,
+        spark, delta_dir, store,
         checkpoint_dir=str(tmp_path_factory.mktemp("lay") / "ckpt"),
     ).awaitTermination(600)
     return store, cfg
+
+
+def test_deltas_use_saved_layout(delta_store):
+    """Delta docs hash into the base's 4 shards and delta postings into
+    its 8 term buckets, though the stream was started without a cfg."""
+    import pyarrow.parquet as pq
+
+    store, cfg = delta_store
+    parts = store.committed_parts("attributes_delta")
+    assert parts
+    for part in parts:
+        shards = pq.read_table(store.path("attributes_delta", part),
+                               columns=["shard"]).column("shard")
+        assert max(shards.to_pylist()) < cfg.num_doc_shards, part
+    dirs = [
+        d for p in store.committed_parts("postings") if p.startswith("delta=")
+        for d in os.listdir(store.path("postings", p))
+        if d.startswith("tbucket=")
+    ]
+    assert dirs
+    assert max(int(d.split("=")[1]) for d in dirs) < cfg.term_buckets
+
+
+def test_stream_rejects_mismatched_cfg(spark, tmp_path):
+    from chavinha_mini_search_engine_spark.operators.index_build import (
+        IndexConfig,
+    )
+    from chavinha_mini_search_engine_spark.sources.tables import IndexStore
+    from chavinha_mini_search_engine_spark.streaming import incremental
+
+    store = IndexStore(str(tmp_path / "i"), build_id="cfg")
+    store.save_config(IndexConfig(num_doc_shards=4, term_buckets=8))
+    assert store.saved_config() == IndexConfig(num_doc_shards=4, term_buckets=8)
+    with pytest.raises(ValueError, match="saved index config"):
+        incremental.stream_index_deltas(
+            spark, str(tmp_path / "nopages"), store,
+            IndexConfig(num_doc_shards=4, term_buckets=8, k1=1.5),
+        )
 
 
 def test_post_fused_base_plus_deltas_matches_reference(spark, delta_store):
@@ -353,6 +392,45 @@ def test_postings_part_metrics_empty_part(tmp_path):
 
     (tmp_path / "_SUCCESS").write_bytes(b"")
     assert _postings_part_metrics(str(tmp_path)) == []
+
+
+def test_driver_aggregations_match_whole_table(built, tmp_path):
+    """The batch-folding postings-part metrics and corpus stats equal a
+    whole-table pyarrow aggregation of the same stored tables."""
+    import pyarrow.compute as pc
+    import pyarrow.dataset as pads
+    import pyarrow.parquet as pq
+
+    from chavinha_mini_search_engine_spark.operators.index_build import (
+        _postings_part_metrics,
+        write_corpus_stats_local,
+    )
+
+    for part in built.committed_parts("postings"):
+        path = built.path("postings", part)
+        tbl = pads.dataset(path, format="parquet", partitioning="hive").to_table(
+            columns=["shard", "n", "doc_bytes", "tf_bytes"])
+        exp = {}
+        for s, n, d, t in zip(*(tbl.column(c).to_pylist() for c in tbl.column_names)):
+            e = exp.setdefault(s, {"shard": s, "blocks": 0, "postings": 0, "bytes": 0})
+            e["blocks"] += 1
+            e["postings"] += n
+            e["bytes"] += len(d) + len(t)
+        assert _postings_part_metrics(path) == sorted(
+            exp.values(), key=lambda e: e["shard"]), part
+
+    out = str(tmp_path / "corpus_stats")
+    write_corpus_stats_local(built.path("doclens"), out, CFG)
+    lens = pads.dataset(built.path("doclens"), format="parquet").to_table()
+    exp = []
+    for f in CFG.fields:
+        col = lens.column(f)
+        n = len(col) - col.null_count
+        if n:
+            exp.append((f, n, pc.sum(col).as_py() / n))
+    got = pq.read_table(out)
+    assert list(zip(*(got.column(c).to_pylist()
+                      for c in ("field", "n_docs", "avgdl")))) == exp
 
 
 def test_load_store_without_postings_rows(built, tmp_path):
