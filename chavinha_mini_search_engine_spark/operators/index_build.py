@@ -250,6 +250,29 @@ def _postings_part_metrics(path: str) -> list:
     ]
 
 
+def _commit_postings_part(store: IndexStore, part: str, wall: float) -> None:
+    """Commit a written postings part with its lineage: part metrics in
+    the manifest and per-shard ``build_metrics`` rows.  Driver-side
+    pyarrow aggregation: same values as a read-back Spark job (groupBy
+    shard: count, sum n, sum payload lengths), no job scheduling on the
+    critical path."""
+    shard_rows = _postings_part_metrics(store.path("postings", part))
+    tot_post = sum(r["postings"] for r in shard_rows)
+    store.finish_part("postings", part, {
+        "blocks": sum(r["blocks"] for r in shard_rows),
+        "postings": tot_post,
+        "bytes_compressed": sum(r["bytes"] for r in shard_rows),
+        "postings_per_sec": tot_post / max(wall, 1e-9),
+        "wall_sec": wall,
+    })
+    store.append_metrics([
+        (store.build_id, "postings", r["shard"], r["postings"],
+         0.0, float(r["postings"]) / max(wall, 1e-9),
+         0, r["bytes"], wall)
+        for r in shard_rows
+    ])
+
+
 def tf_scan_units(tf_dir: str) -> list:
     """Driver-side enumeration of (file, row_group) scan units for the
     direct-pyarrow encode path.  Footer reads only -- cheap (one small
@@ -695,10 +718,12 @@ def build_postings_for(
         "doc_bytes", "tf_bytes",
         tbucket_col(F.col("term"), cfg.term_buckets).alias("tbucket"),
     )
-    # co-locate each tbucket in one task before the dynamic-partition
-    # write: otherwise every task writes a file into every tbucket dir
-    # (tasks x buckets small files; each local-FS commit forks chmod)
-    return blocks.repartition(cfg.term_buckets, "tbucket")
+    # hash by tbucket so each bucket lands in one task (one file per
+    # tbucket dir; unclustered, every task would write a file into every
+    # dir, and each local-FS commit forks chmod).  No partition count:
+    # AQE coalesces the shuffle partitions by size, so a micro-batch's
+    # few thousand blocks are written by one task, not term_buckets tasks
+    return blocks.repartition("tbucket")
 
 
 def verify_tid_unique(tdict: DataFrame) -> None:
@@ -1073,7 +1098,7 @@ def _index_stages_from_unified(
         sub["corpus_stats_sec"] = round(time.time() - t2, 1)
         t2 = time.time()
         td = term_dict(tf, store.read(spark, "corpus_stats"), cfg)
-        store.write(td.repartition(cfg.term_buckets, "tbucket"),
+        store.write(td.repartition("tbucket"),
                     "term_dict", partition_by=["tbucket"])
         sub["term_dict_sec"] = round(time.time() - t2, 1)
         # tid-collision verification moved off the serial critical path:
@@ -1111,25 +1136,7 @@ def _index_stages_from_unified(
         units = tf_scan_units(store.path("tf", part))
         blocks = build_postings_for(tf_g, td, stats, cfg, scan_units=units)
         store.write(blocks, "postings", part=part, partition_by=["tbucket"])
-        wall = time.time() - t
-        # driver-side pyarrow aggregation: same values as a read-back
-        # Spark job (groupBy shard: count, sum n, sum payload lengths),
-        # no job scheduling on the critical path
-        shard_rows = _postings_part_metrics(store.path("postings", part))
-        tot_post = sum(r["postings"] for r in shard_rows)
-        store.finish_part("postings", part, {
-            "blocks": sum(r["blocks"] for r in shard_rows),
-            "postings": tot_post,
-            "bytes_compressed": sum(r["bytes"] for r in shard_rows),
-            "postings_per_sec": tot_post / max(wall, 1e-9),
-            "wall_sec": wall,
-        })
-        store.append_metrics([
-            (store.build_id, "postings", r["shard"], r["postings"],
-             0.0, float(r["postings"]) / max(wall, 1e-9),
-             0, r["bytes"], wall)
-            for r in shard_rows
-        ])
+        _commit_postings_part(store, part, time.time() - t)
 
     def _attributes_task() -> None:
         # stage: attributes (consumes the materialized doclens table -- no
@@ -1350,7 +1357,7 @@ def compact_tiered(
         else:
             new_df = base_df
         td = term_dict_from_df(new_df, stats, cfg)
-        out.write(td.repartition(cfg.term_buckets, "tbucket"),
+        out.write(td.repartition("tbucket"),
                   "term_dict", partition_by=["tbucket"])
         out.finish_stage("stats", {"wall_sec": time.time() - t})
 
@@ -1415,9 +1422,9 @@ def compact_tiered(
             )
             .drop("idf_old", "idf")
         )
-        out.write(reb.repartition(cfg.term_buckets, "tbucket"),
+        out.write(reb.repartition("tbucket"),
                   "postings", part="grp=0", partition_by=["tbucket"])
-        out.finish_part("postings", "grp=0", {"wall_sec": time.time() - t})
+        _commit_postings_part(out, "grp=0", time.time() - t)
         # delta postings REGENERATE from the delta re-tokenize (the stored
         # delta parts dropped base-dictionary-unknown terms at stream time
         # and carry stale-stats bounds): superseded, not merged
@@ -1429,8 +1436,7 @@ def compact_tiered(
             fresh = build_postings_for(delta_tf, td, stats, cfg)
             out.write(fresh, "postings", part="grp=1",
                       partition_by=["tbucket"])
-            out.finish_part("postings", "grp=1",
-                            {"wall_sec": time.time() - t2})
+            _commit_postings_part(out, "grp=1", time.time() - t2)
         out.finish_stage("postings", {"wall_sec": time.time() - t})
 
     # graph (optional): per-shard HNSW over the merged attributes

@@ -16,6 +16,8 @@ expresses the same capabilities Spark-first:
   pattern.  Deltas inherit the BASE build's corpus stats (idf/avgdl), so
   scores drift as the corpus grows; ``compact`` (a full rebuild from
   pages) refreshes stats -- the documented Lucene/Vespa tradeoff.
+  Each micro-batch is scanned, extracted and tokenized once for its three
+  concurrent table writes; a batch with no ``en`` page commits nothing.
 - ``stream_events_hourly``: event-time tumbling window + watermark -- the
   streaming twin of the batch ``events_hourly`` query the DuckDB oracle
   gates.
@@ -25,6 +27,7 @@ from __future__ import annotations
 
 import os
 import time
+from concurrent.futures import ThreadPoolExecutor
 from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession
@@ -76,8 +79,17 @@ def stream_index_deltas(
     """Micro-batches of new pages -> posting delta segments in ``store``.
 
     Requires a completed base build in ``store`` (corpus stats + dictionary
-    are reused for delta scoring).  Each batch appends
-    postings/delta=<epoch>_<bid> and attributes/delta=... parts.
+    are reused for delta scoring).  Each batch appends one segment: a
+    delta=<epoch>_<bid> part of ``postings``, ``attributes_delta`` and
+    ``unified_delta``, committed together in the manifest.
+
+    A batch is laid out once.  The extracted docs and the offset-shifted
+    unified rows are cached; one per-shard max(local_id) job over the
+    cached rows materializes them and gives the batch's new offsets, and
+    an empty result (no ``en`` page) ends the batch with no segment and
+    no commit.  tf is computed once for postings and attributes, the
+    three tables are written concurrently, and the cache is dropped once
+    every write has returned or raised.
 
     The deltas take the store's saved config: their docs must hash into
     the base's shards, their postings into its term buckets, and their
@@ -184,46 +196,79 @@ def stream_index_deltas(
         )
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         if _already_committed(batch_id):
             return
-        docs = extract_docs(batch_df).withColumn(
-            "content_embedding", F.lit(None).cast("array<float>")
-        )
-        chunks = chunk_docs(docs).withColumn(
-            "chunk_embedding", F.lit(None).cast("array<float>")
-        )
-        u = unified_corpus(docs, chunks, cfg)
-        # shift local ids past every already-written segment's ids per shard
-        # so delta postings never collide with base or earlier-delta postings
-        offs = _current_offsets()
-        offs_df = spark.createDataFrame(
-            list(offs.items()) or [], "shard int, max_local long"
-        )
-        u = (
-            u.join(F.broadcast(offs_df), "shard", "left")
-            .withColumn(
-                "local_id",
-                F.col("local_id") + F.coalesce(F.col("max_local") + 1, F.lit(0)),
+        # uncached, every action re-scans the batch's source files and
+        # re-runs extraction (the docs feed both branches of the unified
+        # rows, which with their tf feed three writes)
+        cached = []
+
+        def keep(df: DataFrame) -> DataFrame:
+            cached.append(df.persist())
+            return df
+
+        try:
+            docs = keep(extract_docs(batch_df).withColumn(
+                "content_embedding", F.lit(None).cast("array<float>")
+            ))
+            chunks = chunk_docs(docs).withColumn(
+                "chunk_embedding", F.lit(None).cast("array<float>")
             )
-            .drop("max_local")
-        )
-        part = f"delta={epoch}_{batch_id}"
-        tf = tokenize_tf(u, cfg)
-        blocks = build_postings_for(tf, tdict, stats, cfg)
-        store.write(blocks, "postings", part=part, partition_by=["tbucket"])
-        store.write(attributes(u, cfg, tf=tf), "attributes_delta", part=part)
-        store.write(u, "unified_delta", part=part,
-                    options=DOC_STORE_WRITE_OPTS)
-        # fold this batch's maxima into the running offsets (the batch is
-        # small, so this agg is over the micro-batch only) and persist them
-        # with the segment commit
-        batch_max = (
-            store.read(spark, "unified_delta", part=part)
-            .groupBy("shard").agg(F.max("local_id").alias("max_local"))
-            .collect()
-        )
+            u = unified_corpus(docs, chunks, cfg)
+            # shift local ids past every already-written segment's ids per
+            # shard so delta postings never collide with base or
+            # earlier-delta postings
+            offs = _current_offsets()
+            offs_df = spark.createDataFrame(
+                list(offs.items()) or [], "shard int, max_local long"
+            )
+            u = keep(
+                u.join(F.broadcast(offs_df), "shard", "left")
+                .withColumn(
+                    "local_id",
+                    F.col("local_id")
+                    + F.coalesce(F.col("max_local") + 1, F.lit(0)),
+                )
+                .drop("max_local")
+            )
+            # one job materializes the cached rows and yields the batch's
+            # new per-shard maxima; no row (no `en` page) -> no segment
+            batch_max = (
+                u.groupBy("shard").agg(F.max("local_id").alias("max_local"))
+                .collect()
+            )
+            if not batch_max:
+                return
+            part = f"delta={epoch}_{batch_id}"
+            tf = keep(tokenize_tf(u, cfg))
+            writes = [
+                lambda: store.write(build_postings_for(tf, tdict, stats, cfg),
+                                    "postings", part=part,
+                                    partition_by=["tbucket"]),
+                lambda: store.write(attributes(u, cfg, tf=tf),
+                                    "attributes_delta", part=part),
+                lambda: store.write(u, "unified_delta", part=part,
+                                    options=DOC_STORE_WRITE_OPTS),
+            ]
+            # job groups are thread-local: the pool's jobs join the
+            # stream's group, which stopping the query cancels
+            group = spark.sparkContext.getLocalProperty("spark.jobGroup.id")
+
+            def in_stream_group(write) -> None:
+                spark.sparkContext.setJobGroup(group, f"stream {part}", True)
+                write()
+
+            # the three writes are independent jobs over the cached rows;
+            # leaving the pool waits for all of them, also when one raised
+            with ThreadPoolExecutor(max_workers=len(writes)) as pool:
+                futures = [pool.submit(in_stream_group, w) for w in writes]
+            for f in futures:
+                f.result()
+        finally:
+            for df in cached:
+                df.unpersist()
+        # fold this batch's maxima into the running offsets and persist
+        # them with the segment commit
         for r in batch_max:
             s = int(r["shard"])
             offs[s] = max(offs.get(s, -1), int(r["max_local"]))

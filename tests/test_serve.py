@@ -8,6 +8,7 @@ import time
 import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as hst
+from pyspark.sql import functions as F
 
 from chavinha_mini_search_engine_spark.fixtures.queries import PERF_QUERIES
 from chavinha_mini_search_engine_spark.operators.search import SearchEngine
@@ -343,6 +344,48 @@ def test_deltas_use_saved_layout(delta_store):
     ]
     assert dirs
     assert max(int(d.split("=")[1]) for d in dirs) < cfg.term_buckets
+
+
+def _assert_one_file_per_tbucket(spark, path, n_buckets):
+    """Every tbucket= dir under ``path`` holds exactly one parquet file,
+    and the dirs are exactly the buckets of the terms stored there."""
+    from chavinha_mini_search_engine_spark.operators.index_build import (
+        tbucket_col,
+    )
+
+    dirs = [d for d in os.listdir(path) if d.startswith("tbucket=")]
+    assert dirs, path
+    for d in dirs:
+        files = [f for f in os.listdir(os.path.join(path, d))
+                 if f.endswith(".parquet")]
+        assert len(files) == 1, (path, d, files)
+    df = spark.read.parquet(path).withColumn(
+        "exp", tbucket_col(F.col("term"), n_buckets)
+    )
+    assert df.filter(F.col("exp") != F.col("tbucket")).count() == 0, path
+    exp = {r["exp"] for r in df.select("exp").distinct().collect()}
+    assert {int(d.split("=")[1]) for d in dirs} == exp, path
+
+
+def test_tbucket_layout_one_file_per_bucket(spark, built, delta_store):
+    """The tbucket-partitioned writes put each bucket in one task: every
+    postings part (base and streamed delta) and term_dict has one file
+    per tbucket dir."""
+    delta, _cfg = delta_store
+    parts = [(built, p) for p in built.committed_parts("postings")] + [
+        (delta, p) for p in delta.committed_parts("postings")
+        if p.startswith("delta=")
+    ]
+    assert any(p.startswith("delta=") for _s, p in parts)
+    for store, part in parts:
+        _assert_one_file_per_tbucket(
+            spark, store.path("postings", part),
+            store.saved_config().term_buckets,
+        )
+    for store in (built, delta):
+        _assert_one_file_per_tbucket(
+            spark, store.path("term_dict"), store.saved_config().term_buckets
+        )
 
 
 def test_stream_rejects_mismatched_cfg(spark, tmp_path):

@@ -124,6 +124,10 @@ def test_index_deltas_searchable(spark, tmp_path_factory):
         checkpoint_dir=str(tmp_path_factory.mktemp("delta") / "ckpt"),
     )
     q.awaitTermination(600)
+    # each micro-batch scans its source files once: the stream's input
+    # rows are the delta's page rows (an uncached batch re-scans them for
+    # every action and reports several rows per page)
+    assert sum(p["numInputRows"] for p in q.recentProgress) == len(rows) - 30
 
     # delta parts exist and the union parses
     parts = os.listdir(store.path("postings"))
@@ -310,6 +314,141 @@ def _delta_fulldoc_ids(spark, store):
     ]
 
 
+def _persistent_rdds(spark):
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+
+def _assert_stream_healed(spark, store, delta_rows):
+    """After a restart on the crashed stream's checkpoint: no orphan part,
+    every `en` delta doc exactly once, no (shard, local_id) alias across
+    base + committed deltas, and the persisted offsets equal the true
+    per-shard maxima.  Returns the (shard, local_id) layout."""
+    import hashlib
+
+    for tbl in ("postings", "attributes_delta", "unified_delta"):
+        assert store.orphan_parts(tbl) == [], tbl
+
+    layout = (
+        store.read(spark, "unified").select("shard", "local_id")
+        .unionByName(
+            store.read_parts(spark, "unified_delta").select("shard", "local_id")
+        )
+    )
+    dup = (layout.groupBy("shard", "local_id").count()
+           .filter(F.col("count") > 1).count())
+    assert dup == 0, "replay aliased the orphan segment's slots"
+
+    exp_ids = sorted(
+        hashlib.md5(r["url"].encode()).hexdigest()
+        for r in delta_rows if r["lang"] == "en"
+    )
+    assert sorted(_delta_fulldoc_ids(spark, store)) == exp_ids
+
+    offs = {int(s): int(m)
+            for s, m in store.manifest["stream_offsets"].items()}
+    exp_offs = {
+        int(r["shard"]): int(r["mx"])
+        for r in layout.groupBy("shard").agg(F.max("local_id").alias("mx")).collect()
+    }
+    assert offs == exp_offs
+    return layout
+
+
+@pytest.mark.slow
+@pytest.mark.parametrize("k", [1, 2, 3])
+def test_stream_crash_at_each_delta_write_heals(spark, crash_fixture,
+                                                tmp_path_factory, k):
+    """Crash at the k-th delta table write of a micro-batch.  The three
+    writes run concurrently, so k counts write calls, not tables.  Every
+    write runs in the stream's job group (so stopping the query cancels
+    it), the failed batch must leave nothing cached, and a restart on the
+    same checkpoint must drop the partial segment and replay the batch."""
+    import threading
+
+    from chavinha_mini_search_engine_spark.sources.tables import IndexStore
+
+    cfg, rows, src_root, delta_dir = crash_fixture
+    root = _copy_store(src_root, tmp_path_factory)
+    ckpt = str(tmp_path_factory.mktemp("crw") / "ckpt")
+
+    orig = IndexStore.write
+    lock = threading.Lock()
+    calls, groups = [], set()
+
+    def bomb(self, df, table, part=None, *args, **kwargs):
+        if part and part.startswith("delta="):
+            with lock:
+                calls.append(table)
+                groups.add(spark.sparkContext.getLocalProperty(
+                    "spark.jobGroup.id"))
+                n = len(calls)
+            if n == k:
+                raise RuntimeError(f"simulated crash at delta write {k}")
+        return orig(self, df, table, part, *args, **kwargs)
+
+    cached_before = _persistent_rdds(spark)
+    IndexStore.write = bomb
+    try:
+        q = incremental.stream_index_deltas(spark, delta_dir, IndexStore(root),
+                                            cfg, checkpoint_dir=ckpt)
+        with pytest.raises(Exception):
+            q.awaitTermination(600)
+    finally:
+        IndexStore.write = orig
+    assert len(calls) == 3, calls
+    assert groups == {str(q.runId)}, groups
+    assert _persistent_rdds(spark) == cached_before, "failed batch left a cache"
+
+    store2 = IndexStore(root)
+    assert not store2.has_parts("unified_delta")
+    assert any(
+        store2.orphan_parts(t)
+        for t in ("postings", "attributes_delta", "unified_delta")
+    ), "the writes that did not fail must leave an uncommitted segment"
+
+    q = incremental.stream_index_deltas(spark, delta_dir, store2, cfg,
+                                        checkpoint_dir=ckpt)
+    q.awaitTermination(600)
+    _assert_stream_healed(spark, store2, rows[28:])
+
+
+@pytest.mark.slow
+def test_stream_batch_without_en_pages_commits_nothing(spark, built,
+                                                       tmp_path_factory):
+    """A micro-batch whose pages are all non-`en` extracts no doc: it
+    commits no segment and leaves no part, and the checkpoint still
+    advances, so a second start processes nothing."""
+    from chavinha_mini_search_engine_spark.sources.tables import IndexStore
+
+    root = _copy_store(built.root, tmp_path_factory)
+    store = IndexStore(root)
+    committed = store.committed_parts("unified_delta")
+    rows = [dict(r, lang="de")
+            for r in generate_pages(12, include_edges=False)]
+    de_dir = str(tmp_path_factory.mktemp("de") / "pages")
+    spark.createDataFrame(
+        rows,
+        "url string, warc_ts timestamp, html binary, text string, lang string",
+    ).repartition(2).write.parquet(de_dir)
+    ckpt = str(tmp_path_factory.mktemp("de") / "ckpt")
+
+    q = incremental.stream_index_deltas(spark, de_dir, store,
+                                        checkpoint_dir=ckpt)
+    q.awaitTermination(600)
+    assert sum(p["numInputRows"] for p in q.recentProgress) == len(rows)
+
+    store2 = IndexStore(root)
+    assert store2.committed_parts("unified_delta") == committed
+    for tbl in ("postings", "attributes_delta", "unified_delta"):
+        assert store2.orphan_parts(tbl) == [], tbl
+    assert "stream_deltas" not in store2.manifest["stages"]
+
+    q = incremental.stream_index_deltas(spark, de_dir, store2,
+                                        checkpoint_dir=ckpt)
+    q.awaitTermination(600)
+    assert sum(p["numInputRows"] for p in q.recentProgress) == 0
+
+
 @pytest.mark.slow
 def test_stream_crash_before_manifest_commit_heals(spark, crash_fixture,
                                                    tmp_path_factory):
@@ -356,36 +495,7 @@ def test_stream_crash_before_manifest_commit_heals(spark, crash_fixture,
     q = incremental.stream_index_deltas(spark, delta_dir, store2, cfg,
                                         checkpoint_dir=ckpt)
     q.awaitTermination(600)
-
-    for tbl in ("postings", "attributes_delta", "unified_delta"):
-        assert store2.orphan_parts(tbl) == [], tbl
-
-    # no (shard, local_id) aliasing across base + committed deltas
-    layout = (
-        store2.read(spark, "unified").select("shard", "local_id")
-        .unionByName(
-            store2.read_parts(spark, "unified_delta").select("shard", "local_id")
-        )
-    )
-    dup = (layout.groupBy("shard", "local_id").count()
-           .filter(F.col("count") > 1).count())
-    assert dup == 0, "replay aliased the orphan segment's slots"
-
-    # every delta doc present EXACTLY once (no loss, no duplication)
-    exp_ids = sorted(
-        hashlib.md5(r["url"].encode()).hexdigest()
-        for r in rows[28:] if r["lang"] == "en"
-    )
-    assert sorted(_delta_fulldoc_ids(spark, store2)) == exp_ids
-
-    # persisted offsets equal the true maxima again
-    offs = {int(s): int(m)
-            for s, m in store2.manifest["stream_offsets"].items()}
-    exp_offs = {
-        int(r["shard"]): int(r["mx"])
-        for r in layout.groupBy("shard").agg(F.max("local_id").alias("mx")).collect()
-    }
-    assert offs == exp_offs
+    _assert_stream_healed(spark, store2, rows[28:])
 
     # the positional resident kernel loads and retrieves a delta doc
     from chavinha_mini_search_engine_spark.functions.tokenizer import tokenize_py
@@ -515,6 +625,23 @@ def test_tiered_compaction_matches_full_rebuild(spark, tmp_path_factory):
     assert rows_of(tiered, "term_dict") == rows_of(full, "term_dict")
     assert rows_of(tiered, "corpus_stats") == rows_of(full, "corpus_stats")
     assert tiered.manifest.get("compaction") == "tiered"
+
+    # lineage: each tiered postings part records the metrics of what it
+    # wrote, and per-shard build_metrics rows, like every build
+    import pyarrow.parquet as pq
+
+    parts = tiered.manifest["stages"]["postings"]["parts"]
+    assert sorted(parts) == ["grp=0", "grp=1"]
+    total = 0
+    for part, info in parts.items():
+        n = pq.read_table(tiered.path("postings", part),
+                          columns=["n"]).column("n").to_pylist()
+        assert info["metrics"]["postings"] == sum(n), part
+        assert info["metrics"]["blocks"] == len(n), part
+        total += sum(n)
+    bm = tiered.read(spark, "build_metrics")
+    assert bm.count() > 0
+    assert bm.agg(F.sum("rows")).first()[0] == total
 
     # block wellformedness on the re-tiled postings
     bl = tiered.read_parts(spark, "postings")
