@@ -546,31 +546,34 @@ def doclens(tf: DataFrame, cfg: IndexConfig) -> DataFrame:
     )
 
 
-def write_corpus_stats_local(doclens_dir: str, out_dir: str,
-                             cfg: IndexConfig) -> None:
-    """Driver-side corpus_stats: per-field (n_docs, avgdl) computed with
-    pyarrow from the materialized doclens table and written as one
-    parquet file in the Spark-compatible schema.
+def write_corpus_stats_local(lens_dir: str, out_dir: str,
+                             cfg: IndexConfig, prefix: str = "") -> None:
+    """Driver-side corpus_stats: per-field (n_docs, avgdl) over the docs
+    whose length is > 0, computed with pyarrow from a per-doc lengths
+    table and written as one parquet file in the Spark-compatible schema.
+    The lengths of field ``f`` are column ``prefix + f``: the build reads
+    the doclens table (null = field absent), ``compact_tiered`` the
+    ``len_*`` columns of attributes (0 = field absent).
 
-    Values are identical to the Spark aggregate it replaces: dl is
+    Values are identical to a Spark count/avg over dl > 0: dl is
     integral and per-field totals sit far below 2^53, so the double sum
     is exact under any accumulation order, and float(sum)/count is the
-    same IEEE division Spark's Average performs.  The doclens read is one
-    narrow columnar pass (int columns only); what this removes from the
+    same IEEE division Spark's Average performs.  The read is one narrow
+    columnar pass (int columns only); what this removes from the
     critical path is a whole Spark job + write for a 4-row table."""
     import pyarrow as pa
     import pyarrow.compute as pc
     import pyarrow.dataset as pads
     import pyarrow.parquet as pq
 
-    ds = pads.dataset(doclens_dir, format="parquet")
+    ds = pads.dataset(lens_dir, format="parquet")
     # fold one record batch at a time: O(batch) driver memory
     count = dict.fromkeys(cfg.fields, 0)
     total = dict.fromkeys(cfg.fields, 0)
-    for rb in ds.to_batches(columns=list(cfg.fields)):
+    for rb in ds.to_batches(columns=[prefix + f for f in cfg.fields]):
         for f in cfg.fields:
-            col = rb.column(f)
-            count[f] += len(col) - col.null_count
+            col = rb.column(prefix + f)
+            count[f] += pc.sum(pc.greater(col, 0)).as_py() or 0
             total[f] += pc.sum(col).as_py() or 0
     fields, n_docs, avgdl = [], [], []
     for f in cfg.fields:
@@ -626,11 +629,12 @@ def term_dict_from_df(df_tbl: DataFrame, stats: DataFrame,
 
 
 def build_postings_for(
-    tf: DataFrame, tdict: DataFrame, stats: DataFrame, cfg: IndexConfig,
+    tf: DataFrame, tdict: DataFrame, avgdl: dict, cfg: IndexConfig,
     scan_units: Optional[list] = None,
 ) -> DataFrame:
     """tf -> block rows (T5+T6+T7): map-side partial-run encode, then the
-    tf-norm merge.
+    tf-norm merge.  ``avgdl`` maps field -> avgdl (``IndexStore.
+    corpus_stats``); a field without stats normalizes with 1.0.
 
     The encode is a NARROW map over the tf scan: each ~1.5M-row input
     chunk emits one compressed sorted run per (shard, tid) it contains,
@@ -698,8 +702,7 @@ def build_postings_for(
     runs = runs.withColumn(
         "mkey", F.pmod(F.col("tid"), F.lit(cfg.encode_buckets)).cast("int")
     )
-    avg_map = {r["field"]: float(r["avgdl"]) for r in stats.collect()}
-    avgdl_by_fidx = [avg_map.get(f, 1.0) for f in cfg.fields]
+    avgdl_by_fidx = [avgdl.get(f, 1.0) for f in cfg.fields]
     blocks = runs.groupBy("shard", "mkey").applyInPandas(
         _make_merge_runs_tfnorm(cfg.block_size, cfg.k1, cfg.b, avgdl_by_fidx),
         schema=POSTINGS_SCHEMA_TFNORM,
@@ -1107,7 +1110,7 @@ def _index_stages_from_unified(
         store.finish_stage("stats", {"wall_sec": time.time() - t, **sub})
 
     tf = store.read(spark, "tf")
-    stats = store.read(spark, "corpus_stats")
+    avgdl = {f: a for f, (_n, a) in store.corpus_stats().items()}
     td = store.read(spark, "term_dict")
 
     # stage: postings, checkpointed per shard-group
@@ -1134,7 +1137,7 @@ def _index_stages_from_unified(
         # the direct-pyarrow encode scan (build_postings_for falls back
         # to the DataFrame scan when the list is empty or disabled)
         units = tf_scan_units(store.path("tf", part))
-        blocks = build_postings_for(tf_g, td, stats, cfg, scan_units=units)
+        blocks = build_postings_for(tf_g, td, avgdl, cfg, scan_units=units)
         store.write(blocks, "postings", part=part, partition_by=["tbucket"])
         _commit_postings_part(store, part, time.time() - t)
 
@@ -1166,9 +1169,8 @@ def _index_stages_from_unified(
     # submission back-fills them with the next group's (and the attributes
     # stage's) tasks.  Memory per TASK is unchanged (the scheduler still
     # caps concurrent tasks at the core count), so the overlap is safe at
-    # any scale; the env knob keeps the serial order reproducible for A/Bs.
-    n_jobs = int(os.environ.get("SPARK_GRAFT_POSTINGS_JOBS", "0")) \
-        or min(len(pending), 4)
+    # any scale.
+    n_jobs = min(len(pending), 4)
     tasks = [(lambda g=g: _one_group(g)) for g in pending]
     if not store.stage_done("attributes"):
         tasks.append(_attributes_task)
@@ -1312,24 +1314,12 @@ def compact_tiered(
                   partition_by=["shard"])
         out.finish_stage("attributes", {"wall_sec": time.time() - t})
 
-    attrs = out.read(spark, "attributes")
-
     # stats + dictionary: vocab/doc-grain only, no corpus pass
     if not out.stage_done("stats"):
         out.begin_stage("stats")
         t = time.time()
-        nf = len(cfg.fields)
-        stacked = attrs.select(F.expr(
-            "stack({}, {}) as (field, dl)".format(
-                nf, ", ".join(f"'{f}', len_{f}" for f in cfg.fields)
-            )
-        )).filter(F.col("dl") > 0)
-        out.write(
-            stacked.groupBy("field").agg(
-                F.count(F.lit(1)).alias("n_docs"), F.avg("dl").alias("avgdl")
-            ),
-            "corpus_stats",
-        )
+        write_corpus_stats_local(out.path("attributes"),
+                                 out.path("corpus_stats"), cfg, prefix="len_")
         stats = out.read(spark, "corpus_stats")
         base_df = base.read(spark, "term_dict").select("field", "term", "df")
         if base.has_parts("unified_delta"):
@@ -1361,7 +1351,6 @@ def compact_tiered(
                   "term_dict", partition_by=["tbucket"])
         out.finish_stage("stats", {"wall_sec": time.time() - t})
 
-    stats = out.read(spark, "corpus_stats")
     td = out.read(spark, "term_dict")
 
     # postings: base blocks pass through PAYLOAD-UNCHANGED; only the
@@ -1385,11 +1374,8 @@ def compact_tiered(
     if not out.stage_done("postings"):
         out.begin_stage("postings")
         t = time.time()
-        old_avg = {
-            r["field"]: float(r["avgdl"])
-            for r in base.read(spark, "corpus_stats").collect()
-        }
-        new_avg = {r["field"]: float(r["avgdl"]) for r in stats.collect()}
+        old_avg = {f: a for f, (_n, a) in base.corpus_stats().items()}
+        new_avg = {f: a for f, (_n, a) in out.corpus_stats().items()}
         inflate = F.coalesce(
             *[
                 F.when(
@@ -1433,7 +1419,7 @@ def compact_tiered(
             delta_tf = tokenize_tf(
                 base.read_parts(spark, "unified_delta"), cfg
             )
-            fresh = build_postings_for(delta_tf, td, stats, cfg)
+            fresh = build_postings_for(delta_tf, td, new_avg, cfg)
             out.write(fresh, "postings", part="grp=1",
                       partition_by=["tbucket"])
             _commit_postings_part(out, "grp=1", time.time() - t2)
@@ -1444,8 +1430,8 @@ def compact_tiered(
         out.begin_stage("graph")
         t = time.time()
         from .graph_ann import build_graph_table
-        out.write(build_graph_table(attrs, cfg), "graph",
-                  partition_by=["shard"])
+        out.write(build_graph_table(out.read(spark, "attributes"), cfg),
+                  "graph", partition_by=["shard"])
         out.finish_stage("graph", {"wall_sec": time.time() - t})
 
     out.manifest["total_wall_sec"] = time.time() - t_all

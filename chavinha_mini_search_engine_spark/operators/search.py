@@ -621,10 +621,7 @@ class SearchEngine:
         self.spark = spark
         self.store = store
         self.cfg = cfg or store.saved_config()
-        self.stats = {
-            r["field"]: (int(r["n_docs"]), float(r["avgdl"]))
-            for r in store.read(spark, "corpus_stats").collect()
-        }
+        self.stats = store.corpus_stats()
         self._postings = store.read_parts(spark, "postings")
         self._attrs = store.read(spark, "attributes")
         self._unified = store.read(spark, "unified")
@@ -791,27 +788,14 @@ class SearchEngine:
             return self._empty_result()
         hit_ids = [r["id"] for r in hits]
         rows = self._enrich_scan(hit_ids).collect()
-        meta = {r["id"]: r for r in rows}
-        out = []
+        docrows = {r["id"]: tuple(r)[1:] for r in rows}
         order = sorted(hits, key=lambda r: (-r["score"], r["id"]))
-        for rank, h in enumerate(order, 1):
-            m = meta.get(h["id"])
-            if h["doc_type"] == "chunk":
-                snippet = (m["chunk_content"] or "") if m else ""
-                rid = h["parent_id"] or h["id"]
-            else:
-                content = (m["content"] or "") if m else ""
-                snippet = _dynamic_snippet(content, terms)
-                rid = h["id"]
-            out.append(
-                (
-                    rank, rid, (m["url"] if m else ""),
-                    (m["title"] or "Untitled") if m else "Untitled",
-                    clean_snippet(snippet), (m["domain"] if m else ""),
-                    float(h["score"]),
-                    h["parent_doc_type"] or h["doc_type"] or "general",
-                )
-            )
+        out = [
+            tuple(result_row(rank, (h["id"], h["parent_id"], h["doc_type"],
+                                    h["parent_doc_type"], h["score"]),
+                             docrows.get(h["id"]), terms).values())
+            for rank, h in enumerate(order, 1)
+        ]
         return self.spark.createDataFrame(
             out,
             "rank int, id string, url string, title string, snippet string, "
@@ -824,6 +808,27 @@ class SearchEngine:
             "rank int, id string, url string, title string, snippet string, "
             "domain string, relevance double, doc_type string",
         )
+
+
+def result_row(rank: int, hit: tuple, docrow: Optional[tuple],
+               terms: List[str]) -> dict:
+    """One API result row, in the output column order, from a ranked hit
+    (id, parent_id, doc_type, parent_doc_type, score) and its doc-store
+    row (url, domain, title, content, chunk_content), or None when the
+    doc store holds none.  A chunk hit answers for its parent document
+    with the chunk text as snippet; a full doc gets a dynamic snippet."""
+    hid, parent_id, doc_type, parent_doc_type, score = hit
+    url, domain, title, content, chunk_content = docrow or ("",) * 5
+    if doc_type == "chunk":
+        snippet, rid = chunk_content or "", parent_id or hid
+    else:
+        snippet, rid = _dynamic_snippet(content or "", terms), hid
+    return {
+        "rank": rank, "id": rid, "url": url, "title": title or "Untitled",
+        "snippet": clean_snippet(snippet), "domain": domain,
+        "relevance": float(score),
+        "doc_type": parent_doc_type or doc_type or "general",
+    }
 
 
 def _dynamic_snippet(content: str, terms: List[str], width: int = 250) -> str:

@@ -43,7 +43,7 @@ from ..config import (
 )
 from ..oracle.embedder import embed_text
 from ..sources.tables import IndexStore
-from .search import _dynamic_snippet, _query_terms, clean_snippet
+from .search import _query_terms, result_row
 
 ATTR_COLS = [
     "shard", "local_id", "id", "doc_type", "parent_id", "parent_doc_type",
@@ -265,10 +265,7 @@ class ResidentSearcher:
         self.cfg = cfg or store.saved_config()
 
         # corpus stats + term dictionary -> plain dicts
-        stats = _read_parts_arrow(store.path("corpus_stats"), ["field", "n_docs", "avgdl"])
-        self.stats = dict(zip(stats["field"].tolist(), zip(
-            stats["n_docs"].astype(np.int64).tolist(),
-            stats["avgdl"].astype(np.float64).tolist())))
+        self.stats = store.corpus_stats()
         td = _read_parts_arrow(store.path("term_dict"), ["field", "term", "df", "idf"])
         self.term_dict: Dict[Tuple[str, str], Tuple[float, int]] = dict(zip(
             zip(td["field"].tolist(), td["term"].tolist()),
@@ -619,22 +616,5 @@ class ResidentSearcher:
             return []
         if docrows is None:
             docrows = self._fetch_docrows([str(h[0]) for h in hits])
-        out = []
-        for rank, (hid, parent_id, doc_type, parent_doc_type, score) \
-                in enumerate(hits, 1):
-            m = docrows.get(hid)
-            url, domain, title, content, chunk_content = m or ("", "", "", "", "")
-            if doc_type == "chunk":
-                snippet = chunk_content or ""
-                rid = parent_id or hid
-            else:
-                snippet = _dynamic_snippet(content or "", terms)
-                rid = hid
-            out.append({
-                "rank": rank, "id": rid, "url": url,
-                "title": title or "Untitled",
-                "snippet": clean_snippet(snippet), "domain": domain,
-                "relevance": float(score),
-                "doc_type": parent_doc_type or doc_type or "general",
-            })
-        return out
+        return [result_row(rank, h, docrows.get(h[0]), terms)
+                for rank, h in enumerate(hits, 1)]

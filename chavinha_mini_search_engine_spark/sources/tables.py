@@ -13,11 +13,21 @@ are isolated here on purpose.
 Layout under ``root``:
   manifest.json                 -- build_id, per-stage status + metrics
   docs/ chunks/ unified/        -- document tables (unified partitioned by shard)
+  tf/grp=K/                     -- per-(doc, field, term) tf + dl, per shard-group
   term_dict/ corpus_stats/      -- broadcastable stats
   doclens/                      -- per-(shard, local_id) field lengths
   postings/grp=K/               -- posting lists, committed per shard-group
+  postings/delta=E_B/           -- a streamed segment's posting lists
   attributes/                   -- per-(shard, local_id) norms + embeddings
+  unified_delta/delta=E_B/      -- a streamed segment's documents
+  attributes_delta/delta=E_B/   -- a streamed segment's attributes
+  graph/                        -- per-shard HNSW rows (graph_ann builds)
   build_metrics/                -- per-stage, per-partition lineage rows
+
+A streamed segment's three ``delta=`` parts commit together as one
+``stream_deltas`` manifest part, which records the segment's per-shard
+max ``local_id``.  ``segment_offsets`` reads the next segment's id
+offsets from those records and the ``unified`` footers.
 """
 
 from __future__ import annotations
@@ -125,6 +135,55 @@ class IndexStore:
         if not saved:
             return IndexConfig()
         return IndexConfig(**{**saved, "fields": tuple(saved["fields"])})
+
+    def corpus_stats(self) -> dict:
+        """{field: (n_docs, avgdl)} of the ``corpus_stats`` table, read
+        with pyarrow: a few rows, so no Spark job."""
+        import pyarrow.dataset as pads
+
+        t = pads.dataset(self.path("corpus_stats"), format="parquet").to_table(
+            columns=["field", "n_docs", "avgdl"]).to_pydict()
+        return {
+            f: (int(n), float(a))
+            for f, n, a in zip(t["field"], t["n_docs"], t["avgdl"])
+        }
+
+    def segment_offsets(self) -> dict:
+        """{shard: max local_id} over the base ``unified`` table and every
+        committed stream segment.  A new segment's ids start past these,
+        or two segments would alias a (shard, local_id) slot, which the
+        positional serve accumulator conflates.
+
+        The base maxima are the row-group statistics in the footers of
+        the shard-partitioned ``unified`` files; each segment's are the
+        ``max_local`` map its ``stream_deltas`` commit records.  No data
+        page is read.  Uncommitted (orphan) parts are not counted: the
+        stream removes them before it reads the offsets."""
+        import pyarrow.parquet as pq
+
+        offs: dict = {}
+
+        def fold(shard, mx) -> None:
+            offs[int(shard)] = max(offs.get(int(shard), -1), int(mx))
+
+        for d in self.list_parts("unified"):  # shard=K dirs
+            for f in os.listdir(self.path("unified", d)):
+                if f.endswith(".parquet"):
+                    md = pq.read_metadata(os.path.join(self.path("unified", d), f))
+                    col = md.schema.names.index("local_id")
+                    for rg in range(md.num_row_groups):
+                        if md.row_group(rg).num_rows:
+                            fold(d.split("=", 1)[1],
+                                 md.row_group(rg).column(col).statistics.max)
+        parts = self.manifest["stages"].get("stream_deltas", {}).get("parts", {})
+        for part, info in parts.items():
+            if info.get("status") == "done":
+                if "max_local" not in info["metrics"]:
+                    raise ValueError(f"stream segment {part} records no "
+                                     "max_local; compact the store first")
+                for s, mx in info["metrics"]["max_local"].items():
+                    fold(s, mx)
+        return offs
 
     def stage_done(self, stage: str, part: Optional[str] = None) -> bool:
         st = self.manifest["stages"].get(stage)

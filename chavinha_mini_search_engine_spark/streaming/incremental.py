@@ -14,10 +14,14 @@ expresses the same capabilities Spark-first:
   postings/delta=<epoch>_<batch_id>/).  The serve path (IndexStore.
   read_parts) unions base + deltas automatically -- the Lucene-segment
   pattern.  Deltas inherit the BASE build's corpus stats (idf/avgdl), so
-  scores drift as the corpus grows; ``compact`` (a full rebuild from
-  pages) refreshes stats -- the documented Lucene/Vespa tradeoff.
-  Each micro-batch is scanned, extracted and tokenized once for its three
-  concurrent table writes; a batch with no ``en`` page commits nothing.
+  scores drift as the corpus grows; compaction refreshes them -- the
+  documented Lucene/Vespa tradeoff.  ``compact`` re-runs tokenize, stats
+  and postings over the stored ``unified`` rows plus the deltas;
+  ``compact_tiered`` re-tokenizes only the deltas and keeps the base
+  posting blocks.  Each micro-batch is scanned, extracted and tokenized
+  once for its three concurrent table writes; a batch with no ``en`` page
+  commits nothing.  Segment id offsets are read once per stream
+  (``IndexStore.segment_offsets``) and advanced by each batch.
 - ``stream_events_hourly``: event-time tumbling window + watermark -- the
   streaming twin of the batch ``events_hourly`` query the DuckDB oracle
   gates.
@@ -85,7 +89,8 @@ def stream_index_deltas(
 
     A batch is laid out once.  The extracted docs and the offset-shifted
     unified rows are cached; one per-shard max(local_id) job over the
-    cached rows materializes them and gives the batch's new offsets, and
+    cached rows materializes them and gives the batch's new offsets
+    (recorded in its commit as ``max_local``), and
     an empty result (no ``en`` page) ends the batch with no segment and
     no commit.  tf is computed once for postings and attributes, the
     three tables are written concurrently, and the cache is dropped once
@@ -112,7 +117,7 @@ def stream_index_deltas(
         unified_corpus,
     )
 
-    stats = store.read(spark, "corpus_stats")
+    avgdl = {f: a for f, (_n, a) in store.corpus_stats().items()}
     tdict = store.read(spark, "term_dict")
     epoch = int(time.time())
     # a stable id for this (store, checkpoint) stream lineage: lets a
@@ -126,59 +131,19 @@ def stream_index_deltas(
         if checkpoint_dir else None
     )
 
-    # Crash hygiene BEFORE trusting the persisted offsets: a writer that
-    # died between the segment writes and the manifest commit left orphan
-    # delta parts on disk that (a) the read paths must never union --
-    # they'd alias the retry segment's (shard, local_id) slots -- and
-    # (b) the stale manifest offsets know nothing about.  Their batch was
+    # Crash hygiene before the offsets are read: a writer that died
+    # between the segment writes and the manifest commit left orphan
+    # delta parts on disk that the read paths must never union (they'd
+    # alias the retry segment's (shard, local_id) slots).  Their batch was
     # never checkpoint-committed either, so the source will replay it:
     # removing them is a pure self-heal (the Iceberg uncommitted-data-file
     # analog).  Steady state: zero orphans, one listdir per table.
     gc = store.gc_orphan_parts(["postings", "attributes_delta", "unified_delta"])
     if gc:
         print(f"stream_index_deltas: removed orphan uncommitted parts {gc}")
-
-    def _current_offsets() -> dict:
-        """Per-shard max local_id across base + ALL existing segments: a
-        batch's local_id range must start past every previously written
-        segment, or two deltas would alias the same (shard, local_id) and
-        the serve kernel -- which indexes its accumulator positionally --
-        would conflate distinct documents.
-
-        The running offsets are PERSISTED in the manifest after each batch
-        (``stream_offsets``), so steady-state micro-batches pay one
-        manifest read instead of a full metadata scan of base + all deltas
-        (which at a large base is a full-table pass per batch).  The scan
-        remains the first-use fallback -- and the authority whenever the
-        manifest carries no offsets, e.g. a store streamed into by an
-        older build.  Defense in depth vs the crash window the persisted
-        offsets opened: any delta part on disk but NOT manifest-committed
-        (normally none -- GC'd at stream start) gets its maxima folded in
-        so a retry can never alias it."""
-        saved = store.manifest.get("stream_offsets")
-        if saved is not None:
-            offs = {int(s): int(m) for s, m in saved.items()}
-            orphans = store.orphan_parts("unified_delta")
-            for part in orphans:
-                for r in (
-                    spark.read.parquet(store.path("unified_delta", part))
-                    .groupBy("shard").agg(F.max("local_id").alias("mx"))
-                    .collect()
-                ):
-                    s = int(r["shard"])
-                    offs[s] = max(offs.get(s, -1), int(r["mx"]))
-            return offs
-        seen = store.read(spark, "unified").select("shard", "local_id")
-        if store.has_parts("unified_delta"):
-            seen = seen.unionByName(
-                store.read_parts(spark, "unified_delta").select("shard", "local_id")
-            )
-        return {
-            int(r["shard"]): int(r["max_local"])
-            for r in seen.groupBy("shard")
-            .agg(F.max("local_id").alias("max_local"))
-            .collect()
-        }
+    # per-shard max local_id over base + committed segments, from footers
+    # and commit records; each committed batch then advances it in place
+    offs = store.segment_offsets()
 
     def _already_committed(batch_id: int) -> bool:
         """True iff THIS stream lineage already committed this micro-batch
@@ -218,7 +183,6 @@ def stream_index_deltas(
             # shift local ids past every already-written segment's ids per
             # shard so delta postings never collide with base or
             # earlier-delta postings
-            offs = _current_offsets()
             offs_df = spark.createDataFrame(
                 list(offs.items()) or [], "shard int, max_local long"
             )
@@ -242,7 +206,7 @@ def stream_index_deltas(
             part = f"delta={epoch}_{batch_id}"
             tf = keep(tokenize_tf(u, cfg))
             writes = [
-                lambda: store.write(build_postings_for(tf, tdict, stats, cfg),
+                lambda: store.write(build_postings_for(tf, tdict, avgdl, cfg),
                                     "postings", part=part,
                                     partition_by=["tbucket"]),
                 lambda: store.write(attributes(u, cfg, tf=tf),
@@ -267,16 +231,14 @@ def stream_index_deltas(
         finally:
             for df in cached:
                 df.unpersist()
-        # fold this batch's maxima into the running offsets and persist
-        # them with the segment commit
-        for r in batch_max:
-            s = int(r["shard"])
-            offs[s] = max(offs.get(s, -1), int(r["max_local"]))
-        store.manifest["stream_offsets"] = {str(s): m for s, m in offs.items()}
-        store.finish_part(
-            "stream_deltas", part,
-            {"batch_id": batch_id, "stream_id": stream_id},
-        )
+        # the commit records the segment's maxima (segment_offsets reads
+        # them at the next stream start); this stream advances in place
+        max_local = {int(r["shard"]): int(r["max_local"]) for r in batch_max}
+        store.finish_part("stream_deltas", part, {
+            "batch_id": batch_id, "stream_id": stream_id,
+            "max_local": {str(s): m for s, m in max_local.items()},
+        })
+        offs.update(max_local)
 
     src = (
         spark.readStream.schema(PAGES_DDL_COLUMNS)

@@ -175,7 +175,7 @@ def test_postings_paths_identical(spark, built, monkeypatch):
 
     tf = built.read(spark, "tf")
     td = built.read(spark, "term_dict")
-    stats = built.read(spark, "corpus_stats")
+    avgdl = {f: a for f, (_n, a) in built.corpus_stats().items()}
     # small Arrow batches so the JVM scan's chunks hold several batches
     key = "spark.sql.execution.arrow.maxRecordsPerBatch"
     prev = spark.conf.get(key)
@@ -184,7 +184,7 @@ def test_postings_paths_identical(spark, built, monkeypatch):
         for src, scan_units in ((tf, units), (tf, None),
                                 (tf.drop("tid", "grp"), None)):
             got = _block_map(
-                ib.build_postings_for(src, td, stats, cfg,
+                ib.build_postings_for(src, td, avgdl, cfg,
                                       scan_units=scan_units).collect()
             )
             _assert_blocks_equal(got, ref)

@@ -11,9 +11,8 @@ import re
 import chavinha_mini_search_engine_spark as pkg
 
 ALLOWED = {
-    # postings stage: encode chunk rows, pool width
+    # postings stage: encode chunk rows
     "SPARK_GRAFT_ENCODE_CHUNK",
-    "SPARK_GRAFT_POSTINGS_JOBS",
     # deployment settings (session.py)
     "SPARK_GRAFT_MASTER",
     "SPARK_GRAFT_CPUS",

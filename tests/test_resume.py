@@ -5,6 +5,8 @@ stages/shard-groups must be skipped (manifest timestamps untouched) and the
 final tables must be identical to an uninterrupted build.
 """
 
+import threading
+
 import pytest
 
 from chavinha_mini_search_engine_spark.operators.index_build import (
@@ -29,31 +31,30 @@ def _collect(store, spark, table, parts=False):
 
 
 @pytest.mark.slow
-def test_resume_identical(spark, tiny_pages, tmp_path_factory, monkeypatch):
-    # serial postings groups: the crash simulation below counts
-    # finish_part calls and expects exactly 2 committed parts at the
-    # "crash"; under the default concurrent submission (guide §2.6) the
-    # other groups' threads would drain before the exception surfaces.
-    # Concurrent-mode resume is covered by the unchanged end-state
-    # assertions of every other build test.
-    monkeypatch.setenv("SPARK_GRAFT_POSTINGS_JOBS", "1")
+def test_resume_identical(spark, tiny_pages, tmp_path_factory):
     pages = spark.read.parquet(tiny_pages)
 
     # uninterrupted reference build
     a = IndexStore(str(tmp_path_factory.mktemp("ra") / "idx"), build_id="bb")
     build_index(spark, pages, a, CFG, with_embeddings=False)
 
-    # interrupted build: die after the 2nd completed postings shard-group
+    # interrupted build: the first 2 postings shard-groups to finish
+    # commit, every later one dies before its commit.  The groups run
+    # concurrently, so the crash must not depend on which threads are
+    # still running when the first exception surfaces.
     b_root = str(tmp_path_factory.mktemp("rb") / "idx")
     b = IndexStore(b_root, build_id="bb")
     orig = IndexStore.finish_part
+    lock = threading.Lock()
     calls = {"n": 0}
 
     def bomb(self, stage, part, metrics=None):
-        orig(self, stage, part, metrics)
-        calls["n"] += 1
-        if calls["n"] == 2:
+        with lock:
+            calls["n"] += 1
+            n = calls["n"]
+        if n > 2:
             raise _Boom()
+        orig(self, stage, part, metrics)
 
     IndexStore.finish_part = bomb
     try:

@@ -96,7 +96,9 @@ def test_hybrid_two_phase_degenerate_parity(spark, tmp_path_factory):
     candidate prefix, extend until the next bound is below the k-th exact
     deduped score) must be LOSSLESS.  A single-shard build with >256
     matches for a corpus-wide term forces the chunked path (chunk =
-    max(4k, 256)); results must equal the exhaustive oracle exactly."""
+    max(4k, 256)); results must equal the exhaustive oracle exactly.
+    The same term's posting list spans several 128-posting blocks, so
+    bm25 is checked against the oracle over multi-block lists too."""
     import collections
 
     import numpy as np
@@ -128,6 +130,12 @@ def test_hybrid_two_phase_degenerate_parity(spark, tmp_path_factory):
     degenerate_term, df = df_count.most_common(1)[0]
     assert df > 256, "need a term matching >256 docs to force chunking"
 
+    # the queried list spans several blocks (block-max pruning and the
+    # block-range decode see more than one block per list)
+    blocks = store.read_parts(spark, "postings").filter(
+        F.col("term") == degenerate_term).agg(F.max("block_idx")).first()[0]
+    assert blocks > 0, "need a posting list of more than one block"
+
     rs = ResidentSearcher(store, cfg)
 
     def to_odocs(df_):
@@ -142,17 +150,18 @@ def test_hybrid_two_phase_degenerate_parity(spark, tmp_path_factory):
         return out
 
     oracle = OracleIndex(to_odocs(store.read(spark, "unified")))
-    for q in (degenerate_term, f"{degenerate_term} python"):
-        for k in (1, 10, 50):
-            got = norm(rs.search(q, "hybrid", k))
-            exp = sorted(
-                ((h["doc_id"], round(h["score"], 9))
-                 for h in oracle.search(q, "hybrid", k)),
-                key=lambda t: (-t[1], t[0]),
-            )
-            assert [g[0] for g in got] == [e[0] for e in exp], (q, k)
-            for (gid, gs), (_, es) in zip(got, exp):
-                assert abs(gs - es) < 1e-8, (q, k, gid, gs, es)
+    for st in ("hybrid", "bm25"):
+        for q in (degenerate_term, f"{degenerate_term} python"):
+            for k in (1, 10, 50):
+                got = norm(rs.search(q, st, k))
+                exp = sorted(
+                    ((h["doc_id"], round(h["score"], 9))
+                     for h in oracle.search(q, st, k)),
+                    key=lambda t: (-t[1], t[0]),
+                )
+                assert [g[0] for g in got] == [e[0] for e in exp], (st, q, k)
+                for (gid, gs), (_, es) in zip(got, exp):
+                    assert abs(gs - es) < 1e-8, (st, q, k, gid, gs, es)
 
 
 @pytest.mark.parametrize("st,mode", [

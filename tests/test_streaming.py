@@ -149,10 +149,9 @@ def test_index_deltas_searchable(spark, tmp_path_factory):
     )
     assert dup == 0, "delta segments alias base/delta (shard, local_id) slots"
 
-    # the running per-shard offsets persisted in the manifest must equal
-    # the actual layout maxima (so later batches/restarts can skip the
-    # full base+delta metadata scan)
-    offs = {int(s): int(m) for s, m in store.manifest["stream_offsets"].items()}
+    # the offsets the next stream reads from footers and segment commits
+    # must equal the actual layout maxima
+    offs = store.segment_offsets()
     exp_offs = {
         int(r["shard"]): int(r["mx"])
         for r in layout.groupBy("shard").agg(F.max("local_id").alias("mx")).collect()
@@ -321,9 +320,11 @@ def _persistent_rdds(spark):
 def _assert_stream_healed(spark, store, delta_rows):
     """After a restart on the crashed stream's checkpoint: no orphan part,
     every `en` delta doc exactly once, no (shard, local_id) alias across
-    base + committed deltas, and the persisted offsets equal the true
+    base + committed deltas, and the segment offsets equal the true
     per-shard maxima.  Returns the (shard, local_id) layout."""
     import hashlib
+
+    from chavinha_mini_search_engine_spark.sources.tables import IndexStore
 
     for tbl in ("postings", "attributes_delta", "unified_delta"):
         assert store.orphan_parts(tbl) == [], tbl
@@ -344,8 +345,8 @@ def _assert_stream_healed(spark, store, delta_rows):
     )
     assert sorted(_delta_fulldoc_ids(spark, store)) == exp_ids
 
-    offs = {int(s): int(m)
-            for s, m in store.manifest["stream_offsets"].items()}
+    # a fresh handle reads the offsets the next stream would start from
+    offs = IndexStore(store.root).segment_offsets()
     exp_offs = {
         int(r["shard"]): int(r["mx"])
         for r in layout.groupBy("shard").agg(F.max("local_id").alias("mx")).collect()
@@ -410,6 +411,39 @@ def test_stream_crash_at_each_delta_write_heals(spark, crash_fixture,
                                         checkpoint_dir=ckpt)
     q.awaitTermination(600)
     _assert_stream_healed(spark, store2, rows[28:])
+
+
+@pytest.mark.slow
+def test_stream_reads_no_base_unified_or_stats_table(spark, crash_fixture,
+                                                    tmp_path_factory):
+    """A stream into a freshly built store takes its segment offsets from
+    the base footers and its avgdl from IndexStore.corpus_stats: with
+    IndexStore.read failing for `unified` and `corpus_stats`, every
+    micro-batch still commits its segment."""
+    from chavinha_mini_search_engine_spark.sources.tables import IndexStore
+
+    cfg, rows, src_root, delta_dir = crash_fixture
+    root = _copy_store(src_root, tmp_path_factory)
+    ckpt = str(tmp_path_factory.mktemp("nr") / "ckpt")
+
+    orig = IndexStore.read
+
+    def no_read(self, spark_, table, *args, **kwargs):
+        if table in ("unified", "corpus_stats"):
+            raise RuntimeError(f"stream read {table}")
+        return orig(self, spark_, table, *args, **kwargs)
+
+    IndexStore.read = no_read
+    try:
+        q = incremental.stream_index_deltas(spark, delta_dir, IndexStore(root),
+                                            cfg, checkpoint_dir=ckpt)
+        q.awaitTermination(600)
+    finally:
+        IndexStore.read = orig
+    batches = [p for p in q.recentProgress if p["numInputRows"]]
+    store = IndexStore(root)
+    assert len(store.committed_parts("unified_delta")) == len(batches) == 2
+    _assert_stream_healed(spark, store, rows[28:])
 
 
 @pytest.mark.slow
