@@ -1,4 +1,4 @@
-"""Thin stdlib HTTP façade over the resident serve path.
+"""The HTTP surface: the package's one request contract.
 
 Mirrors the reference's FastAPI surface (/root/reference/api/main.py):
 
@@ -6,8 +6,13 @@ Mirrors the reference's FastAPI surface (/root/reference/api/main.py):
   (main.py:547-570: search_type whitelist -> 400, empty q -> 400,
   limit bounds; response = SearchResponse with the SearchResult
   projection of main.py:509-529)
-- ``GET /api/stats``   (main.py:576-665: total + per-domain counts)
+- ``GET /api/stats``   (main.py:576-665: total + per-domain counts,
+  ``domain_stats``)
 - ``GET /health``      (main.py:696-725: status/backend/api keys)
+
+Parameter validation, the response shape and the stats exist only here;
+the Spark ``SearchEngine`` is the Spark query path behind no request
+contract of its own.
 
 Implementation deliberately sticks to ``http.server`` (no new
 dependencies in this environment); requests are served by the in-process
@@ -23,6 +28,7 @@ from __future__ import annotations
 
 import json
 import threading
+from collections import Counter
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from time import time
 from typing import Optional
@@ -31,6 +37,34 @@ from urllib.parse import parse_qs, urlparse
 from .config import DEFAULT_LIMIT, MAX_LIMIT, SEARCH_TYPES
 from .operators.serve import ResidentSearcher
 from .sources.tables import IndexStore
+
+
+def domain_stats(store: IndexStore, max_domains: int = 1000) -> dict:
+    """/api/stats: the full-doc total and per-domain counts, at most
+    ``max_domains`` groups by count desc, then domain (api/main.py:
+    576-665).  The full docs are the ``doc_type == "full_doc"`` rows of
+    the served ``unified`` segments -- the base docs plus every streamed
+    one, and on a compacted store (no docs table) its merged rows.
+    Folded one record batch at a time: driver memory O(batch + domains)."""
+    import pyarrow.compute as pc
+    import pyarrow.dataset as pads
+
+    counts: Counter = Counter()
+    full_doc = pc.field("doc_type") == "full_doc"
+    for d in store.segment_dirs("unified"):
+        ds = pads.dataset(d, format="parquet", partitioning="hive")
+        for b in ds.to_batches(columns=["domain"], filter=full_doc):
+            vc = pc.value_counts(b.column(0))
+            counts.update(dict(zip(vc.field("values").to_pylist(),
+                                   vc.field("counts").to_pylist())))
+    domains = sorted(counts.items(), key=lambda kv: (-kv[1], kv[0]))
+    return {
+        "total_documents": sum(counts.values()),
+        "domains": [
+            {"domain": d, "document_count": n}
+            for d, n in domains[:max_domains]
+        ],
+    }
 
 
 class ResidentHTTPServer:
@@ -122,40 +156,11 @@ class ResidentHTTPServer:
         }
 
     def _stats(self) -> dict:
-        """total + per-domain full-doc counts (api/main.py:576-665).
-        Computed once per server from the doc store's narrow columns via
-        pyarrow (a resident server has no SparkSession); cached --
-        the reference likewise serves a metadata snapshot."""
+        """Computed once per server (a resident server has no
+        SparkSession); cached -- the reference likewise serves a
+        metadata snapshot."""
         if self._stats_cache is None:
-            from collections import Counter
-
-            from .operators.serve import _read_parts_arrow
-
-            table = "docs" if self.store.exists("docs") else "unified"
-            pdf = _read_parts_arrow(
-                self.store.path(table), ["domain", "doc_type"]
-            ) if table == "unified" else _read_parts_arrow(
-                self.store.path("docs"), ["domain"]
-            )
-            if "doc_type" in pdf.columns:
-                pdf = pdf[pdf["doc_type"] == "full_doc"]
-            counts = Counter(pdf["domain"])
-            if self.store.has_parts("unified_delta"):
-                d = _read_parts_arrow(
-                    self.store.path("unified_delta"),
-                    ["domain", "doc_type"],
-                    part_names=self.store.committed_parts("unified_delta"),
-                )
-                counts.update(Counter(d[d["doc_type"] == "full_doc"]["domain"]))
-            domains = sorted(
-                counts.items(), key=lambda kv: (-kv[1], kv[0])
-            )[:1000]
-            self._stats_cache = {
-                "total_documents": int(sum(counts.values())),
-                "domains": [
-                    {"domain": d, "document_count": int(n)} for d, n in domains
-                ],
-            }
+            self._stats_cache = domain_stats(self.store)
         return self._stats_cache
 
     def _health(self) -> dict:

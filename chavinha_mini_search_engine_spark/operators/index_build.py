@@ -683,21 +683,12 @@ def build_postings_for(
             _encode_partial_runs_files, schema=RUN_SCHEMA_DL
         )
     else:
-        if "tid" in tf.columns:
-            # materialized tf carries (tid, fidx) ints (stats stage
-            # wrote them in the same codegen pass as the tf write): this
-            # scan reads ONLY fixed-width int columns -- parquet never
-            # decodes the posting-grain term string pages, and no
-            # per-posting hash runs here
-            src = tf.select("tid", "shard", "fidx", "local_id", "tf", "dl")
-        else:
-            # fresh tokenize output (streaming micro-batches, compaction
-            # deltas): the field string exists only inside the tid hash
-            # expression (field_col is codegen element_at)
-            src = tf.select(
-                F.xxhash64(field_col(cfg), F.col("term")).alias("tid"),
-                "shard", "fidx", "local_id", "tf", "dl",
-            )
+        # the field string exists only inside the tid hash expression
+        # (field_col is codegen element_at)
+        src = tf.select(
+            F.xxhash64(field_col(cfg), F.col("term")).alias("tid"),
+            "shard", "fidx", "local_id", "tf", "dl",
+        )
         runs = src.mapInPandas(_encode_partial_runs, schema=RUN_SCHEMA_DL)
     runs = runs.withColumn(
         "mkey", F.pmod(F.col("tid"), F.lit(cfg.encode_buckets)).cast("int")
@@ -1116,15 +1107,6 @@ def _index_stages_from_unified(
     # stage: postings, checkpointed per shard-group
     store.begin_stage("postings")
     _tag_jobs(spark, "postings")
-    # Arrow batch size, scoped to this stage: the session default (4096)
-    # bounds per-batch memory for WIDE rows (html pages, embeddings), but
-    # the postings stage ships narrow rows (6 int columns into the encode
-    # kernel, ~150-B compressed runs into the merge), where 4096-row
-    # batches make JVM-side per-batch overhead the dominant scan cost
-    # (1.6-7 us/row of executor CPU on a 6-int scan, measured by the
-    # per-Spark-stage event-log probe of BENCH_SCALING.md)
-    prev_batch = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
-    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "32768")
 
     def _one_group(g: int) -> None:
         part = f"grp={g}"
@@ -1186,17 +1168,31 @@ def _index_stages_from_unified(
         verify_tid_unique(td)
 
     tasks.append(_verify_task)
-    if len(tasks) > 1 and n_jobs > 1:
-        from concurrent.futures import ThreadPoolExecutor
+    # Arrow batch size, scoped to this stage: the session default (4096)
+    # bounds per-batch memory for WIDE rows (html pages, embeddings), but
+    # the postings stage ships narrow rows (6 int columns into the encode
+    # kernel, ~150-B compressed runs into the merge), where 4096-row
+    # batches make JVM-side per-batch overhead the dominant scan cost
+    # (1.6-7 us/row of executor CPU on a 6-int scan, measured by the
+    # per-Spark-stage event-log probe of BENCH_SCALING.md),
+    # restored also when a task raises
+    prev_batch = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
+    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "32768")
+    try:
+        if len(tasks) > 1 and n_jobs > 1:
+            from concurrent.futures import ThreadPoolExecutor
 
-        with ThreadPoolExecutor(max_workers=min(n_jobs + 1, len(tasks))) as pool:
-            futures = [pool.submit(t) for t in tasks]
-            for f in futures:
-                f.result()
-    else:
-        for t_ in tasks:
-            t_()
-    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", prev_batch)
+            with ThreadPoolExecutor(
+                    max_workers=min(n_jobs + 1, len(tasks))) as pool:
+                futures = [pool.submit(t) for t in tasks]
+                for f in futures:
+                    f.result()
+        else:
+            for t_ in tasks:
+                t_()
+    finally:
+        spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch",
+                       prev_batch)
     store.finish_stage("postings")
 
     # stage: graph (optional) -- per-shard HNSW over stored embeddings,
@@ -1236,9 +1232,7 @@ def compact(
     out.save_config(cfg)
 
     def make_unified():
-        u = base.read(spark, "unified")
-        if base.has_parts("unified_delta"):
-            u = u.unionByName(base.read_parts(spark, "unified_delta"))
+        u = base.read_parts(spark, "unified")
         return assign_layout(u.drop("shard", "local_id"), cfg)
 
     _index_stages_from_unified(spark, out, cfg, make_unified)
@@ -1294,11 +1288,7 @@ def compact_tiered(
     if not out.stage_done("unified"):
         out.begin_stage("unified")
         t = time.time()
-        u = base.read(spark, "unified")
-        if base.has_parts("unified_delta"):
-            u = u.unionByName(
-                base.read_parts(spark, "unified_delta")
-            )
+        u = base.read_parts(spark, "unified")
         out.write(u.repartition(cfg.num_doc_shards, "shard"), "unified",
                   partition_by=["shard"], options=DOC_STORE_WRITE_OPTS)
         out.finish_stage("unified", {"wall_sec": time.time() - t})
@@ -1307,123 +1297,128 @@ def compact_tiered(
     if not out.stage_done("attributes"):
         out.begin_stage("attributes")
         t = time.time()
-        a = base.read(spark, "attributes")
-        if base.has_parts("attributes_delta"):
-            a = a.unionByName(base.read_parts(spark, "attributes_delta"))
+        a = base.read_parts(spark, "attributes")
         out.write(a.repartition(cfg.num_doc_shards, "shard"), "attributes",
                   partition_by=["shard"])
         out.finish_stage("attributes", {"wall_sec": time.time() - t})
 
-    # stats + dictionary: vocab/doc-grain only, no corpus pass
-    if not out.stage_done("stats"):
-        out.begin_stage("stats")
-        t = time.time()
-        write_corpus_stats_local(out.path("attributes"),
-                                 out.path("corpus_stats"), cfg, prefix="len_")
-        stats = out.read(spark, "corpus_stats")
-        base_df = base.read(spark, "term_dict").select("field", "term", "df")
-        if base.has_parts("unified_delta"):
-            # delta docs RE-TOKENIZE (they are the small tier); the stored
-            # delta segments cannot source the dictionary because their
-            # postings inner-joined the BASE dictionary at stream time --
-            # brand-new terms were dropped there by design and enter the
-            # index here (streaming/incremental.py docstring)
-            delta_tf = tokenize_tf(
-                base.read_parts(spark, "unified_delta"), cfg
-            )
-            delta_df = (
-                delta_tf.groupBy("fidx", "term")
-                .agg(F.count(F.lit(1)).alias("df_delta"))
-                .select(field_col(cfg).alias("field"), "term", "df_delta")
-            )
-            new_df = (
-                base_df.join(delta_df, ["field", "term"], "full")
-                .select(
-                    "field", "term",
-                    (F.coalesce(F.col("df"), F.lit(0))
-                     + F.coalesce(F.col("df_delta"), F.lit(0))).alias("df"),
+    # delta docs RE-TOKENIZE (they are the small tier), once for both the
+    # merged df and their fresh postings; the stored delta segments cannot
+    # source the dictionary because their postings inner-joined the BASE
+    # dictionary at stream time -- brand-new terms were dropped there by
+    # design and enter the index here (streaming/incremental.py docstring)
+    delta_tf = None
+    if base.has_parts("unified_delta") and not (
+            out.stage_done("stats") and out.stage_done("postings")):
+        delta_tf = tokenize_tf(
+            base.read_parts(spark, "unified_delta"), cfg).persist()
+    try:
+        # stats + dictionary: vocab/doc-grain only, no corpus pass
+        if not out.stage_done("stats"):
+            out.begin_stage("stats")
+            t = time.time()
+            write_corpus_stats_local(out.path("attributes"),
+                                     out.path("corpus_stats"), cfg,
+                                     prefix="len_")
+            stats = out.read(spark, "corpus_stats")
+            base_df = base.read(spark, "term_dict").select(
+                "field", "term", "df")
+            if delta_tf is not None:
+                delta_df = (
+                    delta_tf.groupBy("fidx", "term")
+                    .agg(F.count(F.lit(1)).alias("df_delta"))
+                    .select(field_col(cfg).alias("field"), "term", "df_delta")
                 )
-            )
-        else:
-            new_df = base_df
-        td = term_dict_from_df(new_df, stats, cfg)
-        out.write(td.repartition("tbucket"),
-                  "term_dict", partition_by=["tbucket"])
-        out.finish_stage("stats", {"wall_sec": time.time() - t})
-
-    td = out.read(spark, "term_dict")
-
-    # postings: base blocks pass through PAYLOAD-UNCHANGED; only the
-    # block-grain max_score rebounds under the new stats.  stored bound =
-    # idf_old * max_tfnorm (+eps); tfnorm is monotone-increasing in avgdl
-    # (a larger avgdl shrinks every denominator), so
-    # max_tfnorm_new <= max_tfnorm_old * max(1, avgdl_new/avgdl_old):
-    # for avgdl_new >= old, tf + C*r >= r*(tf + C) for r =
-    # old/new <= 1 gives tfnorm_new <= tfnorm_old/r; for avgdl_new < old
-    # the old bound is already an upper bound.  new max_score =
-    # old/idf_old * idf_new * inflation * (1+1e-12) (the extra eps covers
-    # the division's rounding).  Pruning stays lossless -- serve recomputes
-    # exact scores from the raw (tf, dl) either way -- bounds merely get
-    # (1 + avgdl-drift) looser per tiered compaction; a periodic full
-    # ``compact`` re-tightens them.  Zero posting-grain work for the base
-    # tier: the A/B that motivated this (scripts/compaction_bench.py,
-    # 120k pages) measured a decode-and-retile kernel at 2.2x the cost of
-    # the from-scratch mapside encode, i.e. physical re-blocking pays
-    # MORE than it saves; segment-consolidation semantics (Lucene tiered
-    # merge policy) are the scalable shape.
-    if not out.stage_done("postings"):
-        out.begin_stage("postings")
-        t = time.time()
-        old_avg = {f: a for f, (_n, a) in base.corpus_stats().items()}
-        new_avg = {f: a for f, (_n, a) in out.corpus_stats().items()}
-        inflate = F.coalesce(
-            *[
-                F.when(
-                    F.col("field") == f,
-                    F.lit(max(1.0, new_avg.get(f, 1.0) / old_avg.get(f, 1.0))),
+                new_df = (
+                    base_df.join(delta_df, ["field", "term"], "full")
+                    .select(
+                        "field", "term",
+                        (F.coalesce(F.col("df"), F.lit(0))
+                         + F.coalesce(F.col("df_delta"), F.lit(0)))
+                        .alias("df"),
+                    )
                 )
-                for f in cfg.fields
-            ],
-            F.lit(1.0),
-        )
-        base_parts = [
-            p for p in base.committed_parts("postings")
-            if not p.startswith("delta=")
-        ]
-        post = spark.read.parquet(base.path("postings", base_parts[0]))
-        for p in base_parts[1:]:
-            post = post.unionByName(
-                spark.read.parquet(base.path("postings", p))
+            else:
+                new_df = base_df
+            td = term_dict_from_df(new_df, stats, cfg)
+            out.write(td.repartition("tbucket"),
+                      "term_dict", partition_by=["tbucket"])
+            out.finish_stage("stats", {"wall_sec": time.time() - t})
+
+        td = out.read(spark, "term_dict")
+
+        # postings: base blocks pass through PAYLOAD-UNCHANGED; only the
+        # block-grain max_score rebounds under the new stats.  stored bound =
+        # idf_old * max_tfnorm (+eps); tfnorm is monotone-increasing in avgdl
+        # (a larger avgdl shrinks every denominator), so
+        # max_tfnorm_new <= max_tfnorm_old * max(1, avgdl_new/avgdl_old):
+        # for avgdl_new >= old, tf + C*r >= r*(tf + C) for r =
+        # old/new <= 1 gives tfnorm_new <= tfnorm_old/r; for avgdl_new < old
+        # the old bound is already an upper bound.  new max_score =
+        # old/idf_old * idf_new * inflation * (1+1e-12) (the extra eps covers
+        # the division's rounding).  Pruning stays lossless -- serve recomputes
+        # exact scores from the raw (tf, dl) either way -- bounds merely get
+        # (1 + avgdl-drift) looser per tiered compaction; a periodic full
+        # ``compact`` re-tightens them.  Zero posting-grain work for the base
+        # tier: the A/B that motivated this (scripts/compaction_bench.py,
+        # 120k pages) measured a decode-and-retile kernel at 2.2x the cost of
+        # the from-scratch mapside encode, i.e. physical re-blocking pays
+        # MORE than it saves; segment-consolidation semantics (Lucene tiered
+        # merge policy) are the scalable shape.
+        if not out.stage_done("postings"):
+            out.begin_stage("postings")
+            t = time.time()
+            old_avg = {f: a for f, (_n, a) in base.corpus_stats().items()}
+            new_avg = {f: a for f, (_n, a) in out.corpus_stats().items()}
+            inflate = F.coalesce(
+                *[
+                    F.when(
+                        F.col("field") == f,
+                        F.lit(max(1.0, new_avg.get(f, 1.0)
+                                  / old_avg.get(f, 1.0))),
+                    )
+                    for f in cfg.fields
+                ],
+                F.lit(1.0),
             )
-        old_idf = base.read(spark, "term_dict").select(
-            "field", "term", F.col("idf").alias("idf_old")
-        )
-        reb = (
-            post.join(old_idf, ["field", "term"])
-            .join(td.select("field", "term", "idf"), ["field", "term"])
-            .withColumn(
-                "max_score",
-                F.col("max_score") / F.col("idf_old") * F.col("idf")
-                * inflate * F.lit(1.0 + 1e-12),
+            base_parts = [
+                p for p in base.committed_parts("postings")
+                if not p.startswith("delta=")
+            ]
+            post = spark.read.parquet(base.path("postings", base_parts[0]))
+            for p in base_parts[1:]:
+                post = post.unionByName(
+                    spark.read.parquet(base.path("postings", p))
+                )
+            old_idf = base.read(spark, "term_dict").select(
+                "field", "term", F.col("idf").alias("idf_old")
             )
-            .drop("idf_old", "idf")
-        )
-        out.write(reb.repartition("tbucket"),
-                  "postings", part="grp=0", partition_by=["tbucket"])
-        _commit_postings_part(out, "grp=0", time.time() - t)
-        # delta postings REGENERATE from the delta re-tokenize (the stored
-        # delta parts dropped base-dictionary-unknown terms at stream time
-        # and carry stale-stats bounds): superseded, not merged
-        if base.has_parts("unified_delta"):
-            t2 = time.time()
-            delta_tf = tokenize_tf(
-                base.read_parts(spark, "unified_delta"), cfg
+            reb = (
+                post.join(old_idf, ["field", "term"])
+                .join(td.select("field", "term", "idf"), ["field", "term"])
+                .withColumn(
+                    "max_score",
+                    F.col("max_score") / F.col("idf_old") * F.col("idf")
+                    * inflate * F.lit(1.0 + 1e-12),
+                )
+                .drop("idf_old", "idf")
             )
-            fresh = build_postings_for(delta_tf, td, new_avg, cfg)
-            out.write(fresh, "postings", part="grp=1",
-                      partition_by=["tbucket"])
-            _commit_postings_part(out, "grp=1", time.time() - t2)
-        out.finish_stage("postings", {"wall_sec": time.time() - t})
+            out.write(reb.repartition("tbucket"),
+                      "postings", part="grp=0", partition_by=["tbucket"])
+            _commit_postings_part(out, "grp=0", time.time() - t)
+            # delta postings REGENERATE from the delta re-tokenize (the stored
+            # delta parts dropped base-dictionary-unknown terms at stream time
+            # and carry stale-stats bounds): superseded, not merged
+            if delta_tf is not None:
+                t2 = time.time()
+                fresh = build_postings_for(delta_tf, td, new_avg, cfg)
+                out.write(fresh, "postings", part="grp=1",
+                          partition_by=["tbucket"])
+                _commit_postings_part(out, "grp=1", time.time() - t2)
+            out.finish_stage("postings", {"wall_sec": time.time() - t})
+    finally:
+        if delta_tf is not None:
+            delta_tf.unpersist()
 
     # graph (optional): per-shard HNSW over the merged attributes
     if cfg.graph_ann and not out.stage_done("graph"):

@@ -622,19 +622,10 @@ class SearchEngine:
         self.store = store
         self.cfg = cfg or store.saved_config()
         self.stats = store.corpus_stats()
+        # base + streamed segments (IndexStore.segment_dirs)
         self._postings = store.read_parts(spark, "postings")
-        self._attrs = store.read(spark, "attributes")
-        self._unified = store.read(spark, "unified")
-        # streamed delta segments (streaming/incremental.py) merge into the
-        # serve view Lucene-segment style
-        if store.has_parts("attributes_delta"):
-            self._attrs = self._attrs.unionByName(
-                store.read_parts(spark, "attributes_delta").drop("delta")
-            )
-        if store.has_parts("unified_delta"):
-            self._unified = self._unified.unionByName(
-                store.read_parts(spark, "unified_delta").drop("delta")
-            )
+        self._attrs = store.read_parts(spark, "attributes")
+        self._unified = store.read_parts(spark, "unified")
         self._term_dict = store.read(spark, "term_dict")
         if cache:
             # serve-path residency: the Vespa-content-node analog of

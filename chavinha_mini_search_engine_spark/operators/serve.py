@@ -58,32 +58,14 @@ POST_COLS = [
 
 
 def _read_parts_arrow(
-    root: str, columns: List[str], part_names: Optional[List[str]] = None,
-    filter=None,
+    dirs: List[str], columns: List[str], filter=None,
 ) -> pd.DataFrame:
-    """Union a store table as pandas -- pure pyarrow, no Spark.
-
-    ``part_names`` (from ``IndexStore.committed_parts``) restricts a
-    per-part-committed table (postings, *_delta) to manifest-committed
-    segments, each read as its own dataset -- an orphan part left by a
-    crashed writer must never reach the positional serve accumulator.
-    Without it (whole-table-committed tables), a table whose top-level
-    dirs share one hive key (shard=, tbucket=) is one dataset (keeping
-    the key as a column)."""
-    if part_names is not None:
-        parts = [os.path.join(root, d) for d in part_names]
-    else:
-        entries = [
-            d for d in os.listdir(root)
-            if not d.startswith(("_", ".")) and "__tmp" not in d
-        ]
-        keys = {d.split("=", 1)[0] for d in entries if "=" in d}
-        parts = (
-            [os.path.join(root, d) for d in sorted(entries)]
-            if len(keys) > 1 else [root]
-        )
+    """Union dataset dirs (``IndexStore.segment_dirs``) as pandas -- pure
+    pyarrow, no Spark.  Each dir is its own hive dataset, so a shard=
+    partitioned base dir keeps its key as a column next to un-partitioned
+    delta parts."""
     frames = []
-    for p in parts:
+    for p in dirs:
         ds = pads.dataset(p, format="parquet", partitioning="hive")
         if not ds.files:  # an empty part (e.g. a shard-group with no shard)
             continue
@@ -117,7 +99,7 @@ class _DocFetcher:
     # size, so the default caps resident cache memory at ~64 MB.
     CACHE_ROW_GROUPS = 64
 
-    def __init__(self, root: Optional[str] = None):
+    def __init__(self, roots: List[str]):
         from collections import OrderedDict
 
         self._by_shard: Dict[Optional[int], List[str]] = {}
@@ -125,7 +107,7 @@ class _DocFetcher:
         self._pool = None  # decode pool for LARGE fetches, created on use
         self._rg_cache: "OrderedDict[tuple, object]" = OrderedDict()
         self._cache_lock = threading.Lock()
-        if root:
+        for root in roots:
             self.add_root(root)
 
     def add_root(self, root: str) -> None:
@@ -266,7 +248,8 @@ class ResidentSearcher:
 
         # corpus stats + term dictionary -> plain dicts
         self.stats = store.corpus_stats()
-        td = _read_parts_arrow(store.path("term_dict"), ["field", "term", "df", "idf"])
+        td = _read_parts_arrow(store.segment_dirs("term_dict"),
+                               ["field", "term", "df", "idf"])
         self.term_dict: Dict[Tuple[str, str], Tuple[float, int]] = dict(zip(
             zip(td["field"].tolist(), td["term"].tolist()),
             zip(td["idf"].astype(np.float64).tolist(),
@@ -297,16 +280,8 @@ class ResidentSearcher:
             "shard", "local_id", "id", "doc_type", "parent_id",
             "parent_doc_type",
         ] + [f"len_{f}" for f in self.cfg.fields] + ["embedding", "sem_bucket"]
-        attrs = _read_parts_arrow(store.path("attributes"), attr_cols,
+        attrs = _read_parts_arrow(store.segment_dirs("attributes"), attr_cols,
                                   filter=shard_filter)
-        if store.has_parts("attributes_delta"):
-            attrs = pd.concat(
-                [attrs, _read_parts_arrow(
-                    store.path("attributes_delta"), attr_cols,
-                    part_names=store.committed_parts("attributes_delta"),
-                    filter=shard_filter)],
-                ignore_index=True,
-            )
         if len(attrs):
             self.fused, self.shard_offsets = fused_state(attrs)
             off_items = sorted(self.shard_offsets.items())
@@ -321,11 +296,8 @@ class ResidentSearcher:
 
         # postings -> one (field, term, first)-sorted columnar layout over
         # every local shard; each entry is slice views (see post_groups)
-        post = _read_parts_arrow(
-            store.path("postings"), POST_COLS,
-            part_names=store.committed_parts("postings"),
-            filter=shard_filter,
-        )
+        post = _read_parts_arrow(store.segment_dirs("postings"), POST_COLS,
+                                 filter=shard_filter)
         self.post_fused: Dict[Tuple[str, str], tuple] = {
             (g[0], g[1]): g for g in post_groups(post, self.shard_offsets)
         }
@@ -348,11 +320,7 @@ class ResidentSearcher:
         from .search import PostingsCache
 
         self._postings_cache = PostingsCache()
-        self._doc_fetcher = _DocFetcher(store.path("unified"))
-        if store.has_parts("unified_delta"):
-            for part in store.committed_parts("unified_delta"):
-                self._doc_fetcher.add_root(
-                    os.path.join(store.path("unified_delta"), part))
+        self._doc_fetcher = _DocFetcher(store.segment_dirs("unified"))
 
         # graph-ANN (HNSW) serve structures: persisted per-shard rows if
         # the build ran with cfg.graph_ann (the Vespa hnsw-attribute
@@ -361,7 +329,8 @@ class ResidentSearcher:
         self._graph_rows_by_shard: Dict[int, pd.DataFrame] = {}
         if store.exists("graph"):
             grows = _read_parts_arrow(
-                store.path("graph"), ["shard", "local_id", "level", "nbrs"],
+                store.segment_dirs("graph"),
+                ["shard", "local_id", "level", "nbrs"],
                 filter=shard_filter,
             )
             self._graph_rows_by_shard = {

@@ -28,6 +28,12 @@ A streamed segment's three ``delta=`` parts commit together as one
 ``stream_deltas`` manifest part, which records the segment's per-shard
 max ``local_id``.  ``segment_offsets`` reads the next segment's id
 offsets from those records and the ``unified`` footers.
+
+``segment_dirs`` composes a served table: ``unified`` and ``attributes``
+are the base dir plus the committed parts of their ``_delta`` tier,
+``postings`` is its committed ``grp=``/``delta=`` parts.  ``read_parts``
+(Spark) and every pyarrow reader of the serve path read exactly those
+dirs, so no reader outside this module names a ``_delta`` table.
 """
 
 from __future__ import annotations
@@ -324,24 +330,38 @@ class IndexStore:
     def read(self, spark: SparkSession, table: str, part: Optional[str] = None) -> DataFrame:
         return spark.read.parquet(self.path(table, part))
 
+    def segment_dirs(self, table: str) -> list:
+        """The dataset dirs that make up a served table -- the one place
+        that decides which segments a reader sees.
+
+        A per-part-committed table (``postings``, ``*_delta``) is its
+        manifest-committed parts; any other table is its base dir plus
+        the committed parts of its ``<table>_delta`` tier, if it has one
+        (``unified`` and ``attributes``: the Lucene-segment view of base
+        + streamed segments).  Orphan parts of a crashed writer are never
+        listed (see ``committed_parts``)."""
+        if table in self._PART_STAGES:
+            return [self.path(table, d) for d in self.committed_parts(table)]
+        dirs = [self.path(table)]
+        delta = table + "_delta"
+        if delta in self._PART_STAGES:
+            dirs += [self.path(delta, d) for d in self.committed_parts(delta)]
+        return dirs
+
     def read_parts(self, spark: SparkSession, table: str) -> DataFrame:
-        base = self.path(table)
-        # manifest-committed parts only (never serve a crashed writer's
-        # orphan segment -- see committed_parts)
-        parts = [os.path.join(base, d) for d in self.committed_parts(table)]
-        if not parts:
-            raise FileNotFoundError(
-                f"no committed parts for table {table!r} (gate callers on "
-                f"has_parts); on disk: {self.list_parts(table)}"
-            )
-        # parts may use different key names (grp=, delta=), so read each
-        # separately (inner partition dirs like tbucket= stay consistent)
-        # and union -- the Lucene-segment view of base + delta segments.
-        # A part with no file (a shard-group that holds no shard) has no
-        # schema to infer and no rows: skip it
-        dfs = [spark.read.parquet(p) for p in parts if _has_parquet(p)]
+        """Union of ``segment_dirs(table)``.  Segments may use different
+        partition keys (grp=, delta=, or shard= dirs against an
+        un-partitioned part), so each is read separately (inner partition
+        dirs like tbucket= stay consistent) and unioned by name.  A dir
+        with no file (a shard-group that holds no shard) has no schema to
+        infer and no rows: skipped."""
+        dirs = self.segment_dirs(table)
+        dfs = [spark.read.parquet(d) for d in dirs if _has_parquet(d)]
         if not dfs:
-            raise FileNotFoundError(f"table {table!r} has no rows: {parts}")
+            raise FileNotFoundError(
+                f"table {table!r} has no rows: {dirs}; on disk: "
+                f"{self.list_parts(table)}"
+            )
         out = dfs[0]
         for d in dfs[1:]:
             out = out.unionByName(d)

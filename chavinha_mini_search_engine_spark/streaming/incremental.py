@@ -11,9 +11,8 @@ expresses the same capabilities Spark-first:
   streaming twin of the crawler's state file (doc_scraper.py:237-291).
 - ``stream_index_deltas``: foreachBatch turns each micro-batch of new pages
   into a posting-list DELTA segment (same block format, written under
-  postings/delta=<epoch>_<batch_id>/).  The serve path (IndexStore.
-  read_parts) unions base + deltas automatically -- the Lucene-segment
-  pattern.  Deltas inherit the BASE build's corpus stats (idf/avgdl), so
+  postings/delta=<epoch>_<batch_id>/).  Every reader takes base + deltas
+  from ``IndexStore.segment_dirs`` -- the Lucene-segment pattern.  Deltas inherit the BASE build's corpus stats (idf/avgdl), so
   scores drift as the corpus grows; compaction refreshes them -- the
   documented Lucene/Vespa tradeoff.  ``compact`` re-runs tokenize, stats
   and postings over the stored ``unified`` rows plus the deltas;

@@ -56,12 +56,17 @@ def test_resume_identical(spark, tiny_pages, tmp_path_factory):
             raise _Boom()
         orig(self, stage, part, metrics)
 
+    # the postings stage scopes its Arrow batch size to itself, also when
+    # a shard-group raises
+    batch_key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    batch_before = spark.conf.get(batch_key)
     IndexStore.finish_part = bomb
     try:
         with pytest.raises(_Boom):
             build_index(spark, pages, b, CFG, with_embeddings=False)
     finally:
         IndexStore.finish_part = orig
+    assert spark.conf.get(batch_key) == batch_before
 
     # record what finished before the crash
     b2 = IndexStore(b_root, build_id="bb")  # reload manifest from disk

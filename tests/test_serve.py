@@ -244,8 +244,7 @@ def _reference_post_fused(store, rs, shards=None):
     )
 
     post = _read_parts_arrow(
-        store.path("postings"), POST_COLS,
-        part_names=store.committed_parts("postings"),
+        store.segment_dirs("postings"), POST_COLS,
         filter=None if shards is None else pc.field("shard").isin(shards),
     )
     by_ft = {}
