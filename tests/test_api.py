@@ -1,70 +1,63 @@
-"""API facade parity (api.py vs /root/reference/api/main.py semantics)."""
+"""The request contract in-process (http_api.py vs /root/reference/api/main.py
+semantics): the endpoint methods of ``ResidentHTTPServer`` called directly,
+without a socket round trip.  ``test_http_api.py`` checks the same surface
+over real HTTP."""
 
 import pytest
 
-from chavinha_mini_search_engine_spark.api import SearchAPI
+from chavinha_mini_search_engine_spark.http_api import ResidentHTTPServer
 
 
 @pytest.fixture(scope="module")
-def api(spark, built):
-    return SearchAPI(spark, built)
+def api(built):
+    s = ResidentHTTPServer(built).start()
+    yield s
+    s.stop()
+
+
+def _qs(q, search_type="bm25", limit=5, **extra):
+    return {k: [str(v)] for k, v in
+            {"q": q, "search_type": search_type, "limit": limit,
+             **extra}.items()}
 
 
 def test_search_response_shape(api):
-    r = api.search("python async programming", "bm25", 5)
-    assert r.search_type == "bm25"
-    assert r.total_hits == len(r.results) <= 5
-    assert r.results, "expected hits on the fixture corpus"
-    first = r.results[0]
-    assert first.url.startswith("https://")
-    assert first.relevance > 0
-    assert first.doc_type == "full_doc"
-    assert r.results == sorted(r.results, key=lambda x: -x.relevance)
+    code, r = api._search(_qs("python async programming", "bm25", 5))
+    assert code == 200
+    assert r["search_type"] == "bm25"
+    assert r["total_hits"] == len(r["results"]) <= 5
+    assert r["results"], "expected hits on the fixture corpus"
+    first = r["results"][0]
+    assert first["url"].startswith("https://")
+    assert first["relevance"] > 0
+    assert first["doc_type"] == "full_doc"
+    assert r["results"] == sorted(r["results"], key=lambda x: -x["relevance"])
 
 
 def test_search_validation(api):
-    with pytest.raises(ValueError):
-        api.search("", "bm25", 5)          # api/main.py:556 empty q
-    with pytest.raises(ValueError):
-        api.search("x", "fuzzy", 5)        # :558 bad search_type
-    with pytest.raises(ValueError):
-        api.search("x", "bm25", 0)         # :562 limit bounds
-    with pytest.raises(ValueError):
-        api.search("x", "bm25", 51)
-    with pytest.raises(ValueError):
-        api.search("x", "bm25", 5, performance_mode="turbo")
-
-
-def test_performance_mode_accepted_and_ranking_invariant(api):
-    """api/main.py:352-353,552: the mode switches Vespa's *_ultra profiles,
-    whose first-phase expressions are identical (doc.sd:214-256) -- so it
-    must be accepted, echoed, and leave ranking unchanged."""
-    q = "python async programming"
-    ultra = api.search(q, "bm25", 5, performance_mode="ultra")
-    normal = api.search(q, "bm25", 5, performance_mode="normal")
-    assert ultra.performance_mode == "ultra"
-    assert normal.performance_mode == "normal"
-    assert [(r.id, r.relevance) for r in ultra.results] == [
-        (r.id, r.relevance) for r in normal.results
-    ]
-
-
-def test_hybrid_dedups_parents(api):
-    r = api.search("python function code", "hybrid", 10)
-    ids = [x.id for x in r.results]
-    assert len(ids) == len(set(ids)), "parent dedup must hold (D1)"
+    for qs in [
+        _qs(""),                                  # api/main.py:556 empty q
+        _qs("x", "fuzzy"),                        # :558 bad search_type
+        _qs("x", "bm25", 0),                      # :562 limit bounds
+        _qs("x", "bm25", 51),
+        _qs("x", "bm25", 5, performance_mode="turbo"),
+    ]:
+        code, body = api._search(qs)
+        assert code == 400, qs
+        assert body["detail"], qs
 
 
 def test_stats(api):
-    s = api.stats()
-    assert s.total_documents > 0
-    assert s.domains
-    assert s.total_documents == sum(d.document_count for d in s.domains)
-    counts = [d.document_count for d in s.domains]
+    s = api._stats()
+    assert s["total_documents"] > 0
+    assert s["domains"]
+    assert s["total_documents"] == sum(
+        d["document_count"] for d in s["domains"])
+    counts = [d["document_count"] for d in s["domains"]]
     assert counts == sorted(counts, reverse=True)
 
 
 def test_health(api):
-    h = api.health()
+    h = api._health()
     assert h["status"] == "healthy"
-    assert "postings" in h["stages_done"]
+    assert h["shards_resident"] > 0
