@@ -68,7 +68,7 @@ class IndexConfig:
     The build records it in the store's manifest
     (``IndexStore.save_config``), and every later reader takes it from
     there (``IndexStore.saved_config``): ``SearchEngine``,
-    ``ResidentSearcher`` and the compactions when no ``cfg`` is passed,
+    ``ResidentSearcher`` and ``compact_tiered`` when no ``cfg`` is passed,
     and ``stream_index_deltas`` always -- a delta stream raises on a
     ``cfg`` that differs from the saved one, since its segments must
     share the base's shard/bucket geometry and block bounds.
@@ -83,8 +83,8 @@ class IndexConfig:
     num_doc_shards: int = 32          # doc-partitioned serve shards
     block_size: int = 128             # postings per compressed block
     # ignored (the build salts nothing); kept so existing callers
-    # (bench.py) and saved manifests, which compact() reads back into an
-    # IndexConfig, still construct
+    # (bench.py) and saved manifests, which IndexStore.saved_config()
+    # reads back into an IndexConfig, still construct
     heavy_term_df: int = 100_000
     num_salts: int = 8
     term_buckets: int = 64            # parquet partition dirs for pruning

@@ -23,7 +23,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, FloatType
 
-from ..config import EMBEDDING_DIM
 from ..oracle.embedder import EMBED_TRUNCATE, embed_text
 
 
@@ -73,5 +72,3 @@ def query_embedding(query: str) -> np.ndarray:
     same encoder, mean-pool + L2-normalize -- the pseudo-embedder does both)."""
     return embed_text(query)
 
-
-EMBEDDING_DIM_ = EMBEDDING_DIM

@@ -452,8 +452,8 @@ def _make_merge_runs_tfnorm(block_size: int, k1: float, b: float,
 
 def assign_layout(u: DataFrame, cfg: IndexConfig) -> DataFrame:
     """Assign (shard, local_id): shard = hash(id), local_id dense per shard
-    ordered by id -- deterministic, so rebuilds, resumed builds and
-    compactions produce identical layouts.
+    ordered by id -- deterministic, so rebuilds and resumed builds
+    produce identical layouts.
 
     Shuffle discipline: the wide corpus rows (content, chunk_content,
     embedding) cross exactly ONE exchange.  The explicit
@@ -752,9 +752,10 @@ def attributes(unified: DataFrame, cfg: IndexConfig, tf: DataFrame,
     ``sem_bucket`` (sign bits of the embedding against deterministic
     hyperplanes) is the HNSW-analog access path: semantic_mode="lsh"
     prunes candidates to the query's probed buckets.  Null embedding
-    (with_embeddings=False builds, streamed deltas) -> null bucket, i.e.
-    such docs are only reachable via exact semantic mode or after
-    compaction re-embeds them.
+    (with_embeddings=False builds, streamed deltas) -> null bucket, and
+    compaction keeps them null, so semantic search never reaches such
+    docs (their semantic arm scores 0.0; hybrid reaches them through
+    BM25).
 
     len_* come from ``lens`` (the materialized pivoted doclens table, one
     row per doc) or, when it is absent, from ``tf`` (the tokenize_tf
@@ -965,30 +966,12 @@ def build_index_from_docs(
 
     chunks = store.read(spark, "chunks")
 
-    _index_stages_from_unified(
-        spark, store, cfg,
-        make_unified=lambda: unified_corpus(docs, chunks, cfg),
-    )
-
-    store.manifest["total_wall_sec"] = time.time() - t_all
-    store._write_manifest()
-    return store
-
-
-def _index_stages_from_unified(
-    spark: SparkSession,
-    store: IndexStore,
-    cfg: IndexConfig,
-    make_unified,
-) -> None:
-    """unified -> stats -> postings -> attributes (shared by the full build
-    and by delta compaction)."""
     # stage: unified corpus with (shard, local_id)
     if not store.stage_done("unified"):
         store.begin_stage("unified")
         _tag_jobs(spark, "unified")
         t = time.time()
-        u = make_unified()
+        u = unified_corpus(docs, chunks, cfg)
         # assign_layout already hash-partitioned by shard at write geometry
         # (1 task -> 1 partition dir: small-file + fork control); a second
         # repartition here would shuffle the wide rows again
@@ -1209,34 +1192,9 @@ def _index_stages_from_unified(
         )
         store.finish_stage("graph", {"wall_sec": time.time() - t})
 
-
-def compact(
-    spark: SparkSession,
-    base: IndexStore,
-    out: IndexStore,
-    cfg: Optional[IndexConfig] = None,
-) -> IndexStore:
-    """Merge the base segment with all streamed delta segments into a fresh
-    consolidated index (the Lucene force-merge analog).
-
-    Corpus statistics, the term dictionary (including terms that only exist
-    in deltas) and all posting lists are recomputed from the union, so the
-    compacted index scores exactly like a from-scratch build over the same
-    corpus (tested in tests/test_streaming.py).  ``out`` is stage-
-    checkpointed like a normal build.  The document store tables
-    (docs/chunks) stay in the base store.  ``cfg`` defaults to the base's
-    saved config.
-    """
-    cfg = cfg or base.saved_config()
-    out.manifest["compacted_from"] = base.build_id
-    out.save_config(cfg)
-
-    def make_unified():
-        u = base.read_parts(spark, "unified")
-        return assign_layout(u.drop("shard", "local_id"), cfg)
-
-    _index_stages_from_unified(spark, out, cfg, make_unified)
-    return out
+    store.manifest["total_wall_sec"] = time.time() - t_all
+    store._write_manifest()
+    return store
 
 
 def compact_tiered(
@@ -1246,10 +1204,11 @@ def compact_tiered(
     cfg: Optional[IndexConfig] = None,
 ) -> IndexStore:
     """Tiered delta compaction: merge base + streamed delta segments into a
-    consolidated index re-tokenizing ONLY the delta documents (verdict-r4
-    task 4 -- ``compact`` re-runs the full pipeline from text, which at
-    100 TB with continuous ingest is a full rebuild per compaction; here
-    the base tier's text is never touched).
+    consolidated index re-tokenizing ONLY the delta documents (a full
+    re-pipeline from text would, at 100 TB with continuous ingest, be a
+    full rebuild per compaction; here the base tier's text is never
+    touched).  It keeps every (shard, local_id), so it is the one merge
+    whose ids stay valid for segments a live stream commits.
 
     Everything base-sized re-derives from already-materialized artifacts:
 
@@ -1273,10 +1232,10 @@ def compact_tiered(
     The result scores EXACTLY like a full rebuild over the same corpus
     (same raw tf, dl, df, n_docs, avgdl, and the same fl op order in the
     kernels); only the internal (shard, local_id) layout differs (a full
-    rebuild re-interleaves ids).  Rank/score parity vs ``compact`` is
-    asserted in tests/test_streaming.py.  Document-store tables
-    (docs/chunks) stay in ``base``, as with ``compact``.  ``cfg`` defaults
-    to the base's saved config.
+    rebuild re-interleaves ids).  Rank/score parity with a from-scratch
+    ``build_index`` over the same pages is asserted in
+    tests/test_streaming.py.  Document-store tables (docs/chunks) stay in
+    ``base``.  ``cfg`` defaults to the base's saved config.
     """
     cfg = cfg or base.saved_config()
     out.manifest["compacted_from"] = base.build_id
@@ -1358,12 +1317,12 @@ def compact_tiered(
         # old/idf_old * idf_new * inflation * (1+1e-12) (the extra eps covers
         # the division's rounding).  Pruning stays lossless -- serve recomputes
         # exact scores from the raw (tf, dl) either way -- bounds merely get
-        # (1 + avgdl-drift) looser per tiered compaction; a periodic full
-        # ``compact`` re-tightens them.  Zero posting-grain work for the base
-        # tier: the A/B that motivated this (scripts/compaction_bench.py,
-        # 120k pages) measured a decode-and-retile kernel at 2.2x the cost of
-        # the from-scratch mapside encode, i.e. physical re-blocking pays
-        # MORE than it saves; segment-consolidation semantics (Lucene tiered
+        # (1 + avgdl-drift) looser per tiered compaction; a from-scratch
+        # ``build_index`` over the pages re-tightens them.  Zero
+        # posting-grain work for the base tier: at 120k pages a
+        # decode-and-retile kernel cost 2.2x the from-scratch mapside encode
+        # (BENCH_SCALING.md round 5), i.e. physical re-blocking pays MORE
+        # than it saves; segment-consolidation semantics (Lucene tiered
         # merge policy) are the scalable shape.
         if not out.stage_done("postings"):
             out.begin_stage("postings")

@@ -466,32 +466,6 @@ class ResidentSearcher:
             for i in keep
         ]
 
-    def search_candidates_filled(
-        self, query: str, search_type: str = "bm25",
-        k: int = DEFAULT_LIMIT, semantic_mode: str = "exact",
-    ) -> Tuple[Optional[Tuple[np.ndarray, ...]], Dict[str, tuple]]:
-        """Scatter half + SPECULATIVE summary fill in one round trip: the
-        candidate pool plus doc rows for this node's local top-k.
-
-        Eliminates the gateway's second fill round trip (measured as the
-        dominant scatter fixed cost, ~6.5-10.6 ms/query at P=4 --
-        scripts/scatter_probe.py): every node fills its own likely
-        winners concurrently while the gateway is still collecting pools.
-        Sound because a global winner is always inside its node's local
-        top-k-by-dedup-key: if >= k dedup keys beat a doc on its own node,
-        those same keys' global best scores are >= their local ones, so
-        they beat it globally too and the doc cannot enter the merged
-        top-k.  (Keys CAN span nodes -- chunks shard by chunk id -- but
-        cross-node collapse only raises a key's best score, never lowers
-        it.)  The gateway still backstops any miss with its own fetch
-        (run_scatter in scripts/query_scaling_bench.py)."""
-        pool = self.search_candidates(query, search_type, k, semantic_mode)
-        if pool is None:
-            return None, {}
-        hits = ResidentSearcher.merge_candidates([pool], k)
-        rows = self.fill_docrows([str(h[0]) for h in hits])
-        return pool, rows
-
     def search(self, query: str, search_type: str = "bm25",
                k: int = DEFAULT_LIMIT, semantic_mode: str = "exact") -> List[dict]:
         pool = self.search_candidates(query, search_type, k, semantic_mode)
@@ -506,10 +480,10 @@ class ResidentSearcher:
         build over the shard's embedded chunk docs (same deterministic
         construction, so both paths answer identically).
 
-        Streamed delta docs are not in the persisted base graph, so graph
-        mode reaches them only after compaction — the same reachability
-        caveat as lsh mode's null sem_bucket (index_build.attributes
-        docstring); exact mode always sees them."""
+        Graph mode never reaches streamed delta docs: they carry null
+        embeddings, which compaction keeps null, so neither the persisted
+        graph nor the lazy build holds them (index_build.attributes
+        docstring)."""
         hit = self._graphs.get(shard)
         if hit is not None:
             return hit
@@ -567,23 +541,11 @@ class ResidentSearcher:
         return self._doc_fetcher.fetch(
             ids, DOC_COLS, spark_pmod_bucket, self.cfg.num_doc_shards)
 
-    def fill_docrows(self, ids: List[str]) -> Dict[str, tuple]:
-        """Two-phase summary fill (the Vespa match-then-fill analog,
-        reference config/vespa/services.xml content cluster): a gateway
-        that merged candidate ids across content nodes asks each OWNING
-        node for just its hits' doc rows, so the ≤k-row doc-store fetch
-        is parallel across nodes and hits each node's warm footer cache.
-        Pass the result to ``_enrich(..., docrows=...)``."""
-        return self._fetch_docrows(ids)
-
-    def _enrich(self, hits: List[tuple], terms: List[str],
-                docrows: Optional[Dict[str, tuple]] = None) -> List[dict]:
+    def _enrich(self, hits: List[tuple], terms: List[str]) -> List[dict]:
         """hits: [(id, parent_id, doc_type, parent_doc_type, score)] in
-        final rank order.  ``docrows`` (optional) is a prefetched
-        fill_docrows result; when absent the gateway fetches itself."""
+        final rank order."""
         if not hits:
             return []
-        if docrows is None:
-            docrows = self._fetch_docrows([str(h[0]) for h in hits])
+        docrows = self._fetch_docrows([str(h[0]) for h in hits])
         return [result_row(rank, h, docrows.get(h[0]), terms)
                 for rank, h in enumerate(hits, 1)]

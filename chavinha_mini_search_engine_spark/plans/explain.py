@@ -1,6 +1,7 @@
 """Plan-inspection helpers: capture .explain("formatted") output and assert
-the physical properties the 100 TB design depends on (pushed filters,
-pruned schemas, broadcast joins, whole-stage codegen spans).
+the physical properties the 100 TB design depends on (pruned schemas,
+broadcast joins, whole-stage codegen spans; pushed filters are read from
+``formatted_plan``).
 
 Used by tests/test_plans.py and scripts/dump_plans.py (PLANS.md).
 """
@@ -19,16 +20,6 @@ def formatted_plan(df: DataFrame) -> str:
         df.explain("formatted")
     return buf.getvalue()
 
-
-def assert_pushed_filter(df: DataFrame, fragment: str) -> str:
-    """Assert a predicate reached the scan (PushedFilters: [...])."""
-    plan = formatted_plan(df)
-    assert "PushedFilters" in plan, plan
-    pushed = [ln for ln in plan.splitlines() if "PushedFilters" in ln]
-    assert any(fragment in ln for ln in pushed), (
-        f"filter {fragment!r} not pushed; pushed lines: {pushed}"
-    )
-    return plan
 
 def read_schemas(df: DataFrame) -> list:
     """Top-level column sets of every ReadSchema line in the plan."""

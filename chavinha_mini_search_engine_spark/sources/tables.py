@@ -186,7 +186,8 @@ class IndexStore:
             if info.get("status") == "done":
                 if "max_local" not in info["metrics"]:
                     raise ValueError(f"stream segment {part} records no "
-                                     "max_local; compact the store first")
+                                     "max_local; merge the store with "
+                                     "compact_tiered first")
                 for s, mx in info["metrics"]["max_local"].items():
                     fold(s, mx)
         return offs

@@ -1,29 +1,25 @@
-"""Structured Streaming: incremental ingest + index deltas + windowed aggs.
+"""Structured Streaming: incremental ingest into index delta segments.
 
 The reference has no stream processor -- its incremental semantics are a
 resumable crawl loop and a full re-index (SURVEY.md §2.11).  The rebuild
-expresses the same capabilities Spark-first:
+expresses the same capability Spark-first:
 
-- ``stream_pages_to_docs``: continuous ingest of new pages (file source) ->
-  the SAME Arrow extraction kernel as batch (mapInPandas works unchanged in
-  Structured Streaming) -> append sink.  Exactly-once via the stream
-  checkpoint; restart resumes from the last committed micro-batch -- the
+- ``stream_index_deltas``: a file-source stream whose foreachBatch turns
+  each micro-batch of new pages into a posting-list DELTA segment (same
+  block format, written under postings/delta=<epoch>_<batch_id>/).  Every
+  reader takes base + deltas from ``IndexStore.segment_dirs`` -- the
+  Lucene-segment pattern.  Deltas inherit the BASE build's corpus stats
+  (idf/avgdl), so scores drift as the corpus grows; compaction refreshes
+  them -- the documented Lucene/Vespa tradeoff.  ``compact_tiered``
+  re-tokenizes only the deltas and keeps the base posting blocks.
+  Exactly-once via the stream checkpoint plus the per-batch manifest
+  commit; restart resumes from the last committed micro-batch -- the
   streaming twin of the crawler's state file (doc_scraper.py:237-291).
-- ``stream_index_deltas``: foreachBatch turns each micro-batch of new pages
-  into a posting-list DELTA segment (same block format, written under
-  postings/delta=<epoch>_<batch_id>/).  Every reader takes base + deltas
-  from ``IndexStore.segment_dirs`` -- the Lucene-segment pattern.  Deltas inherit the BASE build's corpus stats (idf/avgdl), so
-  scores drift as the corpus grows; compaction refreshes them -- the
-  documented Lucene/Vespa tradeoff.  ``compact`` re-runs tokenize, stats
-  and postings over the stored ``unified`` rows plus the deltas;
-  ``compact_tiered`` re-tokenizes only the deltas and keeps the base
-  posting blocks.  Each micro-batch is scanned, extracted and tokenized
-  once for its three concurrent table writes; a batch with no ``en`` page
-  commits nothing.  Segment id offsets are read once per stream
+  Each micro-batch is scanned, extracted and tokenized once for its
+  three concurrent table writes; a batch with no ``en`` page commits
+  nothing.  Streamed docs carry null embeddings, which compaction keeps
+  null.  Segment id offsets are read once per stream
   (``IndexStore.segment_offsets``) and advanced by each batch.
-- ``stream_events_hourly``: event-time tumbling window + watermark -- the
-  streaming twin of the batch ``events_hourly`` query the DuckDB oracle
-  gates.
 """
 
 from __future__ import annotations
@@ -38,37 +34,7 @@ from pyspark.sql import functions as F
 
 from ..config import IndexConfig
 from ..fixtures.pages import PAGES_DDL_COLUMNS
-from ..operators.extract import DOCS_SCHEMA, _extract_batches
 from ..sources.tables import DOC_STORE_WRITE_OPTS, IndexStore
-
-
-def stream_pages_to_docs(
-    spark: SparkSession,
-    pages_dir: str,
-    out_dir: str,
-    checkpoint_dir: str,
-    available_now: bool = True,
-):
-    """File-source stream of pages -> extracted docs (append parquet sink)."""
-    src = (
-        spark.readStream.schema(PAGES_DDL_COLUMNS)
-        .option("maxFilesPerTrigger", 4)
-        .parquet(pages_dir)
-    )
-    docs = (
-        src.filter(F.col("lang") == "en")
-        .select("url", "warc_ts", "html")
-        .mapInPandas(_extract_batches, schema=DOCS_SCHEMA)
-    )
-    writer = (
-        docs.writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def stream_index_deltas(
@@ -251,39 +217,3 @@ def stream_index_deltas(
         writer = writer.trigger(availableNow=True)
     return writer.start()
 
-
-def stream_events_hourly(
-    spark: SparkSession,
-    events_dir: str,
-    out_dir: str,
-    checkpoint_dir: str,
-    watermark: str = "2 hours",
-    available_now: bool = True,
-):
-    """Event-time tumbling 1h window with late-data watermark -- streaming
-    twin of the gated batch query (__spark_entry__._q_events_hourly)."""
-    ev = (
-        spark.readStream.schema(
-            "event_id long, ts timestamp, user_id long, event_type string, "
-            "value double, props string"
-        )
-        # small triggers so the watermark advances across micro-batches
-        # (append mode emits a window only once the watermark passes it)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(events_dir)
-    )
-    agg = (
-        ev.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-        .agg(F.count(F.lit(1)).alias("n"), F.round(F.sum("value"), 6).alias("sum_value"))
-        .select(F.col("w.start").alias("hour"), "event_type", "n", "sum_value")
-    )
-    writer = (
-        agg.writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

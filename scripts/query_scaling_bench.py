@@ -101,11 +101,6 @@ def _worker(idx_dir: str, shards, conn) -> None:
         if msg[0] == "q":  # scatter: one query -> candidate pool
             _, query, st, k = msg
             conn.send(rs.search_candidates(query, st, k))
-        elif msg[0] == "q1":  # scatter + speculative fill, ONE round trip
-            _, query, st, k = msg
-            conn.send(rs.search_candidates_filled(query, st, k))
-        elif msg[0] == "fill":  # two-phase summary fill for owned hits
-            conn.send(rs.fill_docrows(msg[1]))
         elif msg[0] == "stream":  # replica: timed steady-state query loop
             _, queries, st, k, passes = msg
             st, _, mode = st.partition(":")  # "semantic:lsh" etc.
@@ -127,24 +122,10 @@ def _spawn(idx_dir: str, shards):
     return p, parent
 
 
-def run_scatter(idx_dir: str, classes: dict, P: int, k: int = 10,
-                fill: str = "one_round") -> dict:
-    """One index over P content nodes; gateway merges. Sequential closed
-    loop -> per-class latency distribution.
-
-    ``fill`` selects the summary-fill strategy:
-    - "one_round" (default): nodes return doc rows for their local top-k
-      WITH the candidate pool (serve.search_candidates_filled) -- the
-      speculative fill that removes the second round trip entirely
-      (scripts/scatter_probe.py measured the fill round as 6.5-10.6 ms of
-      the per-query floor, the dominant fixed cost); the gateway backstops
-      any missing id with its own fetch (none expected -- soundness
-      argument in search_candidates_filled).
-    - "two_phase": after the id merge, the gateway requests doc rows only
-      from the nodes OWNING the winning hits (the Vespa
-      match-then-summary-fill shape).
-    - "gateway": the gateway fetches from its own doc-store handles."""
-    from chavinha_mini_search_engine_spark.functions.xxhash import spark_pmod_bucket
+def run_scatter(idx_dir: str, classes: dict, P: int, k: int = 10) -> dict:
+    """One index over P content nodes; gateway merges the candidate pools
+    and fetches the winners' doc rows from its own doc-store handles.
+    Sequential closed loop -> per-class latency distribution."""
     from chavinha_mini_search_engine_spark.operators.search import _query_terms
     from chavinha_mini_search_engine_spark.operators.serve import ResidentSearcher
     from chavinha_mini_search_engine_spark.sources.tables import IndexStore
@@ -160,37 +141,12 @@ def run_scatter(idx_dir: str, classes: dict, P: int, k: int = 10,
     gateway = ResidentSearcher(IndexStore(idx_dir, build_id="q"), shards=[])
 
     def ask(q) -> float:
-        if fill == "one_round":
-            for _, conn in procs:
-                conn.send(("q1", q, "bm25", k))
-            t0 = time.time()
-            replies = [conn.recv() for _, conn in procs]
-            hits = ResidentSearcher.merge_candidates([r[0] for r in replies], k)
-            docrows = {}
-            for r in replies:
-                docrows.update(r[1])
-            missing = [str(h[0]) for h in hits if str(h[0]) not in docrows]
-            if missing:  # backstop; soundness argument says never taken
-                docrows.update(gateway.fill_docrows(missing))
-            gateway._enrich(hits, _query_terms(q), docrows=docrows)
-            return time.time() - t0
         for _, conn in procs:
             conn.send(("q", q, "bm25", k))
         t0 = time.time()
         pools = [conn.recv() for _, conn in procs]
         hits = ResidentSearcher.merge_candidates(pools, k)
-        docrows = None
-        if fill == "two_phase" and hits:
-            by_node: dict = {}
-            for h in hits:
-                node = spark_pmod_bucket(str(h[0]), NUM_SHARDS) % P
-                by_node.setdefault(node, []).append(str(h[0]))
-            for r, ids in by_node.items():
-                procs[r][1].send(("fill", ids))
-            docrows = {}
-            for r in by_node:
-                docrows.update(procs[r][1].recv())
-        gateway._enrich(hits, _query_terms(q), docrows=docrows)
+        gateway._enrich(hits, _query_terms(q))
         return time.time() - t0
 
     out: dict = {}
@@ -283,14 +239,9 @@ def main() -> None:
         "ts": dt.datetime.now(dt.timezone.utc).isoformat(timespec="seconds"),
     }
     if os.environ.get("QSCALE_SKIP_SCATTER", "0") != "1":
-        fill = os.environ.get("QSCALE_FILL", "one_round")
-        if os.environ.get("QSCALE_TWO_PHASE", "0") == "1":  # legacy knob
-            fill = "two_phase"
-        summary["scatter_fill"] = fill
         for P in LEVELS:
             print(f"scatter P={P} ...", flush=True)
-            summary["scatter"][str(P)] = run_scatter(
-                idx_dir, classes, P, fill=fill)
+            summary["scatter"][str(P)] = run_scatter(idx_dir, classes, P)
             print(json.dumps(summary["scatter"][str(P)]), flush=True)
     else:
         del summary["scatter"]

@@ -1,20 +1,15 @@
-"""Training-data pipeline operators: dedup / similarity / multimodal.
+"""Training-data pipeline operators: dedup / similarity.
 
 The SQL-expressible ops are gated by the DuckDB driver oracle
 (scripts/check_oracle.py mirrors it); these tests cover what SQL cannot:
-MinHash-LSH recall, SimHash banding completeness, LSH-ANN recall, and the
-multimodal Arrow plumbing.
+MinHash-LSH recall, SimHash banding completeness and LSH-ANN recall.
 """
 
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from chavinha_mini_search_engine_spark.operators import (
-    dedup,
-    multimodal,
-    similarity,
-)
+from chavinha_mini_search_engine_spark.operators import dedup, similarity
 
 
 @pytest.fixture(scope="module")
@@ -187,33 +182,6 @@ def test_cosine_matches_numpy(spark):
         v = np.asarray(r["embedding"], dtype=np.float64)
         expect = float(v @ q / ((np.linalg.norm(v) or 1.0) * (np.linalg.norm(q) or 1.0)))
         assert abs(got[r["vec_id"]] - round(expect, 6)) < 2e-6
-
-
-# ---------------- multimodal plumbing ----------------
-
-def test_media_features_shapes(spark):
-    media = multimodal.make_fake_media_df(spark, n=24)
-    feats = multimodal.extract_media_features(media, feature_dim=8)
-    rows = feats.collect()
-    assert len(rows) == 24
-    for r in rows:
-        assert len(r["feature"]) == 8
-        assert abs(sum(r["feature"]) - 1.0) < 1e-5  # histogram normalized
-        assert r["n_bytes"] == r["width"] * r["height"] * r["channels"]
-        assert r["media_type"] in ("image", "audio", "video")
-
-
-def test_media_resize_header(spark):
-    media = multimodal.make_fake_media_df(spark, n=6)
-    resized = multimodal.resize_stub(media, 16, 16)
-    feats = multimodal.extract_media_features(resized)
-    for r in feats.collect():
-        assert (r["width"], r["height"]) == (16, 16)
-
-
-def test_real_decode_is_stubbed():
-    with pytest.raises(NotImplementedError):
-        multimodal._decode_payload(b"\x89PNG....", stub=False)
 
 
 def test_sem_lsh_planes_validated():

@@ -3,7 +3,8 @@
 ``IndexStore.segment_dirs`` composes ``unified`` and ``attributes`` from
 their base dir plus the committed parts of their ``_delta`` tier, and
 every reader (``read_parts``, the resident loader, ``/api/stats``,
-``compact``) reads exactly those dirs.  The delta tier's table names may
+``compact_tiered``'s concatenation) reads exactly those dirs.  The delta
+tier's table names may
 therefore appear in the package only where it is laid out
 (``sources/tables.py``), written (``streaming/incremental.py``) or read on
 its own by ``compact_tiered`` (``operators/index_build.py``).  The serve
