@@ -87,7 +87,9 @@ class IndexConfig:
     # reads back into an IndexConfig, still construct
     heavy_term_df: int = 100_000
     num_salts: int = 8
-    term_buckets: int = 64            # parquet partition dirs for pruning
+    term_buckets: int = 64            # tbucket values; postings and
+                                      # term_dict files sort by tbucket so
+                                      # row-group stats prune by term
     encode_buckets: int = 8           # term-hash buckets per shard for the
                                       # merge kernel (merge tasks per
                                       # shard = encode_buckets)

@@ -28,11 +28,13 @@ Scale design (the part that must survive 10^12 docs):
   the tf write reuse its distribution), (3) the df groupBy(fidx, term)
   and the doclens pivot, both collapsed map-side, (4) merge
   groupBy(shard, mkey) -- input is already run-compressed, a few bytes
-  per posting, (5) block rows by tbucket before the write.  Nothing
-  shuffles raw HTML.
-- **Postings layout**: flat block rows partitioned by tbucket =
-  hash(term) % term_buckets -> query-time partition pruning reads only the
-  buckets of the query's terms.
+  per posting.  Nothing shuffles raw HTML.
+- **Postings layout**: flat block rows carrying tbucket =
+  hash(term) % term_buckets as a plain column, sorted by it within each
+  write task's one file (``term_dict`` likewise).  A query's
+  ``tbucket IN (...)`` filter is pushed into the parquet scan and prunes
+  by row-group min/max statistics, so no part fans out into a file per
+  bucket, each paying a commit and a resident-load open.
 """
 
 from __future__ import annotations
@@ -230,7 +232,7 @@ def _postings_part_metrics(path: str) -> list:
     import pyarrow.dataset as pads
 
     ds = pads.dataset(path, format="parquet", partitioning="hive")
-    if not ds.files:  # a shard-group that holds no shard writes no file
+    if not ds.files:  # an empty shard-group of a pre-flat-layout store
         return []
     acc: dict = {}  # shard -> [blocks, postings, bytes]
     for rb in ds.to_batches(columns=["shard", "n", "doc_bytes", "tf_bytes"]):
@@ -712,12 +714,9 @@ def build_postings_for(
         "doc_bytes", "tf_bytes",
         tbucket_col(F.col("term"), cfg.term_buckets).alias("tbucket"),
     )
-    # hash by tbucket so each bucket lands in one task (one file per
-    # tbucket dir; unclustered, every task would write a file into every
-    # dir, and each local-FS commit forks chmod).  No partition count:
-    # AQE coalesces the shuffle partitions by size, so a micro-batch's
-    # few thousand blocks are written by one task, not term_buckets tasks
-    return blocks.repartition("tbucket")
+    # no exchange: each write task writes one file, sorted by tbucket so
+    # its row-group statistics prune a query's ``tbucket IN (...)`` scan
+    return blocks.sortWithinPartitions("tbucket")
 
 
 def verify_tid_unique(tdict: DataFrame) -> None:
@@ -1075,8 +1074,7 @@ def build_index_from_docs(
         sub["corpus_stats_sec"] = round(time.time() - t2, 1)
         t2 = time.time()
         td = term_dict(tf, store.read(spark, "corpus_stats"), cfg)
-        store.write(td.repartition("tbucket"),
-                    "term_dict", partition_by=["tbucket"])
+        store.write(td.sortWithinPartitions("tbucket"), "term_dict")
         sub["term_dict_sec"] = round(time.time() - t2, 1)
         # tid-collision verification moved off the serial critical path:
         # it runs as a concurrent task of the postings pool below (always,
@@ -1103,7 +1101,7 @@ def build_index_from_docs(
         # to the DataFrame scan when the list is empty or disabled)
         units = tf_scan_units(store.path("tf", part))
         blocks = build_postings_for(tf_g, td, avgdl, cfg, scan_units=units)
-        store.write(blocks, "postings", part=part, partition_by=["tbucket"])
+        store.write(blocks, "postings", part=part)
         _commit_postings_part(store, part, time.time() - t)
 
     def _attributes_task() -> None:
@@ -1300,8 +1298,7 @@ def compact_tiered(
             else:
                 new_df = base_df
             td = term_dict_from_df(new_df, stats, cfg)
-            out.write(td.repartition("tbucket"),
-                      "term_dict", partition_by=["tbucket"])
+            out.write(td.sortWithinPartitions("tbucket"), "term_dict")
             out.finish_stage("stats", {"wall_sec": time.time() - t})
 
         td = out.read(spark, "term_dict")
@@ -1340,15 +1337,11 @@ def compact_tiered(
                 ],
                 F.lit(1.0),
             )
-            base_parts = [
-                p for p in base.committed_parts("postings")
+            post = base.read_dirs(spark, "postings", [
+                base.path("postings", p)
+                for p in base.committed_parts("postings")
                 if not p.startswith("delta=")
-            ]
-            post = spark.read.parquet(base.path("postings", base_parts[0]))
-            for p in base_parts[1:]:
-                post = post.unionByName(
-                    spark.read.parquet(base.path("postings", p))
-                )
+            ])
             old_idf = base.read(spark, "term_dict").select(
                 "field", "term", F.col("idf").alias("idf_old")
             )
@@ -1362,8 +1355,8 @@ def compact_tiered(
                 )
                 .drop("idf_old", "idf")
             )
-            out.write(reb.repartition("tbucket"),
-                      "postings", part="grp=0", partition_by=["tbucket"])
+            out.write(reb.sortWithinPartitions("tbucket"),
+                      "postings", part="grp=0")
             _commit_postings_part(out, "grp=0", time.time() - t)
             # delta postings REGENERATE from the delta re-tokenize (the stored
             # delta parts dropped base-dictionary-unknown terms at stream time
@@ -1371,8 +1364,7 @@ def compact_tiered(
             if delta_tf is not None:
                 t2 = time.time()
                 fresh = build_postings_for(delta_tf, td, new_avg, cfg)
-                out.write(fresh, "postings", part="grp=1",
-                          partition_by=["tbucket"])
+                out.write(fresh, "postings", part="grp=1")
                 _commit_postings_part(out, "grp=1", time.time() - t2)
             out.finish_stage("postings", {"wall_sec": time.time() - t})
     finally:

@@ -4,11 +4,12 @@ D1, J4-J5, P11/P16/P17).
 Lifecycle (the Spark rebuild of api/main.py:348-530 + Vespa's retrieval):
 
 1. tokenize query with the normative tokenizer; dedup terms (weakAnd);
-2. look up (idf, df) for the query terms from ``term_dict`` -- a
-   partition-pruned scan (tbucket in (...)) collecting a handful of rows;
-3. scan ``postings`` pruned by (tbucket, term, field) -- Catalyst pushes
-   all three into the parquet scan, so only the query terms' buckets are
-   read;
+2. look up (idf, df) for the query terms from ``term_dict`` -- a scan
+   whose ``tbucket IN (...)`` filter prunes the tbucket-sorted file's row
+   groups by their statistics, collecting a handful of rows;
+3. scan ``postings`` filtered by (tbucket, term, field) -- Catalyst pushes
+   all three into the parquet scan, and each file is sorted by tbucket,
+   so row groups outside the query terms' buckets are skipped;
 4. ``postings.groupBy(shard).cogroup(attributes.groupBy(shard))`` ->
    ``applyInPandas`` scorer: block-max pruned term-at-a-time scoring with
    numpy decode, local per-parent dedup, per-shard top-k heap.  This is
@@ -52,7 +53,6 @@ from ..functions.codec import delta_decode, varbyte_decode
 from ..functions.tokenizer import tokenize_py
 from ..oracle.embedder import embed_text
 from ..sources.tables import IndexStore
-from .index_build import tbucket_col
 
 SCORE_SCHEMA = (
     "id string, parent_id string, doc_type string, parent_doc_type string, "

@@ -67,7 +67,7 @@ def _read_parts_arrow(
     frames = []
     for p in dirs:
         ds = pads.dataset(p, format="parquet", partitioning="hive")
-        if not ds.files:  # an empty part (e.g. a shard-group with no shard)
+        if not ds.files:  # an empty shard-group of a pre-flat-layout store
             continue
         cols = [c for c in columns if c in ds.schema.names]
         f = filter if filter is None or "shard" in ds.schema.names else None
@@ -265,9 +265,9 @@ class ResidentSearcher:
         from .search import fused_state, post_groups, state_view
 
         # shard-subset (content-node) pruning: hive shard= tables prune at
-        # the directory level, the tbucket-partitioned postings table
-        # filters rows (a cluster deployment would co-partition postings
-        # by shard per node; the filter is the single-disk stand-in)
+        # the directory level, the flat postings parts filter rows (a
+        # cluster deployment would co-partition postings by shard per
+        # node; the filter is the single-disk stand-in)
         shard_filter = None
         if self.shards is not None:
             import pyarrow.compute as pc

@@ -350,13 +350,19 @@ class IndexStore:
         return dirs
 
     def read_parts(self, spark: SparkSession, table: str) -> DataFrame:
-        """Union of ``segment_dirs(table)``.  Segments may use different
-        partition keys (grp=, delta=, or shard= dirs against an
-        un-partitioned part), so each is read separately (inner partition
-        dirs like tbucket= stay consistent) and unioned by name.  A dir
-        with no file (a shard-group that holds no shard) has no schema to
-        infer and no rows: skipped."""
-        dirs = self.segment_dirs(table)
+        """Union of ``segment_dirs(table)`` (see ``read_dirs``)."""
+        return self.read_dirs(spark, table, self.segment_dirs(table))
+
+    def read_dirs(self, spark: SparkSession, table: str,
+                  dirs: list) -> DataFrame:
+        """Union by name of ``table``'s dataset dirs ``dirs``.  Segments
+        may use different partition keys (grp=, delta=, or shard= dirs
+        against an un-partitioned part), so each is read separately and
+        unioned by name; a part written before postings were flat keeps
+        its inner tbucket= dirs, read back as the same int column.  A dir
+        with no file (a shard-group that held no shard before empty parts
+        wrote a zero-row file) has no schema to infer and no rows:
+        skipped."""
         dfs = [spark.read.parquet(d) for d in dirs if _has_parquet(d)]
         if not dfs:
             raise FileNotFoundError(

@@ -172,8 +172,7 @@ def stream_index_deltas(
             tf = keep(tokenize_tf(u, cfg))
             writes = [
                 lambda: store.write(build_postings_for(tf, tdict, avgdl, cfg),
-                                    "postings", part=part,
-                                    partition_by=["tbucket"]),
+                                    "postings", part=part),
                 lambda: store.write(attributes(u, cfg, tf=tf),
                                     "attributes_delta", part=part),
                 lambda: store.write(u, "unified_delta", part=part,

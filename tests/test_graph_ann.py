@@ -120,6 +120,7 @@ class TestSparkGraph:
         partitioning (each slice stays within the ef_search beam)."""
         from chavinha_mini_search_engine_spark.operators.graph_ann import graph_topk
         from chavinha_mini_search_engine_spark.operators.similarity import cosine_topk
+        from chavinha_mini_search_engine_spark.plans.explain import formatted_plan
 
         emb = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
         n = emb.count()
@@ -127,9 +128,7 @@ class TestSparkGraph:
         # the derived default appears in the plan as the repartition count
         df = graph_topk(emb, q, k=10)
         expect = max(1, -(-n // 128))
-        plan = df._sc._jvm.PythonSQLUtils.explainString(
-            df._jdf.queryExecution(), "formatted"
-        )
+        plan = formatted_plan(df)
         assert f"hashpartitioning(vec_id#" in plan
         assert f", {expect}), REPARTITION_BY_NUM" in plan
         # partitioning-invariance: an explicit different count gives the

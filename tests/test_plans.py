@@ -104,8 +104,13 @@ def test_assign_layout_single_wide_exchange(spark, docs):
 
 
 def test_postings_scan_prunes_by_tbucket(spark, tiny_pages, tmp_path_factory):
-    """Query-term postings reads must hit only the query's tbucket
-    partitions (PartitionFilters on the parquet scan)."""
+    """Query-term postings reads push ``tbucket IN (...)`` into the parquet
+    scan, and every postings file is sorted by tbucket, so the pushed
+    filter prunes row groups by their min/max statistics."""
+    import glob
+
+    import pyarrow.parquet as pq
+
     from chavinha_mini_search_engine_spark.operators.index_build import (
         IndexConfig,
         build_index,
@@ -119,10 +124,14 @@ def test_postings_scan_prunes_by_tbucket(spark, tiny_pages, tmp_path_factory):
     post = store.read(spark, "postings", part="grp=0")
     pruned = post.filter(F.col("tbucket").isin([1, 2]) & (F.col("term") == "python"))
     plan = formatted_plan(pruned)
-    assert "PartitionFilters" in plan
     assert any(
-        "tbucket" in ln for ln in plan.splitlines() if "PartitionFilters" in ln
+        "In(tbucket" in ln for ln in plan.splitlines() if "PushedFilters" in ln
     ), plan
+    files = glob.glob(store.path("postings", "*/*.parquet"))
+    assert files
+    for f in files:
+        tb = pq.read_table(f, columns=["tbucket"]).column("tbucket").to_pylist()
+        assert tb == sorted(tb), f
 
 
 def test_tf_pipeline_single_doc_grain_exchange(spark, docs):

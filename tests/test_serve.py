@@ -304,7 +304,7 @@ def test_post_fused_shard_subset_matches_reference(built):
 def delta_store(spark, tmp_path_factory):
     """Base build + two streamed delta segments, in the streaming tests'
     shape, except that the default shard_groups=8 over 4 shards leaves
-    four postings shard-groups empty (committed parts with no file)."""
+    four postings shard-groups empty (committed parts with zero rows)."""
     from chavinha_mini_search_engine_spark.fixtures.pages import generate_pages
     from chavinha_mini_search_engine_spark.operators.index_build import (
         IndexConfig,
@@ -345,53 +345,63 @@ def test_deltas_use_saved_layout(delta_store):
         shards = pq.read_table(store.path("attributes_delta", part),
                                columns=["shard"]).column("shard")
         assert max(shards.to_pylist()) < cfg.num_doc_shards, part
-    dirs = [
-        d for p in store.committed_parts("postings") if p.startswith("delta=")
-        for d in os.listdir(store.path("postings", p))
-        if d.startswith("tbucket=")
+    buckets = [
+        b for p in store.committed_parts("postings") if p.startswith("delta=")
+        for b in pq.read_table(store.path("postings", p),
+                               columns=["tbucket"]).column("tbucket").to_pylist()
     ]
-    assert dirs
-    assert max(int(d.split("=")[1]) for d in dirs) < cfg.term_buckets
+    assert buckets
+    assert max(buckets) < cfg.term_buckets
 
 
-def _assert_one_file_per_tbucket(spark, path, n_buckets):
-    """Every tbucket= dir under ``path`` holds exactly one parquet file,
-    and the dirs are exactly the buckets of the terms stored there."""
+def _assert_flat_tbucket_sorted(spark, path, n_buckets):
+    """``path`` is flat (no tbucket= dir), every row's tbucket is the
+    engine's bucket of its term, and each file's row groups ascend in
+    tbucket (min/max statistics, which the pushed ``tbucket IN (...)``
+    filter prunes by)."""
+    import pyarrow.parquet as pq
+
     from chavinha_mini_search_engine_spark.operators.index_build import (
         tbucket_col,
     )
 
-    dirs = [d for d in os.listdir(path) if d.startswith("tbucket=")]
-    assert dirs, path
-    for d in dirs:
-        files = [f for f in os.listdir(os.path.join(path, d))
-                 if f.endswith(".parquet")]
-        assert len(files) == 1, (path, d, files)
+    entries = os.listdir(path)
+    assert not [d for d in entries if d.startswith("tbucket=")], path
+    files = [os.path.join(path, f) for f in entries if f.endswith(".parquet")]
+    assert files, path
     df = spark.read.parquet(path).withColumn(
         "exp", tbucket_col(F.col("term"), n_buckets)
     )
     assert df.filter(F.col("exp") != F.col("tbucket")).count() == 0, path
-    exp = {r["exp"] for r in df.select("exp").distinct().collect()}
-    assert {int(d.split("=")[1]) for d in dirs} == exp, path
+    for f in files:
+        md = pq.read_metadata(f)
+        col = md.schema.names.index("tbucket")
+        last = -1
+        for rg in range(md.num_row_groups):
+            if md.row_group(rg).num_rows:
+                st = md.row_group(rg).column(col).statistics
+                assert last <= st.min <= st.max, (f, rg)
+                last = st.max
 
 
-def test_tbucket_layout_one_file_per_bucket(spark, built, delta_store):
-    """The tbucket-partitioned writes put each bucket in one task: every
-    postings part (base and streamed delta) and term_dict has one file
-    per tbucket dir."""
+def test_flat_tbucket_sorted_layout(spark, built, delta_store):
+    """Postings parts (base and streamed delta) and term_dict are flat
+    files sorted by tbucket, and a streamed micro-batch writes one
+    postings file."""
     delta, _cfg = delta_store
     parts = [(built, p) for p in built.committed_parts("postings")] + [
         (delta, p) for p in delta.committed_parts("postings")
-        if p.startswith("delta=")
     ]
     assert any(p.startswith("delta=") for _s, p in parts)
     for store, part in parts:
-        _assert_one_file_per_tbucket(
-            spark, store.path("postings", part),
-            store.saved_config().term_buckets,
-        )
+        path = store.path("postings", part)
+        _assert_flat_tbucket_sorted(spark, path,
+                                    store.saved_config().term_buckets)
+        if part.startswith("delta="):
+            assert len([f for f in os.listdir(path)
+                        if f.endswith(".parquet")]) == 1, path
     for store in (built, delta):
-        _assert_one_file_per_tbucket(
+        _assert_flat_tbucket_sorted(
             spark, store.path("term_dict"), store.saved_config().term_buckets
         )
 
@@ -414,14 +424,15 @@ def test_stream_rejects_mismatched_cfg(spark, tmp_path):
 
 
 def test_post_fused_base_plus_deltas_matches_reference(spark, delta_store):
+    import pyarrow.parquet as pq
+
     store, cfg = delta_store
     parts = store.committed_parts("postings")
     assert sum(p.startswith("delta=") for p in parts) >= 2, parts
     assert any(
-        not any(f.endswith(".parquet")
-                for _r, _d, fs in os.walk(store.path("postings", p))
-                for f in fs)
-        for p in parts
+        pq.read_metadata(os.path.join(store.path("postings", p), f)).num_rows == 0
+        for p in parts for f in os.listdir(store.path("postings", p))
+        if f.endswith(".parquet")
     ), "fixture must commit an empty shard-group part"
     rs = ResidentSearcher(store, cfg)
     _assert_layout_equal(rs.post_fused, _reference_post_fused(store, rs))
@@ -434,9 +445,65 @@ def test_post_fused_base_plus_deltas_matches_reference(spark, delta_store):
         assert abs(gs - es) < 1e-8
 
 
+def test_compact_tiered_with_empty_shard_groups(spark, delta_store,
+                                               tmp_path_factory):
+    """compact_tiered merges a store whose empty shard-groups committed
+    postings parts with no file (as stores built before postings were
+    flat did), and serves bm25 like a from-scratch build of its pages."""
+    import shutil
+
+    import pyarrow.parquet as pq
+
+    from chavinha_mini_search_engine_spark.fixtures.pages import generate_pages
+    from chavinha_mini_search_engine_spark.operators.index_build import (
+        build_index,
+        compact_tiered,
+    )
+    from chavinha_mini_search_engine_spark.sources.tables import IndexStore
+
+    src, cfg = delta_store
+    root = str(tmp_path_factory.mktemp("cte") / "i")
+    shutil.copytree(src.root, root)
+    store = IndexStore(root)
+    emptied = 0
+    for part in store.committed_parts("postings"):
+        path = store.path("postings", part)
+        files = [os.path.join(path, f) for f in os.listdir(path)
+                 if f.endswith(".parquet")]
+        if all(pq.read_metadata(f).num_rows == 0 for f in files):
+            for f in files:
+                os.remove(f)
+            emptied += 1
+    assert emptied, "fixture must commit an empty shard-group part"
+
+    tiered = compact_tiered(
+        spark, store,
+        IndexStore(str(tmp_path_factory.mktemp("cte") / "t"), build_id="cte"),
+    )
+    schema = "url string, warc_ts timestamp, html binary, text string, lang string"
+    pages = str(tmp_path_factory.mktemp("cte") / "pages")
+    spark.createDataFrame(generate_pages(40, include_edges=False),
+                          schema).write.parquet(pages)
+    full = IndexStore(str(tmp_path_factory.mktemp("cte") / "f"), build_id="ctf")
+    build_index(spark, spark.read.parquet(pages), full, cfg,
+                with_embeddings=False, verify_text_invariant=False)
+    rs_t, rs_f = ResidentSearcher(tiered, cfg), ResidentSearcher(full, cfg)
+    eng_t = SearchEngine(spark, tiered, cfg, cache=False)
+    for q in ("python", "docker container", "python async programming"):
+        exp = [(h["id"], round(h["relevance"], 9))
+               for h in rs_f.search(q, "bm25", 10)]
+        got = [(h["id"], round(h["relevance"], 9))
+               for h in rs_t.search(q, "bm25", 10)]
+        assert exp and got == exp, q
+        got = [(r["id"], round(r["relevance"], 9))
+               for r in eng_t.search(q, "bm25", 10).collect()]
+        assert got == exp, q
+
+
 def test_postings_part_metrics_empty_part(tmp_path):
-    """A shard-group that holds no shard commits a part with no parquet
-    file; its metrics are no shard rows, not an ArrowInvalid."""
+    """A postings part with no parquet file (an empty shard-group of a
+    store built before postings were flat) has no shard rows as its
+    metrics, not an ArrowInvalid."""
     from chavinha_mini_search_engine_spark.operators.index_build import (
         _postings_part_metrics,
     )
