@@ -45,6 +45,7 @@ from typing import Optional
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -563,7 +564,6 @@ def write_corpus_stats_local(lens_dir: str, out_dir: str,
     same IEEE division Spark's Average performs.  The read is one narrow
     columnar pass (int columns only); what this removes from the
     critical path is a whole Spark job + write for a 4-row table."""
-    import pyarrow as pa
     import pyarrow.compute as pc
     import pyarrow.dataset as pads
     import pyarrow.parquet as pq
@@ -601,8 +601,9 @@ def write_corpus_stats_local(lens_dir: str, out_dir: str,
     os.replace(tmp, out_dir)
 
 
-def term_dict(tf: DataFrame, stats: DataFrame, cfg: IndexConfig) -> DataFrame:
-    """(field, term, df, idf, tbucket).  idf = ln(1 + (N-n+0.5)/(n+0.5)).
+def term_dict(tf: DataFrame, stats: dict, cfg: IndexConfig) -> DataFrame:
+    """(field, term, df, idf, tbucket).  idf = ln(1 + (N-n+0.5)/(n+0.5)),
+    N from ``stats`` ({field: (n_docs, avgdl)}, ``IndexStore.corpus_stats``).
 
     The df agg keys on the int ``fidx`` and the field string materializes
     AFTER the agg, at vocab grain -- the term strings themselves still
@@ -615,11 +616,18 @@ def term_dict(tf: DataFrame, stats: DataFrame, cfg: IndexConfig) -> DataFrame:
     return term_dict_from_df(df_tbl, stats, cfg)
 
 
-def term_dict_from_df(df_tbl: DataFrame, stats: DataFrame,
+def term_dict_from_df(df_tbl: DataFrame, stats: dict,
                       cfg: IndexConfig) -> DataFrame:
     """Attach idf + tbucket to a vocab-grain (field, term, df) table --
-    the shared tail of term_dict and of compact_tiered's merged df."""
-    j = df_tbl.join(F.broadcast(stats.select("field", "n_docs")), "field")
+    the shared tail of term_dict and of compact_tiered's merged df.
+    ``stats`` is ``IndexStore.corpus_stats()``; its n_docs enter Spark as
+    an Arrow local relation (a LocalTableScan, not a read of the
+    pyarrow-written table), and a field without stats has no term."""
+    n_docs = df_tbl.sparkSession.createDataFrame(pa.table({
+        "field": pa.array(list(stats), pa.string()),
+        "n_docs": pa.array([n for n, _a in stats.values()], pa.int64()),
+    }))
+    j = df_tbl.join(F.broadcast(n_docs), "field")
     return j.select(
         "field", "term", "df",
         F.log(
@@ -677,10 +685,13 @@ def build_postings_for(
         # boundary_probe.py: the per-row Arrow serialization it removes
         # cost ~1.8 us/row of JVM CPU and was the dominant NON-SCALING
         # term in the build (inflates ~3.2x from local[4] to local[16]).
-        spark = tf.sparkSession
-        paths = spark.createDataFrame(
-            [(p, r) for p, r in scan_units], "path string, rg int"
-        ).repartition(len(scan_units))
+        # the unit list enters Spark as an Arrow local relation (a
+        # LocalTableScan): a list of tuples would plan as a Python RDD
+        # scan and cost a Python stage before the encode starts
+        paths = tf.sparkSession.createDataFrame(pa.table({
+            "path": pa.array([p for p, _r in scan_units], pa.string()),
+            "rg": pa.array([r for _p, r in scan_units], pa.int32()),
+        })).repartition(len(scan_units))
         runs = paths.mapInPandas(
             _encode_partial_runs_files, schema=RUN_SCHEMA_DL
         )
@@ -1073,7 +1084,7 @@ def build_index_from_docs(
         )
         sub["corpus_stats_sec"] = round(time.time() - t2, 1)
         t2 = time.time()
-        td = term_dict(tf, store.read(spark, "corpus_stats"), cfg)
+        td = term_dict(tf, store.corpus_stats(), cfg)
         store.write(td.sortWithinPartitions("tbucket"), "term_dict")
         sub["term_dict_sec"] = round(time.time() - t2, 1)
         # tid-collision verification moved off the serial critical path:
@@ -1277,7 +1288,6 @@ def compact_tiered(
             write_corpus_stats_local(out.path("attributes"),
                                      out.path("corpus_stats"), cfg,
                                      prefix="len_")
-            stats = out.read(spark, "corpus_stats")
             base_df = base.read(spark, "term_dict").select(
                 "field", "term", "df")
             if delta_tf is not None:
@@ -1297,7 +1307,7 @@ def compact_tiered(
                 )
             else:
                 new_df = base_df
-            td = term_dict_from_df(new_df, stats, cfg)
+            td = term_dict_from_df(new_df, out.corpus_stats(), cfg)
             out.write(td.sortWithinPartitions("tbucket"), "term_dict")
             out.finish_stage("stats", {"wall_sec": time.time() - t})
 

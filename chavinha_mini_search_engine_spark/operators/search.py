@@ -36,6 +36,7 @@ from typing import Dict, List, Optional, Tuple
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -58,6 +59,13 @@ SCORE_SCHEMA = (
     "id string, parent_id string, doc_type string, parent_doc_type string, "
     "score double"
 )
+
+# SearchEngine's result rows, in the API's column order (``result_row``)
+RESULT_ARROW_SCHEMA = pa.schema([
+    ("rank", pa.int32()), ("id", pa.string()), ("url", pa.string()),
+    ("title", pa.string()), ("snippet", pa.string()), ("domain", pa.string()),
+    ("relevance", pa.float64()), ("doc_type", pa.string()),
+])
 
 
 def semantic_probes(cfg: IndexConfig, qvec: np.ndarray) -> List[int]:
@@ -687,7 +695,7 @@ class SearchEngine:
 
         info = self._term_info(terms, fields) if search_type != "semantic" else {}
         if search_type != "semantic" and not info:
-            return self._empty_result()
+            return self._result_frame([])
 
         qvec = embed_text(query) if search_type in ("semantic", "hybrid") else None
 
@@ -722,10 +730,9 @@ class SearchEngine:
         attrs = attrs.select(*attr_cols)
 
         if search_type == "semantic":
-            # no posting involvement: empty left side of the cogroup
-            post = self.spark.createDataFrame(
-                [], self._postings.schema
-            )
+            # no posting involvement: empty left side of the cogroup (an
+            # empty relation, so no Python RDD is planned for it)
+            post = self._postings.limit(0)
         else:
             buckets = self._tbuckets(terms)
             post = self._postings.filter(
@@ -776,29 +783,24 @@ class SearchEngine:
                 k: int) -> DataFrame:
         hits = topk.collect()  # <= k rows by construction
         if not hits:
-            return self._empty_result()
+            return self._result_frame([])
         hit_ids = [r["id"] for r in hits]
         rows = self._enrich_scan(hit_ids).collect()
         docrows = {r["id"]: tuple(r)[1:] for r in rows}
         order = sorted(hits, key=lambda r: (-r["score"], r["id"]))
-        out = [
-            tuple(result_row(rank, (h["id"], h["parent_id"], h["doc_type"],
-                                    h["parent_doc_type"], h["score"]),
-                             docrows.get(h["id"]), terms).values())
+        return self._result_frame([
+            result_row(rank, (h["id"], h["parent_id"], h["doc_type"],
+                              h["parent_doc_type"], h["score"]),
+                       docrows.get(h["id"]), terms)
             for rank, h in enumerate(order, 1)
-        ]
-        return self.spark.createDataFrame(
-            out,
-            "rank int, id string, url string, title string, snippet string, "
-            "domain string, relevance double, doc_type string",
-        )
+        ])
 
-    def _empty_result(self) -> DataFrame:
+    def _result_frame(self, rows: List[dict]) -> DataFrame:
+        """The <=k ``result_row`` dicts as an Arrow local relation (a
+        LocalTableScan): no Python RDD, so showing or collecting the
+        result runs no job."""
         return self.spark.createDataFrame(
-            [],
-            "rank int, id string, url string, title string, snippet string, "
-            "domain string, relevance double, doc_type string",
-        )
+            pa.Table.from_pylist(rows, schema=RESULT_ARROW_SCHEMA))
 
 
 def result_row(rank: int, hit: tuple, docrow: Optional[tuple],

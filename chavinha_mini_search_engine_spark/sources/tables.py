@@ -34,6 +34,13 @@ are the base dir plus the committed parts of their ``_delta`` tier,
 ``postings`` is its committed ``grp=``/``delta=`` parts.  ``read_parts``
 (Spark) and every pyarrow reader of the serve path read exactly those
 dirs, so no reader outside this module names a ``_delta`` table.
+
+Reads take the footer schema: ``read``/``read_parts`` pass Spark the
+schema that Spark's writer recorded in each dir's first parquet footer
+(``_SPARK_SCHEMA_KEY``, the key Spark's own inference reads back), so a
+read plans with no schema-inference job; hive partition columns are still
+discovered from the paths.  A table written by pyarrow (``corpus_stats``,
+``build_metrics``) has no such key and is read as Spark infers it.
 """
 
 from __future__ import annotations
@@ -48,6 +55,7 @@ from dataclasses import asdict
 from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 from ..config import IndexConfig
 
@@ -74,8 +82,42 @@ DOC_STORE_WRITE_OPTS = {
 }
 
 
-def _has_parquet(path: str) -> bool:
-    return any(f.endswith(".parquet") for _r, _d, fs in os.walk(path) for f in fs)
+# The footer key under which Spark's parquet writer records the written
+# rows' Spark schema; Spark's own schema inference reads this key back.
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def _first_parquet(path: str) -> Optional[str]:
+    """The first data file under ``path`` in sorted walk order, skipping
+    the ``_``/``.`` entries Spark's file listing skips; None if there is
+    none."""
+    for root, dirs, files in os.walk(path):
+        dirs[:] = sorted(d for d in dirs if not d.startswith(("_", ".")))
+        for f in sorted(files):
+            if f.endswith(".parquet") and not f.startswith(("_", ".")):
+                return os.path.join(root, f)
+    return None
+
+
+def _footer_schema(path: str) -> Optional[StructType]:
+    """The Spark schema a Spark writer recorded in ``path``'s footer, or
+    None for a file written by another writer (pyarrow)."""
+    import pyarrow.parquet as pq
+
+    raw = (pq.read_metadata(path).metadata or {}).get(_SPARK_SCHEMA_KEY)
+    return StructType.fromJson(json.loads(raw)) if raw else None
+
+
+def _read_dir(spark: SparkSession, path: str,
+              first: Optional[str]) -> DataFrame:
+    """``spark.read.parquet(path)`` without its schema-inference job when
+    ``first`` (the dir's first file) carries a Spark footer schema.  Hive
+    partition columns are still discovered from the paths.  Without that
+    schema (no file, a pyarrow-written table) the read infers, as Spark
+    does by default."""
+    schema = _footer_schema(first) if first else None
+    reader = spark.read.schema(schema) if schema is not None else spark.read
+    return reader.parquet(path)
 
 
 class IndexStore:
@@ -329,7 +371,10 @@ class IndexStore:
         return final
 
     def read(self, spark: SparkSession, table: str, part: Optional[str] = None) -> DataFrame:
-        return spark.read.parquet(self.path(table, part))
+        """One dataset dir, read with the Spark schema in its footers (see
+        ``_read_dir``): no schema-inference job."""
+        path = self.path(table, part)
+        return _read_dir(spark, path, _first_parquet(path))
 
     def segment_dirs(self, table: str) -> list:
         """The dataset dirs that make up a served table -- the one place
@@ -361,9 +406,11 @@ class IndexStore:
         unioned by name; a part written before postings were flat keeps
         its inner tbucket= dirs, read back as the same int column.  A dir
         with no file (a shard-group that held no shard before empty parts
-        wrote a zero-row file) has no schema to infer and no rows:
-        skipped."""
-        dfs = [spark.read.parquet(d) for d in dirs if _has_parquet(d)]
+        wrote a zero-row file) has no schema and no rows: skipped.  Each
+        dir is read with its footer schema (``_read_dir``), so the union
+        plans without a Spark job."""
+        firsts = [(d, _first_parquet(d)) for d in dirs]
+        dfs = [_read_dir(spark, d, f) for d, f in firsts if f]
         if not dfs:
             raise FileNotFoundError(
                 f"table {table!r} has no rows: {dirs}; on disk: "

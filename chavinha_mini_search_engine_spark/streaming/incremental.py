@@ -29,6 +29,7 @@ import time
 from concurrent.futures import ThreadPoolExecutor
 from typing import Optional
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -147,10 +148,12 @@ def stream_index_deltas(
             u = unified_corpus(docs, chunks, cfg)
             # shift local ids past every already-written segment's ids per
             # shard so delta postings never collide with base or
-            # earlier-delta postings
-            offs_df = spark.createDataFrame(
-                list(offs.items()) or [], "shard int, max_local long"
-            )
+            # earlier-delta postings; the offsets enter Spark as an Arrow
+            # local relation (a LocalTableScan, not a Python RDD scan)
+            offs_df = spark.createDataFrame(pa.table({
+                "shard": pa.array(list(offs), pa.int32()),
+                "max_local": pa.array(list(offs.values()), pa.int64()),
+            }))
             u = keep(
                 u.join(F.broadcast(offs_df), "shard", "left")
                 .withColumn(
