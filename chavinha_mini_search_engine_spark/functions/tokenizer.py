@@ -20,10 +20,10 @@ oracle that shares this tokenizer, per SURVEY.md §2.4).
 from __future__ import annotations
 
 import re
-from typing import List
+from typing import TYPE_CHECKING, List
 
-from pyspark.sql import Column
-from pyspark.sql import functions as F
+if TYPE_CHECKING:
+    from pyspark.sql import Column
 
 # one token class, reused verbatim everywhere: python finds runs of the
 # class; Spark and DuckDB split on its complement (same tokens)
@@ -53,6 +53,8 @@ def tokens_col(col: Column | str) -> Column:
     split form stays the one spelling; it is also the form the DuckDB
     twin (duckdb_tokens_sql) uses.
     """
+    from pyspark.sql import functions as F
+
     c = F.col(col) if isinstance(col, str) else col
     return F.filter(
         F.split(F.lower(c), TOKEN_SPLIT_RE),

@@ -36,7 +36,7 @@ from urllib.parse import parse_qs, urlparse
 
 from .config import DEFAULT_LIMIT, MAX_LIMIT, SEARCH_TYPES
 from .operators.serve import ResidentSearcher
-from .sources.tables import IndexStore
+from .sources.tables import IndexStore, arrow_to_numpy, parquet_files
 
 
 def domain_stats(store: IndexStore, max_domains: int = 1000) -> dict:
@@ -45,18 +45,18 @@ def domain_stats(store: IndexStore, max_domains: int = 1000) -> dict:
     576-665).  The full docs are the ``doc_type == "full_doc"`` rows of
     the served ``unified`` segments -- the base docs plus every streamed
     one, and on a compacted store (no docs table) its merged rows.
-    Folded one record batch at a time: driver memory O(batch + domains)."""
-    import pyarrow.compute as pc
-    import pyarrow.dataset as pads
+    Folded one parquet row group at a time (the ``parquet_files`` walk):
+    driver memory O(row group + domains)."""
+    import pyarrow.parquet as pq
 
     counts: Counter = Counter()
-    full_doc = pc.field("doc_type") == "full_doc"
     for d in store.segment_dirs("unified"):
-        ds = pads.dataset(d, format="parquet", partitioning="hive")
-        for b in ds.to_batches(columns=["domain"], filter=full_doc):
-            vc = pc.value_counts(b.column(0))
-            counts.update(dict(zip(vc.field("values").to_pylist(),
-                                   vc.field("counts").to_pylist())))
+        for path, _keys in parquet_files(d):
+            pf = pq.ParquetFile(path)
+            for rg in range(pf.num_row_groups):
+                t = pf.read_row_group(rg, columns=["doc_type", "domain"])
+                full = arrow_to_numpy(t.column("doc_type")) == "full_doc"
+                counts.update(arrow_to_numpy(t.column("domain"))[full].tolist())
     domains = sorted(counts.items(), key=lambda kv: (-kv[1], kv[0]))
     return {
         "total_documents": sum(counts.values()),

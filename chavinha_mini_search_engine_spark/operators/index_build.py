@@ -39,6 +39,7 @@ Scale design (the part that must survive 10^12 docs):
 
 from __future__ import annotations
 
+import functools
 import os
 import time
 from typing import Optional
@@ -601,6 +602,19 @@ def write_corpus_stats_local(lens_dir: str, out_dir: str,
     os.replace(tmp, out_dir)
 
 
+def literal_lookup(mapping: dict, key, value_type: str):
+    """``mapping[key]`` as a column over a literal map: null where the key
+    is absent.  A driver-side dict of a few entries joins the plan as an
+    expression, where a broadcast relation would run a job to ship it."""
+    if not mapping:
+        return F.lit(None).cast(value_type)
+    m = F.create_map(*[
+        c for k, v in mapping.items()
+        for c in (F.lit(k), F.lit(v).cast(value_type))
+    ])
+    return m[key]
+
+
 def term_dict(tf: DataFrame, stats: dict, cfg: IndexConfig) -> DataFrame:
     """(field, term, df, idf, tbucket).  idf = ln(1 + (N-n+0.5)/(n+0.5)),
     N from ``stats`` ({field: (n_docs, avgdl)}, ``IndexStore.corpus_stats``).
@@ -620,14 +634,12 @@ def term_dict_from_df(df_tbl: DataFrame, stats: dict,
                       cfg: IndexConfig) -> DataFrame:
     """Attach idf + tbucket to a vocab-grain (field, term, df) table --
     the shared tail of term_dict and of compact_tiered's merged df.
-    ``stats`` is ``IndexStore.corpus_stats()``; its n_docs enter Spark as
-    an Arrow local relation (a LocalTableScan, not a read of the
-    pyarrow-written table), and a field without stats has no term."""
-    n_docs = df_tbl.sparkSession.createDataFrame(pa.table({
-        "field": pa.array(list(stats), pa.string()),
-        "n_docs": pa.array([n for n, _a in stats.values()], pa.int64()),
-    }))
-    j = df_tbl.join(F.broadcast(n_docs), "field")
+    ``stats`` is ``IndexStore.corpus_stats()``; its n_docs enter the plan
+    as a literal map (no relation, so no job), and a field without stats
+    has no term."""
+    n_docs = literal_lookup(
+        {f: n for f, (n, _a) in stats.items()}, F.col("field"), "bigint")
+    j = df_tbl.withColumn("n_docs", n_docs).filter(F.col("n_docs").isNotNull())
     return j.select(
         "field", "term", "df",
         F.log(
@@ -776,7 +788,7 @@ def attributes(unified: DataFrame, cfg: IndexConfig, tf: DataFrame,
     posting-grain table.  Fields a doc lacks get len 0 (the scorer only
     dereferences lengths for docs a posting reaches, i.e. dl > 0 fields).
     """
-    from .similarity import _hyperplanes
+    from ..oracle.embedder import _hyperplanes
 
     if lens is None:
         lens = doclens(tf, cfg)
@@ -839,6 +851,30 @@ def _tag_jobs(spark: SparkSession, stage: str) -> None:
     spark.sparkContext.setJobGroup(f"build:{stage}", f"index build stage {stage}")
 
 
+# the thread-local properties ``setJobGroup`` sets
+_JOB_GROUP_KEYS = ("spark.jobGroup.id", "spark.job.description",
+                   "spark.job.interruptOnCancel")
+
+
+def _keeps_job_group(build):
+    """A build entry that hands the caller's thread back with the job group
+    it came with: the stage labels (``_tag_jobs``) must not tag the
+    caller's later jobs as the build's last stage."""
+
+    @functools.wraps(build)
+    def wrapped(spark: SparkSession, *args, **kwargs):
+        sc = spark.sparkContext
+        saved = [sc.getLocalProperty(k) for k in _JOB_GROUP_KEYS]
+        try:
+            return build(spark, *args, **kwargs)
+        finally:
+            for k, v in zip(_JOB_GROUP_KEYS, saved):
+                sc.setLocalProperty(k, v)
+
+    return wrapped
+
+
+@_keeps_job_group
 def build_index(
     spark: SparkSession,
     pages: DataFrame,
@@ -896,6 +932,7 @@ def _finish_docs_stage(store: IndexStore, t: float) -> None:
     })
 
 
+@_keeps_job_group
 def build_index_from_docs(
     spark: SparkSession,
     docs: DataFrame,

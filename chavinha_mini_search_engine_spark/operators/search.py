@@ -32,13 +32,10 @@ from __future__ import annotations
 
 import math
 import re
-from typing import Dict, List, Optional, Tuple
+from typing import TYPE_CHECKING, Dict, List, Mapping, Optional, Tuple
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
-from pyspark.sql import DataFrame, SparkSession, Window
-from pyspark.sql import functions as F
 
 from ..config import (
     BM25_CHUNK_WEIGHTS,
@@ -54,6 +51,9 @@ from ..functions.codec import delta_decode, varbyte_decode
 from ..functions.tokenizer import tokenize_py
 from ..oracle.embedder import embed_text
 from ..sources.tables import IndexStore
+
+if TYPE_CHECKING:
+    from pyspark.sql import DataFrame, SparkSession
 
 SCORE_SCHEMA = (
     "id string, parent_id string, doc_type string, parent_doc_type string, "
@@ -77,7 +77,7 @@ def semantic_probes(cfg: IndexConfig, qvec: np.ndarray) -> List[int]:
     (operators/serve.ResidentSearcher)."""
     from itertools import combinations
 
-    from .similarity import _hyperplanes
+    from ..oracle.embedder import _hyperplanes
 
     planes = _hyperplanes(cfg.embedding_dim, cfg.sem_lsh_planes, cfg.sem_lsh_seed)
     q = np.asarray(qvec, dtype=np.float64)
@@ -118,11 +118,37 @@ def _query_terms(query: str) -> List[str]:
 
 # ---------------- scoring core (numpy, shared by both serve paths) -------
 #
-# The Spark path converts each cogroup's pandas frames to these array
-# structures per call; the resident path (operators/serve.py) builds them
-# ONCE at load time -- profiling showed the per-query hot path was ~90%
-# pandas frame overhead (getitem/sort_values/groupby/DataFrame init), not
-# scoring work, so everything below the conversion boundary is numpy-only.
+# The builders below take a column mapping, {column name: array}: the
+# Spark kernel passes each cogroup's pandas frame, the resident path
+# (operators/serve.py) the numpy columns of ``tables.read_columns``, built
+# ONCE at load time.  They touch the mapping only through
+# ``np.asarray(cols[c])``, ``c in cols`` and ``for c in cols``, so both
+# inputs run one code path, and everything below it is numpy-only.
+
+
+def _isnull(a: np.ndarray) -> np.ndarray:
+    """Null mask of a column: NaN in a float column, None in an object
+    column (both inputs convert Arrow nulls so); an int column has no
+    nulls."""
+    if a.dtype.kind == "f":
+        return np.isnan(a)
+    if a.dtype.kind == "O":
+        return np.fromiter((v is None for v in a), dtype=bool, count=len(a))
+    return np.zeros(len(a), dtype=bool)
+
+
+def _factorize_sorted(a: np.ndarray) -> Tuple[np.ndarray, np.ndarray]:
+    """(codes, uniques) with the uniques in ascending order, so code order
+    is value order: one dict pass over the values, then a sort of the
+    distinct ones only."""
+    seen: Dict = {}
+    codes = np.fromiter((seen.setdefault(v, len(seen)) for v in a),
+                        dtype=np.int64, count=len(a))
+    uniques = sorted(seen)
+    rank = np.empty(len(uniques), dtype=np.int64)
+    rank[[seen[v] for v in uniques]] = np.arange(len(uniques))
+    return rank[codes], np.fromiter(uniques, dtype=object,
+                                    count=len(uniques))
 
 
 class ShardState:
@@ -154,31 +180,31 @@ class ShardState:
         return self._emb64, self._has_emb
 
 
-def _state_from_order(attr_pdf: pd.DataFrame, order: np.ndarray,
+def _state_from_order(cols: Mapping, order: np.ndarray,
                       n_docs: int) -> ShardState:
     st = ShardState()
     st.n_docs = n_docs
-    st.ids = attr_pdf["id"].values[order]
+    st.ids = np.asarray(cols["id"])[order]
     st.ids_sort = st.ids.astype(str)          # lexsort-able tie-break key
-    st.parents = attr_pdf["parent_id"].values[order]
-    st.doc_types = attr_pdf["doc_type"].values[order]
-    st.parent_doc_types = attr_pdf["parent_doc_type"].values[order]
+    st.parents = np.asarray(cols["parent_id"])[order]
+    st.doc_types = np.asarray(cols["doc_type"])[order]
+    st.parent_doc_types = np.asarray(cols["parent_doc_type"])[order]
     st.dedup_keys = np.where(
-        pd.isna(st.parents), st.ids, st.parents
+        _isnull(st.parents), st.ids, st.parents
     ).astype(str)
     st.lens = {
-        c[4:]: np.asarray(attr_pdf[c].values, dtype=np.float64)[order]
-        for c in attr_pdf.columns if c.startswith("len_")
+        c[4:]: np.asarray(cols[c], dtype=np.float64)[order]
+        for c in cols if c.startswith("len_")
     }
     st.is_full = st.doc_types == "full_doc"
-    if "sem_bucket" in attr_pdf.columns:
-        sb = attr_pdf["sem_bucket"].values[order]
-        st.sem_bucket = np.where(pd.isna(sb), -1, sb).astype(np.int64)
+    if "sem_bucket" in cols:
+        sb = np.asarray(cols["sem_bucket"])[order]
+        st.sem_bucket = np.where(_isnull(sb), -1, sb).astype(np.int64)
     else:
         st.sem_bucket = np.full(len(st.ids), -1, dtype=np.int64)
     st._emb_vals = (
-        attr_pdf["embedding"].values[order]
-        if "embedding" in attr_pdf.columns else np.full(len(st.ids), None)
+        np.asarray(cols["embedding"])[order]
+        if "embedding" in cols else np.full(len(st.ids), None)
     )
     st._emb64 = None
     # integer stand-ins for the per-query sorts (query-independent, built
@@ -194,15 +220,15 @@ def _state_from_order(attr_pdf: pd.DataFrame, order: np.ndarray,
     return st
 
 
-def shard_state(attr_pdf: pd.DataFrame) -> ShardState:
-    """pandas attributes -> ShardState (the only pandas-touching step)."""
-    lid = np.asarray(attr_pdf["local_id"].values, dtype=np.int64)
+def shard_state(cols: Mapping) -> ShardState:
+    """One shard's attribute columns -> ShardState."""
+    lid = np.asarray(cols["local_id"], dtype=np.int64)
     order = np.argsort(lid)
-    return _state_from_order(attr_pdf, order, int(lid[order[-1]]) + 1)
+    return _state_from_order(cols, order, int(lid[order[-1]]) + 1)
 
 
-def fused_state(attr_pdf: pd.DataFrame) -> Tuple[ShardState, Dict[int, int]]:
-    """pandas attributes for MANY shards -> one global ShardState whose
+def fused_state(cols: Mapping) -> Tuple[ShardState, Dict[int, int]]:
+    """Attribute columns of MANY shards -> one global ShardState whose
     position space is the per-shard dense local-id spaces laid out
     back-to-back in ascending shard order, plus {shard: offset}.
 
@@ -214,10 +240,10 @@ def fused_state(attr_pdf: pd.DataFrame) -> Tuple[ShardState, Dict[int, int]]:
     local_id is dense 0..n_s-1 within each shard, so global position =
     offset[shard] + local_id indexes exactly this (shard, local_id)-
     sorted layout."""
-    shard = np.asarray(attr_pdf["shard"].values, dtype=np.int64)
-    lid = np.asarray(attr_pdf["local_id"].values, dtype=np.int64)
+    shard = np.asarray(cols["shard"], dtype=np.int64)
+    lid = np.asarray(cols["local_id"], dtype=np.int64)
     order = np.lexsort((lid, shard))
-    st = _state_from_order(attr_pdf, order, len(order))
+    st = _state_from_order(cols, order, len(order))
     offsets: Dict[int, int] = {}
     us, starts = np.unique(shard[order], return_index=True)
     ends = np.concatenate((starts[1:], [len(order)]))
@@ -255,9 +281,9 @@ def state_view(st: ShardState, start: int, stop: int) -> ShardState:
     return v
 
 
-def post_groups(post_pdf: pd.DataFrame,
+def post_groups(post: Mapping,
                 shard_offsets: Optional[Dict[int, int]] = None) -> list:
-    """pandas posting blocks -> [(field, term, firsts, lasts, maxs, ns,
+    """Posting-block columns -> [(field, term, firsts, lasts, maxs, ns,
     doc_bytes, tf_bytes)], one per (field, term), blocks sorted by
     first_local so the ranges are disjoint ascending intervals (base blocks
     are consecutive id chunks; delta-segment ids are shifted past every
@@ -266,18 +292,18 @@ def post_groups(post_pdf: pd.DataFrame,
     ({shard: offset}, see fused_state) keeps only those shards, globalizes
     block ranges by their shard's offset and adds a 9th array, the
     per-block base offset of the decode (score_shard ``boffs``)."""
-    if not len(post_pdf) or shard_offsets == {}:
+    if not len(np.asarray(post["first_local"])) or shard_offsets == {}:
         return []
-    cols = [post_pdf[c].to_numpy(dt) for c, dt in (
+    cols = [np.asarray(post[c], dtype=dt) for c, dt in (
         ("first_local", np.int64), ("last_local", np.int64),
         ("max_score", np.float64), ("n", np.int64),
         ("doc_bytes", None), ("tf_bytes", None))]
-    fcode, fvals = pd.factorize(post_pdf["field"].to_numpy(), sort=True)
-    tcode, tvals = pd.factorize(post_pdf["term"].to_numpy(), sort=True)
+    fcode, fvals = _factorize_sorted(np.asarray(post["field"]))
+    tcode, tvals = _factorize_sorted(np.asarray(post["term"]))
     key = fcode * len(tvals) + tcode  # (field, term) order
     if shard_offsets is not None:
         keys = np.array(sorted(shard_offsets), dtype=np.int64)
-        shard = post_pdf["shard"].to_numpy(np.int64)
+        shard = np.asarray(post["shard"], dtype=np.int64)
         pos = np.minimum(np.searchsorted(keys, shard), len(keys) - 1)
         local = np.flatnonzero(keys[pos] == shard)
         boff = np.array([shard_offsets[s] for s in keys.tolist()])[pos[local]]
@@ -595,6 +621,8 @@ def _bm25_shard_kernel(
     )
 
     def kernel(post_pdf: pd.DataFrame, attr_pdf: pd.DataFrame) -> pd.DataFrame:
+        import pandas as pd
+
         empty = pd.DataFrame(
             {c: [] for c in ("id", "parent_id", "doc_type", "parent_doc_type", "score")}
         )
@@ -645,6 +673,8 @@ class SearchEngine:
 
     # --- query compilation ---
     def _term_info(self, terms: List[str], fields: List[str]) -> Dict:
+        from pyspark.sql import functions as F
+
         if not terms:
             return {}
         td = self._term_dict
@@ -681,6 +711,9 @@ class SearchEngine:
         the mode is accepted for parameter parity and does not change
         ranking here; Spark's analog of that tuning is executor/task
         parallelism, owned by the session config."""
+        from pyspark.sql import Window
+        from pyspark.sql import functions as F
+
         if not 1 <= k <= MAX_LIMIT:
             raise ValueError(f"limit must be in [1, {MAX_LIMIT}]")
         if search_type not in ("bm25", "semantic", "hybrid"):
@@ -766,6 +799,8 @@ class SearchEngine:
         tests/test_xxhash.py) -- so the fetch prunes to the hits' shard
         partitions (PartitionFilters, asserted in tests/test_plans.py)
         instead of scanning the widest table."""
+        from pyspark.sql import functions as F
+
         from ..functions.xxhash import spark_pmod_bucket
 
         hit_shards = sorted(

@@ -5,9 +5,14 @@ the right shape for cluster-scale scatter/gather, but local-mode job
 scheduling puts a ~0.3-0.5 s floor under every query, which is what
 BENCH_r01 measured against the reference's ~10 ms resident Vespa server
 (BASELINE.md).  This module is the resident analog: load the index ONCE
-into in-process numpy/pandas structures (the Vespa content node's
-memory-mapped attributes + hot posting pages, api/main.py:348-530 serving
-loop), then answer each query with zero Spark jobs.
+into in-process numpy structures (the Vespa content node's memory-mapped
+attributes + hot posting pages, api/main.py:348-530 serving loop), then
+answer each query with zero Spark jobs.
+
+The serve process imports neither Spark nor pandas: the tables are read
+file by file with ``pq.ParquetFile`` and their Arrow column buffers
+become the numpy arrays directly (``tables.read_columns``); the doc
+fetch reads parquet row groups and maps ids to row positions.
 
 Scale story: at cluster scale each serving replica holds exactly its
 document shards' slice of these structures (attributes + postings are both
@@ -20,10 +25,9 @@ Rank/score parity with SearchEngine is asserted in tests/test_serve.py:
 both paths share the numpy scoring core (operators/search.py score_shard /
 topk_dedup -- the Spark path wraps it in the applyInPandas kernel), so
 scoring, pruning, dedup and enrichment semantics are identical by
-construction.  Here the pandas->numpy conversion runs ONCE at load: one
-fused attribute state (fused_state) and one sorted columnar postings
-layout whose (field, term) lists are slice views (post_groups); warm
-queries touch no pandas at all.
+construction.  Here the columns -> state conversion runs ONCE at load:
+one fused attribute state (fused_state) and one sorted columnar postings
+layout whose (field, term) lists are slice views (post_groups).
 """
 
 from __future__ import annotations
@@ -33,8 +37,6 @@ import threading
 from typing import Dict, List, Optional, Tuple
 
 import numpy as np
-import pandas as pd
-import pyarrow.dataset as pads
 
 from ..config import (
     DEFAULT_LIMIT,
@@ -42,7 +44,7 @@ from ..config import (
     IndexConfig,
 )
 from ..oracle.embedder import embed_text
-from ..sources.tables import IndexStore
+from ..sources.tables import IndexStore, read_columns
 from .search import _query_terms, result_row
 
 ATTR_COLS = [
@@ -57,26 +59,6 @@ POST_COLS = [
 ]
 
 
-def _read_parts_arrow(
-    dirs: List[str], columns: List[str], filter=None,
-) -> pd.DataFrame:
-    """Union dataset dirs (``IndexStore.segment_dirs``) as pandas -- pure
-    pyarrow, no Spark.  Each dir is its own hive dataset, so a shard=
-    partitioned base dir keeps its key as a column next to un-partitioned
-    delta parts."""
-    frames = []
-    for p in dirs:
-        ds = pads.dataset(p, format="parquet", partitioning="hive")
-        if not ds.files:  # an empty shard-group of a pre-flat-layout store
-            continue
-        cols = [c for c in columns if c in ds.schema.names]
-        f = filter if filter is None or "shard" in ds.schema.names else None
-        frames.append(ds.to_table(columns=cols, filter=f).to_pandas())
-    if not frames:
-        return pd.DataFrame(columns=columns)
-    return pd.concat(frames, ignore_index=True)
-
-
 class _DocFetcher:
     """Point-fetch of <=k doc rows by id from the parquet doc store.
 
@@ -89,7 +71,9 @@ class _DocFetcher:
     per-row-group id min/max statistics cached (unified is id-sorted
     within shard and written with ~1 MB row groups, so stats prune to
     one row group per hit); a fetch decodes only matching row groups,
-    one thread per file (pyarrow releases the GIL during decode).
+    one thread per file (pyarrow releases the GIL during decode).  Each
+    decoded row group is cached with its {id: row} map, built once, so a
+    fetch takes the <=k hit rows by position.
     """
 
     # decoded-row-group summary cache entries shared by all fetchers in
@@ -156,9 +140,6 @@ class _DocFetcher:
               shard_of, num_shards: int) -> Dict[str, tuple]:
         """ids -> {id: row tuple in ``columns`` order (sans id)}.
         ``shard_of(id, num_shards)`` is the build's xxhash shard twin."""
-        import pyarrow as pa
-        import pyarrow.compute as pc
-
         wanted_by_shard: Dict[Optional[int], List[str]] = {}
         for i in ids:
             wanted_by_shard.setdefault(shard_of(i, num_shards), []).append(i)
@@ -170,34 +151,41 @@ class _DocFetcher:
             tasks.append((path, list(ids)))
 
         cols_key = tuple(columns)
+        rest = [c for c in columns if c != "id"]
 
         def read_rg(path, pf, rg):
+            """(row group table, {id: row}), decoded and mapped once."""
             key = (path, rg, cols_key)
             with self._cache_lock:
-                t = self._rg_cache.get(key)
-                if t is not None:
+                hit = self._rg_cache.get(key)
+                if hit is not None:
                     self._rg_cache.move_to_end(key)
-                    return t
+                    return hit
             t = pf.read_row_groups([rg], columns=columns, use_threads=False)
+            hit = (t, {v: i for i, v in enumerate(t.column("id").to_pylist())})
             with self._cache_lock:
-                self._rg_cache[key] = t
+                self._rg_cache[key] = hit
                 while len(self._rg_cache) > self.CACHE_ROW_GROUPS:
                     self._rg_cache.popitem(last=False)
-            return t
+            return hit
 
         def one(task):
+            """[(id, row)] of the wanted ids in one file, in row-group
+            order (a later row of the same id wins, as in a scan)."""
             path, wanted = task
             pf, mins, maxs = self._file_meta(path)
-            rgs = [
-                i for i in range(len(mins))
-                if mins[i] is None
-                or any(mins[i] <= w <= maxs[i] for w in wanted)
-            ]
-            if not rgs:
-                return None
-            tbl = pa.concat_tables([read_rg(path, pf, rg) for rg in rgs])
-            return tbl.filter(pc.is_in(tbl.column("id"),
-                                       value_set=pa.array(wanted)))
+            rows = []
+            for rg in range(len(mins)):
+                if mins[rg] is not None and not any(
+                        mins[rg] <= w <= maxs[rg] for w in wanted):
+                    continue
+                t, at = read_rg(path, pf, rg)
+                cols = [t.column(c) for c in rest]
+                rows += [
+                    (w, tuple(c[at[w]].as_py() for c in cols))
+                    for w in wanted if w in at
+                ]
+            return rows
 
         # serial below a task threshold: a <=k-hit fetch touches ~k files
         # x 1 row group, and an A/B on exactly that shape measured the
@@ -215,15 +203,7 @@ class _DocFetcher:
             results = list(self._pool.map(one, tasks))
         else:
             results = [one(t) for t in tasks]
-        out: Dict[str, tuple] = {}
-        rest = [c for c in columns if c != "id"]
-        for tbl in results:
-            if tbl is None or tbl.num_rows == 0:
-                continue
-            d = {c: tbl.column(c).to_pylist() for c in columns}
-            for j in range(tbl.num_rows):
-                out[d["id"][j]] = tuple(d[c][j] for c in rest)
-        return out
+        return {w: row for rows in results for w, row in rows}
 
 
 class ResidentSearcher:
@@ -248,8 +228,8 @@ class ResidentSearcher:
 
         # corpus stats + term dictionary -> plain dicts
         self.stats = store.corpus_stats()
-        td = _read_parts_arrow(store.segment_dirs("term_dict"),
-                               ["field", "term", "df", "idf"])
+        td = read_columns(store.segment_dirs("term_dict"),
+                          ["field", "term", "df", "idf"])
         self.term_dict: Dict[Tuple[str, str], Tuple[float, int]] = dict(zip(
             zip(td["field"].tolist(), td["term"].tolist()),
             zip(td["idf"].astype(np.float64).tolist(),
@@ -257,32 +237,26 @@ class ResidentSearcher:
 
         # attributes -> ONE fused numpy state covering every local shard
         # (per-shard dense local-id spaces laid out back-to-back, ascending
-        # shard order) + zero-copy per-shard views.  The pandas->numpy
+        # shard order) + zero-copy per-shard views.  The columns -> state
         # conversion happens ONCE here instead of on every query, and warm
         # queries score ALL shards in one numpy pass over the fused state
         # instead of a python loop of ~15 small-array calls per term per
         # shard (the dominant resident-latency term once pandas was gone).
         from .search import fused_state, post_groups, state_view
 
+        # cfg-derived so a custom-schema store (fewer indexed fields ->
+        # fewer len_* columns) loads; the default equals ATTR_COLS.
         # shard-subset (content-node) pruning: hive shard= tables prune at
         # the directory level, the flat postings parts filter rows (a
         # cluster deployment would co-partition postings by shard per
         # node; the filter is the single-disk stand-in)
-        shard_filter = None
-        if self.shards is not None:
-            import pyarrow.compute as pc
-
-            shard_filter = pc.field("shard").isin(sorted(self.shards))
-
-        # cfg-derived so a custom-schema store (fewer indexed fields ->
-        # fewer len_* columns) loads; the default equals ATTR_COLS
         attr_cols = [
             "shard", "local_id", "id", "doc_type", "parent_id",
             "parent_doc_type",
         ] + [f"len_{f}" for f in self.cfg.fields] + ["embedding", "sem_bucket"]
-        attrs = _read_parts_arrow(store.segment_dirs("attributes"), attr_cols,
-                                  filter=shard_filter)
-        if len(attrs):
+        attrs = read_columns(store.segment_dirs("attributes"), attr_cols,
+                             shards=self.shards)
+        if len(attrs["local_id"]):
             self.fused, self.shard_offsets = fused_state(attrs)
             off_items = sorted(self.shard_offsets.items())
             bounds = [o for _, o in off_items] + [self.fused.n_docs]
@@ -296,8 +270,8 @@ class ResidentSearcher:
 
         # postings -> one (field, term, first)-sorted columnar layout over
         # every local shard; each entry is slice views (see post_groups)
-        post = _read_parts_arrow(store.segment_dirs("postings"), POST_COLS,
-                                 filter=shard_filter)
+        post = read_columns(store.segment_dirs("postings"), POST_COLS,
+                            shards=self.shards)
         self.post_fused: Dict[Tuple[str, str], tuple] = {
             (g[0], g[1]): g for g in post_groups(post, self.shard_offsets)
         }
@@ -326,15 +300,19 @@ class ResidentSearcher:
         # the build ran with cfg.graph_ann (the Vespa hnsw-attribute
         # analog), rebuilt lazily per shard otherwise; frozen graphs are
         # cached per shard after first use
-        self._graph_rows_by_shard: Dict[int, pd.DataFrame] = {}
+        self._graph_rows_by_shard: Dict[int, Dict[str, np.ndarray]] = {}
         if store.exists("graph"):
-            grows = _read_parts_arrow(
-                store.segment_dirs("graph"),
-                ["shard", "local_id", "level", "nbrs"],
-                filter=shard_filter,
-            )
+            g = read_columns(store.segment_dirs("graph"),
+                             ["shard", "local_id", "level", "nbrs"],
+                             shards=self.shards)
+            # one (shard, local_id) sort, split at the shard boundaries
+            order = np.lexsort((np.asarray(g["local_id"], dtype=np.int64),
+                                np.asarray(g["shard"], dtype=np.int64)))
+            shards, starts = np.unique(g["shard"][order], return_index=True)
             self._graph_rows_by_shard = {
-                int(s): g for s, g in grows.groupby("shard")
+                int(s): {c: g[c][rows] for c in ("local_id", "level", "nbrs")}
+                for s, rows in zip(shards.tolist(),
+                                   np.split(order, starts[1:]))
             }
         self._graphs: Dict[int, tuple] = {}
 
@@ -491,12 +469,10 @@ class ResidentSearcher:
 
         m64, has = state.embmat(dim)
         rows = self._graph_rows_by_shard.get(shard)
-        if rows is not None and len(rows):
-            rows = rows.sort_values("local_id")
-            sub = rows["local_id"].to_numpy(dtype=np.int64)
+        if rows is not None:  # local_id-sorted at load
+            sub = rows["local_id"].astype(np.int64)
             g = graph_from_rows(
-                sub, rows["level"].to_numpy(),
-                rows["nbrs"].to_numpy(), m=self.cfg.graph_m,
+                sub, rows["level"], rows["nbrs"], m=self.cfg.graph_m,
             )
         else:
             sub = np.flatnonzero(has & ~state.is_full)

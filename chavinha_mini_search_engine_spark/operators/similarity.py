@@ -17,13 +17,14 @@
 
 from __future__ import annotations
 
-import hashlib
 from typing import List, Optional, Sequence
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ..oracle.embedder import _hyperplanes
 
 
 def _dot(a, b):
@@ -188,13 +189,6 @@ def cosine_neardup_pairs_banded(
         j.select("a", "b", F.round(_pair_cosine("va", "vb"), 6).alias("cosine"))
         .filter(F.col("cosine") >= threshold)
     )
-
-
-def _hyperplanes(dim: int, n_planes: int, seed: int = 42) -> np.ndarray:
-    rng = np.random.Generator(
-        np.random.PCG64(int.from_bytes(hashlib.sha1(f"lsh-{seed}".encode()).digest()[:8], "big"))
-    )
-    return rng.standard_normal((n_planes, dim))
 
 
 def _bucket_expr(vec_col, planes: np.ndarray):

@@ -34,6 +34,16 @@ def _token_vec(token: str, dim: int) -> np.ndarray:
     return rng.standard_normal(dim)
 
 
+def _hyperplanes(dim: int, n_planes: int, seed: int = 42) -> np.ndarray:
+    """The seeded random hyperplanes whose sign bits bucket an embedding
+    (``attributes.sem_bucket``, the lsh probes): one definition for the
+    build, the Spark query path and the resident one."""
+    rng = np.random.Generator(
+        np.random.PCG64(int.from_bytes(hashlib.sha1(f"lsh-{seed}".encode()).digest()[:8], "big"))
+    )
+    return rng.standard_normal((n_planes, dim))
+
+
 # tiny process-local memo: token vocabulary is small relative to corpus
 _CACHE: dict = {}
 

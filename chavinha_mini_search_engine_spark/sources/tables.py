@@ -35,7 +35,11 @@ are the base dir plus the committed parts of their ``_delta`` tier,
 (Spark) and every pyarrow reader of the serve path read exactly those
 dirs, so no reader outside this module names a ``_delta`` table.
 
-Reads take the footer schema: ``read``/``read_parts`` pass Spark the
+The serve process reads with ``read_columns``: each file of a dataset dir
+through ``pq.ParquetFile``, its Arrow buffers turned into numpy arrays
+(``arrow_to_numpy``) with no Spark and no pandas in the process.
+
+Spark reads take the footer schema: ``read``/``read_parts`` pass Spark the
 schema that Spark's writer recorded in each dir's first parquet footer
 (``_SPARK_SCHEMA_KEY``, the key Spark's own inference reads back), so a
 read plans with no schema-inference job; hive partition columns are still
@@ -52,12 +56,16 @@ import threading
 import time
 import uuid
 from dataclasses import asdict
-from typing import Optional
+from typing import TYPE_CHECKING, Dict, Iterator, List, Optional, Tuple
 
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.types import StructType
+import numpy as np
 
 from ..config import IndexConfig
+
+if TYPE_CHECKING:
+    import pyarrow as pa
+    from pyspark.sql import DataFrame, SparkSession
+    from pyspark.sql.types import StructType
 
 
 # Writer options for the doc-store tables (unified / unified_delta), the
@@ -87,22 +95,33 @@ DOC_STORE_WRITE_OPTS = {
 _SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
 
 
-def _first_parquet(path: str) -> Optional[str]:
-    """The first data file under ``path`` in sorted walk order, skipping
-    the ``_``/``.`` entries Spark's file listing skips; None if there is
-    none."""
+def parquet_files(path: str) -> Iterator[Tuple[str, Dict[str, str]]]:
+    """(file, hive keys) of every data file under ``path`` in sorted walk
+    order, skipping the ``_``/``.`` entries Spark's file listing skips.
+    The keys are the ``k=v`` dirs between ``path`` and the file (a
+    ``shard=3`` dir gives ``{"shard": "3"}``)."""
     for root, dirs, files in os.walk(path):
         dirs[:] = sorted(d for d in dirs if not d.startswith(("_", ".")))
+        keys = dict(
+            d.split("=", 1) for d in os.path.relpath(root, path).split(os.sep)
+            if "=" in d
+        )
         for f in sorted(files):
             if f.endswith(".parquet") and not f.startswith(("_", ".")):
-                return os.path.join(root, f)
-    return None
+                yield os.path.join(root, f), keys
+
+
+def _first_parquet(path: str) -> Optional[str]:
+    """The first data file under ``path`` (``parquet_files`` order); None
+    if there is none."""
+    return next((f for f, _keys in parquet_files(path)), None)
 
 
 def _footer_schema(path: str) -> Optional[StructType]:
     """The Spark schema a Spark writer recorded in ``path``'s footer, or
     None for a file written by another writer (pyarrow)."""
     import pyarrow.parquet as pq
+    from pyspark.sql.types import StructType
 
     raw = (pq.read_metadata(path).metadata or {}).get(_SPARK_SCHEMA_KEY)
     return StructType.fromJson(json.loads(raw)) if raw else None
@@ -118,6 +137,111 @@ def _read_dir(spark: SparkSession, path: str,
     schema = _footer_schema(first) if first else None
     reader = spark.read.schema(schema) if schema is not None else spark.read
     return reader.parquet(path)
+
+
+# ---------- driver-side columnar reads: Arrow buffers -> numpy ----------
+
+# the fixed-width Arrow types Spark writes (by ``str(type)``), read as
+# numpy views of their data buffer
+_FIXED = {
+    "int8": np.int8, "int16": np.int16, "int32": np.int32,
+    "int64": np.int64, "float": np.float32, "double": np.float64,
+}
+
+
+def _objects(vals) -> np.ndarray:
+    """A 1-d object array holding ``vals`` as they are (equal-length
+    sequences stay elements, bytes keep trailing NULs)."""
+    return np.fromiter(vals, dtype=object, count=len(vals))
+
+
+def _array_to_numpy(a: "pa.Array") -> np.ndarray:
+    n, off, name = len(a), a.offset, str(a.type)
+    if not n:
+        return np.empty(0, dtype=_FIXED.get(name, object))
+    bufs = a.buffers()
+    valid = None
+    if a.null_count:
+        valid = np.unpackbits(np.frombuffer(bufs[0], np.uint8),
+                              bitorder="little")[off:off + n].astype(bool)
+    dt = _FIXED.get(name)
+    if dt is not None:
+        out = np.frombuffer(bufs[1], dt, count=off + n)[off:]
+        if valid is not None:
+            out = out.astype(np.float64)
+            out[~valid] = np.nan
+        return out
+    if name not in ("string", "binary") and not name.startswith("list<"):
+        return _objects(a.to_pylist())
+    o = np.frombuffer(bufs[1], np.int32, count=off + n + 1)[off:].tolist()
+    spans = zip(o[:-1], o[1:])
+    if name.startswith("list<"):
+        child = _array_to_numpy(a.values)
+        out = _objects([child[i:j] for i, j in spans])
+    else:
+        raw = bufs[2].to_pybytes() if bufs[2] is not None else b""
+        if name == "binary":
+            out = _objects([raw[i:j] for i, j in spans])
+        elif raw.isascii():  # byte offsets are char offsets: decode once
+            text = raw.decode("ascii")
+            out = _objects([text[i:j] for i, j in spans])
+        else:
+            out = _objects([raw[i:j].decode() for i, j in spans])
+    if valid is not None:
+        out[~valid] = None
+    return out
+
+
+def arrow_to_numpy(col) -> np.ndarray:
+    """An Arrow column (Array or ChunkedArray) as one numpy array, built
+    from its buffers with no pandas step (``to_numpy`` imports pandas):
+
+    - fixed-width numbers are views of the data buffer; with nulls the
+      column turns float64 with NaN at the null slots (as pandas does);
+    - strings and binary are Python ``str``/``bytes`` cut from the
+      offsets and data buffers, None at null slots;
+    - a list is an object array of per-row views of its values array
+      (``list<float>`` embeddings: float32 views of one buffer).
+
+    Any other type (bool, large_*, ...) goes through ``to_pylist``."""
+    parts = [_array_to_numpy(a) for a in getattr(col, "chunks", [col])]
+    return parts[0] if len(parts) == 1 else np.concatenate(parts)
+
+
+def read_columns(dirs: List[str], columns: List[str],
+                 shards: Optional[set] = None) -> Dict[str, np.ndarray]:
+    """``columns`` of the union of dataset dirs (``segment_dirs``) as
+    {name: numpy array}: no Spark, no pandas.  Each file is read with
+    ``pq.ParquetFile``; a ``k=v`` dir key (a base table's ``shard=K``)
+    becomes an int column next to the file's own, so shard-partitioned
+    base dirs and un-partitioned delta parts union by name.  ``shards``
+    keeps only those shards' rows (``shard`` must be among ``columns``);
+    ``shard=`` dirs of other shards are not opened.  No file at all gives
+    every column, empty."""
+    import pyarrow.parquet as pq
+
+    assert shards is None or "shard" in columns
+    pieces: Dict[str, list] = {c: [] for c in columns}
+    for d in dirs:
+        for path, keys in parquet_files(d):
+            if (shards is not None and "shard" in keys
+                    and int(keys["shard"]) not in shards):
+                continue
+            pf = pq.ParquetFile(path)
+            t = pf.read(columns=[c for c in columns if c not in keys])
+            for c in columns:
+                pieces[c].append(
+                    np.full(t.num_rows, int(keys[c]), dtype=np.int64)
+                    if c in keys else arrow_to_numpy(t.column(c)))
+    out = {
+        c: np.concatenate(ps) if ps else np.empty(0, dtype=object)
+        for c, ps in pieces.items()
+    }
+    if shards is not None:
+        keep = np.isin(out["shard"], sorted(shards))
+        if not keep.all():
+            out = {c: a[keep] for c, a in out.items()}
+    return out
 
 
 class IndexStore:
@@ -186,14 +310,13 @@ class IndexStore:
 
     def corpus_stats(self) -> dict:
         """{field: (n_docs, avgdl)} of the ``corpus_stats`` table, read
-        with pyarrow: a few rows, so no Spark job."""
-        import pyarrow.dataset as pads
-
-        t = pads.dataset(self.path("corpus_stats"), format="parquet").to_table(
-            columns=["field", "n_docs", "avgdl"]).to_pydict()
+        with ``read_columns``: a few rows, so no Spark job."""
+        t = read_columns([self.path("corpus_stats")],
+                         ["field", "n_docs", "avgdl"])
         return {
             f: (int(n), float(a))
-            for f, n, a in zip(t["field"], t["n_docs"], t["avgdl"])
+            for f, n, a in zip(t["field"].tolist(), t["n_docs"].tolist(),
+                               t["avgdl"].tolist())
         }
 
     def segment_offsets(self) -> dict:

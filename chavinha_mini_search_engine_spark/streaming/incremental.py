@@ -29,7 +29,6 @@ import time
 from concurrent.futures import ThreadPoolExecutor
 from typing import Optional
 
-import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -79,6 +78,7 @@ def stream_index_deltas(
     from ..operators.index_build import (
         attributes,
         build_postings_for,
+        literal_lookup,
         tokenize_tf,
         unified_corpus,
     )
@@ -148,21 +148,13 @@ def stream_index_deltas(
             u = unified_corpus(docs, chunks, cfg)
             # shift local ids past every already-written segment's ids per
             # shard so delta postings never collide with base or
-            # earlier-delta postings; the offsets enter Spark as an Arrow
-            # local relation (a LocalTableScan, not a Python RDD scan)
-            offs_df = spark.createDataFrame(pa.table({
-                "shard": pa.array(list(offs), pa.int32()),
-                "max_local": pa.array(list(offs.values()), pa.int64()),
-            }))
-            u = keep(
-                u.join(F.broadcast(offs_df), "shard", "left")
-                .withColumn(
-                    "local_id",
-                    F.col("local_id")
-                    + F.coalesce(F.col("max_local") + 1, F.lit(0)),
-                )
-                .drop("max_local")
-            )
+            # earlier-delta postings; the offsets enter the plan as a
+            # literal map (no relation, so no job)
+            max_local = literal_lookup(offs, F.col("shard"), "bigint")
+            u = keep(u.withColumn(
+                "local_id",
+                F.col("local_id") + F.coalesce(max_local + 1, F.lit(0)),
+            ))
             # one job materializes the cached rows and yields the batch's
             # new per-shard maxima; no row (no `en` page) -> no segment
             batch_max = (

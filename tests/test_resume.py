@@ -144,3 +144,28 @@ def test_build_from_docs_matches_build_index(spark, tiny_pages,
         assert _collect(a, spark, table, parts) == _collect(b, spark, table, parts), table
     _check_build_metrics(a, spark)
     _check_build_metrics(b, spark)
+
+
+def test_build_restores_the_callers_job_group(spark, tiny_pages, built,
+                                              tmp_path):
+    """build_index labels its stages' jobs ``build:<stage>`` and hands the
+    caller's thread back with the job group it came with (a resume over a
+    built copy still runs the postings stage's tagged verify)."""
+    import shutil
+
+    root = str(tmp_path / "idx")
+    shutil.copytree(built.root, root)
+    store = IndexStore(root)
+    sc = spark.sparkContext
+    sc.setJobGroup("caller", "the caller's jobs")
+    try:
+        before = sc.getLocalProperty("spark.jobGroup.id")
+        build_index(spark, spark.read.parquet(tiny_pages), store,
+                    store.saved_config())
+        assert sc.getLocalProperty("spark.jobGroup.id") == before == "caller"
+        assert sc.getLocalProperty("spark.job.description") == \
+            "the caller's jobs"
+    finally:
+        for k in ("spark.jobGroup.id", "spark.job.description",
+                  "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(k, None)

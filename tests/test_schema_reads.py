@@ -5,7 +5,8 @@ recorded in each dir's parquet footer, so a read plans without the
 one-task schema-inference job ``spark.read.parquet`` runs for every dir;
 a table written by pyarrow (no Spark schema in its footer) keeps the
 inferred read.  Driver-side lists enter Spark as Arrow local relations
-(``LocalTableScan``), not as Python RDD scans.
+(``LocalTableScan``), not as Python RDD scans; a dict of a few entries
+(the stream's id offsets) enters as a literal map, with no relation.
 """
 
 import os
@@ -153,10 +154,10 @@ def test_scan_unit_frame_is_a_local_relation(spark, built):
     assert "Scan ExistingRDD" not in plan
 
 
-def test_stream_offsets_frame_is_a_local_relation(spark, built,
-                                                  tmp_path_factory):
-    """The stream's per-batch offsets frame plans as a LocalTableScan.  (The
-    micro-batch itself reaches foreachBatch as an RDD scan.)"""
+def test_stream_offsets_are_a_literal_map(spark, built, tmp_path_factory):
+    """The stream's per-batch id offsets enter the plan as a literal map
+    lookup on ``shard``: no offsets relation is scanned or joined, so
+    shipping them runs no job."""
     from chavinha_mini_search_engine_spark.streaming import incremental
 
     root = str(tmp_path_factory.mktemp("so") / "idx")
@@ -182,7 +183,9 @@ def test_stream_offsets_frame_is_a_local_relation(spark, built,
     finally:
         IndexStore.write = orig
     assert len(plans) == 1
-    assert _scans_of(plans[0], "shard max_local") == {"LocalTableScan"}
+    assert _scans_of(plans[0], "shard max_local") == set()
+    assert "BroadcastExchange" not in plans[0]
+    assert re.search(r"map\([^()]*\)\[shard#\d+\]", plans[0]), plans[0]
 
 
 def test_search_results_are_local_relations(spark, built):

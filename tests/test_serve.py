@@ -236,17 +236,22 @@ def _reference_post_fused(store, rs, shards=None):
     (field, term) concatenated in ascending shard order with block ranges
     globalized by the searcher's shard offsets."""
     import numpy as np
+    import pandas as pd
     import pyarrow.compute as pc
+    import pyarrow.dataset as pads
 
-    from chavinha_mini_search_engine_spark.operators.serve import (
-        POST_COLS,
-        _read_parts_arrow,
-    )
+    from chavinha_mini_search_engine_spark.operators.serve import POST_COLS
 
-    post = _read_parts_arrow(
-        store.segment_dirs("postings"), POST_COLS,
-        filter=None if shards is None else pc.field("shard").isin(shards),
-    )
+    # its own dataset read, independent of the searcher's reader
+    frames = []
+    for d in store.segment_dirs("postings"):
+        ds = pads.dataset(d, format="parquet", partitioning="hive")
+        if ds.files:
+            frames.append(ds.to_table(
+                columns=POST_COLS,
+                filter=None if shards is None
+                else pc.field("shard").isin(shards)).to_pandas())
+    post = pd.concat(frames, ignore_index=True)
     by_ft = {}
     for (f, t, s), g in post.groupby(["field", "term", "shard"]):
         if int(s) in rs.shard_offsets:
@@ -607,10 +612,110 @@ def test_post_groups_shuffled_frame(blocks, rnd):
     for r in rows:
         members[(r["field"], r["term"])].add(r["first_local"])
     rnd.shuffle(rows)
-    groups = post_groups(pd.DataFrame(rows))
-    assert [g[:2] for g in groups] == sorted(members)
-    for f, t, firsts, lasts, maxs, ns, docb, tfb in groups:
-        assert np.all(np.diff(firsts) > 0)
-        assert set(firsts.tolist()) == members[(f, t)]
-        assert np.array_equal(lasts - firsts + 1, ns)
-        assert docb.tolist() == [f"d{x}".encode() for x in firsts.tolist()]
+    frame = pd.DataFrame(rows)
+    # the Spark kernel's pandas frame and the loader's dict of arrays
+    for post in (frame, {c: frame[c].to_numpy() for c in frame}):
+        groups = post_groups(post)
+        assert [g[:2] for g in groups] == sorted(members)
+        for f, t, firsts, lasts, maxs, ns, docb, tfb in groups:
+            assert np.all(np.diff(firsts) > 0)
+            assert set(firsts.tolist()) == members[(f, t)]
+            assert np.array_equal(lasts - firsts + 1, ns)
+            assert docb.tolist() == [
+                f"d{x}".encode() for x in firsts.tolist()]
+
+
+_SERVE_PROCESS = """
+import json, sys, urllib.request
+from chavinha_mini_search_engine_spark.http_api import ResidentHTTPServer
+from chavinha_mini_search_engine_spark.operators.serve import ResidentSearcher
+from chavinha_mini_search_engine_spark.sources.tables import IndexStore
+
+q = "python async programming"
+hits = {}
+for root in sys.argv[1:]:
+    store = IndexStore(root)
+    rs = ResidentSearcher(store)
+    for st in ("bm25", "hybrid", "semantic"):
+        hits[f"{root} {st}"] = len(rs.search(q, st, 5))
+    for mode in ("lsh", "graph"):
+        hits[f"{root} {mode}"] = len(rs.search(q, "semantic", 5, mode))
+    srv = ResidentHTTPServer(store, searcher=rs).start()
+    try:
+        for path in ("/api/search?q=python&search_type=hybrid", "/api/stats",
+                     "/health"):
+            url = f"http://127.0.0.1:{srv.port}{path}"
+            with urllib.request.urlopen(url) as r:
+                assert r.status == 200, (path, r.status)
+                json.loads(r.read())
+    finally:
+        srv.stop()
+print(json.dumps({"hits": hits, "imported": sorted(
+    m for m in ("pandas", "pyspark", "py4j", "pyarrow.dataset")
+    if m in sys.modules)}))
+"""
+
+
+def test_serve_process_imports_no_spark_or_pandas(built, delta_store):
+    """A process that loads the resident searcher over a built store and a
+    base + delta store, queries every mode and serves each HTTP endpoint
+    never imports Spark, py4j, pandas or pyarrow.dataset."""
+    import json
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    r = subprocess.run(
+        [sys.executable, "-c", _SERVE_PROCESS, built.root, delta_store[0].root],
+        cwd=repo, capture_output=True, text=True, timeout=300,
+        env={**os.environ, "PYTHONPATH": repo},
+    )
+    assert r.returncode == 0, r.stderr
+    out = json.loads(r.stdout.splitlines()[-1])
+    assert out["imported"] == []
+    assert all(out["hits"].values()), out["hits"]
+
+
+def test_arrow_to_numpy_matches_to_pylist():
+    """The serve loader's buffer conversion gives to_pylist's values: nulls
+    (NaN in a numeric column, None elsewhere), sliced and chunked arrays,
+    non-ASCII strings, bytes with NULs, nested lists."""
+    import math
+
+    import numpy as np
+    import pyarrow as pa
+
+    from chavinha_mini_search_engine_spark.sources.tables import arrow_to_numpy
+
+    def norm(v):
+        if isinstance(v, np.ndarray):
+            return [norm(x) for x in v.tolist()]
+        if isinstance(v, list):
+            return [norm(x) for x in v]
+        if isinstance(v, float) and math.isnan(v):
+            return None
+        return v
+
+    cases = [
+        pa.array([1, None, 3], pa.int32()),
+        pa.array([1.5, None], pa.float32()),
+        pa.array([5, 6, 7], pa.int64()).slice(1),
+        pa.array(["a", None, "é", ""]),
+        pa.array(["x", "yy", "zzz", None, "w"]).slice(1, 3),
+        pa.array([b"\x00", None, b"ab\x00"]),
+        pa.array([[1.0, 2.0], None, [], [3.0]], pa.list_(pa.float32())),
+        pa.array([[1.0], [2.0, 3.0], None], pa.list_(pa.float64())).slice(1),
+        pa.array([[[1, 2], [3]], [], None], pa.list_(pa.list_(pa.int64()))),
+        pa.array([True, None]),
+        pa.chunked_array([pa.array([1, 2]), pa.array([3])]),
+        pa.chunked_array([pa.array([], pa.string())]),
+    ]
+    for col in cases:
+        got = arrow_to_numpy(col)
+        assert got.ndim == 1 and len(got) == len(col)
+        assert [norm(x) for x in got] == col.to_pylist(), col.type
+    # fixed width without nulls: a view of the Arrow data buffer
+    col = pa.array([1, 2, 3], pa.int64())
+    assert arrow_to_numpy(col).dtype == np.int64
+    assert np.shares_memory(arrow_to_numpy(col),
+                            np.frombuffer(col.buffers()[1], np.int64))
