@@ -29,9 +29,11 @@ Scale design (the part that must survive 10^12 docs):
   and the doclens pivot, both collapsed map-side, (4) merge
   groupBy(shard, mkey) -- input is already run-compressed, a few bytes
   per posting.  Nothing shuffles raw HTML.
-- **Postings layout**: flat block rows carrying tbucket =
-  hash(term) % term_buckets as a plain column, sorted by it within each
-  write task's one file (``term_dict`` likewise).  A query's
+- **Postings layout**: flat block rows keyed by the int64 term id
+  ``tid = xxhash64(field, term)`` (``term_dict`` alone maps (field, term)
+  to it; postings hold no string), carrying their dictionary row's
+  tbucket = hash(term) % term_buckets as a plain column, sorted by it
+  within each write task's one file (``term_dict`` likewise).  A query's
   ``tbucket IN (...)`` filter is pushed into the parquet scan and prunes
   by row-group min/max statistics, so no part fans out into a file per
   bucket, each paying a commit and a resident-load open.
@@ -56,11 +58,6 @@ from ..sources.tables import DOC_STORE_WRITE_OPTS, IndexStore
 from .chunk import chunk_docs
 from .embed import embed_chunks, embed_docs
 from .extract import extract_docs
-
-UNIFIED_COLS = [
-    "id", "doc_type", "parent_id", "url", "domain", "title", "content",
-    "description", "chunk_content", "parent_doc_type",
-]
 
 # partial runs: per-posting payload is (gap, tf, dl) -- all varbyte,
 # ~3-4 B/posting; no f64 score crosses the merge exchange.
@@ -234,8 +231,6 @@ def _postings_part_metrics(path: str) -> list:
     import pyarrow.dataset as pads
 
     ds = pads.dataset(path, format="parquet", partitioning="hive")
-    if not ds.files:  # an empty shard-group of a pre-flat-layout store
-        return []
     acc: dict = {}  # shard -> [blocks, postings, bytes]
     for rb in ds.to_batches(columns=["shard", "n", "doc_bytes", "tf_bytes"]):
         shard = rb.column("shard").to_numpy()
@@ -616,7 +611,7 @@ def literal_lookup(mapping: dict, key, value_type: str):
 
 
 def term_dict(tf: DataFrame, stats: dict, cfg: IndexConfig) -> DataFrame:
-    """(field, term, df, idf, tbucket).  idf = ln(1 + (N-n+0.5)/(n+0.5)),
+    """(field, term, df, idf, tbucket, tid).  idf = ln(1 + (N-n+0.5)/(n+0.5)),
     N from ``stats`` ({field: (n_docs, avgdl)}, ``IndexStore.corpus_stats``).
 
     The df agg keys on the int ``fidx`` and the field string materializes
@@ -632,7 +627,8 @@ def term_dict(tf: DataFrame, stats: dict, cfg: IndexConfig) -> DataFrame:
 
 def term_dict_from_df(df_tbl: DataFrame, stats: dict,
                       cfg: IndexConfig) -> DataFrame:
-    """Attach idf + tbucket to a vocab-grain (field, term, df) table --
+    """Attach idf, tbucket and the term id ``tid = xxhash64(field, term)``
+    (the postings' only key) to a vocab-grain (field, term, df) table --
     the shared tail of term_dict and of compact_tiered's merged df.
     ``stats`` is ``IndexStore.corpus_stats()``; its n_docs enter the plan
     as a literal map (no relation, so no job), and a field without stats
@@ -647,6 +643,7 @@ def term_dict_from_df(df_tbl: DataFrame, stats: dict,
             + (F.col("n_docs") - F.col("df") + F.lit(0.5)) / (F.col("df") + F.lit(0.5))
         ).alias("idf"),
         tbucket_col(F.col("term"), cfg.term_buckets).alias("tbucket"),
+        F.xxhash64("field", "term").alias("tid"),
     )
 
 
@@ -672,21 +669,21 @@ def build_postings_for(
     compaction deltas, a shard-group with no tf file) the DataFrame
     itself is scanned through the JVM.
 
-    The merge keys on ``tid = xxhash64(field, term)``; the dictionary
-    join happens ONLY at block grain, where it re-attaches (field, term)
-    and idf (max_score = idf * max_tfnorm), so the on-disk postings
-    schema carries the strings and posting-grain rows never join
-    anything.  ``verify_tid_unique`` (a task of every build's postings
-    stage) guards the astronomically-unlikely 64-bit collision, which
-    would otherwise silently merge two terms' lists.  The stored
-    max_score gets a 1e-12 relative bump: the serve kernel computes
-    fl(fl(idf*tf)/denom) while this path stores fl(idf * fl(max
-    tf/denom)), which can differ by ~2 ulp (~4e-16 relative) either way;
-    the bump keeps the block bound a sound upper bound (pruning stays
-    lossless -- a slightly larger bound can only skip fewer blocks) at a
-    cost of ~1e-12 looser pruning.  tests/test_codec.py::
-    test_postings_match_reference checks both scans against a pure-Python
-    encode.
+    The merge keys on ``tid = xxhash64(field, term)``, and so do the
+    written blocks: the dictionary join happens ONLY at block grain, on
+    ``tid``, and attaches idf (max_score = idf * max_tfnorm) and the
+    term's tbucket, so posting-grain rows never join anything and the
+    on-disk postings carry no string.  ``verify_tid_unique`` (a task of
+    every build's postings stage) guards the astronomically-unlikely
+    64-bit collision, which would otherwise silently merge two terms'
+    lists.  The stored max_score gets a 1e-12 relative bump: the serve
+    kernel computes fl(fl(idf*tf)/denom) while this path stores fl(idf *
+    fl(max tf/denom)), which can differ by ~2 ulp (~4e-16 relative)
+    either way; the bump keeps the block bound a sound upper bound
+    (pruning stays lossless -- a slightly larger bound can only skip
+    fewer blocks) at a cost of ~1e-12 looser pruning.
+    tests/test_codec.py::test_postings_paths_identical checks both scans
+    against a pure-Python encode.
     """
     if scan_units:
         # direct-pyarrow encode scan: the driver enumerated (file,
@@ -723,19 +720,14 @@ def build_postings_for(
         _make_merge_runs_tfnorm(cfg.block_size, cfg.k1, cfg.b, avgdl_by_fidx),
         schema=POSTINGS_SCHEMA_TFNORM,
     )
-    # block-grain dictionary join attaches (field, term) AND idf;
+    # block-grain dictionary join attaches idf and tbucket;
     # max_score = idf * max_tfnorm (+1e-12 bump, see docstring)
-    names = tdict.select(
-        F.xxhash64("field", "term").alias("tid"), "field", "term", "idf"
-    )
-    blocks = blocks.join(names, "tid").drop("tid")
+    blocks = blocks.join(tdict.select("tid", "idf", "tbucket"), "tid")
     blocks = blocks.select(
-        "field", "term", "shard", "block_idx", "first_local",
-        "last_local", "n",
+        "tid", "shard", "block_idx", "first_local", "last_local", "n",
         (F.col("idf") * F.col("max_tfnorm") * F.lit(1.0 + 1e-12))
         .alias("max_score"),
-        "doc_bytes", "tf_bytes",
-        tbucket_col(F.col("term"), cfg.term_buckets).alias("tbucket"),
+        "doc_bytes", "tf_bytes", "tbucket",
     )
     # no exchange: each write task writes one file, sorted by tbucket so
     # its row-group statistics prune a query's ``tbucket IN (...)`` scan
@@ -743,25 +735,16 @@ def build_postings_for(
 
 
 def verify_tid_unique(tdict: DataFrame) -> None:
-    """Raise if xxhash64(field, term) collides within the dictionary (the
-    integer posting keys would silently merge two terms).  One hash-agg
-    over the dictionary -- vocabulary-sized, not corpus-sized."""
-    ncol = (
-        tdict.groupBy(F.xxhash64("field", "term").alias("tid"))
-        .count().filter(F.col("count") > 1).count()
-    )
+    """Raise if the stored ``tid = xxhash64(field, term)`` collides within
+    the dictionary (the integer posting keys would silently merge two
+    terms).  One hash-agg over the dictionary -- vocabulary-sized, not
+    corpus-sized."""
+    ncol = tdict.groupBy("tid").count().filter(F.col("count") > 1).count()
     if ncol:
         raise RuntimeError(
             f"{ncol} xxhash64(field, term) collisions in term_dict; "
             "change the term-id seed"
         )
-
-
-ATTR_SCHEMA_COLS = [
-    "shard", "local_id", "id", "doc_type", "parent_id", "parent_doc_type",
-    "len_title", "len_content", "len_description", "len_chunk_content",
-    "embedding", "sem_bucket",
-]
 
 
 def attributes(unified: DataFrame, cfg: IndexConfig, tf: DataFrame,
@@ -832,8 +815,8 @@ def attributes(unified: DataFrame, cfg: IndexConfig, tf: DataFrame,
         return out
 
     u = u.withColumn("sem_bucket", _bucket(F.col("embedding")))
-    # cfg-derived projection (== ATTR_SCHEMA_COLS for the default schema):
-    # a custom-field index carries exactly its own len_* columns
+    # cfg-derived projection: a custom-field index carries exactly its
+    # own len_* columns
     cols = [
         "shard", "local_id", "id", "doc_type", "parent_id",
         "parent_doc_type",
@@ -1067,7 +1050,7 @@ def build_index_from_docs(
         # decoded at posting grain exactly once more (term_dict's df
         # agg), everywhere else at block/term grain.  tokenize_tf emits
         # fidx natively (no field string at token grain); tid must hash
-        # the STRING field name to stay identical to the query side's
+        # the STRING field name to stay identical to term_dict's
         # xxhash64(field, term), so field_col re-derives it inside the
         # hash expression only.
         tf = tf.withColumn(
@@ -1154,17 +1137,16 @@ def build_index_from_docs(
 
     def _attributes_task() -> None:
         # stage: attributes (consumes the materialized doclens table -- no
-        # second tokenization, no posting-grain re-scan; tf fallback keeps
-        # stores built before doclens existed resumable).  Depends only on
+        # second tokenization, no posting-grain re-scan).  Depends only on
         # stats-stage outputs, so it runs CONCURRENTLY with the postings
         # groups (guide §2.6) and back-fills their serial tails.
         store.begin_stage("attributes")
         _tag_jobs(spark, "attributes")
         spark.sparkContext.setJobDescription("attributes")
         t = time.time()
-        lens = store.read(spark, "doclens") if store.exists("doclens") else None
         store.write(
-            attributes(unified, cfg, tf=tf, lens=lens)
+            attributes(unified, cfg, tf=tf,
+                       lens=store.read(spark, "doclens"))
             .repartition(cfg.num_doc_shards, "shard"),
             "attributes", partition_by=["shard"],
         )
@@ -1390,17 +1372,17 @@ def compact_tiered(
                 if not p.startswith("delta=")
             ])
             old_idf = base.read(spark, "term_dict").select(
-                "field", "term", F.col("idf").alias("idf_old")
+                "tid", F.col("idf").alias("idf_old")
             )
             reb = (
-                post.join(old_idf, ["field", "term"])
-                .join(td.select("field", "term", "idf"), ["field", "term"])
+                post.join(old_idf, "tid")
+                .join(td.select("tid", "field", "idf"), "tid")
                 .withColumn(
                     "max_score",
                     F.col("max_score") / F.col("idf_old") * F.col("idf")
                     * inflate * F.lit(1.0 + 1e-12),
                 )
-                .drop("idf_old", "idf")
+                .drop("idf_old", "field", "idf")
             )
             out.write(reb.sortWithinPartitions("tbucket"),
                       "postings", part="grp=0")

@@ -4,12 +4,13 @@ D1, J4-J5, P11/P16/P17).
 Lifecycle (the Spark rebuild of api/main.py:348-530 + Vespa's retrieval):
 
 1. tokenize query with the normative tokenizer; dedup terms (weakAnd);
-2. look up (idf, df) for the query terms from ``term_dict`` -- a scan
+2. look up each query term's int64 term id ``tid`` and idf in
+   ``term_dict``, the only map from (field, term) to ``tid`` -- a scan
    whose ``tbucket IN (...)`` filter prunes the tbucket-sorted file's row
    groups by their statistics, collecting a handful of rows;
-3. scan ``postings`` filtered by (tbucket, term, field) -- Catalyst pushes
-   all three into the parquet scan, and each file is sorted by tbucket,
-   so row groups outside the query terms' buckets are skipped;
+3. scan ``postings`` filtered by (tbucket, tid) -- Catalyst pushes both
+   into the parquet scan, and each file is sorted by tbucket, so row
+   groups outside the query terms' buckets are skipped;
 4. ``postings.groupBy(shard).cogroup(attributes.groupBy(shard))`` ->
    ``applyInPandas`` scorer: block-max pruned term-at-a-time scoring with
    numpy decode, local per-parent dedup, per-shard top-k heap.  This is
@@ -32,7 +33,7 @@ from __future__ import annotations
 
 import math
 import re
-from typing import TYPE_CHECKING, Dict, List, Mapping, Optional, Tuple
+from typing import TYPE_CHECKING, Dict, List, Mapping, NamedTuple, Optional, Tuple
 
 import numpy as np
 import pyarrow as pa
@@ -135,20 +136,6 @@ def _isnull(a: np.ndarray) -> np.ndarray:
     if a.dtype.kind == "O":
         return np.fromiter((v is None for v in a), dtype=bool, count=len(a))
     return np.zeros(len(a), dtype=bool)
-
-
-def _factorize_sorted(a: np.ndarray) -> Tuple[np.ndarray, np.ndarray]:
-    """(codes, uniques) with the uniques in ascending order, so code order
-    is value order: one dict pass over the values, then a sort of the
-    distinct ones only."""
-    seen: Dict = {}
-    codes = np.fromiter((seen.setdefault(v, len(seen)) for v in a),
-                        dtype=np.int64, count=len(a))
-    uniques = sorted(seen)
-    rank = np.empty(len(uniques), dtype=np.int64)
-    rank[[seen[v] for v in uniques]] = np.arange(len(uniques))
-    return rank[codes], np.fromiter(uniques, dtype=object,
-                                    count=len(uniques))
 
 
 class ShardState:
@@ -281,45 +268,57 @@ def state_view(st: ShardState, start: int, stop: int) -> ShardState:
     return v
 
 
-def post_groups(post: Mapping,
-                shard_offsets: Optional[Dict[int, int]] = None) -> list:
-    """Posting-block columns -> [(field, term, firsts, lasts, maxs, ns,
-    doc_bytes, tf_bytes)], one per (field, term), blocks sorted by
-    first_local so the ranges are disjoint ascending intervals (base blocks
-    are consecutive id chunks; delta-segment ids are shifted past every
-    earlier segment).  One lexsort, split at the (field, term) boundaries:
-    group arrays are slice views of the sorted columns.  ``shard_offsets``
-    ({shard: offset}, see fused_state) keeps only those shards, globalizes
-    block ranges by their shard's offset and adds a 9th array, the
-    per-block base offset of the decode (score_shard ``boffs``)."""
-    if not len(np.asarray(post["first_local"])) or shard_offsets == {}:
-        return []
+class PostingLists(NamedTuple):
+    """Posting blocks in CSR form: ``cols`` (firsts, lasts, maxs, ns,
+    doc_bytes, tf_bytes, and with shard offsets the per-block base offsets
+    boffs) sorted by (tid, first_local); the blocks of ``tids[i]`` are rows
+    ``starts[i]:starts[i + 1]``."""
+
+    tids: np.ndarray
+    starts: np.ndarray
+    cols: tuple
+
+    def select(self, tids) -> Dict[int, tuple]:
+        """{tid: its block columns as slice views} for those of ``tids``
+        that have blocks."""
+        out = {}
+        for t in tids:
+            i = int(np.searchsorted(self.tids, t))
+            if i < len(self.tids) and self.tids[i] == t:
+                a, b = self.starts[i], self.starts[i + 1]
+                out[t] = tuple(c[a:b] for c in self.cols)
+        return out
+
+
+def post_groups(post: Mapping, shard_offsets: Optional[Dict[int, int]] = None
+                ) -> PostingLists:
+    """Posting-block columns -> PostingLists: one lexsort by (tid,
+    first_local) and one ``np.unique`` into the per-tid start offsets.
+    Within a tid the block ranges are disjoint ascending intervals (base
+    blocks are consecutive id chunks; delta-segment ids are shifted past
+    every earlier segment).  ``shard_offsets`` ({shard: offset}, see
+    fused_state) keeps only those shards, globalizes block ranges by their
+    shard's offset and adds a 7th column, the per-block base offset of the
+    decode (score_shard ``boffs``)."""
+    tid = np.asarray(post["tid"], dtype=np.int64)
     cols = [np.asarray(post[c], dtype=dt) for c, dt in (
         ("first_local", np.int64), ("last_local", np.int64),
         ("max_score", np.float64), ("n", np.int64),
         ("doc_bytes", None), ("tf_bytes", None))]
-    fcode, fvals = _factorize_sorted(np.asarray(post["field"]))
-    tcode, tvals = _factorize_sorted(np.asarray(post["term"]))
-    key = fcode * len(tvals) + tcode  # (field, term) order
     if shard_offsets is not None:
         keys = np.array(sorted(shard_offsets), dtype=np.int64)
         shard = np.asarray(post["shard"], dtype=np.int64)
-        pos = np.minimum(np.searchsorted(keys, shard), len(keys) - 1)
-        local = np.flatnonzero(keys[pos] == shard)
-        boff = np.array([shard_offsets[s] for s in keys.tolist()])[pos[local]]
+        local = np.flatnonzero(np.isin(shard, keys))
+        boff = np.array([shard_offsets[s] for s in keys.tolist()],
+                        dtype=np.int64)[np.searchsorted(keys, shard[local])]
         cols = [c[local] for c in cols] + [boff]
         cols[0] += boff
         cols[1] += boff
-        key = key[local]
-    order = np.lexsort((cols[0], key))
-    cols, key = [c[order] for c in cols], key[order]
-    starts = np.flatnonzero(np.diff(key, prepend=-1))
-    ends = np.append(starts[1:], len(key))
-    return [
-        (fvals[g // len(tvals)], tvals[g % len(tvals)])
-        + tuple(c[a:b] for c in cols)
-        for g, a, b in zip(key[starts].tolist(), starts.tolist(), ends.tolist())
-    ]
+        tid = tid[local]
+    order = np.lexsort((cols[0], tid))
+    tids, starts = np.unique(tid[order], return_index=True)
+    return PostingLists(tids, np.append(starts, len(order)),
+                        tuple(c[order] for c in cols))
 
 
 class PostingsCache:
@@ -327,7 +326,7 @@ class PostingsCache:
     path (the Lucene/Vespa hot-postings analog).
 
     The per-posting BM25 contribution ``idf * tf / (tf + k1*(1-b+b*dl/
-    avgdl))`` is QUERY-INDEPENDENT per (field, term, shard) -- idf, tf and
+    avgdl))`` is QUERY-INDEPENDENT per (shard, tid) -- idf, tf and
     dl are build-time constants -- so a hit replaces the varbyte decode +
     arithmetic with one fancy-indexed accumulate of the cached (positions,
     contribution) pair (the query-dependent field weight applies at add
@@ -377,8 +376,8 @@ def _closeness_at(state: ShardState, q64: np.ndarray, idxs: np.ndarray):
 
 def score_shard(
     state: ShardState,
-    groups: list,
-    term_payload: Dict[Tuple[str, str], Tuple[float, float]],
+    lists: Dict[int, tuple],
+    term_payload: Dict[int, Tuple[str, float, float]],
     avgdl: Dict[str, float],
     k1: float,
     b: float,
@@ -391,6 +390,10 @@ def score_shard(
     cache_shard=None,
 ) -> Tuple[np.ndarray, np.ndarray]:
     """Scores one shard; returns (candidate positions, scores), un-deduped.
+
+    ``lists`` (``PostingLists.select``) and ``term_payload`` map a query
+    term's ``tid`` to its block columns and to (field, weight, idf); terms
+    score in descending max-contribution order, ties in payload order.
 
     Block-max pruning evaluates the skip test for ALL blocks of a term at
     once (np.maximum.reduceat over the accumulator -- within one term the
@@ -430,19 +433,20 @@ def score_shard(
             cl_cache[miss] = _closeness_at(state, q64, miss)[0]
         return cl_cache[idxs_]
 
-    if mode in ("bm25", "hybrid") and groups:
-        assert len(state.ids) == n_docs, "attributes must be dense per shard"
-        entries = []
-        for (field, term, firsts, lasts, maxs, ns, docb, tfb, *rest) in groups:
-            wi = term_payload.get((field, term))
-            if wi is None:
+    entries = []
+    if mode in ("bm25", "hybrid"):
+        for tid, (field, w, idf) in term_payload.items():
+            lst = lists.get(tid)
+            if lst is None:
                 continue
-            w, idf = wi
+            firsts, lasts, maxs, ns, docb, tfb, *rest = lst
             entries.append(
-                (field, term, w, idf, float(maxs.max()) * w,
+                (tid, field, w, idf, float(maxs.max()) * w,
                  firsts, lasts, maxs, ns, docb, tfb,
                  rest[0] if rest else None)
             )
+    if entries:
+        assert len(state.ids) == n_docs, "attributes must be dense per shard"
         entries.sort(key=lambda e: -e[4])
         suffix = np.cumsum([e[4] for e in entries][::-1])[::-1]
         theta = -math.inf
@@ -451,10 +455,10 @@ def score_shard(
         # construction), so below that floor the bound evaluation is pure
         # overhead and is skipped
         prune_floor = cl_w if mode == "hybrid" else -math.inf
-        for i, (field, term, w, idf, mx, firsts, lasts, maxs, ns, docb, tfb,
+        for i, (tid, field, w, idf, mx, firsts, lasts, maxs, ns, docb, tfb,
                 boffs) in enumerate(entries):
             rem_after = float(suffix[i + 1]) if i + 1 < len(entries) else 0.0
-            ckey = (cache_shard, field, term) if decode_cache is not None else None
+            ckey = (cache_shard, tid) if decode_cache is not None else None
             hit = decode_cache.get(ckey) if ckey is not None else None
             if hit is not None:
                 bl_ids, contrib = hit
@@ -594,7 +598,7 @@ def topk_dedup(state: ShardState, cand: np.ndarray, scores: np.ndarray,
 
 
 def _bm25_shard_kernel(
-    term_payload: Dict[Tuple[str, str], Tuple[float, float]],
+    term_payload: Dict[int, Tuple[str, float, float]],
     avgdl: Dict[str, float],
     k1: float,
     b: float,
@@ -605,8 +609,8 @@ def _bm25_shard_kernel(
 ):
     """Builds the cogroup kernel -- a thin pandas wrapper over the numpy
     core (shard_state / post_groups / score_shard / topk_dedup above).  All
-    query state (term -> (field_weight, idf), per-field avgdl, k1/b, query
-    embedding) is captured in the closure, so cloudpickle ships it to the
+    query state (tid -> (field, field weight, idf), per-field avgdl, k1/b,
+    query embedding) is captured in the closure, so cloudpickle ships it to the
     Python workers with the UDF -- the Spark-idiomatic "broadcast the
     query" (SURVEY.md J4).
 
@@ -629,9 +633,9 @@ def _bm25_shard_kernel(
         if len(attr_pdf) == 0:
             return empty
         state = shard_state(attr_pdf)
-        groups = post_groups(post_pdf)
+        lists = post_groups(post_pdf).select(term_payload)
         cand, scores = score_shard(
-            state, groups, term_payload, avgdl, k1, b, k, mode, q64, full_only,
+            state, lists, term_payload, avgdl, k1, b, k, mode, q64, full_only,
         )
         if len(cand) == 0:
             return empty
@@ -684,7 +688,8 @@ class SearchEngine:
             .filter(F.col("term").isin(terms) & F.col("field").isin(fields))
             .collect()
         )
-        return {(r["field"], r["term"]): (float(r["idf"]), int(r["df"])) for r in rows}
+        return {(r["field"], r["term"]): (int(r["tid"]), float(r["idf"]))
+                for r in rows}
 
     def _semantic_probes(self, qvec: np.ndarray) -> List[int]:
         return semantic_probes(self.cfg, qvec)
@@ -732,9 +737,10 @@ class SearchEngine:
 
         qvec = embed_text(query) if search_type in ("semantic", "hybrid") else None
 
+        # (field, term) order: the order score_shard breaks ties in
         term_payload = {
-            (f, t): (weights[f], idf)
-            for (f, t), (idf, _df) in info.items()
+            tid: (f, weights[f], idf)
+            for (f, _t), (tid, idf) in sorted(info.items())
             if weights.get(f)
         }
         avgdl = {f: self.stats.get(f, (0, 1.0))[1] or 1.0 for f in self.cfg.fields}
@@ -770,8 +776,7 @@ class SearchEngine:
             buckets = self._tbuckets(terms)
             post = self._postings.filter(
                 F.col("tbucket").isin(buckets)
-                & F.col("term").isin(terms)
-                & F.col("field").isin(fields)
+                & F.col("tid").isin([tid for tid, _idf in info.values()])
             )
 
         scored = (

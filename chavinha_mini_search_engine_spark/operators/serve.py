@@ -26,8 +26,9 @@ both paths share the numpy scoring core (operators/search.py score_shard /
 topk_dedup -- the Spark path wraps it in the applyInPandas kernel), so
 scoring, pruning, dedup and enrichment semantics are identical by
 construction.  Here the columns -> state conversion runs ONCE at load:
-one fused attribute state (fused_state) and one sorted columnar postings
-layout whose (field, term) lists are slice views (post_groups).
+one fused attribute state (fused_state) and one postings layout sorted by
+term id into CSR offsets (post_groups).  A query maps (field, term) to
+the term id through the resident dictionary and slices its lists.
 """
 
 from __future__ import annotations
@@ -47,15 +48,10 @@ from ..oracle.embedder import embed_text
 from ..sources.tables import IndexStore, read_columns
 from .search import _query_terms, result_row
 
-ATTR_COLS = [
-    "shard", "local_id", "id", "doc_type", "parent_id", "parent_doc_type",
-    "len_title", "len_content", "len_description", "len_chunk_content",
-    "embedding", "sem_bucket",
-]
 DOC_COLS = ["id", "url", "domain", "title", "content", "chunk_content"]
 POST_COLS = [
-    "field", "term", "shard", "block_idx", "first_local", "last_local",
-    "n", "max_score", "doc_bytes", "tf_bytes",
+    "tid", "shard", "first_local", "last_local", "n", "max_score",
+    "doc_bytes", "tf_bytes",
 ]
 
 
@@ -211,7 +207,7 @@ class ResidentSearcher:
 
     ``shards``: optional shard-id subset — the content-node deployment
     shape.  A replica constructed with a subset loads ONLY those shards'
-    attribute states / posting groups / graph rows (the tables are
+    attribute states / posting lists / graph rows (the tables are
     hive-partitioned by shard on disk, so the pyarrow reads prune at the
     directory level) and answers ``search_candidates`` for them; a
     gateway (any process holding the term dictionary + doc handles, e.g.
@@ -226,14 +222,15 @@ class ResidentSearcher:
         self.shards = None if shards is None else {int(s) for s in shards}
         self.cfg = cfg or store.saved_config()
 
-        # corpus stats + term dictionary -> plain dicts
+        # corpus stats + term dictionary -> plain dicts; the dictionary
+        # maps (field, term) -> (tid, idf)
         self.stats = store.corpus_stats()
         td = read_columns(store.segment_dirs("term_dict"),
-                          ["field", "term", "df", "idf"])
-        self.term_dict: Dict[Tuple[str, str], Tuple[float, int]] = dict(zip(
+                          ["field", "term", "tid", "idf"])
+        self.term_dict: Dict[Tuple[str, str], Tuple[int, float]] = dict(zip(
             zip(td["field"].tolist(), td["term"].tolist()),
-            zip(td["idf"].astype(np.float64).tolist(),
-                td["df"].astype(np.int64).tolist())))
+            zip(td["tid"].astype(np.int64).tolist(),
+                td["idf"].astype(np.float64).tolist())))
 
         # attributes -> ONE fused numpy state covering every local shard
         # (per-shard dense local-id spaces laid out back-to-back, ascending
@@ -245,7 +242,7 @@ class ResidentSearcher:
         from .search import fused_state, post_groups, state_view
 
         # cfg-derived so a custom-schema store (fewer indexed fields ->
-        # fewer len_* columns) loads; the default equals ATTR_COLS.
+        # fewer len_* columns) loads.
         # shard-subset (content-node) pruning: hive shard= tables prune at
         # the directory level, the flat postings parts filter rows (a
         # cluster deployment would co-partition postings by shard per
@@ -268,13 +265,12 @@ class ResidentSearcher:
             self.fused, self.shard_offsets = None, {}
             self.state_by_shard = {}
 
-        # postings -> one (field, term, first)-sorted columnar layout over
-        # every local shard; each entry is slice views (see post_groups)
-        post = read_columns(store.segment_dirs("postings"), POST_COLS,
-                            shards=self.shards)
-        self.post_fused: Dict[Tuple[str, str], tuple] = {
-            (g[0], g[1]): g for g in post_groups(post, self.shard_offsets)
-        }
+        # postings -> one (tid, first)-sorted columnar layout over every
+        # local shard, in CSR offsets per tid (see post_groups)
+        self.postings = post_groups(
+            read_columns(store.segment_dirs("postings"), POST_COLS,
+                         shards=self.shards),
+            self.shard_offsets)
 
         # doc store for enrichment: kept LAZY -- content is the widest
         # column in the system, and a resident dict of every content string
@@ -289,7 +285,7 @@ class ResidentSearcher:
         # scan this replaces cost ~8 ms of scan setup per shard file per
         # query -- 80 ms for a 10-hit enrichment, dwarfing scoring.
         # hot-postings cache: decoded (positions, query-independent BM25
-        # contribution) per (shard, field, term), LRU-bounded -- see
+        # contribution) per (shard, tid), LRU-bounded -- see
         # search.PostingsCache for the soundness argument
         from .search import PostingsCache
 
@@ -343,9 +339,9 @@ class ResidentSearcher:
 
         fields, weights = _query_fields_weights(self.cfg, search_type)
         term_payload = {
-            (f, t): (weights[f], self.term_dict[(f, t)][0])
-            for f in fields for t in terms
-            if (f, t) in self.term_dict and weights.get(f)
+            hit[0]: (f, weights[f], hit[1])
+            for f in fields if weights.get(f) for t in terms
+            if (hit := self.term_dict.get((f, t))) is not None
         }
         if search_type != "semantic" and not term_payload:
             return None
@@ -396,18 +392,11 @@ class ResidentSearcher:
         state = self.fused
         if state is None:
             return None
-        if search_type == "semantic":
-            groups = []
-        else:
-            groups = [
-                self.post_fused[key]
-                for (f, t) in term_payload
-                if (key := (f, t)) in self.post_fused
-            ]
-            if not groups:
-                return None
+        lists = self.postings.select(term_payload)
+        if search_type != "semantic" and not lists:
+            return None
         cand, scores = score_shard(
-            state, groups, term_payload, avgdl, self.cfg.k1, self.cfg.b,
+            state, lists, term_payload, avgdl, self.cfg.k1, self.cfg.b,
             k, search_type, q64, full_only, probe_buckets=probes,
             decode_cache=self._postings_cache, cache_shard=None,
         )

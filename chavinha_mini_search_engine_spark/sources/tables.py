@@ -11,7 +11,7 @@ naming and the writes below become ``df.writeTo(...)`` -- the call sites
 are isolated here on purpose.
 
 Layout under ``root``:
-  manifest.json                 -- build_id, per-stage status + metrics
+  manifest.json                 -- build_id, format, per-stage status + metrics
   docs/ chunks/ unified/        -- document tables (unified partitioned by shard)
   tf/grp=K/                     -- per-(doc, field, term) tf + dl, per shard-group
   term_dict/ corpus_stats/      -- broadcastable stats
@@ -23,6 +23,11 @@ Layout under ``root``:
   attributes_delta/delta=E_B/   -- a streamed segment's attributes
   graph/                        -- per-shard HNSW rows (graph_ann builds)
   build_metrics/                -- per-stage, per-partition lineage rows
+
+The manifest's ``format`` is the writing code's ``STORE_FORMAT``.
+``IndexStore(root)`` raises on a store of another format (or of none);
+``IndexStore(root, build_id=...)``, as every build entry opens a store,
+starts such a dir fresh instead of resuming it.
 
 A streamed segment's three ``delta=`` parts commit together as one
 ``stream_deltas`` manifest part, which records the segment's per-shard
@@ -88,6 +93,11 @@ DOC_STORE_WRITE_OPTS = {
     "parquet.block.size": str(1 << 20),
     "parquet.enable.dictionary": "false",
 }
+
+
+# The store format this code writes and reads; bump it when a table's
+# layout changes.  2: postings keyed by the int64 ``tid`` (1: no number).
+STORE_FORMAT = 2
 
 
 # The footer key under which Spark's parquet writer records the written
@@ -250,13 +260,21 @@ class IndexStore:
         os.makedirs(root, exist_ok=True)
         self.manifest_path = os.path.join(root, "manifest.json")
         m = self._read_manifest()
-        if build_id is not None and m.get("build_id") not in (None, build_id):
-            # a different build owns this dir: start fresh
+        other_format = bool(m) and m.get("format") != STORE_FORMAT
+        if build_id is not None and (
+                other_format or m.get("build_id") not in (None, build_id)):
+            # a different build, or code of another format, owns this
+            # dir: start fresh
             shutil.rmtree(root)
             os.makedirs(root, exist_ok=True)
             m = {}
+        elif other_format:
+            raise ValueError(
+                f"{root}: store format {m.get('format')}, this code reads "
+                f"format {STORE_FORMAT}; rebuild the store")
         self.manifest = m or {
             "build_id": build_id or uuid.uuid4().hex,
+            "format": STORE_FORMAT,
             "stages": {},
         }
         if not m:
@@ -349,10 +367,6 @@ class IndexStore:
         parts = self.manifest["stages"].get("stream_deltas", {}).get("parts", {})
         for part, info in parts.items():
             if info.get("status") == "done":
-                if "max_local" not in info["metrics"]:
-                    raise ValueError(f"stream segment {part} records no "
-                                     "max_local; merge the store with "
-                                     "compact_tiered first")
                 for s, mx in info["metrics"]["max_local"].items():
                     fold(s, mx)
         return offs
@@ -526,8 +540,7 @@ class IndexStore:
         """Union by name of ``table``'s dataset dirs ``dirs``.  Segments
         may use different partition keys (grp=, delta=, or shard= dirs
         against an un-partitioned part), so each is read separately and
-        unioned by name; a part written before postings were flat keeps
-        its inner tbucket= dirs, read back as the same int column.  A dir
+        unioned by name.  A dir
         with no file (a shard-group that held no shard before empty parts
         wrote a zero-row file) has no schema and no rows: skipped.  Each
         dir is read with its footer schema (``_read_dir``), so the union

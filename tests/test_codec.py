@@ -111,9 +111,12 @@ def _assert_blocks_equal(got, ref):
         assert g[3] >= r[3] * (1.0 - 1e-13), key
 
 
-def _block_map(rows):
+def _block_map(rows, names):
+    """Blocks keyed by (field, term, shard, block_idx), the (field, term)
+    of a block's tid taken from the dictionary (``names``: tid ->
+    (field, term))."""
     return {
-        (r["field"], r["term"], r["shard"], r["block_idx"]):
+        (*names[r["tid"]], r["shard"], r["block_idx"]):
         (r["first_local"], r["last_local"], r["n"],
          r["max_score"], bytes(r["doc_bytes"]), bytes(r["tf_bytes"]))
         for r in rows
@@ -142,7 +145,9 @@ def test_postings_paths_identical(spark, built, monkeypatch):
         ).to_table().to_pandas()
 
     tf_pd, td_pd, st_pd = table("tf"), table("term_dict"), table("corpus_stats")
-    stored = _block_map(table("postings").to_dict("records"))
+    names = dict(zip(td_pd["tid"], zip(td_pd["field"], td_pd["term"])))
+    assert len(names) == len(td_pd)
+    stored = _block_map(table("postings").to_dict("records"), names)
     _assert_blocks_equal(stored, _reference_blocks(tf_pd, td_pd, st_pd, CFG))
 
     cfg = dataclasses.replace(CFG, block_size=16)
@@ -185,7 +190,8 @@ def test_postings_paths_identical(spark, built, monkeypatch):
                                 (tf.drop("tid", "grp"), None)):
             got = _block_map(
                 ib.build_postings_for(src, td, avgdl, cfg,
-                                      scan_units=scan_units).collect()
+                                      scan_units=scan_units).collect(),
+                names,
             )
             _assert_blocks_equal(got, ref)
     finally:

@@ -122,7 +122,10 @@ def test_postings_scan_prunes_by_tbucket(spark, tiny_pages, tmp_path_factory):
     build_index(spark, spark.read.parquet(tiny_pages), store, cfg,
                 with_embeddings=False, verify_text_invariant=False)
     post = store.read(spark, "postings", part="grp=0")
-    pruned = post.filter(F.col("tbucket").isin([1, 2]) & (F.col("term") == "python"))
+    tids = [r["tid"] for r in store.read(spark, "term_dict")
+            .filter(F.col("term") == "python").collect()]
+    assert tids
+    pruned = post.filter(F.col("tbucket").isin([1, 2]) & F.col("tid").isin(tids))
     plan = formatted_plan(pruned)
     assert any(
         "In(tbucket" in ln for ln in plan.splitlines() if "PushedFilters" in ln

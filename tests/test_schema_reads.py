@@ -106,25 +106,6 @@ def test_store_reads_take_the_footer_schema_and_run_no_job(spark, streamed):
         assert df.count() == sum(d.count() for d in inferred), t
 
 
-def test_old_layout_tbucket_part_reads_its_partition_column(spark, streamed,
-                                                            tmp_path):
-    """A postings part written before postings were flat keeps its hive
-    tbucket= dirs: the footer-schema read discovers the tbucket column from
-    the paths, as inference does, with no job."""
-    store = IndexStore(str(tmp_path / "old"), build_id="old")
-    part = streamed.committed_parts("postings")[0]
-    post = streamed.read(spark, "postings", part)
-    store.write(post, "postings", part=part, partition_by=["tbucket"])
-    old = store.path("postings", part)
-    assert any(d.startswith("tbucket=") for d in os.listdir(old))
-    df, jobs = _jobs_run_by(
-        spark, lambda: store.read_dirs(spark, "postings", [old]))
-    assert jobs == []
-    assert df.schema == spark.read.parquet(old).schema
-    assert df.schema["tbucket"].dataType.simpleString() == "int"
-    assert sorted(df.collect()) == sorted(post.collect())
-
-
 @pytest.mark.parametrize("table", ["corpus_stats", "build_metrics"])
 def test_pyarrow_written_table_keeps_the_inferred_read(spark, streamed, table):
     """corpus_stats and build_metrics are written with pyarrow: no Spark

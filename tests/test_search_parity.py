@@ -169,8 +169,11 @@ def test_postings_blocks_wellformed(spark, built):
         | (F.col("n") > CFG.block_size)
     ).count()
     assert bad == 0
-    # block sequences are contiguous and sorted per (field, term, shard)
-    rows = p.select("field", "term", "shard", "block_idx", "first_local", "last_local").collect()
+    # block sequences are contiguous and sorted per (field, term, shard);
+    # a block's (field, term) is its tid's dictionary row
+    named = p.join(built.read(spark, "term_dict").select("tid", "field", "term"), "tid")
+    assert named.count() == p.count()
+    rows = named.select("field", "term", "shard", "block_idx", "first_local", "last_local").collect()
     bykey = {}
     for r in rows:
         bykey.setdefault((r["field"], r["term"], r["shard"]), []).append(r)

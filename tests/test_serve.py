@@ -132,8 +132,10 @@ def test_hybrid_two_phase_degenerate_parity(spark, tmp_path_factory):
 
     # the queried list spans several blocks (block-max pruning and the
     # block-range decode see more than one block per list)
+    tids = [r["tid"] for r in store.read(spark, "term_dict")
+            .filter(F.col("term") == degenerate_term).collect()]
     blocks = store.read_parts(spark, "postings").filter(
-        F.col("term") == degenerate_term).agg(F.max("block_idx")).first()[0]
+        F.col("tid").isin(tids)).agg(F.max("block_idx")).first()[0]
     assert blocks > 0, "need a posting list of more than one block"
 
     rs = ResidentSearcher(store, cfg)
@@ -227,14 +229,15 @@ def test_postings_cache_eviction_bound():
     assert c.get(("s", "f", "t0")) is None
 
 
-# --- resident postings layout (ResidentSearcher.post_fused) ---
+# --- resident postings layout (ResidentSearcher.postings) ---
 
 
 def _reference_post_fused(store, rs, shards=None):
-    """The per-group layout written out the slow way: a pandas groupby per
-    (field, term, shard), each group sorted by first_local, shards of one
-    (field, term) concatenated in ascending shard order with block ranges
-    globalized by the searcher's shard offsets."""
+    """The per-list layout written out the slow way: the postings joined
+    to ``term_dict`` on tid, a pandas groupby per (field, term, shard),
+    each group sorted by first_local, shards of one (field, term)
+    concatenated in ascending shard order with block ranges globalized by
+    the searcher's shard offsets."""
     import numpy as np
     import pandas as pd
     import pyarrow.compute as pc
@@ -242,7 +245,7 @@ def _reference_post_fused(store, rs, shards=None):
 
     from chavinha_mini_search_engine_spark.operators.serve import POST_COLS
 
-    # its own dataset read, independent of the searcher's reader
+    # its own dataset reads, independent of the searcher's reader
     frames = []
     for d in store.segment_dirs("postings"):
         ds = pads.dataset(d, format="parquet", partitioning="hive")
@@ -252,8 +255,12 @@ def _reference_post_fused(store, rs, shards=None):
                 filter=None if shards is None
                 else pc.field("shard").isin(shards)).to_pandas())
     post = pd.concat(frames, ignore_index=True)
+    names = pads.dataset(store.path("term_dict"), format="parquet").to_table(
+        columns=["tid", "field", "term"]).to_pandas()
+    named = post.merge(names, on="tid", validate="many_to_one")
+    assert len(named) == len(post), "a postings tid is not in term_dict"
     by_ft = {}
-    for (f, t, s), g in post.groupby(["field", "term", "shard"]):
+    for (f, t, s), g in named.groupby(["field", "term", "shard"]):
         if int(s) in rs.shard_offsets:
             by_ft.setdefault((f, t), []).append(
                 (int(s), g.sort_values("first_local")))
@@ -268,11 +275,23 @@ def _reference_post_fused(store, rs, shards=None):
             [np.full(len(g), rs.shard_offsets[s], dtype=np.int64)
              for s, g in lst])
         out[(f, t)] = (
-            f, t, cat("first_local", np.int64) + boffs,
+            cat("first_local", np.int64) + boffs,
             cat("last_local", np.int64) + boffs, cat("max_score", np.float64),
             cat("n", np.int64), cat("doc_bytes"), cat("tf_bytes"), boffs,
         )
     return out
+
+
+def _resident_lists(rs):
+    """The searcher's lists keyed by (field, term) through its resident
+    dictionary; every resident tid must have a dictionary entry."""
+    tids = rs.postings.tids.tolist()
+    assert tids == sorted(set(tids))
+    assert rs.postings.starts[-1] == len(rs.postings.cols[0])
+    by_tid = rs.postings.select(tids)
+    names = {tid: ft for ft, (tid, _idf) in rs.term_dict.items()}
+    assert set(by_tid) <= set(names)
+    return {names[tid]: lst for tid, lst in by_tid.items()}
 
 
 def _assert_layout_equal(got, exp):
@@ -281,9 +300,8 @@ def _assert_layout_equal(got, exp):
     assert got.keys() == exp.keys()
     for key, e in exp.items():
         g = got[key]
-        assert len(g) == len(e) == 9, key
-        assert g[:2] == e[:2] == key
-        for ga, ea in zip(g[2:], e[2:]):
+        assert len(g) == len(e) == 7, key
+        for ga, ea in zip(g, e):
             assert ga.dtype == ea.dtype, key
             if ea.dtype == object:
                 assert ga.tolist() == ea.tolist(), key
@@ -292,8 +310,8 @@ def _assert_layout_equal(got, exp):
 
 
 def test_post_fused_matches_per_group_reference(built, resident):
-    assert resident.post_fused
-    _assert_layout_equal(resident.post_fused,
+    assert len(resident.postings.tids)
+    _assert_layout_equal(_resident_lists(resident),
                          _reference_post_fused(built, resident))
 
 
@@ -301,41 +319,8 @@ def test_post_fused_shard_subset_matches_reference(built):
     shards = [1, 2, 5]
     rs = ResidentSearcher(built, CFG, shards=shards)
     assert set(rs.shard_offsets) == set(shards)
-    _assert_layout_equal(rs.post_fused,
+    _assert_layout_equal(_resident_lists(rs),
                          _reference_post_fused(built, rs, shards))
-
-
-@pytest.fixture(scope="module")
-def delta_store(spark, tmp_path_factory):
-    """Base build + two streamed delta segments, in the streaming tests'
-    shape, except that the default shard_groups=8 over 4 shards leaves
-    four postings shard-groups empty (committed parts with zero rows)."""
-    from chavinha_mini_search_engine_spark.fixtures.pages import generate_pages
-    from chavinha_mini_search_engine_spark.operators.index_build import (
-        IndexConfig,
-        build_index,
-    )
-    from chavinha_mini_search_engine_spark.sources.tables import IndexStore
-    from chavinha_mini_search_engine_spark.streaming import incremental
-
-    cfg = IndexConfig(num_doc_shards=4, term_buckets=8)
-    rows = generate_pages(40, include_edges=False)
-    schema = "url string, warc_ts timestamp, html binary, text string, lang string"
-    base_dir = str(tmp_path_factory.mktemp("lay") / "pages")
-    spark.createDataFrame(rows[:30], schema).write.parquet(base_dir)
-    store = IndexStore(str(tmp_path_factory.mktemp("lay") / "i"),
-                       build_id="layout")
-    build_index(spark, spark.read.parquet(base_dir), store, cfg,
-                with_embeddings=True, verify_text_invariant=False)
-    delta_dir = str(tmp_path_factory.mktemp("lay") / "delta")
-    # 8 files, maxFilesPerTrigger=4 -> 2 micro-batches
-    spark.createDataFrame(rows[30:], schema).repartition(8).write.parquet(delta_dir)
-    # no cfg: the stream must take the store's saved layout
-    incremental.stream_index_deltas(
-        spark, delta_dir, store,
-        checkpoint_dir=str(tmp_path_factory.mktemp("lay") / "ckpt"),
-    ).awaitTermination(600)
-    return store, cfg
 
 
 def test_deltas_use_saved_layout(delta_store):
@@ -359,11 +344,12 @@ def test_deltas_use_saved_layout(delta_store):
     assert max(buckets) < cfg.term_buckets
 
 
-def _assert_flat_tbucket_sorted(spark, path, n_buckets):
+def _assert_flat_tbucket_sorted(spark, path, n_buckets, term_dict):
     """``path`` is flat (no tbucket= dir), every row's tbucket is the
-    engine's bucket of its term, and each file's row groups ascend in
-    tbucket (min/max statistics, which the pushed ``tbucket IN (...)``
-    filter prunes by)."""
+    engine's bucket of its term (a postings row's term through
+    ``term_dict``, by tid), and each file's row groups ascend in tbucket
+    (min/max statistics, which the pushed ``tbucket IN (...)`` filter
+    prunes by)."""
     import pyarrow.parquet as pq
 
     from chavinha_mini_search_engine_spark.operators.index_build import (
@@ -374,9 +360,13 @@ def _assert_flat_tbucket_sorted(spark, path, n_buckets):
     assert not [d for d in entries if d.startswith("tbucket=")], path
     files = [os.path.join(path, f) for f in entries if f.endswith(".parquet")]
     assert files, path
-    df = spark.read.parquet(path).withColumn(
-        "exp", tbucket_col(F.col("term"), n_buckets)
-    )
+    df = spark.read.parquet(path)
+    if "term" not in df.columns:
+        named = df.join(spark.read.parquet(term_dict).select("tid", "term"),
+                        "tid")
+        assert named.count() == df.count(), path
+        df = named
+    df = df.withColumn("exp", tbucket_col(F.col("term"), n_buckets))
     assert df.filter(F.col("exp") != F.col("tbucket")).count() == 0, path
     for f in files:
         md = pq.read_metadata(f)
@@ -401,13 +391,15 @@ def test_flat_tbucket_sorted_layout(spark, built, delta_store):
     for store, part in parts:
         path = store.path("postings", part)
         _assert_flat_tbucket_sorted(spark, path,
-                                    store.saved_config().term_buckets)
+                                    store.saved_config().term_buckets,
+                                    store.path("term_dict"))
         if part.startswith("delta="):
             assert len([f for f in os.listdir(path)
                         if f.endswith(".parquet")]) == 1, path
     for store in (built, delta):
         _assert_flat_tbucket_sorted(
-            spark, store.path("term_dict"), store.saved_config().term_buckets
+            spark, store.path("term_dict"), store.saved_config().term_buckets,
+            store.path("term_dict"),
         )
 
 
@@ -440,7 +432,7 @@ def test_post_fused_base_plus_deltas_matches_reference(spark, delta_store):
         if f.endswith(".parquet")
     ), "fixture must commit an empty shard-group part"
     rs = ResidentSearcher(store, cfg)
-    _assert_layout_equal(rs.post_fused, _reference_post_fused(store, rs))
+    _assert_layout_equal(_resident_lists(rs), _reference_post_fused(store, rs))
     # the Spark path serves the same store, empty parts included
     got = norm(rs.search("python", "bm25", 5))
     exp = norm(r.asDict() for r in
@@ -505,18 +497,6 @@ def test_compact_tiered_with_empty_shard_groups(spark, delta_store,
         assert got == exp, q
 
 
-def test_postings_part_metrics_empty_part(tmp_path):
-    """A postings part with no parquet file (an empty shard-group of a
-    store built before postings were flat) has no shard rows as its
-    metrics, not an ArrowInvalid."""
-    from chavinha_mini_search_engine_spark.operators.index_build import (
-        _postings_part_metrics,
-    )
-
-    (tmp_path / "_SUCCESS").write_bytes(b"")
-    assert _postings_part_metrics(str(tmp_path)) == []
-
-
 def test_driver_aggregations_match_whole_table(built, tmp_path):
     """The batch-folding postings-part metrics and corpus stats equal a
     whole-table pyarrow aggregation of the same stored tables."""
@@ -571,15 +551,16 @@ def test_load_store_without_postings_rows(built, tmp_path):
         os.makedirs(store.path("postings", part))
         open(os.path.join(store.path("postings", part), "_SUCCESS"), "w").close()
     rs = ResidentSearcher(store, CFG)
-    assert rs.post_fused == {}
+    assert len(rs.postings.tids) == 0
+    assert rs.postings.select(tid for tid, _idf in rs.term_dict.values()) == {}
     assert rs.search("python async programming", "bm25", 5) == []
     assert rs.search("python async programming", "semantic", 5)
 
 
 _blocks = hst.lists(
-    hst.tuples(hst.sampled_from(["title", "content"]),
-              hst.sampled_from(["a", "b", "c", "d"]),
-              hst.integers(0, 3), hst.integers(1, 4)),
+    hst.tuples(hst.sampled_from([-(2 ** 63), -5, -1, 0, 1, 7, 2 ** 40,
+                                 2 ** 63 - 1]),
+               hst.integers(0, 3), hst.integers(1, 4)),
     min_size=1, max_size=40,
 )
 
@@ -587,8 +568,8 @@ _blocks = hst.lists(
 @settings(max_examples=60, deadline=None)
 @given(_blocks, hst.randoms(use_true_random=False))
 def test_post_groups_shuffled_frame(blocks, rnd):
-    """post_groups on rows in any order: one group per (field, term),
-    holding exactly that key's blocks, sorted by first_local."""
+    """post_groups on rows in any order: one list per tid, holding
+    exactly that tid's blocks, sorted by first_local."""
     import collections
 
     import numpy as np
@@ -596,30 +577,33 @@ def test_post_groups_shuffled_frame(blocks, rnd):
 
     from chavinha_mini_search_engine_spark.operators.search import post_groups
 
-    # each (field, term) gets disjoint ascending block ranges
+    # each tid gets disjoint ascending block ranges
     nxt = collections.Counter()
     rows = []
-    for f, t, s, width in blocks:
-        first = nxt[(f, t)]
-        nxt[(f, t)] += width
+    for tid, s, width in blocks:
+        first = nxt[tid]
+        nxt[tid] += width
         rows.append({
-            "field": f, "term": t, "shard": s, "first_local": first,
+            "tid": tid, "shard": s, "first_local": first,
             "last_local": first + width - 1, "n": width,
             "max_score": float(width), "doc_bytes": f"d{first}".encode(),
             "tf_bytes": f"t{first}".encode(),
         })
     members = collections.defaultdict(set)
     for r in rows:
-        members[(r["field"], r["term"])].add(r["first_local"])
+        members[r["tid"]].add(r["first_local"])
     rnd.shuffle(rows)
     frame = pd.DataFrame(rows)
     # the Spark kernel's pandas frame and the loader's dict of arrays
     for post in (frame, {c: frame[c].to_numpy() for c in frame}):
-        groups = post_groups(post)
-        assert [g[:2] for g in groups] == sorted(members)
-        for f, t, firsts, lasts, maxs, ns, docb, tfb in groups:
+        lists = post_groups(post)
+        assert lists.tids.tolist() == sorted(members)
+        assert lists.starts[-1] == len(rows)
+        got = lists.select(list(members) + [2])  # 2 is no sampled tid
+        assert sorted(got) == sorted(members)
+        for tid, (firsts, lasts, maxs, ns, docb, tfb) in got.items():
             assert np.all(np.diff(firsts) > 0)
-            assert set(firsts.tolist()) == members[(f, t)]
+            assert set(firsts.tolist()) == members[tid]
             assert np.array_equal(lasts - firsts + 1, ns)
             assert docb.tolist() == [
                 f"d{x}".encode() for x in firsts.tolist()]

@@ -49,7 +49,9 @@ def test_index_deltas_searchable(spark, tmp_path_factory):
     n_delta_parts = sum(1 for p in parts if p.startswith("delta="))
     assert n_delta_parts >= 2, f"need >=2 micro-batches, got {parts}"
     post = store.read_parts(spark, "postings")
-    assert post.filter(F.col("term") == "python").count() > 0
+    tids = [r["tid"] for r in store.read(spark, "term_dict")
+            .filter(F.col("term") == "python").collect()]
+    assert post.filter(F.col("tid").isin(tids)).count() > 0
 
     # (shard, local_id) is unique across base + all delta segments
     layout = (
