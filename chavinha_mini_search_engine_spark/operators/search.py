@@ -272,28 +272,37 @@ class PostingLists(NamedTuple):
     """Posting blocks in CSR form: ``cols`` (firsts, lasts, maxs, ns,
     doc_bytes, tf_bytes, and with shard offsets the per-block base offsets
     boffs) sorted by (tid, first_local); the blocks of ``tids[i]`` are rows
-    ``starts[i]:starts[i + 1]``."""
+    ``starts[i]:starts[i + 1]``, and ``maxs[i]`` is their largest
+    max_score."""
 
     tids: np.ndarray
     starts: np.ndarray
     cols: tuple
+    maxs: np.ndarray
 
-    def select(self, tids) -> Dict[int, tuple]:
-        """{tid: its block columns as slice views} for those of ``tids``
-        that have blocks."""
-        out = {}
-        for t in tids:
-            i = int(np.searchsorted(self.tids, t))
-            if i < len(self.tids) and self.tids[i] == t:
-                a, b = self.starts[i], self.starts[i + 1]
-                out[t] = tuple(c[a:b] for c in self.cols)
-        return out
+    def select(self, tids) -> Dict[int, Tuple[int, int, float]]:
+        """{tid: (first row, end row, largest max_score)} for those of
+        ``tids`` that have blocks; ``cols`` sliced by the rows are the
+        list's blocks."""
+        if not len(self.tids):
+            return {}
+        want = np.fromiter(tids, dtype=np.int64)
+        i = np.minimum(np.searchsorted(self.tids, want), len(self.tids) - 1)
+        return {
+            t: (lo, hi, mx)
+            for t, lo, hi, mx, hit in zip(
+                want.tolist(), self.starts[i].tolist(),
+                self.starts[i + 1].tolist(), self.maxs[i].tolist(),
+                (self.tids[i] == want).tolist())
+            if hit
+        }
 
 
 def post_groups(post: Mapping, shard_offsets: Optional[Dict[int, int]] = None
                 ) -> PostingLists:
     """Posting-block columns -> PostingLists: one lexsort by (tid,
-    first_local) and one ``np.unique`` into the per-tid start offsets.
+    first_local) and one ``np.unique`` into the per-tid start offsets
+    (and one ``reduceat`` into the per-tid largest max_score).
     Within a tid the block ranges are disjoint ascending intervals (base
     blocks are consecutive id chunks; delta-segment ids are shifted past
     every earlier segment).  ``shard_offsets`` ({shard: offset}, see
@@ -316,9 +325,10 @@ def post_groups(post: Mapping, shard_offsets: Optional[Dict[int, int]] = None
         cols[1] += boff
         tid = tid[local]
     order = np.lexsort((cols[0], tid))
+    cols = tuple(c[order] for c in cols)
     tids, starts = np.unique(tid[order], return_index=True)
-    return PostingLists(tids, np.append(starts, len(order)),
-                        tuple(c[order] for c in cols))
+    maxs = np.maximum.reduceat(cols[2], starts) if len(starts) else cols[2]
+    return PostingLists(tids, np.append(starts, len(order)), cols, maxs)
 
 
 class PostingsCache:
@@ -376,7 +386,7 @@ def _closeness_at(state: ShardState, q64: np.ndarray, idxs: np.ndarray):
 
 def score_shard(
     state: ShardState,
-    lists: Dict[int, tuple],
+    lists: PostingLists,
     term_payload: Dict[int, Tuple[str, float, float]],
     avgdl: Dict[str, float],
     k1: float,
@@ -391,8 +401,8 @@ def score_shard(
 ) -> Tuple[np.ndarray, np.ndarray]:
     """Scores one shard; returns (candidate positions, scores), un-deduped.
 
-    ``lists`` (``PostingLists.select``) and ``term_payload`` map a query
-    term's ``tid`` to its block columns and to (field, weight, idf); terms
+    ``term_payload`` maps a query term's ``tid`` to (field, weight, idf);
+    its blocks are sliced from ``lists`` only when they are decoded.  Terms
     score in descending max-contribution order, ties in payload order.
 
     Block-max pruning evaluates the skip test for ALL blocks of a term at
@@ -435,16 +445,11 @@ def score_shard(
 
     entries = []
     if mode in ("bm25", "hybrid"):
-        for tid, (field, w, idf) in term_payload.items():
-            lst = lists.get(tid)
-            if lst is None:
-                continue
-            firsts, lasts, maxs, ns, docb, tfb, *rest = lst
-            entries.append(
-                (tid, field, w, idf, float(maxs.max()) * w,
-                 firsts, lasts, maxs, ns, docb, tfb,
-                 rest[0] if rest else None)
-            )
+        rows = lists.select(term_payload)
+        entries = [
+            (tid, field, w, idf, rows[tid][2] * w, *rows[tid][:2])
+            for tid, (field, w, idf) in term_payload.items() if tid in rows
+        ]
     if entries:
         assert len(state.ids) == n_docs, "attributes must be dense per shard"
         entries.sort(key=lambda e: -e[4])
@@ -455,8 +460,7 @@ def score_shard(
         # construction), so below that floor the bound evaluation is pure
         # overhead and is skipped
         prune_floor = cl_w if mode == "hybrid" else -math.inf
-        for i, (tid, field, w, idf, mx, firsts, lasts, maxs, ns, docb, tfb,
-                boffs) in enumerate(entries):
+        for i, (tid, field, w, idf, mx, lo, hi) in enumerate(entries):
             rem_after = float(suffix[i + 1]) if i + 1 < len(entries) else 0.0
             ckey = (cache_shard, tid) if decode_cache is not None else None
             hit = decode_cache.get(ckey) if ckey is not None else None
@@ -468,6 +472,9 @@ def score_shard(
                 acc[bl_ids] += w * contrib
                 touched[bl_ids] = True
             else:
+                firsts, lasts, maxs, ns, docb, tfb, *rest = [
+                    c[lo:hi] for c in lists.cols]
+                boffs = rest[0] if rest else None
                 pruned = False
                 if theta > prune_floor:
                     idx = np.empty(2 * len(firsts), dtype=np.int64)
@@ -633,9 +640,9 @@ def _bm25_shard_kernel(
         if len(attr_pdf) == 0:
             return empty
         state = shard_state(attr_pdf)
-        lists = post_groups(post_pdf).select(term_payload)
         cand, scores = score_shard(
-            state, lists, term_payload, avgdl, k1, b, k, mode, q64, full_only,
+            state, post_groups(post_pdf), term_payload, avgdl, k1, b, k,
+            mode, q64, full_only,
         )
         if len(cand) == 0:
             return empty

@@ -392,11 +392,8 @@ class ResidentSearcher:
         state = self.fused
         if state is None:
             return None
-        lists = self.postings.select(term_payload)
-        if search_type != "semantic" and not lists:
-            return None
         cand, scores = score_shard(
-            state, lists, term_payload, avgdl, self.cfg.k1, self.cfg.b,
+            state, self.postings, term_payload, avgdl, self.cfg.k1, self.cfg.b,
             k, search_type, q64, full_only, probe_buckets=probes,
             decode_cache=self._postings_cache, cache_shard=None,
         )

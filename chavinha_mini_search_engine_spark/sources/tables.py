@@ -96,7 +96,7 @@ DOC_STORE_WRITE_OPTS = {
 
 
 # The store format this code writes and reads; bump it when a table's
-# layout changes.  2: postings keyed by the int64 ``tid`` (1: no number).
+# layout changes.  2: postings keyed by the int64 ``tid`` (before: none).
 STORE_FORMAT = 2
 
 

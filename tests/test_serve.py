@@ -285,13 +285,18 @@ def _reference_post_fused(store, rs, shards=None):
 def _resident_lists(rs):
     """The searcher's lists keyed by (field, term) through its resident
     dictionary; every resident tid must have a dictionary entry."""
-    tids = rs.postings.tids.tolist()
+    lists = rs.postings
+    tids = lists.tids.tolist()
     assert tids == sorted(set(tids))
-    assert rs.postings.starts[-1] == len(rs.postings.cols[0])
-    by_tid = rs.postings.select(tids)
+    assert lists.starts[-1] == len(lists.cols[0])
+    rows = lists.select(tids)
     names = {tid: ft for ft, (tid, _idf) in rs.term_dict.items()}
-    assert set(by_tid) <= set(names)
-    return {names[tid]: lst for tid, lst in by_tid.items()}
+    assert set(rows) == set(tids) and set(rows) <= set(names)
+    out = {}
+    for tid, (a, b, mx) in rows.items():
+        out[names[tid]] = tuple(c[a:b] for c in lists.cols)
+        assert mx == lists.cols[2][a:b].max()
+    return out
 
 
 def _assert_layout_equal(got, exp):
@@ -601,7 +606,9 @@ def test_post_groups_shuffled_frame(blocks, rnd):
         assert lists.starts[-1] == len(rows)
         got = lists.select(list(members) + [2])  # 2 is no sampled tid
         assert sorted(got) == sorted(members)
-        for tid, (firsts, lasts, maxs, ns, docb, tfb) in got.items():
+        for tid, (a, b, mx) in got.items():
+            firsts, lasts, maxs, ns, docb, tfb = (c[a:b] for c in lists.cols)
+            assert mx == maxs.max()
             assert np.all(np.diff(firsts) > 0)
             assert set(firsts.tolist()) == members[tid]
             assert np.array_equal(lasts - firsts + 1, ns)
