@@ -443,13 +443,11 @@ def score_shard(
             cl_cache[miss] = _closeness_at(state, q64, miss)[0]
         return cl_cache[idxs_]
 
-    entries = []
-    if mode in ("bm25", "hybrid"):
-        rows = lists.select(term_payload)
-        entries = [
-            (tid, field, w, idf, rows[tid][2] * w, *rows[tid][:2])
-            for tid, (field, w, idf) in term_payload.items() if tid in rows
-        ]
+    rows = lists.select(term_payload) if mode in ("bm25", "hybrid") else {}
+    entries = [
+        (tid, field, w, idf, rows[tid][2] * w, *rows[tid][:2])
+        for tid, (field, w, idf) in term_payload.items() if tid in rows
+    ]
     if entries:
         assert len(state.ids) == n_docs, "attributes must be dense per shard"
         entries.sort(key=lambda e: -e[4])

@@ -4,8 +4,8 @@ A fresh manifest records ``tables.STORE_FORMAT``.  ``IndexStore(root)``
 refuses a store of another format, or of none (written by code older than
 the number); ``IndexStore(root, build_id=...)``, which every build entry
 uses, starts such a dir fresh instead of resuming it.  This is what keeps
-the driver gate's cached index, which is keyed on its input data only,
-from being read after a layout change.
+the ``bm25_topk_indexed`` gate's cached index, which is keyed on its input
+data only, from being read after a layout change.
 """
 
 import json
@@ -19,8 +19,7 @@ from chavinha_mini_search_engine_spark.sources.tables import (
     STORE_FORMAT,
     IndexStore,
 )
-
-SF = "/root/testdata/sf0.001"
+from tests.test_indexed_gate import SF
 
 # a manifest's format key: absent (older code), and two other numbers
 OTHER_FORMATS = [None, STORE_FORMAT - 1, STORE_FORMAT + 1]
